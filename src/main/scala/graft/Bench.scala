@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Session
+
 /**
  * Benchmark main: the full JSON artifact line to stdout AND to
  * `SPARK_GRAFT_BENCH_OUT` (default bench_out.json) + a richer
@@ -403,33 +405,6 @@ object Bench {
     case c => c.toString
   } + "\""
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries; an 80-query
-      // suite evicts earlier queries' codegen before the warm pass
-      // reruns them, re-paying full compilation (measured: text_bm25
-      // sf1 8.8 s "warm" vs 2.5 s steady) — r5's "uniform 1.4x
-      // warm-pass slowdown" was this, not machine noise
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // let AQE swap a sort-merge join for a shuffled hash join when
-      // every post-shuffle build partition fits this bound — both sort
-      // passes disappear. No suite query hits SMJ at current scales
-      // (AQE's runtime stats broadcast even q3's 1.5M-key semi join),
-      // but past the broadcast ceiling this is the next-best shape and
-      // the conversion stays per-partition-bounded, so no unbounded
-      // hash map is ever built.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private case class Mark(at: String, load: Double, procs: Int,
                           busy: Long, steal: Long, total: Long, thrUs: Long)
 
@@ -654,7 +629,7 @@ object Bench {
     val preLoad = load1(); val preProcs = nProcs()
     val (cpuSt, cpuMt) = cpuScore()
     val prewarm = prewarmFixture(dir)
-    val spark = session()
+    val spark = Session.local()
     // warmup: JIT + codegen + parquet footer caches, untimed
     try SparkEntry.queries.get("knn_topk").foreach(_(spark, dir).count())
     catch { case scala.util.control.NonFatal(_) => () }
@@ -809,18 +784,17 @@ object Bench {
   private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // the executor thread count is part of the protocol: an unset
-    // SPARK_GRAFT_CPUS (default 4) produces a healthy-looking but
-    // 2-8x-slow artifact that no contention detector can flag — record
-    // it so cross-round comparisons can check config equivalence
-    // mechanically. Parsed defensively: a malformed value (e.g. a
-    // trailing space) must record as -1, never throw AFTER the
-    // 15-minute run — main's crash handler would overwrite the
-    // just-written good artifact with a bench_crashed one. (session()
-    // reads the raw env independently; a malformed value fails THERE,
-    // before anything is timed, which is the right place.)
-    val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      .trim.toIntOption.getOrElse(-1)
+    // the executor thread count is part of the protocol: a smaller
+    // SPARK_GRAFT_CPUS than the host's processors produces a
+    // healthy-looking but slow artifact that no contention detector can
+    // flag — record it so cross-round comparisons can check config
+    // equivalence mechanically. Parsed defensively: a malformed value
+    // must record as -1, never throw AFTER the 15-minute run — main's
+    // crash handler would overwrite the just-written good artifact with
+    // a bench_crashed one. (Session.local() parses the same env; a
+    // malformed value fails THERE, before anything is timed, which is
+    // the right place.)
+    val cpus: Int = scala.util.Try(Session.defaultCpus).getOrElse(-1)
 
     // ---- mutable stage state: the artifact is (re)written from this
     // after EVERY stage (VERDICT r15 next #1 — a driver timeout kill
@@ -975,7 +949,7 @@ object Bench {
         System.err.println(f"[bench] sf1 leg skipped on budget: " +
           f"$remainingSec%.0f s left, leg ~$sf1CostEst%.0f s")
       } else sf1 = try {
-        val spark = session()
+        val spark = Session.local()
         val dir =
           try ScaleUp.ensure(spark, sfDir, sf1Dir)
           finally
@@ -1053,7 +1027,7 @@ object Bench {
         budgetSkipped += s"${label}_skipped_budget"
         s"""{"skipped":"budget"}"""
       } else try {
-        val spark = session()
+        val spark = Session.local()
         try f(spark) finally spark.stop()
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $label scale check failed: $e")

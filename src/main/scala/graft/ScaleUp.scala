@@ -19,8 +19,9 @@ import graft.core.Tables
  * connected components (500k+ components at sf1).
  *
  * Idempotent AND self-invalidating: the completion sentinel records the
- * source dir, factor, and a per-table row-count fingerprint; a sentinel
- * that no longer matches (regenerated fixtures, different factor)
+ * source dir, factor, the file-layout inputs and a per-table row-count
+ * fingerprint; a sentinel that no longer matches (regenerated
+ * fixtures, different factor, other parallelism or row-group size)
  * triggers re-derivation instead of silently reusing stale data
  * (ADVICE r4 #2). Destruction is fenced: an existing dst is only
  * removed when it carries this derivation's own markers — pointing
@@ -35,15 +36,7 @@ object ScaleUp {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     println(s"[scaleup] ensured: ${ensure(spark, src, dst, factor)}")
     spark.stop()
   }
@@ -57,7 +50,8 @@ object ScaleUp {
     * row counts but different content (same sizes are then vanishingly
     * unlikely, and mtimes certainly differ) still invalidate the
     * sentinel (ADVICE r5 #2). */
-  private def fingerprint(spark: SparkSession, src: String, factor: Int): String = {
+  private def fingerprint(spark: SparkSession, src: String, factor: Int,
+                          layout: String): String = {
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(files)
@@ -68,12 +62,16 @@ object ScaleUp {
       val mtime = if (fs.isEmpty) 0L else fs.map(_.lastModified()).max
       s"$t=${Tables.load(spark, src, t).count()}:$bytes:$mtime"
     }
-    // layout version: v2 spreads each derived fact table across the
-    // deriving session's parallelism (see replicate below) — bumping
-    // this line invalidates sentinels of v1-layout derivations
     (Seq(s"src=${new java.io.File(src).getCanonicalPath}", s"factor=$factor",
-      "layout=v4") ++ counts).mkString("\n")
+      layout) ++ counts).mkString("\n")
   }
+
+  /** The sentinel's layout line: the layout version plus every input
+    * that shapes the derived files (see replicate in [[ensure]]), so a
+    * session with other parallelism or another block size re-derives
+    * instead of reusing a layout it would not have written. */
+  private[graft] def layoutLine(outFiles: Int, blockMb: Long): String =
+    s"layout=v4 files=$outFiles block_mb=$blockMb"
 
   /** Replicate `src` `factor`x into `dst`; no-op when the sentinel
     * matches a completed derivation of the SAME source/factor/contents.
@@ -85,7 +83,9 @@ object ScaleUp {
       s"graft: scale-up dst $dst would overwrite its own source $src")
     val done = new java.io.File(s"$dst/_GRAFT_SCALE_OK")
     val inprogress = new java.io.File(s"$dst/_GRAFT_SCALE_INPROGRESS")
-    val fp = fingerprint(spark, src, factor)
+    val outFiles = math.max(spark.sparkContext.defaultParallelism, 16)
+    val blockMb = sys.env.getOrElse("SPARK_GRAFT_SCALE_BLOCK_MB", "8").trim.toLong
+    val fp = fingerprint(spark, src, factor, layoutLine(outFiles, blockMb))
     if (done.exists()) {
       val recorded = try {
         new String(java.nio.file.Files.readAllBytes(done.toPath), "UTF-8")
@@ -154,9 +154,7 @@ object ScaleUp {
       * 128 MB-1 GB band) so scans split even when another session with
       * fewer cores derived the fixture. Same rows, same values —
       * results never depend on file layout; only scan parallelism does. */
-    val outFiles = math.max(spark.sparkContext.defaultParallelism, 16)
-    val blockBytes = sys.env.getOrElse("SPARK_GRAFT_SCALE_BLOCK_MB", "8")
-      .trim.toLong * 1024L * 1024L
+    val blockBytes = blockMb * 1024L * 1024L
     def replicate(t: String, key: String, sortKey: String = "")(
         shift: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Unit = {
       val base = Tables.load(spark, src, t)

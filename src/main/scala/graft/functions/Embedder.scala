@@ -39,7 +39,7 @@ trait Embedder {
 }
 
 /** Expression-backed hashing embedder. Requires GraftFunctions.register
-  * (or the GraftExtensions session extension) once per session. */
+  * once per session (graft.core.Session.local does it). */
 case class HashingEmbedder(dim: Int = 64) extends Embedder {
 
   /** Integer term counts per hashed dimension (ARRAY<LONG>). */

@@ -9,13 +9,15 @@ import org.apache.spark.sql.functions._
  * The expressions are registered in the session FunctionRegistry so they
  * are usable both from SQL (`SELECT graft_cosine(a, b)`) and from the
  * Column API via `call_function` — avoiding any private Column(expr)
- * constructors. Registration is idempotent.
+ * constructors. [[register]] is the only way the functions and the
+ * optimizer rules attach to a session: [[graft.core.Session.local]]
+ * calls it once, and the `graft.operators` entry points call it for
+ * sessions graft did not build. Registration is idempotent.
  */
 object GraftFunctions {
 
-  /** Single source of truth for the function registry — shared with
-    * [[GraftExtensions]] so the two registration paths cannot drift. */
-  private[functions] val builders: Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] => org.apache.spark.sql.catalyst.expressions.Expression)] =
+  /** Every SQL function graft registers, by name. */
+  private[graft] val builders: Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] => org.apache.spark.sql.catalyst.expressions.Expression)] =
     Seq(
       "graft_cosine" -> (e => CosineSimilarity(e(0), e(1))),
       "graft_euclidean" -> (e => EuclideanDistance(e(0), e(1))),
@@ -53,24 +55,19 @@ object GraftFunctions {
       "graft_band_keys" -> (e => BandKeysExpr(e(0), e(1), e(2)))
     )
 
+  /** Every optimizer rule graft adds, in application order. */
+  private val rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
+    Seq(FuseQuantizedKernels, graft.plans.TagSupersetPruning, graft.plans.TermBucketPruning)
+
   /** Register all graft functions + optimizer rules on the session
     * (idempotent). */
   def register(spark: SparkSession): Unit = synchronized {
     builders.foreach { case (name, b) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "built-in")
     }
-    if (!spark.experimental.extraOptimizations.contains(FuseQuantizedKernels)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FuseQuantizedKernels
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TagSupersetPruning)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TagSupersetPruning
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TermBucketPruning)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TermBucketPruning
-    }
+    val missing = rules.filterNot(spark.experimental.extraOptimizations.contains)
+    if (missing.nonEmpty) spark.experimental.extraOptimizations ++= missing
   }
 
   // ---- Column API (requires register(spark) once per session) ----
@@ -195,27 +192,4 @@ object FuseQuantizedKernels
       case EuclideanDistance(UnpackVector(p), q) => EuclideanOnPacked(p, q)
       case EuclideanDistance(q, UnpackVector(p)) => EuclideanOnPacked(p, q)
     }
-}
-
-/**
- * SparkSessionExtensions entry point: enables
- * `--conf spark.sql.extensions=graft.functions.GraftExtensions` so the
- * kernels are present in every session on a cluster without any driver
- * code calling register().
- */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    def info(name: String): ExpressionInfo =
-      new ExpressionInfo("graft.functions", name)
-    // same builder list as GraftFunctions.register — one source of truth
-    GraftFunctions.builders.foreach { case (n, b) =>
-      ext.injectFunction((FunctionIdentifier(n), info(n), b))
-    }
-    ext.injectOptimizerRule(_ => FuseQuantizedKernels)
-    ext.injectOptimizerRule(_ => graft.plans.TagSupersetPruning)
-    ext.injectOptimizerRule(_ => graft.plans.TermBucketPruning)
-  }
 }

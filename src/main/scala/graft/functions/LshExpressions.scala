@@ -79,8 +79,9 @@ case class BandKeysExpr(vec: Expression, planesArg: Expression, rowsArg: Express
         val rows = rowsArg.eval().asInstanceOf[Int]
         if (ps == null || ps.numElements() == 0)
           TypeCheckResult.TypeCheckFailure(s"$prettyName planes must be a non-empty literal")
-        else if (rows < 1 || rows > 63)
-          TypeCheckResult.TypeCheckFailure(s"$prettyName needs 1 <= rows <= 63, got $rows")
+        // a key is one BIGINT, one bit per row: 64 rows use every bit
+        else if (rows < 1 || rows > 64)
+          TypeCheckResult.TypeCheckFailure(s"$prettyName needs 1 <= rows <= 64, got $rows")
         else if (ps.numElements() % rows != 0)
           TypeCheckResult.TypeCheckFailure(
             s"$prettyName plane count ${ps.numElements()} is not a multiple of rows $rows")

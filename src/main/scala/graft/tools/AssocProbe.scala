@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -15,19 +14,12 @@ import graft.core.Tables
 object AssocProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
+    val spark = graft.core.Session.local()
     // experiment knob: ObjectHashAggregate's sort fallback (default 128
     // in-memory keys) — the basket build has ~50k keys/partition, so it
     // ALWAYS degrades to sort-based aggregation at the default
     sys.env.get("SPARK_GRAFT_OHA_FALLBACK").foreach(v =>
-      builder.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v))
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[assoc] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
@@ -37,7 +29,6 @@ object AssocProbe {
     // (joins + order + limit) so numbers are directly comparable to
     // the suite row ----
     if (args.length > 1 && args(1) == "variants") {
-      graft.functions.GraftFunctions.register(spark)
       import graft.functions.GraftFunctions
       def lineitem = Tables.load(spark, dir, "lineitem")
       def baskets = lineitem

@@ -5,23 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.VectorStore
 
 /** Measures the BASELINE.md M6 protocol numbers (ingest throughput,
-  * storage bytes/vector, query latencies) at sf0.1 on local[32].
+  * storage bytes/vector, query latencies) at sf0.1 on a [[graft.core.Session.local]] session.
   * `sbt "runMain graft.tools.Baseline"` */
 object Baseline {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val spark = graft.core.Session.local()
 
     def timed[T](what: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,11 +19,7 @@ object OverflowProbe {
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft_sf1"
     val cap = if (args.length > 1) args(1).toInt
               else graft.operators.Dedup.EmbLshBucketCap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     val emb = graft.core.Tables.load(spark, dir, "embeddings")
     val d = emb.select(size(col("embedding"))).head().getInt(0)
     val widths = graft.operators.SimilaritySearch.bandedKeys(

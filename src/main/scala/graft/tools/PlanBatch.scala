@@ -30,16 +30,7 @@ object PlanBatch {
         s"unknown queries: ${unknown.mkString(", ")} (not in SparkEntry.queries)")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     new File(outDir).mkdirs()
     for (name <- list.split(",").map(_.trim).filter(_.nonEmpty)) {
       val out = new File(outDir, s"${name}_$suffix.txt")

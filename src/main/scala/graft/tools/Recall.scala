@@ -51,22 +51,17 @@ object Recall {
   /** Standalone runner: `runMain graft.tools.Recall [sfDir]`. */
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     val t = measure(spark, dir)
       .map { case (n, v) => f""""$n":$v%.3f""" }.mkString("{", ",", "}")
     println(s"""{"recall":$t,"dir":"$dir"}""")
     spark.stop()
   }
 
-  /** (family -> mean recall@k) over the embeddings table at `dir`. */
+  /** (family -> mean recall@k) over the embeddings table at `dir`, on a
+    * [[graft.core.Session.local]] session. */
   def measure(spark: SparkSession, dir: String, nQ: Int = 8, k: Int = 10,
               d: Int = 64): Seq[(String, Double)] = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
     val queries = emb.where(col("vec_id") < nQ)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))

@@ -146,7 +146,6 @@ object RefWidthCheck {
     * so the numbers are tracked per round like `pca_scale`. */
   def bpeAtVocabScale(spark: SparkSession): String = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark) // kernels; idempotent
     val letters = "abcdefghijklmnopqrstuvwxyz"
     val nGen = 1200000L
     val words = spark.range(0L, nGen, 1L, 32).as[Long].map { id =>
@@ -254,13 +253,8 @@ object RefWidthCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-scalecheck")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.core.Session.local()
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try {
       if (args.isEmpty || args.contains("pca"))
         println("[scalecheck] pca " + pcaAtRefDims(spark))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -17,14 +16,7 @@ import graft.operators.{Dedup, SimilaritySearch}
 object SemProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.core.Session.local()
     val emb = Tables.load(spark, dir, "embeddings")
     val n = emb.count()
     val width = if (args.length > 1) args(1).toLong else Dedup.SemTargetClusterWidth

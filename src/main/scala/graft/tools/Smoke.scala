@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -9,14 +8,7 @@ import graft.functions.GraftFunctions
   * driver contract; used during development (`sbt "runMain graft.tools.Smoke"`). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val spark = graft.core.Session.local()
     val dir = "/root/testdata/sf0.001"
     for (t <- Seq("lineitem", "orders", "events", "embeddings", "documents")) {
       val df = graft.core.Tables.load(spark, dir, t)

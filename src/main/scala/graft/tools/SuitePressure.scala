@@ -2,8 +2,6 @@ package graft.tools
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{Bench, ScaleUp, SparkEntry}
 
 /**
@@ -44,19 +42,9 @@ object SuitePressure {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     val dir = args.headOption.getOrElse(
       ScaleUp.ensure(spark, "/root/testdata/sf0.1", "/tmp/graft_sf1"))
-    graft.functions.GraftFunctions.register(spark)
 
     def rep(name: String): (Double, Long, Long) = {
       val g0 = gcMs

@@ -15,7 +15,6 @@ class BpeSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def arr(c: org.apache.spark.sql.Column): Seq[String] = {
-    graft.functions.GraftFunctions.register(spark)
     spark.range(1).select(c.as("v")).head().getSeq[String](0)
   }
 
@@ -41,7 +40,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("merge pair must be a plan constant") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((Seq("a", "b"), "a")).toDF("syms", "s")
     val ex = intercept[Exception] {
       df.select(call_function("graft_merge_pair", col("syms"), col("s"), col("s")))
@@ -53,7 +51,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("null array elements raise a named error instead of silent 0L/null structs (ADVICE r13 #3)") {
-    graft.functions.GraftFunctions.register(spark)
     // the error can surface at execution OR optimization time (the
     // single-row LocalRelation is projected eagerly by the optimizer),
     // so walk the whole cause chain for the kernel's named message
@@ -74,7 +71,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("adjacent-pairs kernel == HOF transform form") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       Seq("a", "b", "c", "a", "b"),
       Seq("x"),
@@ -150,7 +146,6 @@ class BpeSpec extends AnyFunSuite {
 
   test("optimal segment count: exact DP lower bound; beats greedy where greedy is suboptimal") {
     def opt(word: String, pieces: Seq[String]): Int = {
-      graft.functions.GraftFunctions.register(spark)
       spark.range(1).select(optimalSegmentCount(lit(word), pieces).as("v"))
         .head().getInt(0)
     }

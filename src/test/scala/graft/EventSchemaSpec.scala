@@ -112,6 +112,26 @@ class EventSchemaSpec extends AnyFunSuite {
       .select((col("ts_ns") - 1000000000L).as("ts_ns")))
     assert(r0 == r1)
     assert(r0 == collectSorted(base.select("ts_ns")))
+
+    // the sentinel is reused only while every layout input matches: a
+    // file planted in dst survives a matching ensure, and a derivation
+    // recorded under another layout line is redone (the plant is gone)
+    val ok = java.nio.file.Paths.get(dst, "_GRAFT_SCALE_OK")
+    val plant = new java.io.File(dst, "planted")
+    def sentinel = new String(java.nio.file.Files.readAllBytes(ok), "UTF-8")
+    val current = sentinel
+    val files = math.max(spark.sparkContext.defaultParallelism, 16)
+    assert(current.linesIterator.exists(_.startsWith(s"layout=v4 files=$files block_mb=")))
+    assert(plant.createNewFile())
+    ScaleUp.ensure(spark, src, dst, factor = 2)
+    assert(plant.exists())
+    java.nio.file.Files.write(ok, current.linesIterator.map(l =>
+      if (l.startsWith("layout=")) ScaleUp.layoutLine(1, 1L) else l)
+      .mkString("\n").getBytes("UTF-8"))
+    ScaleUp.ensure(spark, src, dst, factor = 2)
+    assert(!plant.exists())
+    assert(sentinel == current)
+    assert(Tables.events(spark, dst).count() == 2 * base.count())
   }
 
   test("streaming hourly rollup reads the long-nanos encoding") {

@@ -18,7 +18,6 @@ class KernelSpec extends AnyFunSuite {
 
   test("shingle kernel == Column-form shingling (bigram pack + rolling-hash n-grams)") {
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "a bb ccc dddd eeeee ff0 9 x"), // 1-5 char words, digits
       (2L, "one two"),                     // exactly 2 tokens
@@ -143,7 +142,6 @@ class KernelSpec extends AnyFunSuite {
 
   test("centroid kernels == retired HOF fold (argmin + probe, ties to lowest cid)") {
     import graft.operators.SimilaritySearch
-    graft.functions.GraftFunctions.register(spark)
     // codebook with a DUPLICATE centroid (cids 3 and 1 share a vector)
     // so the tie-break is exercised, plus an unsorted cid order so the
     // kernel's own ascending sort is load-bearing
@@ -200,7 +198,6 @@ class KernelSpec extends AnyFunSuite {
 
   test("term-counts kernel == Column-form per-term filter counts (r9 #2)") {
     import graft.operators.Dedup
-    graft.functions.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "The vector MERGE merge filter x9 vector"), // repeats + case
       (2L, "merge-filter,vector"),                     // punctuation splits
@@ -231,7 +228,6 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("graft_ngram_codes rejects n < 1 at analysis time on the SQL surface (ADVICE r9 #2)") {
-    graft.functions.GraftFunctions.register(spark)
     Seq(1L -> "one two three").toDF("doc_id", "text")
       .createOrReplaceTempView("ngram_guard_docs")
     val e = intercept[org.apache.spark.sql.AnalysisException](
@@ -248,7 +244,6 @@ class KernelSpec extends AnyFunSuite {
     // count_min_sketch aggregate added — if the routes ever drifted,
     // estimates would be effectively random cell sums and the
     // >= exact-count property below would break on the rare keys
-    graft.functions.GraftFunctions.register(spark)
     val keys = (Seq.fill(500)("alpha") ++ Seq.fill(120)("beta") ++
       (0 until 300).map(i => s"rare_$i")).toDF("k")
     val row = keys.agg(
@@ -274,7 +269,6 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("max-cosine kernel == Column-form per-reference max; ties keep lowest id") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val vecs = (0L until 40L).map(i => (i, Seq.fill(16)(rnd.nextFloat() - 0.5f)))
     val bench = Seq(
@@ -305,7 +299,6 @@ class KernelSpec extends AnyFunSuite {
     // correctness of bloomSemiJoin DEPENDS on put/probe hash-route
     // agreement: a drift would silently DROP real matches (unlike the
     // CMS, where drift only costs accuracy). Pin it for both key types.
-    graft.functions.GraftFunctions.register(spark)
     val longs = (0L until 2000L).map(i => i * 7919L).toDF("k")
     val bfL = longs.stat.bloomFilter("k", 2000L, 0.03)
     val bytesL = { val b = new java.io.ByteArrayOutputStream(); bfL.writeTo(b); b.toByteArray }
@@ -335,7 +328,6 @@ class KernelSpec extends AnyFunSuite {
   test("deletion-variant kernel: blocking completeness for planted edits, analysis guards") {
     import graft.functions.FuzzyKernel
     import org.apache.spark.unsafe.types.UTF8String
-    graft.functions.GraftFunctions.register(spark)
     def vars(s: String, d: Int): Set[String] = {
       val a = FuzzyKernel.deletionVariants(UTF8String.fromString(s), d)
       (0 until a.numElements()).map(a.getUTF8String(_).toString).toSet
@@ -383,7 +375,6 @@ class KernelSpec extends AnyFunSuite {
 
   test("hash-embed token kernels == joined-text kernels over real chunk slices") {
     import graft.operators.TextAnalysis
-    graft.functions.GraftFunctions.register(spark)
     val he = graft.functions.HashingEmbedder(64)
     val rnd = new scala.util.Random(21)
     val words = Vector("the", "quick", "brown", "fox", "1234", "a", "zz9",
@@ -412,7 +403,6 @@ class KernelSpec extends AnyFunSuite {
 
   test("band-keys kernel == retired HOF sign-bucket fold (banding, single bucket, null vec)") {
     import graft.operators.SimilaritySearch
-    graft.functions.GraftFunctions.register(spark)
     val d = 8; val bands = 4; val rows = 4
     val rnd = new scala.util.Random(7)
     val data = (1L to 40L).map(i =>
@@ -451,6 +441,35 @@ class KernelSpec extends AnyFunSuite {
       call_function("graft_band_keys",
         typedLit(Seq.fill(d)(0.1f)), typedLit(ps), lit(0))).collect())
     assert(badRows.getMessage.contains("rows"), badRows.getMessage)
+  }
+
+  test("band-keys kernel takes rows == 64: the full-long key == signBucketOf, codegen and interpreted") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    import graft.operators.SimilaritySearch
+    val d = 8
+    val ps = SimilaritySearch.planes(d, 64)
+    val e = graft.functions.BandKeysExpr(
+      BoundReference(0, ArrayType(FloatType, containsNull = false), nullable = true),
+      Literal.create(ps, ArrayType(ArrayType(DoubleType))), Literal(64))
+    assert(e.checkInputDataTypes().isSuccess)
+    val compiled = GenerateUnsafeProjection.generate(Seq(e))
+    val rnd = new scala.util.Random(11)
+    val vs = Seq.fill(40)((0 until d).map(_ => (rnd.nextFloat() - 0.5f) * 4f))
+    val want = vs.map(v => SimilaritySearch.signBucketOf(v, d, 64))
+    def row(v: Seq[Float]) = InternalRow(new GenericArrayData(v.toArray))
+    val interpreted = vs.map(v => e.eval(row(v)).asInstanceOf[GenericArrayData].getLong(0))
+    val codegen = vs.map(v => compiled(row(v)).getArray(0).getLong(0))
+    assert(interpreted == want)
+    assert(codegen == want)
+    assert(want.exists(_ < 0L), "some key must carry bit 63")
+    // and the SQL surface accepts 64 rows at analysis
+    val sql = spark.range(1).select(call_function("graft_band_keys",
+      typedLit(vs.head), typedLit(ps), lit(64))).head().getSeq[Long](0)
+    assert(sql == Seq(want.head))
   }
 
   test("pair kernel == retired HOF form (index-ordered pairs, empty/singleton, guards)") {

@@ -280,7 +280,6 @@ class OperatorSpec extends AnyFunSuite {
   test("matryoshka prefix retrieval: full-width prefix == exact; all-refine == exact") {
     import graft.functions.GraftFunctions
     import graft.operators.SimilaritySearch
-    GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
     val q = emb.where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
     val corpus = emb.where(col("vec_id") =!= 0).select(col("vec_id"), col("embedding"))

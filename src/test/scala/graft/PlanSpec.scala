@@ -41,7 +41,6 @@ class PlanSpec extends AnyFunSuite {
     // repartition does NOT stop that (filters push through
     // RepartitionByExpression); the non-deterministic identity fence
     // does, at zero runtime cost.
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.core.Tables.load(spark, dir, "documents")
     def gated(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
       graft.operators.TextAnalysis.stats(docs)
@@ -75,7 +74,6 @@ class PlanSpec extends AnyFunSuite {
     // above. If a future Spark starts pushing non-fenced predicates
     // through, the second assertion flags the fence placement rule as
     // relaxable.
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.core.Tables.load(spark, dir, "documents")
     def pushed(df: org.apache.spark.sql.DataFrame): String =
       "PushedFilters: \\[[^\\]]*\\]".r.findFirstIn(plan(df)).getOrElse("")
@@ -453,7 +451,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("matryoshka coarse scan reads ONLY the prefix column; refine pushes the id IN-list (r9 #1)") {
     import graft.operators.SimilaritySearch
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.core.Tables.load(spark, dir, "embeddings")
     val q = emb.where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
     val path = java.nio.file.Files
@@ -1009,7 +1006,6 @@ class PlanSpec extends AnyFunSuite {
     // combine — the explode fans out ~word-length rows per word), and
     // the merge selection is a TakeOrderedAndProject (per-partition
     // heap, ONE row to the driver), never a global sort
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{asc, desc}
     val docs = graft.core.Tables.load(spark, dir, "documents")
     val arg = graft.operators.Bpe.pairCounts(
