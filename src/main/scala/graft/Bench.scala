@@ -382,6 +382,14 @@ object Bench {
     try { Class.forName("ai.onnxruntime.OrtEnvironment"); true }
     catch { case _: Throwable => false }
 
+  /** Where the stable-name `bench_summary.json` copy goes: next to the
+    * configured artifact `out` (the working directory for the default,
+    * parent-less `bench_out.json`). */
+  def summaryPath(out: String): java.nio.file.Path =
+    Option(java.nio.file.Paths.get(out).getParent)
+      .map(_.resolve("bench_summary.json"))
+      .getOrElse(java.nio.file.Paths.get("bench_summary.json"))
+
   // ---- formatting ----
 
   private def ms(v: Double): String =
@@ -847,10 +855,9 @@ object Bench {
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write $out: $e") }
       // stable-name copy of the one-line artifact (VERDICT r17 next #1):
-      // a parser that prefers a file over scraping stdout has a fixed
-      // path regardless of SPARK_GRAFT_BENCH_OUT
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_summary.json"),
+      // a parser that prefers a file over scraping stdout finds it next
+      // to the configured artifact
+      try java.nio.file.Files.write(summaryPath(out),
         (json + "\n").getBytes("UTF-8"))
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write bench_summary.json: $e") }

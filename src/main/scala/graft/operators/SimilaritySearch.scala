@@ -91,12 +91,15 @@ object SimilaritySearch {
     * interpreted aggregate(zip_with) folds per vector — the dominant
     * per-row cost of every banded-LSH consumer at sf1. Band/key values
     * and row multiset are bit-identical (kernel parity pinned in
-    * KernelSpec; consumers are oracle-hash-gated). */
+    * KernelSpec; consumers are oracle-hash-gated). Input columns named
+    * `band` or `key` are replaced, never duplicated. */
   def bandedKeys(df: DataFrame, vecCol: String, d: Int,
                  bands: Int, rows: Int): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     val allPlanes = planes(d, bands * rows)
-    df.select(df.columns.map(col) :+
+    // the appended pair replaces any band/key the input already has
+    val in = df.drop("band", "key")
+    in.select(in.columns.map(col) :+
       posexplode(bandKeysCol(col(vecCol), allPlanes, rows))
         .as(Seq("band", "key")): _*)
   }

@@ -20,6 +20,13 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.mtReason("sf1", cpuMt = -1.0, minMt = 24000.0).isEmpty)
   }
 
+  test("bench_summary.json lands next to the configured artifact") {
+    assert(Bench.summaryPath("bench_out.json") == java.nio.file.Paths.get("bench_summary.json"))
+    assert(Bench.summaryPath("/data/runs/r19.json") ==
+      java.nio.file.Paths.get("/data/runs/bench_summary.json"))
+    assert(Bench.summaryPath("runs/r19.json") == java.nio.file.Paths.get("runs/bench_summary.json"))
+  }
+
   test("default MinMtMbps splits the observed clean/degraded window clusters") {
     // r14 fixed-probe calibration (steady-state methodology — old
     // 19-33.5 readings are not comparable): idle 67-71 GB/s,

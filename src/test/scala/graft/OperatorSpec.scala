@@ -29,6 +29,23 @@ class OperatorSpec extends AnyFunSuite {
     assert(viaHeap.size == 5 * 7)
   }
 
+  test("bandedKeys replaces input band/key columns instead of duplicating them") {
+    import graft.operators.SimilaritySearch
+    import spark.implicits._
+    val d = 4; val bands = 2; val rows = 3
+    val in = Seq((1L, Seq(1f, -2f, 0.5f, 3f)), (2L, Seq(-1f, 0f, 2f, -0.5f)))
+      .toDF("id", "vec")
+    val stale = in.withColumn("band", lit(-7)).withColumn("key", lit("old"))
+    val out = SimilaritySearch.bandedKeys(stale, "vec", d, bands, rows)
+    assert(out.columns.count(_ == "band") == 1 && out.columns.count(_ == "key") == 1,
+      out.columns.mkString(","))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "band", "key").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+    assert(rowsOf(out) == rowsOf(SimilaritySearch.bandedKeys(in, "vec", d, bands, rows)))
+    assert(rowsOf(out).size == 2 * bands)
+  }
+
   test("minhash-LSH near-dups match exact jaccard near-dups on fixtures") {
     val docs = Tables.load(spark, dir, "documents")
     val lsh = Dedup.minhashNearDups(docs).select("d1", "d2")

@@ -257,8 +257,11 @@ class PlanSpec extends AnyFunSuite {
     val q = spark.sql(
       "SELECT id FROM graft_sqlprune_store WHERE array_contains(tags, 't1')")
     val p = plan(q)
-    val scanLine = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(scanLine.contains("tag_key"), s"no tag_key partition pruning:\n$scanLine\n${p.take(3000)}")
+    // the PartitionFilters list itself, not the scan line: the line also
+    // names the tag_key=... dirs in its Location
+    val filters = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(p).map(_.group(1)).getOrElse("")
+    assert(filters.contains("tag_key") && filters.contains(" IN ("),
+      s"no tag_key partition pruning:\n$filters\n${p.take(3000)}")
     // superset semantics through BOTH paths: {t1} matches tag sets
     // {t1} and {t1,t2}
     val sqlIds = q.collect().map(_.getString(0)).toSet

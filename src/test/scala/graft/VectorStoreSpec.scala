@@ -610,22 +610,12 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // first tagged call loads + caches codebook, meta and tag stats
     // (jobs allowed here)
     store.searchAnn(rows(7)._2.toSeq, k = 10, tags = Seq("rare")).count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val planned = try {
-      // plan TWO warm tagged queries (different vectors — the stats
-      // path must not depend on a per-query memo) without executing
-      val a = store.searchAnn(rows(23)._2.toSeq, k = 10, tags = Seq("rare"))
-      val b = store.searchAnn(rows(151)._2.toSeq, k = 10, tags = Seq("rare"))
-      Thread.sleep(300) // listener events are async
-      assert(jobs.get() == 0,
-        s"warm filtered-ANN planning still ran ${jobs.get()} Spark job(s)")
-      Seq(a, b)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // plan TWO warm tagged queries (different vectors — the stats path
+    // must not depend on a per-query memo) without executing
+    val (planned, jobs) = SparkTestSession.jobsDuring(Seq(
+      store.searchAnn(rows(23)._2.toSeq, k = 10, tags = Seq("rare")),
+      store.searchAnn(rows(151)._2.toSeq, k = 10, tags = Seq("rare"))))
+    assert(jobs == 0, s"warm filtered-ANN planning still ran $jobs Spark job(s)")
     // the metadata-planned queries execute correctly: k hits, filter
     // respected (every 'rare' row also carries 'all')
     planned.foreach { q =>
@@ -1490,22 +1480,14 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.insert(df(Seq(
       ("a", Array(1f, 0f), "hi", Seq("t1")),
       ("b", Array(0f, 1f), "bye", Seq("t2")))))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     // first call populates the cache (search() itself is lazy — jobs
     // counted here are exactly the eager manifest count/collect)
     store.search(Seq(1f, 0f), tags = Seq("t1"), k = 1)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = SparkTestSession.jobsDuring {
       store.search(Seq(1f, 0f), tags = Seq("t1"), k = 1)
       store.search(Seq(0f, 1f), tags = Seq("t2"), k = 1)
-      Thread.sleep(300) // listener events are async; drain before asserting
-      assert(jobs.get() == 0,
-        s"warm tagged search still ran ${jobs.get()} manifest job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"warm tagged search still ran $jobs manifest job(s)")
     // the cache must INVALIDATE on write: a new tag set is searchable
     // immediately (the insert appends a manifest delta -> new key)
     store.insert(df(Seq(("c", Array(1f, 1f), "new", Seq("t3")))))
@@ -1540,6 +1522,103 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(reader.search(Seq(1f, 0f), tags = Seq("t"), k = 1)
       .head().getAs[String]("content") == "new")
     writer.clear()
+  }
+
+  private def ids(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
+    rows.map(_.getAs[String]("id")).toSeq
+
+  test("write-through snapshot: a search right after an insert runs no Spark job before its action") {
+    val root = Files.createTempDirectory("graft-wthrough").toString
+    val store = new VectorStore(spark, root)
+    store.insert(df(Seq(
+      ("a", Array(1f, 0f), "a", Seq("t1")),
+      ("b", Array(0f, 1f), "b", Seq("t2")))))
+    store.search(Seq(1f, 0f), tags = Seq("t1"), k = 5).collect() // cold build
+    // one batch appends to an existing tag set AND opens a new one
+    store.insert(df(Seq(
+      ("c", Array(0.9f, 0.1f), "c", Seq("t1")),
+      ("d", Array(0.8f, 0.2f), "d", Seq("t1", "t3")))))
+    val q = Seq(1f, 0f)
+    val (planned, jobs) = SparkTestSession.jobsDuring(store.search(q, tags = Seq("t1"), k = 5))
+    assert(jobs == 0, s"search after an insert ran $jobs Spark job(s) before its action")
+    val got = ids(planned.collect())
+    assert(got == Seq("a", "c", "d"), got.toString)
+    // a second facade on the same session shares the published snapshot
+    val other = new VectorStore(spark, root)
+    val (planned2, jobs2) = SparkTestSession.jobsDuring(other.search(q, tags = Seq("t3"), k = 5))
+    assert(jobs2 == 0, s"second facade ran $jobs2 Spark job(s) before its action")
+    // both answers equal a refreshed (cold-rebuilt) facade's
+    val viaSecond = ids(planned2.collect())
+    val fresh = new VectorStore(spark, root)
+    fresh.refresh()
+    assert(ids(fresh.search(q, tags = Seq("t1"), k = 5).collect()) == got)
+    assert(ids(fresh.search(q, tags = Seq("t3"), k = 5).collect()) == viaSecond)
+    assert(viaSecond == Seq("d"), viaSecond.toString)
+    store.clear()
+  }
+
+  test("write-through snapshot: a write from another session invalidates it") {
+    val root = Files.createTempDirectory("graft-wthrough-sess").toString
+    val store = new VectorStore(spark, root)
+    store.insert(df(Seq(("a", Array(1f, 0f), "a", Seq("t")))))
+    store.insert(df(Seq(("b", Array(0.9f, 0.1f), "b", Seq("t"))))) // published
+    assert(ids(store.search(Seq(1f, 0f), tags = Seq("t"), k = 5).collect()) == Seq("a", "b"))
+    val s2 = spark.newSession()
+    val rows = Seq(("c", Array(0.8f, 0.2f), "c", Seq("t")), ("d", Array(0.7f, 0.3f), "d", Seq("t", "u")))
+    val other = new VectorStore(s2, root)
+    other.insert(s2.createDataFrame(rows).toDF("id", "vector", "content", "tags")
+      .withColumn("vector", col("vector").cast("array<float>")))
+    assert(ids(store.search(Seq(1f, 0f), tags = Seq("t"), k = 5).collect()) == Seq("a", "b", "c", "d"))
+    assert(ids(store.search(Seq(1f, 0f), tags = Seq("u"), k = 5).collect()) == Seq("d"))
+    store.clear()
+  }
+
+  test("write-through snapshot: the threshold fold into a new base publishes what a cold rebuild reads") {
+    val root = Files.createTempDirectory("graft-wthrough-fold").toString
+    val store = new VectorStore(spark, root)
+    store.insert(df(Seq(("r0", Array(1f, 0f), "r0", Seq("t0")))))
+    store.table() // cold build; every later insert writes through
+    var i = 1
+    while (store.versions.size < 2 && i <= 20) {
+      store.insert(df(Seq((s"r$i", Array(1f, i.toFloat), s"r$i", Seq(s"t${i % 5}")))))
+      i += 1
+    }
+    assert(store.versions.size == 2, s"no fold after $i inserts")
+    val (published, jobs) = SparkTestSession.jobsDuring(store.snapshot().get)
+    assert(jobs == 0, s"the fold's snapshot was not published ($jobs jobs)")
+    val carried = published.dataIfBuilt
+    assert(carried.isDefined, "the fold's snapshot did not carry its table forward")
+    store.refresh()
+    val cold = store.snapshot().get
+    assert(!(cold eq published))
+    assert(published.key == cold.key)
+    assert(published.gens == cold.gens)
+    assert(published.tags == cold.tags)
+    val (pub, fromDisk) = (carried.get, cold.data)
+    def paths(d: VectorStore.SnapshotData) = d.files.map { case (dir, f) => dir -> f.map(_.getPath).toSet }
+    assert(paths(pub) == paths(fromDisk))
+    assert(pub.table.schema == fromDisk.table.schema)
+    assert(pub.table.inputFiles.toSet == fromDisk.table.inputFiles.toSet)
+    val rowsOf = (t: org.apache.spark.sql.DataFrame) =>
+      t.select("id", "content", "tags", "tag_key").collect().map(_.toString).sorted.toSeq
+    assert(rowsOf(pub.table) == rowsOf(fromDisk.table))
+    assert(rowsOf(fromDisk.table).size == i)
+    store.clear()
+  }
+
+  test("write-through snapshot: registerSqlTable still plans tag_key partition pruning") {
+    val root = Files.createTempDirectory("graft-wthrough-sql").toString
+    val store = new VectorStore(spark, root)
+    store.insert(df(Seq(("a", Array(1f, 0f), "a", Seq("t1")), ("b", Array(0f, 1f), "b", Seq("t2")))))
+    store.table()
+    store.insert(df(Seq(("c", Array(1f, 1f), "c", Seq("t1", "t3")))))
+    store.registerSqlTable("graft_wthrough_sql")
+    val q = spark.sql("SELECT id FROM graft_wthrough_sql WHERE array_contains(tags, 't1')")
+    val filters = "PartitionFilters: \\[([^\\]]*)\\]".r
+      .findFirstMatchIn(q.queryExecution.executedPlan.toString).map(_.group(1)).getOrElse("")
+    assert(filters.contains("tag_key") && filters.contains(" IN ("), filters)
+    assert(q.collect().map(_.getString(0)).toSet == Set("a", "c"))
+    store.clear()
   }
 
   test("lease liveness via owner-keyed heartbeat sibling: matching hb defends, foreign hb does not") {
