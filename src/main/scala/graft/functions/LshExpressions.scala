@@ -23,8 +23,10 @@ import org.apache.spark.sql.types._
  * dot is the exact `aggregate(zip_with(...))` fold — sequential j
  * ascending, f32 -> f64 per element, products summed left to right from
  * 0.0 — and bit i of band b's key is set iff
- * dot(vec, plane[b*rows + i]) > 0.0 (strict, NaN excluded), exactly the
- * retired `when(planeDot > 0, 1L << i)` column. The oracle's SQL mirror
+ * dot(vec, plane[b*rows + i]) > 0.0 under Spark's comparison, exactly
+ * the retired `when(planeDot > 0, 1L << i)` column: a NaN dot is greater
+ * than 0.0 (bit set), and a null element nulls every dot of the vector
+ * (no bit set). The oracle's SQL mirror
  * (OracleSql.signBucketSqlFromPlanes) is unchanged and recomputes the
  * same fold from scratch.
  */
@@ -38,6 +40,8 @@ object LshKernel {
       throw new IllegalArgumentException(
         s"graft: vector dimension ${vec.numElements()} does not match plane dimension $d")
     val keys = new Array[Long](bands)
+    var j = 0
+    while (j < d) { if (vec.isNullAt(j)) return new GenericArrayData(keys); j += 1 }
     var p = 0 // plane index == b * rows + i
     var b = 0
     while (b < bands) {
@@ -45,10 +49,10 @@ object LshKernel {
       var i = 0
       while (i < rows) {
         var s = 0.0
-        var j = 0
+        j = 0
         val off = p * d
         while (j < d) { s += vec.getFloat(j).toDouble * flat(off + j); j += 1 }
-        if (s > 0.0) key |= 1L << i
+        if (s > 0.0 || java.lang.Double.isNaN(s)) key |= 1L << i
         i += 1; p += 1
       }
       keys(b) = key
@@ -61,7 +65,8 @@ object LshKernel {
 /** graft_band_keys(vec, planes, rows) -> ARRAY<BIGINT> — one key per
   * band, where `planes` is an array<array<double>> literal of
   * bands*rows hyperplanes and bit i of band b's key is the sign of
-  * dot(vec, plane[b*rows+i]). NULL vec yields NULL (callers that need
+  * dot(vec, plane[b*rows+i]) — a NaN dot sets it, a null element
+  * clears every bit ([[LshKernel]]). NULL vec yields NULL (callers that need
   * the legacy hash-null-to-zero behaviour coalesce explicitly). */
 case class BandKeysExpr(vec: Expression, planesArg: Expression, rowsArg: Expression)
     extends TernaryExpression {

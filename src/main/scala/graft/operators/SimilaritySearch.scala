@@ -110,7 +110,7 @@ object SimilaritySearch {
     planes(d, m).zipWithIndex.map { case (p, i) =>
       var s = 0.0; var j = 0
       while (j < d) { s += v(j).toDouble * p(j); j += 1 }
-      if (s > 0.0) 1L << i else 0L
+      if (s > 0.0 || java.lang.Double.isNaN(s)) 1L << i else 0L
     }.sum
 
   /** All bucket ids within `r` bit flips of `bucket` (multi-probe set);
@@ -265,8 +265,11 @@ object SimilaritySearch {
         .where(col("sim") < dupThreshold), k)
 
   /** Driver-side euclidean, bit-identical to the EuclideanDistance
-    * kernel (sequential f32->f64 fold + sqrt). */
-  private def euclidOf(a: Seq[Float], b: Seq[Float]): Double = {
+    * kernel (sequential f32->f64 fold + sqrt) and with its contract:
+    * vectors of different lengths raise the kernel's dimension error. */
+  private def euclidOf(a: Array[Float], b: Seq[Float]): Double = {
+    if (a.length != b.length) throw new IllegalArgumentException(
+      s"graft: vector dimension mismatch (${a.length} vs ${b.length})")
     var s = 0.0; var i = 0
     while (i < a.length) {
       val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1
@@ -360,11 +363,20 @@ object SimilaritySearch {
     centroids.select("cid", "cvec").orderBy("cid").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
 
-  /** The nprobe centroids nearest the query, resolved driver-side
-    * (tie-break on cid, mirroring the oracle's ORDER BY dist, cid). */
+  /** The nprobe centroids nearest the query, resolved driver-side: the
+    * one probe of every IVF search. Ordered by (dist, cid) ascending
+    * with NaN distances last — the order of the oracle's
+    * ORDER BY dist, cid. A null query probes nothing; a query whose
+    * length differs from the centroids' raises the kernel's dimension
+    * error. */
   def probeCids(codebook: Seq[(Long, Seq[Float])], qv: Seq[Float], nprobe: Int): Seq[Long] =
-    codebook.map { case (cid, cv) => (euclidOf(cv, qv), cid) }
-      .sorted.take(nprobe).map(_._2)
+    if (qv == null) Seq.empty
+    else {
+      val q = qv.toArray
+      codebook.map { case (cid, cv) => (euclidOf(q, cv), cid) }
+        .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(nprobe).map(_._2)
+    }
 
   /**
    * IVF probe search over an explicit codebook. Plan shape:

@@ -456,7 +456,8 @@ class VectorStore(spark: SparkSession, val root: String,
         stored
       case None => quantize
     }
-    writeBatch(prepareBatch(df), q)
+    val (batch, dim) = prepareBatch(df)
+    writeBatch(batch, dim, q)
   }
 
   private val layoutPath = s"$root/_layout.json"
@@ -503,8 +504,9 @@ class VectorStore(spark: SparkSession, val root: String,
     * assignment, dimension checks, projected-mode transform, tag
     * normalization/partition key. Split from [[writeBatch]] so upsert
     * can validate BEFORE committing anything — an invalid batch must
-    * fail while the old row versions are still live. */
-  private def prepareBatch(df: DataFrame): DataFrame = {
+    * fail while the old row versions are still live. Returns the frame
+    * and the dimension of the vectors it writes. */
+  private def prepareBatch(df: DataFrame): (DataFrame, Int) = {
     val withId =
       if (df.columns.contains("id")) df
       else df.withColumn("id", expr("uuid()"))
@@ -515,22 +517,22 @@ class VectorStore(spark: SparkSession, val root: String,
     // projected store: incoming raw vectors are projected through the
     // stored basis before writing (reference write-path transform,
     // src/db.rs:480-499)
-    val transformed = if (isProjected) {
+    val (transformed, dim) = if (isProjected) {
       val model = loadModel()
       require(dims.getInt(0) == model.d,
         s"graft: embedding dimension ${dims.getInt(0)} does not match projection input dim ${model.d}")
-      withId.withColumn("vector",
-        Pca.projector(spark, model, "graft_store_project")(col("vector")))
+      (withId.withColumn("vector",
+        Pca.projector(spark, model, "graft_store_project")(col("vector"))), model.k)
     } else {
       storedDim().foreach { d =>
         require(d == dims.getInt(0),
           s"graft: embedding dimension ${dims.getInt(0)} does not match store dimension $d")
       }
-      withId
+      (withId, dims.getInt(0))
     }
-    transformed
+    (transformed
       .withColumn("tags", normTags(col("tags")))
-      .withColumn("tag_key", tagKey(col("tags")))
+      .withColumn("tag_key", tagKey(col("tags"))), dim)
   }
 
   /** Add the packed codec column when the store is quantized. */
@@ -539,8 +541,8 @@ class VectorStore(spark: SparkSession, val root: String,
 
   /** Append a [[prepareBatch]]-validated frame into the live gen dirs,
     * record its tag sets, and write the commit through to the
-    * snapshot. */
-  private def writeBatch(prepared: DataFrame, quantize: Boolean): Unit = {
+    * snapshot, with the batch's vector dimension `dim`. */
+  private def writeBatch(prepared: DataFrame, dim: Int, quantize: Boolean): Unit = {
     val prev = snapshot()
     // when an ANN index will fold this batch in, pin the batch first:
     // id assignment is uuid() — NONdeterministic — so re-running the
@@ -576,7 +578,7 @@ class VectorStore(spark: SparkSession, val root: String,
     val sets = out.select(col("tag_key"), col("tags"), col("gen")).distinct().collect()
       .map(r => (r.getString(0), r.getSeq[String](1), r.getInt(2))).toSeq
     updateManifest(sets)
-    prev.foreach(writeThrough(_, sets, out.schema))
+    prev.foreach(writeThrough(_, sets, out.schema, dim))
     persistHasPacked(quantize)
     if (idxLive) {
       appendContentIdx(out)
@@ -638,7 +640,8 @@ class VectorStore(spark: SparkSession, val root: String,
     // validate + transform the incoming batch BEFORE any commit: a
     // dimension-mismatched batch must fail while the old row versions
     // are still live
-    val prepared = finalizeBatch(prepareBatch(df), q)
+    val (validated, dim) = prepareBatch(df)
+    val prepared = finalizeBatch(validated, q)
     val ids = df.select(col("id")).distinct()
     val affected = table().join(broadcast(ids), Seq("id"), "left_semi")
       .select("tag_key").distinct().collect().map(_.getString(0)).toSeq
@@ -670,7 +673,7 @@ class VectorStore(spark: SparkSession, val root: String,
       fs.delete(new Path(annRoot), true)
       fs.delete(new Path(dupRoot), true)
     }
-    if (!rest.isEmpty) writeBatch(rest.drop("packed"), q)
+    if (!rest.isEmpty) writeBatch(rest.drop("packed"), dim, q)
     persistHasPacked(q) // no-op when writeBatch already recorded it
   }
 
@@ -1376,15 +1379,22 @@ class VectorStore(spark: SparkSession, val root: String,
       .trigger(trigger)
       .start()
 
+  /** The stored vector dimension, None while the store has no rows.
+    * Served by the snapshot: a write-through carries its batch's, a
+    * cold snapshot reads one row once. */
   private def storedDim(): Option[Int] =
     if (!exists) None
-    else try {
-      table().select(size(col("vector"))).limit(1).collect()
-        .headOption.map(_.getInt(0))
-    } catch {
-      // the data dir can exist yet hold no live files (an upsert that
-      // overwrote every row of every affected partition)
-      case _: org.apache.spark.sql.AnalysisException => None
+    else {
+      val snap = snapshot()
+      def read(): Option[Int] = try {
+        tableOf(snap).select(size(col("vector"))).limit(1).collect()
+          .headOption.map(_.getInt(0))
+      } catch {
+        // the data dir can exist yet hold no live files (an upsert that
+        // overwrote every row of every affected partition)
+        case _: org.apache.spark.sql.AnalysisException => None
+      }
+      snap.fold(read())(_.dim(read()))
     }
 
   def exists: Boolean = fs.exists(new Path(dataPath))
@@ -1714,9 +1724,10 @@ class VectorStore(spark: SparkSession, val root: String,
   //  - write-through: writeBatch, holding the writer lock, folds its
   //    commit into the next snapshot — same max-gen rule as
   //    manifest(), only the gen dirs the batch wrote are re-listed, the
-  //    schema is kept, and the file index is built over that listing
-  //    with no Spark job. It never replaces a snapshot another caller
-  //    resolved to a third key ([[VectorStore.publish]]).
+  //    schema and the batch's vector dimension are kept, and the file
+  //    index is built over that listing with no Spark job. It never
+  //    replaces a snapshot another caller resolved to a third key
+  //    ([[VectorStore.publish]]).
   //  - a new manifest base (upsert, delete, compact, projectAll, the
   //    threshold fold) drops the entry, as does clear().
   //  - cold rebuild: one manifest collect, bounded by
@@ -1803,7 +1814,8 @@ class VectorStore(spark: SparkSession, val root: String,
     * published snapshot reads its table cold on first use. */
   private def writeThrough(prev: VectorStore.Snapshot,
                            batch: Seq[(String, Seq[String], Int)],
-                           batchSchema: org.apache.spark.sql.types.StructType): Unit = {
+                           batchSchema: org.apache.spark.sql.types.StructType,
+                           dim: Int): Unit = {
     def cols(st: org.apache.spark.sql.types.StructType) =
       st.fields.toSeq.filterNot(f => f.name == "tag_key" || f.name == "gen")
         .map(f => (f.name, f.dataType.catalogString))
@@ -1826,7 +1838,7 @@ class VectorStore(spark: SparkSession, val root: String,
       VectorStore.SnapshotData(spark.baseRelationToDataFrame(next).drop("gen"), Some(next), files)
     }
     val snap = new VectorStore.Snapshot(snapshotKey(), gens, tags,
-      () => carried.getOrElse(coldData(gens)))
+      () => carried.getOrElse(coldData(gens)), Some(dim))
     carried.foreach(_ => snap.data)
     VectorStore.publish(cacheKey, prev.key, snap)
   }
@@ -2709,36 +2721,32 @@ class VectorStore(spark: SparkSession, val root: String,
   /**
    * Batched EXACT top-k: a query TABLE (qid, qvec) against the store in
    * ONE plan — the store-side counterpart of the suite's
-   * knn_multiquery shape. The query side broadcasts (a query batch is
-   * bounded by contract — thousands, not billions); the scored stream
-   * is per-query-ranked through a qid-partitioned window whose rank
-   * filter Spark rewrites to WindowGroupLimit, so only k rows per query
-   * per partition survive to the shuffle. Mode-aware like [[search]].
+   * knn_multiquery shape. The batch is collected to the driver once
+   * ([[collectBatch]]: at most [[MaxExactBatch]] queries, a larger
+   * frame fails with the routing answer after reading ceiling + 1
+   * rows) and broadcast as a local relation; the scored stream is
+   * per-query-ranked through a qid-partitioned window whose rank filter
+   * Spark rewrites to WindowGroupLimit, so only k rows per query per
+   * partition survive to the shuffle. Mode-aware like [[search]].
    * Returns (qid, rank, similarity, id, content, tags).
    *
    * For query batches large enough that |Q| x |store| streaming is the
    * bottleneck, use [[searchManyAnn]] — probes prune the scan to
    * ~nprobe/C of the index.
    */
-  /** searchMany's enforced batch ceiling: far above any sane exact
-    * batch, far below anything that could stress a broadcast. */
-  private val MaxExactBatch = 65536L
-
   def searchMany(queries: DataFrame, k: Int = 10,
                  tags: Seq[String] = Nil): DataFrame = {
     // ENFORCE the batch contract instead of trusting it (VERDICT r7
-    // next #8): the query side broadcasts and the scan streams
-    // |Q| x |store| scores, so a miscalled million-query batch would
-    // OOM the broadcast or run for days — fail loudly with the routing
-    // answer. Probe through limit(ceiling + 1) so the check itself is
-    // bounded: a plain count() would fully evaluate an arbitrarily
-    // large (or expensive-upstream) queries plan just to reject it.
-    val probe = queries.limit((MaxExactBatch + 1).toInt).count()
-    require(probe <= MaxExactBatch,
+    // next #8): the scan streams |Q| x |store| scores, so a miscalled
+    // million-query batch would run for days — fail loudly with the
+    // routing answer
+    val (qproj, metric) = queryColumnMode()
+    val (rows, schema) = collectBatch(queries, qproj, MaxExactBatch,
       s"graft: searchMany got > $MaxExactBatch queries — the exact " +
         "path broadcasts the batch and streams |Q| x |store| scores. " +
         "Route large batches through searchManyAnn (probe-pruned, " +
         "corpus never shuffles) instead")
+    val q = broadcast(localFrame(rows, schema))
     val s = snapshot()
     val snap0 = tableOf(s)
     // same two-level tag filter as [[search]]: manifest-resolved
@@ -2748,12 +2756,42 @@ class VectorStore(spark: SparkSession, val root: String,
       case Some(keys) => snap0.where(col("tag_key").isin(keys: _*))
       case None => snap0
     }
-    val snap = tagSuperset(pruned, tags)
-    val (qproj, metric) = queryColumnMode()
-    val q = broadcast(queries.select(col("qid"), qproj(col("qvec")).as("qv")))
-    val scored = snap.join(q)
+    val scored = tagSuperset(pruned, tags).join(q)
       .withColumn("similarity", simColumn(metric, col("vector"), col("qv")))
       .where(!isnan(col("similarity")))
+    rankPerQuery(scored, k)
+  }
+
+  /** Queries per [[searchMany]] call: far above any sane exact batch,
+    * far below anything that could stress a broadcast. */
+  private val MaxExactBatch = 65536
+  /** Queries per [[searchManyAnn]] call: the batch and its
+    * |Q| x nprobe probe table are held on the driver and broadcast. */
+  private val MaxAnnBatch = 1 << 20
+
+  /** The query batch as driver rows (qid, qv), `qv` projected for the
+    * store's mode by `qproj`, collected ONCE through
+    * limit(ceiling + 1): the ceiling check reads at most ceiling + 1
+    * rows of an unbounded frame, and a nondeterministic or expensive
+    * query plan is evaluated once for everything the search derives
+    * from it. */
+  private def collectBatch(queries: DataFrame, qproj: Column => Column,
+      ceiling: Int, tooMany: => String): (Seq[Row], org.apache.spark.sql.types.StructType) = {
+    val q = queries.select(col("qid"), qproj(col("qvec")).as("qv"))
+    val rows = q.limit(ceiling + 1).collect()
+    require(rows.length <= ceiling, tooMany)
+    (rows.toSeq, q.schema)
+  }
+
+  private def localFrame(rows: Seq[Row],
+                         schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** Top k per qid by similarity (ties on id), as (qid, rank,
+    * similarity, id, content, tags). */
+  private def rankPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(desc("similarity"), asc("id"))
     scored
@@ -2764,24 +2802,25 @@ class VectorStore(spark: SparkSession, val root: String,
   }
 
   /**
-   * Batched ANN top-k over the committed IVF index: every query
-   * resolves its nprobe nearest lists from the plan-constant codebook
-   * (explode + WindowGroupLimit — the query side is tiny by
-   * definition), the UNION of probed list ids (bounded by the codebook
-   * size — driver metadata, one small job over the query table, the
-   * scan never runs for it) becomes a STATIC partition IN-list on the
-   * cid-partitioned index — non-probed lists are never read, exactly
-   * like [[searchAnn]]'s single-query pruning — and the (qid, lid)
-   * probe table then BROADCASTS onto the pruned scan for per-query
-   * assignment. The corpus never shuffles, and each index row joins at
-   * most its own list's probes (a row lives in exactly ONE list, so no
-   * dedup is needed). Same version-pinning as [[searchAnn]] (codebook
-   * and data resolve from ONE committed dir). `quantized = true`
-   * scores the packed codec column (quantized stores index it
-   * alongside) — FuseQuantizedKernels collapses kernel-over-unpack
-   * into the packed kernel, so probed lists scan bytes, like
-   * [[searchAnn]]'s quantized mode. Returns
-   * (qid, rank, similarity, id, content, tags).
+   * Batched ANN top-k over the committed IVF index. The batch is
+   * collected to the driver once ([[collectBatch]], at most
+   * [[MaxAnnBatch]] queries) and every query takes its nprobe nearest
+   * lists from the cached codebook with [[searchAnn]]'s own driver
+   * probe ([[SimilaritySearch.probeCids]]). The union of probed lists
+   * (bounded by the codebook size) becomes a STATIC partition IN-list on
+   * the cid-partitioned index — non-probed lists are never read — and
+   * the (qid, qv, lid) probe table, a local relation, BROADCASTS onto
+   * the pruned scan for per-query assignment. Both come from the same
+   * driver rows, so the scan reads every list a query probes. The
+   * corpus never shuffles, and each index row joins at most its own
+   * list's probes (a row lives in exactly ONE list, so no dedup is
+   * needed). Same version-pinning as [[searchAnn]] (codebook and data
+   * resolve from ONE committed dir). `quantized = true` scores the
+   * packed codec column (quantized stores index it alongside) —
+   * FuseQuantizedKernels collapses kernel-over-unpack into the packed
+   * kernel, so probed lists scan bytes, like [[searchAnn]]'s quantized
+   * mode. A query with a null vector probes nothing and returns no
+   * rows. Returns (qid, rank, similarity, id, content, tags).
    */
   def searchManyAnn(queries: DataFrame, k: Int = 10,
                     nprobe: Int = 0, quantized: Boolean = false,
@@ -2793,116 +2832,65 @@ class VectorStore(spark: SparkSession, val root: String,
     val nlist = codebook.size
     var np = resolveNprobe(dir, nprobe, nlist)
     val (qproj, metric) = queryColumnMode()
-    val q = queries.select(col("qid"), qproj(col("qvec")).as("qv"))
-    val centsLit = array(codebook.sortBy(_._1).map { case (cid, cv) =>
-      struct(lit(cid).as("lid"), GraftFunctions.vecLit(cv).as("cv"))
-    }: _*)
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(asc("dist"), asc("lid"))
-    // pin the probe assignment to ONE evaluation (ADVICE r7 #2): the
-    // IN-list collect below and the broadcast join both consume it,
-    // and a nondeterministic caller plan re-evaluating differently
-    // between the two would probe lists outside the pruned scan —
-    // those candidates would silently vanish. localCheckpoint
-    // materializes the (tiny by contract) probe table once.
-    def probeAt(p: Int): DataFrame = q
-      .select(col("qid"), col("qv"), explode(centsLit).as("c"))
-      .select(col("qid"), col("qv"), col("c.lid").as("lid"),
-        GraftFunctions.euclidean(col("qv"), col("c.cv")).as("dist"))
-      .withColumn("prn", row_number().over(pw))
-      .where(col("prn") <= p)
-      .select(col("qid"), col("qv"), col("lid"))
-      .localCheckpoint()
-    // distinct probed lists: <= |codebook| values from the QUERY side
-    // only — a static IN-list beats relying on DPP to reach the scan
-    def lidsOf(probed: DataFrame): IndexedSeq[Long] =
-      probed.select("lid").distinct().collect().map(_.getLong(0)).toIndexedSeq
-    var probed = probeAt(np)
-    var probeLids = lidsOf(probed)
+    val (rows, schema) = collectBatch(queries, qproj, MaxAnnBatch,
+      s"graft: searchManyAnn got > $MaxAnnBatch queries — the batch and " +
+        "its probe table are held on the driver and broadcast; split it")
     // filtered auto-nprobe escalation, batched (VERDICT r15 next #6 —
     // same under-coverage as searchAnn: the calibration is unfiltered).
     // The starved query is a PER-QUERY property (tagged rows can be
-    // concentrated in lists only some queries probe), so the check is
-    // one grouped count per round — the filtered pruned scan joined to
-    // the broadcast probe table, counted per qid, MIN across the batch
-    // — and np doubles for everyone until the worst query's pool holds
-    // k x margin candidates or every list is probed. Cost per round is
-    // one aggregate over data the final query scans anyway; rounds are
-    // log-bounded. Explicit nprobe is never overridden.
-    if (tags.nonEmpty && nprobe <= 0 && np < nlist && probeLids.nonEmpty) {
+    // concentrated in lists only some queries probe), so np doubles for
+    // everyone until the worst query's pool holds k x margin candidates
+    // or every list is probed; each query's full probe order is ranked
+    // once for it. Explicit nprobe is never overridden.
+    val escalates = tags.nonEmpty && nprobe <= 0 && np < nlist
+    val orders = rows.map(r => SimilaritySearch.probeCids(
+      codebook, r.getSeq[Float](1), if (escalates) nlist else np))
+    def lidsAt(p: Int): Seq[Long] = orders.flatMap(_.take(p)).distinct
+    // a null-vector query probes nothing and scores nothing, so it
+    // never asks for more lists
+    val probing = orders.filter(_.nonEmpty)
+    if (escalates && probing.nonEmpty) {
       val margin = k.toLong * AnnFilteredMargin
-      tagStatsOf(dir) match {
-        case Some(stats) =>
-          // metadata-first, batched: the per-query pool is the sum of
-          // the probed lists' per-cid lower bounds — the (qid, lid)
-          // probe table is already collected driver-side for the
-          // IN-list, so the worst query's pool is pure arithmetic, no
-          // per-round count job over the index data. Store-wide
-          // short-circuit first: when the whole index cannot reach the
-          // margin, every query needs the full probe — jump there
-          // without re-planning rounds.
-          val matched = tagMatchCounts(stats, tags)
-          if (matched.values.sum < margin) {
-            np = nlist
-            probed = probeAt(np)
-            probeLids = lidsOf(probed)
-          } else {
-            def worstPoolMeta(): Long = {
-              val byQ = probed.select("qid", "lid").collect()
-                .groupBy(_.get(0))
-              if (byQ.isEmpty) 0L
-              else byQ.values.map(_.map(r =>
-                matched.getOrElse(r.getLong(1), 0L)).sum).min
-            }
-            while (np < nlist && worstPoolMeta() < margin) {
-              np = math.min(nlist, np * 2)
-              probed = probeAt(np)
-              probeLids = lidsOf(probed)
-            }
+      // matching rows per list: the build-time lower bounds (pure
+      // driver arithmetic, no job), else — legacy or oversized-stats
+      // index — one grouped count job per round over the lists not
+      // counted yet (the final query scans them anyway)
+      val stats = tagStatsOf(dir).map(tagMatchCounts(_, tags))
+      val matched = scala.collection.mutable.Map[Long, Long]() ++ stats.getOrElse(Map.empty)
+      def worstPool(): Long = {
+        if (stats.isEmpty) {
+          val fresh = lidsAt(np).filterNot(matched.contains)
+          if (fresh.nonEmpty) {
+            matched ++= fresh.map(_ -> 0L)
+            matched ++= tagSuperset(annDataOf(dir).where(col("cid").isin(fresh: _*)), tags)
+              .groupBy("cid").count().collect()
+              .map(r => r.getAs[Number](0).longValue -> r.getLong(1))
           }
-        case None =>
-          def worstPool(): Long = {
-            // one job: per-qid candidate counts LEFT-joined back onto
-            // the batch's qids, so a query whose probes hold ZERO
-            // filtered rows (no groupBy row at all) reads as 0, not as
-            // absent
-            val cand = tagSuperset(
-                annDataOf(dir).where(col("cid").isin(probeLids: _*)), tags)
-              .withColumnRenamed("cid", "lid")
-              .join(broadcast(probed.select("qid", "lid")), Seq("lid"))
-              .groupBy("qid").agg(count(lit(1)).as("n"))
-            val r = probed.select("qid").distinct()
-              .join(cand, Seq("qid"), "left")
-              .agg(min(coalesce(col("n"), lit(0L)))).head()
-            if (r.isNullAt(0)) 0L else r.getLong(0)
-          }
-          while (np < nlist && worstPool() < margin) {
-            np = math.min(nlist, np * 2)
-            probed = probeAt(np)
-            probeLids = lidsOf(probed)
-          }
+        }
+        probing.map(_.take(np).map(matched.getOrElse(_, 0L)).sum).min
       }
+      // store-wide short-circuit: when the whole index cannot reach the
+      // margin, every query needs the full probe
+      if (stats.exists(_.values.sum < margin)) np = nlist
+      else while (np < nlist && worstPool() < margin) np = math.min(nlist, np * 2)
     }
+    val probes = localFrame(
+      rows.zip(orders).flatMap { case (r, o) => o.take(np).map(l => Row(r.get(0), r.get(1), l)) },
+      schema.add("lid", org.apache.spark.sql.types.LongType, nullable = false))
     // filtered ANN, batched: the tag-superset predicate rides inside
     // the union of probed lists (row filter BELOW the broadcast join),
     // same contract as searchAnn(tags) — selective filters are the
     // caller's nprobe dial, never a re-query fallback
     val idx = tagSuperset(
-        annDataOf(dir).where(col("cid").isin(probeLids: _*)), tags)
+        annDataOf(dir).where(col("cid").isin(lidsAt(np): _*)), tags)
       .withColumnRenamed("cid", "lid")
     require(!quantized || idx.columns.contains("packed"),
       "graft: quantized batched search needs a quantized store (index has no packed column)")
     val vec = if (quantized) GraftFunctions.unpack(col("packed")) else col("vector")
-    val scored = idx.join(broadcast(probed), Seq("lid"))
+    val scored = idx.join(broadcast(probes), Seq("lid"))
       .withColumn("similarity", simColumn(metric, vec, col("qv")))
       .where(!isnan(col("similarity")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("similarity"), asc("id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("similarity"),
-        col("id"), col("content"), col("tags"))
+    rankPerQuery(scored, k)
   }
 
   // ---- near-dup pair graph: a versioned store artifact ----
@@ -3299,17 +3287,25 @@ object VectorStore {
     * [[VectorStore]]. `tags` is None past the dppRouteThreshold of the
     * facade that built it. The table side is built on first use and
     * kept: a failed build (a live gen dir gone) throws to the reader
-    * and is retried by the next one, while metadata stays served. */
+    * and is retried by the next one, while metadata stays served. A
+    * write-through carries its batch's vector dimension (`knownDim`);
+    * a cold snapshot reads it on first use. */
   private[graft] final class Snapshot(
       val key: (Int, Int, Long),
       val gens: Map[String, Int],
       val tags: Option[Map[String, Seq[String]]],
-      build: () => SnapshotData) {
+      build: () => SnapshotData,
+      knownDim: Option[Int] = None) {
     @volatile private var built: Option[SnapshotData] = None
     def data: SnapshotData = built.getOrElse(synchronized {
       built.getOrElse { val d = build(); built = Some(d); d }
     })
     def dataIfBuilt: Option[SnapshotData] = built
+    @volatile private var dimension: Option[Int] = knownDim
+    /** The stored vector dimension: known, else `read` and kept once
+      * it finds a row. */
+    def dim(read: => Option[Int]): Option[Int] =
+      dimension.orElse { val d = read; dimension = d; d }
   }
 
   /** A snapshot's table: the DataFrame, the listed parquet relation a

@@ -407,9 +407,16 @@ class KernelSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val data = (1L to 40L).map(i =>
       (i, (0 until d).map(_ => (rnd.nextFloat() - 0.5f) * 4f))) :+
-      (98L, Seq.fill(d)(0f)) // zero vector: every dot == 0.0, no bit set
+      (98L, Seq.fill(d)(0f)) :+ // zero vector: every dot == 0.0, no bit set
+      (96L, Seq.tabulate(d)(j => if (j == 3) Float.NaN else 0.5f)) // every dot NaN
+    // a null ELEMENT nulls every dot of its vector under Spark's
+    // arithmetic: the retired column left each bit unset
+    val nullElem = spark.range(1).select(lit(97L).as("vec_id"),
+      array((0 until d).map(j => if (j == 3) lit(null).cast("float") else lit(0.5f)): _*)
+        .as("embedding"))
     val emb = data.toDF("vec_id", "embedding")
       .union(Seq((99L, null.asInstanceOf[Seq[Float]])).toDF("vec_id", "embedding"))
+      .union(nullElem)
     val ps = SimilaritySearch.planes(d, bands * rows)
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
@@ -424,8 +431,26 @@ class KernelSpec extends AnyFunSuite {
         }: _*)).as("bk"))
       .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key")))
     assert(got == legacy)
-    assert(got.size == 42 * bands && got.exists(_._3 != 0L),
+    assert(got.size == 44 * bands && got.exists(_._3 != 0L),
       "banding must keep every row (null vec hashes to key 0) and set some bits")
+    // Spark's comparison, pinned: NaN > 0.0 sets every bit, a null
+    // element sets none — in the compiled and the interpreted kernel
+    val allBits = (1L << rows) - 1
+    assert(got.filter(_._1 == 96L).map(_._3) == Seq.fill(bands)(allBits))
+    assert(got.filter(_._1 == 97L).map(_._3) == Seq.fill(bands)(0L))
+    locally {
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+      import org.apache.spark.sql.catalyst.util.GenericArrayData
+      import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+      val e = graft.functions.BandKeysExpr(
+        BoundReference(0, ArrayType(FloatType, containsNull = true), nullable = true),
+        Literal.create(ps, ArrayType(ArrayType(DoubleType))), Literal(rows))
+      def keys(v: Array[Any]) = e.eval(InternalRow(new GenericArrayData(v)))
+        .asInstanceOf[GenericArrayData].toLongArray().toSeq
+      assert(keys(Array.tabulate[Any](d)(j => if (j == 3) Float.NaN else 0.5f)) == Seq.fill(bands)(allBits))
+      assert(keys(Array.tabulate[Any](d)(j => if (j == 3) null else 0.5f)) == Seq.fill(bands)(0L))
+    }
     // the single-bucket surface (ann_lsh path) agrees with the HOF spec too
     val one = emb.where(col("embedding").isNotNull).select(
       SimilaritySearch.signBucket(col("embedding"), d).as("k"),

@@ -1106,6 +1106,174 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
+  /** searchManyAnn's retired Spark-side probe, kept as the oracle:
+    * each query's `p` nearest lists by explode over the codebook +
+    * row_number() OVER (PARTITION BY qid ORDER BY dist, lid). */
+  private def windowProbe(qs: org.apache.spark.sql.DataFrame,
+                          codebook: Seq[(Long, Seq[Float])], p: Int) = {
+    import graft.functions.GraftFunctions
+    val cents = array(codebook.sortBy(_._1).map { case (cid, cv) =>
+      struct(lit(cid).as("lid"), GraftFunctions.vecLit(cv).as("cv"))
+    }: _*)
+    val pw = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(asc("dist"), asc("lid"))
+    qs.select(col("qid"), col("qvec").as("qv"), explode(cents).as("c"))
+      .select(col("qid"), col("qv"), col("c.lid").as("lid"),
+        GraftFunctions.euclidean(col("qv"), col("c.cv")).as("dist"))
+      .withColumn("prn", row_number().over(pw))
+      .where(col("prn") <= p)
+      .select(col("qid"), col("qv"), col("lid"), col("dist"))
+  }
+
+  /** The newest committed ANN index dir of `store` and its codebook. */
+  private def annIndex(store: VectorStore): (String, Seq[(Long, Seq[Float])]) = {
+    val v = new java.io.File(s"${store.root}/ann").list()
+      .collect { case n if n.matches("v\\d+") => n.drop(1).toInt }.max
+    val dir = s"${store.root}/ann/v$v"
+    (dir, graft.operators.SimilaritySearch.collectCodebook(
+      spark.read.parquet(s"$dir/_codebook.parquet")))
+  }
+
+  test("driver probe == the retired window probe (ties, +-Inf, NaN, null qvec, nprobe >= nlist); kernel dimension error") {
+    import graft.operators.SimilaritySearch
+    // lists 1 and 3 share a centroid (every query ties on them); list 5
+    // has an infinite element (an infinite query element meets it as NaN)
+    val inf = Float.PositiveInfinity
+    val codebook = Seq(0L -> Seq(1f, 0f, 0f), 1L -> Seq(0f, 1f, 0f),
+      2L -> Seq(0f, 0f, 1f), 3L -> Seq(0f, 1f, 0f), 4L -> Seq(1f, 1f, 1f),
+      5L -> Seq(inf, 0f, 0f))
+    val queries = Seq[(Long, Option[Seq[Float]])](
+      0L -> Some(Seq(0f, 0.9f, 0.1f)), 1L -> Some(Seq(0f, 1f, 0f)),
+      2L -> Some(Seq(inf, 0f, 0f)), 3L -> Some(Seq(-inf, 1f, 0f)),
+      4L -> Some(Seq(Float.NaN, 0f, 0f)), 5L -> Some(Seq(0.5f, 0.5f, Float.NaN)),
+      6L -> Some(Seq(2f, -1f, 0.5f)), 7L -> None)
+    val qs = queries.toDF("qid", "qvec")
+    for (p <- Seq(1, 2, 3, 6, 9)) {
+      val oracle = windowProbe(qs, codebook, p).collect()
+      // the window ranks a null query's lists by a null distance: they
+      // can score nothing, and the driver probe takes none of them
+      val (nullDist, ranked) = oracle.partition(_.isNullAt(3))
+      assert(nullDist.map(_.getLong(0)).distinct.toSeq == Seq(7L))
+      val want = ranked.map(r => (r.getLong(0), r.getLong(2))).toSet
+      val got = queries.flatMap { case (q, v) =>
+        SimilaritySearch.probeCids(codebook, v.orNull, p).map(q -> _) }.toSet
+      assert(got == want, s"nprobe $p: driver $got vs window $want")
+    }
+    // order, not only the set: NaN distances last, ties on cid
+    assert(SimilaritySearch.probeCids(codebook, Seq(inf, 0f, 0f), 6) == Seq(0L, 1L, 2L, 3L, 4L, 5L))
+    assert(SimilaritySearch.probeCids(codebook, Seq(0f, 1f, 0f), 2) == Seq(1L, 3L))
+    // a query of the wrong length fails as the kernel does, longer or shorter
+    for (bad <- Seq(Seq(1f, 0f), Seq(1f, 0f, 0f, 0f))) {
+      val e = intercept[IllegalArgumentException](SimilaritySearch.probeCids(codebook, bad, 2))
+      assert(e.getMessage.contains("graft: vector dimension mismatch"), e.getMessage)
+      val k = intercept[Exception](windowProbe(Seq((0L, bad)).toDF("qid", "qvec"), codebook, 2).collect())
+      assert(Iterator.iterate[Throwable](k)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("graft: vector dimension mismatch")), k.toString)
+    }
+  }
+
+  test("searchManyAnn == the retired window-probe formulation: same rows, same rank order") {
+    import graft.functions.GraftFunctions
+    val store = freshStore()
+    val vt = graft.core.Tables.vectorTable(spark, "/root/testdata/sf0.001")
+      .select(col("id").cast("string").as("id"), col("vector"), col("content"), col("tags"))
+    store.insert(vt)
+    store.buildAnnIndex(4)
+    val (dir, codebook) = annIndex(store)
+    val qvs = vt.where(col("id").cast("long") < 3)
+      .select(col("id").cast("long").as("qid"), col("vector").as("qvec"))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "rank", "similarity", "id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3))).toSeq.sorted
+    for (np <- Seq(1, 2, 4)) {
+      val probed = windowProbe(qvs, codebook, np).select("qid", "qv", "lid").localCheckpoint()
+      val lids = probed.select("lid").distinct().collect().map(_.getLong(0)).toSeq
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("qid").orderBy(desc("similarity"), asc("id"))
+      val parent = spark.read.parquet(dir).where(col("cid").isin(lids: _*))
+        .withColumnRenamed("cid", "lid")
+        .join(broadcast(probed), Seq("lid"))
+        .withColumn("similarity", GraftFunctions.cosine(col("vector"), col("qv")))
+        .where(!isnan(col("similarity")))
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .where(col("rank") <= 5)
+      val got = rowsOf(store.searchManyAnn(qvs, k = 5, nprobe = np))
+      assert(got.nonEmpty && got == rowsOf(parent), s"nprobe $np")
+    }
+    // a batch of the wrong dimension fails with the kernel's message
+    // when the search is built
+    val e = intercept[IllegalArgumentException](store.searchManyAnn(
+      Seq((0L, Seq(1f, 0f))).toDF("qid", "qvec"), k = 5, nprobe = 2))
+    assert(e.getMessage.contains("graft: vector dimension mismatch"), e.getMessage)
+    store.clear()
+  }
+
+  test("batched searches resolve on the driver: no job before the action, <= 3 jobs per warm ANN call, one evaluation of the batch") {
+    val store = freshStore()
+    val rng = new scala.util.Random(17)
+    val rows = (0 until 200).map { i =>
+      (s"v$i", Array.fill(8)(rng.nextGaussian().toFloat), s"c$i", Seq("t"))
+    }
+    store.insert(df(rows))
+    store.buildAnnIndex(k = 4)
+    val local = rows.take(6).zipWithIndex.map { case (r, i) => (i.toLong, r._2.toSeq) }
+      .toDF("qid", "qvec")
+    // the first calls load the codebook, meta and index schema
+    store.searchManyAnn(local, k = 5).collect()
+    store.searchMany(local, k = 5).collect()
+    val (_, annBuild) = SparkTestSession.jobsDuring(store.searchManyAnn(local, k = 5))
+    val (_, exactBuild) = SparkTestSession.jobsDuring(store.searchMany(local, k = 5))
+    assert(annBuild == 0 && exactBuild == 0,
+      s"building ran $annBuild (searchManyAnn) and $exactBuild (searchMany) jobs")
+    val (got, annJobs) = SparkTestSession.jobsDuring(store.searchManyAnn(local, k = 5).collect())
+    assert(got.length == 30)
+    assert(annJobs <= 3, s"a warm searchManyAnn call ran $annJobs jobs")
+    // a nondeterministic batch is evaluated once: every similarity is the
+    // cosine against the qid's vector as the broadcast probe table holds it
+    val randQs = spark.range(4).select(col("id").as("qid"),
+      array(Seq.fill(8)(rand() - 0.5): _*).cast("array<float>").as("qvec"))
+    val res = store.searchManyAnn(randQs, k = 5, nprobe = 2)
+    val probeTable = res.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if l.output.map(_.name).contains("lid") => l.data
+    }.flatten
+    val qv = probeTable.map(r => r.getLong(0) -> r.getArray(1).toFloatArray().toSeq)
+      .groupBy(_._1).map { case (q, vs) => q -> vs.map(_._2).distinct }
+    assert(qv.size == 4 && qv.values.forall(_.size == 1), qv)
+    val vectors = rows.map(r => r._1 -> r._2.toSeq).toMap
+    def cos(a: Seq[Float], b: Seq[Float]) = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      a.indices.foreach { i =>
+        val x = a(i).toDouble; val y = b(i).toDouble
+        dot += x * y; na += x * x; nb += y * y
+      }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    val hits = res.collect()
+    assert(hits.length == 20)
+    hits.foreach { h =>
+      assert(h.getDouble(2) == cos(vectors(h.getString(3)), qv(h.getLong(0)).head), h)
+    }
+    store.clear()
+  }
+
+  test("the store dimension rides in the snapshot: after a write-through a wrong-dimension insert is rejected without reading the store") {
+    val store = freshStore()
+    store.insert(df(Seq(("a", Array(1f, 0f, 0f), "x", Seq("t")))))
+    // the manifest exists now, so this insert writes through
+    store.insert(df(Seq(("b", Array(0f, 1f, 0f), "y", Seq("u")))))
+    val bad = df(Seq(("c", Array(1f, 0f), "z", Seq("t"))))
+    // the batch's own min/max dimension aggregate is all a rejection runs
+    val (_, batchJobs) = SparkTestSession.jobsDuring(
+      bad.select(size(col("vector")).as("d")).agg(min("d").as("mn"), max("d").as("mx")).head())
+    val (e, jobs) = SparkTestSession.jobsDuring(
+      intercept[IllegalArgumentException](store.insert(bad)))
+    assert(e.getMessage.contains("does not match store dimension 3"), e.getMessage)
+    assert(jobs == batchJobs, s"rejection ran $jobs jobs, the batch aggregate alone $batchJobs")
+    assert(store.table().count() == 2)
+    store.clear()
+  }
+
   test("dup graph: versioned pair artifact; rebuild bumps version; vacuum reclaims") {
     val store = freshStore()
     // a near-dup trio (identical vectors) + two isolated rows
