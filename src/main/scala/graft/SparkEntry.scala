@@ -65,6 +65,17 @@ object SparkEntry {
                       idCol: String = "vec_id"): DataFrame =
     TopK.topKRanked(scored, k, Seq(desc(simCol), asc(idCol)))
 
+  /** A fixture cache: one value per (session, key), built by the
+    * first caller; entries of stopped sessions are purged on every
+    * access. See [[dupPairsCache]] for the contract. */
+  private final class SessionCache[K, V] {
+    private val m = new java.util.concurrent.ConcurrentHashMap[(SparkSession, K), V]()
+    def apply(s: SparkSession, key: K)(build: => V): V = {
+      m.keySet.removeIf(_._1.sparkContext.isStopped)
+      m.computeIfAbsent((s, key), _ => build)
+    }
+  }
+
   /** The MinHash near-dup pair graph, persisted once per (session, dir):
     * dedup_minhash, dedup_clusters(_stars), graph_pagerank, and
     * pipeline_curate all consume these SAME pairs, and without sharing
@@ -92,14 +103,10 @@ object SparkEntry {
     * applies to [[streamedStoreCache]], whose temp store dirs also
     * live until JVM exit (tmpfs-scale: one sf0.01 store per suite
     * run). */
-  private val dupPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def minhashPairsCached(s: SparkSession, dir: String): DataFrame = {
-    dupPairsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    dupPairsCache.computeIfAbsent((s, dir),
-      _ => Dedup.minhashNearDups(Tables.load(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  private val dupPairsCache = new SessionCache[String, DataFrame]
+  private def minhashPairsCached(s: SparkSession, dir: String): DataFrame =
+    dupPairsCache(s, dir)(Dedup.minhashNearDups(Tables.load(s, dir, "documents"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** A VectorStore populated through the STRUCTURED STREAMING ingest
     * path (insertStream -> foreachBatch -> insert), built once per
@@ -115,29 +122,25 @@ object SparkEntry {
     * zero-padded ("d%09d") so STRING order == numeric doc order and
     * every tie-break matches the SQL oracle's. Doc 0 is the query
     * document on both legs, so it is excluded from the store. */
-  private val streamedStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def streamedStoreRoot(s: SparkSession, dir: String): String = {
-    streamedStoreCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    streamedStoreCache.computeIfAbsent((s, dir),
-      { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_hybrid_stream").toString
-        val docs = Tables.load(s, dir, "documents").where(col("doc_id") =!= 0)
-        val emb = Tables.load(s, dir, "embeddings")
-        val rows = docs.join(emb, docs("doc_id") === emb("vec_id"))
-          .select(format_string("d%09d", col("doc_id")).as("id"),
-            col("embedding").as("vector"), col("text").as("content"),
-            array(lit("streamed")).as("tags"))
-        val staging = s"$root/staging"
-        rows.repartition(4).write.parquet(staging)
-        val store = new graft.operators.VectorStore(s, s"$root/store")
-        val stream = s.readStream.schema(rows.schema)
-          .option("maxFilesPerTrigger", 2).parquet(staging)
-        store.insertStream(stream).awaitTermination()
-        s"$root/store"
-      })
-  }
+  private val streamedStoreCache = new SessionCache[String, String]
+  private def streamedStoreRoot(s: SparkSession, dir: String): String =
+    streamedStoreCache(s, dir) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_hybrid_stream").toString
+      val docs = Tables.load(s, dir, "documents").where(col("doc_id") =!= 0)
+      val emb = Tables.load(s, dir, "embeddings")
+      val rows = docs.join(emb, docs("doc_id") === emb("vec_id"))
+        .select(format_string("d%09d", col("doc_id")).as("id"),
+          col("embedding").as("vector"), col("text").as("content"),
+          array(lit("streamed")).as("tags"))
+      val staging = s"$root/staging"
+      rows.repartition(4).write.parquet(staging)
+      val store = new graft.operators.VectorStore(s, s"$root/store")
+      val stream = s.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", 2).parquet(staging)
+      store.insertStream(stream).awaitTermination()
+      s"$root/store"
+    }
 
   /** The serving-side twin of [[streamedStoreRoot]]: a store over the
     * embeddings corpus (vec_id >= 8, zero-padded string ids so string
@@ -150,35 +153,31 @@ object SparkEntry {
     * append sink end-to-end against the same DuckDB brute-force ground
     * truth as knn_multiquery. Built once per (session, dir); same
     * staleness contract as [[dupPairsCache]]. Returns the results dir. */
-  private val serveResultsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def servedResultsDir(s: SparkSession, dir: String): String = {
-    serveResultsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    serveResultsCache.computeIfAbsent((s, dir),
-      { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_serve_stream").toString
-        val emb = Tables.load(s, dir, "embeddings")
-        val corpus = emb.where(col("vec_id") >= 8)
-          .select(format_string("%012d", col("vec_id")).as("id"),
-            col("embedding").as("vector"),
-            format_string("%012d", col("vec_id")).as("content"),
-            array(lit("served")).as("tags"))
-        val store = new graft.operators.VectorStore(s, s"$root/store")
-        store.insert(corpus)
-        val queries = emb.where(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val feedDir = s"$root/feed"
-        queries.where(col("qid") < 4).coalesce(1).write.parquet(feedDir)
-        queries.where(col("qid") >= 4).coalesce(1)
-          .write.mode("append").parquet(feedDir)
-        val feed = s.readStream.schema(queries.schema)
-          .option("maxFilesPerTrigger", 1).parquet(feedDir)
-        store.serveStream(feed, s"$root/out", k = 5, exact = true,
-          queryName = "graft_serve_entry").awaitTermination()
-        s"$root/out/results"
-      })
-  }
+  private val serveResultsCache = new SessionCache[String, String]
+  private def servedResultsDir(s: SparkSession, dir: String): String =
+    serveResultsCache(s, dir) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_serve_stream").toString
+      val emb = Tables.load(s, dir, "embeddings")
+      val corpus = emb.where(col("vec_id") >= 8)
+        .select(format_string("%012d", col("vec_id")).as("id"),
+          col("embedding").as("vector"),
+          format_string("%012d", col("vec_id")).as("content"),
+          array(lit("served")).as("tags"))
+      val store = new graft.operators.VectorStore(s, s"$root/store")
+      store.insert(corpus)
+      val queries = emb.where(col("vec_id") < 8)
+        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      val feedDir = s"$root/feed"
+      queries.where(col("qid") < 4).coalesce(1).write.parquet(feedDir)
+      queries.where(col("qid") >= 4).coalesce(1)
+        .write.mode("append").parquet(feedDir)
+      val feed = s.readStream.schema(queries.schema)
+        .option("maxFilesPerTrigger", 1).parquet(feedDir)
+      store.serveStream(feed, s"$root/out", k = 5, exact = true,
+        queryName = "graft_serve_entry").awaitTermination()
+      s"$root/out/results"
+    }
 
   /** A VectorStore populated through the DEDUP-ON-INGEST streaming path
     * ([[graft.operators.VectorStore.insertStreamDedup]]): the fixture
@@ -192,34 +191,30 @@ object SparkEntry {
     * final store contents against DuckDB's min-id-per-text ground
     * truth. Built once per (session, dir); same staleness contract as
     * [[dupPairsCache]]. Returns the store root. */
-  private val dedupStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def dedupIngestStoreRoot(s: SparkSession, dir: String): String = {
-    dedupStoreCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    dedupStoreCache.computeIfAbsent((s, dir),
-      { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ingest_dedup").toString
-        val docs = Tables.load(s, dir, "documents")
-        val emb = Tables.load(s, dir, "embeddings")
-        val base = docs.join(emb, docs("doc_id") === emb("vec_id"))
-          .select(col("doc_id"), col("embedding"), col("text"))
-        val replicas = base.where(col("doc_id") < 50)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            col("embedding"), col("text"))
-        val rows = base.unionByName(replicas)
-          .select(format_string("d%09d", col("doc_id")).as("id"),
-            col("embedding").as("vector"), col("text").as("content"),
-            array(lit("ingest")).as("tags"))
-        val staging = s"$root/staging"
-        rows.repartition(4, col("content")).write.parquet(staging)
-        val store = new graft.operators.VectorStore(s, s"$root/store")
-        val stream = s.readStream.schema(rows.schema)
-          .option("maxFilesPerTrigger", 1).parquet(staging)
-        store.insertStreamDedup(stream).awaitTermination()
-        s"$root/store"
-      })
-  }
+  private val dedupStoreCache = new SessionCache[String, String]
+  private def dedupIngestStoreRoot(s: SparkSession, dir: String): String =
+    dedupStoreCache(s, dir) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_ingest_dedup").toString
+      val docs = Tables.load(s, dir, "documents")
+      val emb = Tables.load(s, dir, "embeddings")
+      val base = docs.join(emb, docs("doc_id") === emb("vec_id"))
+        .select(col("doc_id"), col("embedding"), col("text"))
+      val replicas = base.where(col("doc_id") < 50)
+        .select((col("doc_id") + 1000000L).as("doc_id"),
+          col("embedding"), col("text"))
+      val rows = base.unionByName(replicas)
+        .select(format_string("d%09d", col("doc_id")).as("id"),
+          col("embedding").as("vector"), col("text").as("content"),
+          array(lit("ingest")).as("tags"))
+      val staging = s"$root/staging"
+      rows.repartition(4, col("content")).write.parquet(staging)
+      val store = new graft.operators.VectorStore(s, s"$root/store")
+      val stream = s.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", 1).parquet(staging)
+      store.insertStreamDedup(stream).awaitTermination()
+      s"$root/store"
+    }
 
   /** A VectorStore populated through the NEAR-dup dedup-on-ingest
     * streaming path ([[graft.operators.VectorStore.insertStreamNearDedup]]):
@@ -232,36 +227,32 @@ object SparkEntry {
     * candidates -> >= NearDupSigAgreeMin slot agreement -> recursive
     * components -> min-id keep, then the cross-arrival probe against
     * arrival-1 survivors. Built once per (session, dir). */
-  private val nearDedupStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def nearDedupIngestStoreRoot(s: SparkSession, dir: String): String = {
-    nearDedupStoreCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    nearDedupStoreCache.computeIfAbsent((s, dir),
-      { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ingest_neardedup").toString
-        val docs = Tables.load(s, dir, "documents")
-        val emb = Tables.load(s, dir, "embeddings")
-        val base = docs.join(emb, docs("doc_id") === emb("vec_id"))
-          .select(col("doc_id"), col("embedding"), col("text"))
-        def rows(d: org.apache.spark.sql.DataFrame) =
-          d.select(format_string("d%09d", col("doc_id")).as("id"),
-            col("embedding").as("vector"), col("text").as("content"),
-            array(lit("ingest")).as("tags"))
-        val staging = s"$root/staging"
-        val store = new graft.operators.VectorStore(s, s"$root/store")
-        val schema = rows(base).schema
-        def drain(): Unit = store.insertStreamNearDedup(
-          s.readStream.schema(schema).parquet(staging)).awaitTermination()
-        rows(base).coalesce(1).write.mode("append").parquet(staging)
-        drain()
-        rows(base.where(col("doc_id") < 40)
-          .withColumn("doc_id", col("doc_id") + 1000000L))
-          .coalesce(1).write.mode("append").parquet(staging)
-        drain()
-        s"$root/store"
-      })
-  }
+  private val nearDedupStoreCache = new SessionCache[String, String]
+  private def nearDedupIngestStoreRoot(s: SparkSession, dir: String): String =
+    nearDedupStoreCache(s, dir) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_ingest_neardedup").toString
+      val docs = Tables.load(s, dir, "documents")
+      val emb = Tables.load(s, dir, "embeddings")
+      val base = docs.join(emb, docs("doc_id") === emb("vec_id"))
+        .select(col("doc_id"), col("embedding"), col("text"))
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.select(format_string("d%09d", col("doc_id")).as("id"),
+          col("embedding").as("vector"), col("text").as("content"),
+          array(lit("ingest")).as("tags"))
+      val staging = s"$root/staging"
+      val store = new graft.operators.VectorStore(s, s"$root/store")
+      val schema = rows(base).schema
+      def drain(): Unit = store.insertStreamNearDedup(
+        s.readStream.schema(schema).parquet(staging)).awaitTermination()
+      rows(base).coalesce(1).write.mode("append").parquet(staging)
+      drain()
+      rows(base.where(col("doc_id") < 40)
+        .withColumn("doc_id", col("doc_id") + 1000000L))
+        .coalesce(1).write.mode("append").parquet(staging)
+      drain()
+      s"$root/store"
+    }
 
   /** A VectorStore over the fixture's vector table with every
     * `id % 7 == 0` row DELETED through the takedown path
@@ -270,21 +261,17 @@ object SparkEntry {
     * ground truth, gating the partition-selective rewrite + one-rename
     * manifest commit end-to-end. Built once per (session, dir); same
     * staleness contract as [[dupPairsCache]]. Returns the store root. */
-  private val deleteStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def deletedStoreRoot(s: SparkSession, dir: String): String = {
-    deleteStoreCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    deleteStoreCache.computeIfAbsent((s, dir),
-      { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_delete_store").toString
-        val store = new graft.operators.VectorStore(s, root)
-        val rows = Tables.vectorTable(s, dir)
-        store.insert(rows)
-        store.delete(rows.select("id").where(col("id") % 7 === 0))
-        root
-      })
-  }
+  private val deleteStoreCache = new SessionCache[String, String]
+  private def deletedStoreRoot(s: SparkSession, dir: String): String =
+    deleteStoreCache(s, dir) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_delete_store").toString
+      val store = new graft.operators.VectorStore(s, root)
+      val rows = Tables.vectorTable(s, dir)
+      store.insert(rows)
+      store.delete(rows.select("id").where(col("id") % 7 === 0))
+      root
+    }
 
   /** A VectorStore over the fixture's vector table, registered for
     * PLAIN SQL via [[graft.operators.VectorStore.registerSqlTable]] —
@@ -295,40 +282,32 @@ object SparkEntry {
     * filter. Built once per (session, dir); same staleness contract as
     * [[dupPairsCache]] (fixtures are immutable per round). Returns the
     * registered view name. */
-  private val sqlStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def sqlStoreView(s: SparkSession, dir: String): String = {
-    sqlStoreCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    sqlStoreCache.computeIfAbsent((s, dir),
-      { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_sql_store").toString
-        val store = new graft.operators.VectorStore(s, root)
-        store.insert(Tables.vectorTable(s, dir))
-        val view = "graft_store_sql_" + java.lang.Integer.toHexString(dir.hashCode)
-        store.registerSqlTable(view)
-        view
-      })
-  }
+  private val sqlStoreCache = new SessionCache[String, String]
+  private def sqlStoreView(s: SparkSession, dir: String): String =
+    sqlStoreCache(s, dir) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_sql_store").toString
+      val store = new graft.operators.VectorStore(s, root)
+      store.insert(Tables.vectorTable(s, dir))
+      val view = "graft_store_sql_" + java.lang.Integer.toHexString(dir.hashCode)
+      store.registerSqlTable(view)
+      view
+    }
 
   /** A [[graft.operators.SimilaritySearch.buildPrefixIndex]] layout
     * over the fixture embeddings (16-dim prefix), built once per
     * (session, dir) — the ann_matryoshka row's coarse pass scans it
     * instead of the raw table so column pruning skips the full
     * vectors. Same staleness contract as [[dupPairsCache]]. */
-  private val prefixIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def prefixIndexPath(s: SparkSession, dir: String): String = {
-    prefixIndexCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    prefixIndexCache.computeIfAbsent((s, dir),
-      { _ =>
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_prefix_idx").toString + "/idx"
-        SimilaritySearch.buildPrefixIndex(
-          Tables.load(s, dir, "embeddings"), dims = 16, path)
-        path
-      })
-  }
+  private val prefixIndexCache = new SessionCache[String, String]
+  private def prefixIndexPath(s: SparkSession, dir: String): String =
+    prefixIndexCache(s, dir) {
+      val path = java.nio.file.Files
+        .createTempDirectory("graft_prefix_idx").toString + "/idx"
+      SimilaritySearch.buildPrefixIndex(
+        Tables.load(s, dir, "embeddings"), dims = 16, path)
+      path
+    }
 
   /** A VectorStore carrying a COMMITTED tokenizer artifact
     * ([[graft.operators.VectorStore.trainTokenizer]] — tokenizer/v0: 4
@@ -339,30 +318,17 @@ object SparkEntry {
     * tokenize, not training — the production pipeline shape (VERDICT
     * r13 next #4: one committed tokenizer across sessions and feeds).
     * Same staleness contract as [[dupPairsCache]]. */
-  private val tokenizerStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def tokenizerStoreRoot(s: SparkSession, dir: String): String = {
-    tokenizerStoreCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    tokenizerStoreCache.computeIfAbsent((s, dir),
-      { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_tokenizer_store").toString
-        new graft.operators.VectorStore(s, root)
-          .trainTokenizer(Tables.load(s, dir, "documents"),
-            bpeK = 4, wordpieceV = 24)
-        root
-      })
-  }
+  private val tokenizerStoreCache = new SessionCache[String, String]
+  private def tokenizerStoreRoot(s: SparkSession, dir: String): String =
+    tokenizerStoreCache(s, dir) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_tokenizer_store").toString
+      new graft.operators.VectorStore(s, root)
+        .trainTokenizer(Tables.load(s, dir, "documents"),
+          bpeK = 4, wordpieceV = 24)
+      root
+    }
 
-  /** A TWO-GENERATION [[graft.operators.PostingIndex]] over the
-    * fixture documents (create on the even doc_ids, append the odd
-    * ones — the daily-append lifecycle, not a monolithic rebuild),
-    * built once per (session, dir) — the text_phrase_indexed row's
-    * probe is statically term-bucket-pruned across both generations
-    * and must NOT pay (or re-leak a temp dir for) an index build per
-    * rep: warm reps measure the probe the plan gate proves, and the
-    * one-time build cost is reported separately (BASELINE.md). Same
-    * staleness contract as [[dupPairsCache]]. */
   /** Synthetic HTML wrapper for doc (id, text) — ONE expression shared
     * by text_html_extract and the pipeline_web WARC fixture so the two
     * rows can never drift. Deliberately adversarial: a script block
@@ -389,80 +355,78 @@ object SparkEntry {
     * row — the payload a real crawl delivers). Reps reuse the shards
     * so the timed work is the READ — the scale path. One helper owns
     * cache/sweep/render for both so the twin rows cannot drift. */
-  private val warcFixtureCaches =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), String]()
-  private[graft] def warcFixture(s: SparkSession, dir: String, variant: String): String = {
-    warcFixtureCaches.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    warcFixtureCaches.computeIfAbsent((s, dir, variant),
-      { _ =>
-        val path = java.nio.file.Files
-          .createTempDirectory(s"graft-warc-$variant").toString
-        val content =
-          if (variant == "html") htmlWrap(col("doc_id"), col("text"))
-          else col("text")
-        // "zstd" = the text payload through per-record zstd frames —
-        // the other production codec (r17: oracle-gated end to end,
-        // not just WarcSpec's byte-level round trips)
-        val codec = if (variant == "zstd") "zstd" else "gzip"
-        graft.sources.Warc.writeFixture(
-          Tables.load(s, dir, "documents").select(
-            concat(lit("00000000-0000-4000-8000-"),
-              lpad(col("doc_id").cast("string"), 12, "0")).as("record_id"),
-            concat(lit("http://corpus.local/doc/"), col("doc_id")).as("target_uri"),
-            lit("2026-01-01T00:00:00Z").as("warc_date"),
-            content.as("content")),
-          // 16 shards, not 2 (r17, VERDICT r16 next #6): a gzip shard
-          // is one task's decode grain, and the whole narrow
-          // parse -> extract -> langid/quality chain inherits the
-          // read's partitioning — a 2-shard fixture measured the
-          // engine at 2-task parallelism on a 32-thread box (WebProbe:
-          // read 0.34 s, stats +1.3 s). Real crawls deliver thousands
-          // of shards; 16 keeps the fixture build cheap while giving
-          // the chain real width (Warc.read's minPartitions fix is
-          // the other half — binaryFiles otherwise COMBINES small
-          // shards back into two splits).
-          path, shards = 16, gzip = true, codec = codec)
-        path
-      })
-  }
+  private val warcFixtureCaches = new SessionCache[(String, String), String]
+  private[graft] def warcFixture(s: SparkSession, dir: String, variant: String): String =
+    warcFixtureCaches(s, (dir, variant)) {
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft-warc-$variant").toString
+      val content =
+        if (variant == "html") htmlWrap(col("doc_id"), col("text"))
+        else col("text")
+      // "zstd" = the text payload through per-record zstd frames —
+      // the other production codec (r17: oracle-gated end to end,
+      // not just WarcSpec's byte-level round trips)
+      val codec = if (variant == "zstd") "zstd" else "gzip"
+      graft.sources.Warc.writeFixture(
+        Tables.load(s, dir, "documents").select(
+          concat(lit("00000000-0000-4000-8000-"),
+            lpad(col("doc_id").cast("string"), 12, "0")).as("record_id"),
+          concat(lit("http://corpus.local/doc/"), col("doc_id")).as("target_uri"),
+          lit("2026-01-01T00:00:00Z").as("warc_date"),
+          content.as("content")),
+        // 16 shards, not 2 (r17, VERDICT r16 next #6): a gzip shard
+        // is one task's decode grain, and the whole narrow
+        // parse -> extract -> langid/quality chain inherits the
+        // read's partitioning — a 2-shard fixture measured the
+        // engine at 2-task parallelism on a 32-thread box (WebProbe:
+        // read 0.34 s, stats +1.3 s). Real crawls deliver thousands
+        // of shards; 16 keeps the fixture build cheap while giving
+        // the chain real width (Warc.read's minPartitions fix is
+        // the other half — binaryFiles otherwise COMBINES small
+        // shards back into two splits).
+        path, shards = 16, gzip = true, codec = codec)
+      path
+    }
   private def warcFixturePath(s: SparkSession, dir: String): String =
     warcFixture(s, dir, "text")
   private def warcHtmlFixturePath(s: SparkSession, dir: String): String =
     warcFixture(s, dir, "html")
 
-  private val postingIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private def postingIndexPath(s: SparkSession, dir: String): String = {
-    postingIndexCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    postingIndexCache.computeIfAbsent((s, dir),
-      { _ =>
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-postings").toString + "/idx"
-        val docs = Tables.load(s, dir, "documents")
-        graft.operators.PostingIndex.create(
-          docs.where(col("doc_id") % 2 === 0), path)
-        graft.operators.PostingIndex.append(
-          docs.where(col("doc_id") % 2 === 1), path)
-        path
-      })
-  }
+  /** A TWO-GENERATION [[graft.operators.PostingIndex]] over the
+    * fixture documents (create on the even doc_ids, append the odd
+    * ones — the daily-append lifecycle, not a monolithic rebuild),
+    * built once per (session, dir) — the text_phrase_indexed row's
+    * probe is statically term-bucket-pruned across both generations
+    * and must NOT pay (or re-leak a temp dir for) an index build per
+    * rep: warm reps measure the probe the plan gate proves, and the
+    * one-time build cost is reported separately (BASELINE.md). Same
+    * staleness contract as [[dupPairsCache]]. */
+  private val postingIndexCache = new SessionCache[String, String]
+  private def postingIndexPath(s: SparkSession, dir: String): String =
+    postingIndexCache(s, dir) {
+      val path = java.nio.file.Files
+        .createTempDirectory("graft-postings").toString + "/idx"
+      val docs = Tables.load(s, dir, "documents")
+      graft.operators.PostingIndex.create(
+        docs.where(col("doc_id") % 2 === 0), path)
+      graft.operators.PostingIndex.append(
+        docs.where(col("doc_id") % 2 === 1), path)
+      path
+    }
 
   /** The drained [[graft.streaming.EventOps.runHourlyLateStream]] sink
     * for a fixture dir, built once per (session, dir) — the stream
     * drains twice through one checkpoint, so reps must reuse the
     * committed result rather than re-staging. Same staleness contract
     * as [[dupPairsCache]]. */
-  private val hourlyLateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val hourlyLateCache = new SessionCache[String, String]
   private def hourlyLateResult(s: SparkSession, dir: String): DataFrame = {
-    hourlyLateCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val out = hourlyLateCache.computeIfAbsent((s, dir),
-      { _ =>
-        val work = java.nio.file.Files
-          .createTempDirectory("graft_ev_late").toString
-        graft.streaming.EventOps.runHourlyLateStream(s, dir, work)
-        s"$work/out"
-      })
+    val out = hourlyLateCache(s, dir) {
+      val work = java.nio.file.Files
+        .createTempDirectory("graft_ev_late").toString
+      graft.streaming.EventOps.runHourlyLateStream(s, dir, work)
+      s"$work/out"
+    }
     s.read.parquet(out)
   }
 

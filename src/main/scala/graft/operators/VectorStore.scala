@@ -45,8 +45,9 @@ import graft.OracleSql
  *
  * Snapshot lifecycle: every read resolves through ONE driver-resident
  * [[VectorStore.Snapshot]] per (session, root) — the live
- * (tag_key -> gen) map, the tag sets below [[dppRouteThreshold]], the
- * leaf files of each live gen dir, and the table DataFrame over them.
+ * (tag_key -> gen) map, the tag sets up to [[VectorStore.MaxTagSets]]
+ * (whatever the facade's [[dppRouteThreshold]]), the leaf files of each
+ * live gen dir, and the table DataFrame over them.
  *  - Its key (manifest version, delta file count, base mtime) is
  *    re-read from the filesystem on every call, so writers in other
  *    processes and sessions invalidate it.
@@ -58,10 +59,24 @@ import graft.OracleSql
  *  - A cold rebuild (first read, another session or process wrote)
  *    reads the manifest once and lets Spark list the gen dirs (in
  *    parallel past its discovery threshold).
+ *
+ * ANN index handle: every ANN call (searchAnn, searchAnnPq,
+ * searchManyAnn, annCalibratedNprobe, the insert-time index
+ * maintenance) resolves ONE [[VectorStore.AnnIndex]] per (session,
+ * index version dir) — the collected codebook and the calibrated auto
+ * nprobe, plus the tag stats, PQ books, data schema and escalation memo
+ * loaded on first use.
+ *  - It stays valid while the mtime of `<dir>/_codebook.parquet` is
+ *    unchanged. The codebook is written once per version, so an insert
+ *    appending into the index (which rewrites `_meta.json` and bumps the
+ *    dir's own mtime) keeps it: the next ANN call runs no metadata job.
+ *  - A rebuild or compaction commits a new version dir, and a clear()
+ *    followed by a rebuild at the same path writes a new codebook; both
+ *    resolve a new handle (one codebook collect, one `_meta.json` read).
  */
 class VectorStore(spark: SparkSession, val root: String,
                   writerLockTimeoutMs: Long = 600000L,
-                  dppRouteThreshold: Int = 10000,
+                  dppRouteThreshold: Int = VectorStore.MaxTagSets,
                   contentIdxMinBytes: Long = 256L * 1024 * 1024,
                   writerLeaseMs: Long = 60000L) {
   GraftFunctions.register(spark)
@@ -1690,9 +1705,10 @@ class VectorStore(spark: SparkSession, val root: String,
    * Tag search routes by manifest size (VERDICT r3 next #4): below
    * [[dppRouteThreshold]] distinct tag sets the driver resolves
    * matching keys into a static IN-list (planning-time pruning, zero
-   * query-time overhead); above it, the [[searchDpp]] shape avoids
-   * collecting a huge manifest to the driver and pruning moves to a
-   * broadcast-manifest semi-join (runtime DPP).
+   * query-time overhead); above it, or past the
+   * [[VectorStore.MaxTagSets]] the snapshot holds, the [[searchDpp]]
+   * shape avoids collecting a huge manifest to the driver and pruning
+   * moves to a broadcast-manifest semi-join (runtime DPP).
    */
   def search(
       queryVec: Seq[Float],
@@ -1701,7 +1717,7 @@ class VectorStore(spark: SparkSession, val root: String,
       metric: String = "cosine",
       quantized: Boolean = false): DataFrame = {
     val snap = snapshot()
-    if (tags.nonEmpty && snap.exists(_.gens.size > dppRouteThreshold))
+    if (tags.nonEmpty && snap.exists(s => s.gens.size > dppRouteThreshold || s.tags.isEmpty))
       return searchDpp(queryVec, tags, k, metric, quantized)
     val pruned = matchingTagKeys(tags, snap) match {
       case Some(keys) => tableOf(snap).where(col("tag_key").isin(keys: _*))
@@ -1731,8 +1747,11 @@ class VectorStore(spark: SparkSession, val root: String,
   //  - a new manifest base (upsert, delete, compact, projectAll, the
   //    threshold fold) drops the entry, as does clear().
   //  - cold rebuild: one manifest collect, bounded by
-  //    dppRouteThreshold + 1 rows for the tag sets, and Spark's own
-  //    listing + schema inference over the live gen dirs. ----
+  //    MaxTagSets + 1 rows for the tag sets, and Spark's own
+  //    listing + schema inference over the live gen dirs. The cap is
+  //    one constant, not the facade's dppRouteThreshold: facades with
+  //    different thresholds share the snapshot, and the threshold only
+  //    picks the route. ----
 
   /** Changes iff the manifest's resolvable content can change; version
     * -1 when no manifest is committed. The base dir's mtime rides in
@@ -1762,7 +1781,7 @@ class VectorStore(spark: SparkSession, val root: String,
     if (key._1 < 0) None
     else Option(VectorStore.snapshots.get(cacheKey)).filter(_.key == key).orElse {
       val s = coldSnapshot(key)
-      VectorStore.putSnapshot(cacheKey, s)
+      VectorStore.bounded(VectorStore.snapshots, cacheKey, s)
       Some(s)
     }
   }
@@ -1772,13 +1791,13 @@ class VectorStore(spark: SparkSession, val root: String,
     * vacuum, nextGen — never lists or reads a data file). */
   private def coldSnapshot(key: (Int, Int, Long)): VectorStore.Snapshot = {
     val sets = manifest().select("tag_key", "tags", "gen")
-    val head = sets.limit(dppRouteThreshold + 1).collect()
+    val head = sets.limit(VectorStore.MaxTagSets + 1).collect()
     val (gens, tags) =
-      if (head.length <= dppRouteThreshold)
+      if (head.length <= VectorStore.MaxTagSets)
         (head.map(r => r.getString(0) -> r.getInt(2)).toMap,
           Some(head.map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toMap))
-      // past the DPP threshold only (tag_key, gen) comes to the driver:
-      // the path list needs it, tag search does not
+      // past the cap only (tag_key, gen) comes to the driver: the path
+      // list needs it, tag search routes through DPP
       else (sets.select("tag_key", "gen").collect()
         .map(r => r.getString(0) -> r.getInt(1)).toMap, None)
     new VectorStore.Snapshot(key, gens, tags, () => coldData(gens))
@@ -1822,7 +1841,7 @@ class VectorStore(spark: SparkSession, val root: String,
     val written = batch.map { case (k, _, g) => k -> math.max(g, prev.gens.getOrElse(k, g)) }.toMap
     val gens = prev.gens ++ written
     val tags = prev.tags.map(_ ++ batch.map { case (k, t, _) => k -> t })
-      .filter(_.size <= dppRouteThreshold)
+      .filter(_.size <= VectorStore.MaxTagSets)
     val carried = for {
       d <- prev.dataIfBuilt
       rel <- d.relation if cols(rel.dataSchema) == cols(batchSchema)
@@ -1861,9 +1880,9 @@ class VectorStore(spark: SparkSession, val root: String,
   private def liveGens(snap: Option[VectorStore.Snapshot] = snapshot()): Map[String, Int] =
     snap.map(_.gens).getOrElse(listingLive().toMap)
 
-  /** Live tag_key -> tag set: the snapshot's below the DPP threshold,
-    * else one manifest collect (past the threshold, or a store with no
-    * manifest). */
+  /** Live tag_key -> tag set: the snapshot's up to
+    * [[VectorStore.MaxTagSets]], else one manifest collect (past the
+    * cap, or a store with no manifest). */
   private def liveTagSets(snap: Option[VectorStore.Snapshot] = snapshot())
       : Map[String, Seq[String]] =
     snap.flatMap(_.tags).getOrElse(
@@ -2249,8 +2268,7 @@ class VectorStore(spark: SparkSession, val root: String,
 
   /** The build-time-calibrated auto nprobe of the live index (None: no
     * index, or uncalibrated legacy meta — see [[resolveNprobe]]). */
-  def annCalibratedNprobe: Option[Int] =
-    currentAnnDir.flatMap(readAnnMeta).map(_.calibratedNprobe).filter(_ > 0)
+  def annCalibratedNprobe: Option[Int] = annIndex().flatMap(_.calibratedNprobe)
 
   /** (k, seed, rebuildFraction, baseRows, appendedRows,
     * calibratedNprobe) of the live index. Tiny driver-side JSON, no
@@ -2343,34 +2361,24 @@ class VectorStore(spark: SparkSession, val root: String,
         "keeps the count-job escalation for this index")
   }
 
-  /** cid -> (tag set, rows) lower bounds for the index version at
-    * `dir`, loaded once per (session, dir, dir mtime) — the mtime
-    * guards the post-clear() path reuse exactly like the manifest
-    * snapshot key. None: stats absent (legacy index or oversized). */
-  private def tagStatsOf(dir: String): Option[Map[Long, Seq[(Set[String], Long)]]] = {
-    val key = (spark, dir, dirMtime(dir))
-    VectorStore.annTagStats.get(key) match {
-      case null =>
-        val loaded =
-          if (!fs.exists(new Path(tagStatsPathIn(dir)))) None
-          else try {
-            Some(spark.read.parquet(tagStatsPathIn(dir))
-              .select(col("cid"), col("tags"), col("n")).collect().toSeq
-              .map(r => (r.getLong(0), r.getSeq[String](1).toSet, r.getLong(2)))
-              .groupBy(_._1)
-              .map { case (cid, rs) => cid -> rs.map(t => (t._2, t._3)) })
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"graft: ANN tag stats unreadable ($e) — " +
-              "filtered auto-nprobe falls back to count jobs"); None
-          }
-        VectorStore.putAnnTagStats(key, loaded)
-        loaded
-      case cached => cached
+  /** cid -> (tag set, rows) lower bounds of the index version at
+    * `dir` (one collect, on a handle's first use). None: stats absent
+    * (legacy index or oversized) or unreadable. */
+  private def readTagStats(dir: String): Option[Map[Long, Seq[(Set[String], Long)]]] =
+    if (!fs.exists(new Path(tagStatsPathIn(dir)))) None
+    else try {
+      Some(spark.read.parquet(tagStatsPathIn(dir))
+        .select(col("cid"), col("tags"), col("n")).collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[String](1).toSet, r.getLong(2)))
+        .groupBy(_._1)
+        .map { case (cid, rs) => cid -> rs.map(t => (t._2, t._3)) })
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"graft: ANN tag stats unreadable ($e) — " +
+        "filtered auto-nprobe falls back to count jobs"); None
     }
-  }
 
   /** Per-cid matching-row lower bounds for one tag-superset query —
-    * pure driver arithmetic over [[tagStatsOf]]. */
+    * pure driver arithmetic over the handle's tag stats. */
   private def tagMatchCounts(stats: Map[Long, Seq[(Set[String], Long)]],
                              tags: Seq[String]): Map[Long, Long] = {
     val want = tags.distinct.toSet
@@ -2379,59 +2387,36 @@ class VectorStore(spark: SparkSession, val root: String,
     }.filter(_._2 > 0L)
   }
 
-  /** Collected IVF codebook of the index version at `dir`, cached per
-    * (session, dir, dir mtime) like the tag stats: the codebook read +
-    * collect was 1-2 Spark driver jobs on EVERY ANN serve call —
-    * committed version dirs are immutable (a rebuild commits a NEW
-    * v<k>; clear()-path reuse is what the mtime guards), so the
-    * collected books can only ever be re-read identical. */
-  private def codebookOf(dir: String): Seq[(Long, Seq[Float])] = {
-    val key = (spark, dir, dirMtime(dir))
-    VectorStore.annCodebooks.get(key) match {
-      case null =>
-        val cb = SimilaritySearch.collectCodebook(
-          spark.read.parquet(codebookPathIn(dir)))
-        VectorStore.putAnnCodebook(key, cb)
-        cb
-      case cached => cached
-    }
+  /** The live index version's handle ([[VectorStore.AnnIndex]]), None
+    * without an index. Resolving it is driver filesystem metadata (the
+    * version listing and the codebook's mtime); a miss collects the
+    * codebook and reads `_meta.json` once. Every ANN call resolves the
+    * version ONCE here: codebook, meta and data then all come from the
+    * same committed dir, so a rebuild landing mid-plan can't pair a
+    * query's probes with another version's lists. */
+  private def annIndex(): Option[VectorStore.AnnIndex] = currentAnnDir.map { dir =>
+    val mtime = try fs.getFileStatus(new Path(codebookPathIn(dir))).getModificationTime
+                catch { case _: java.io.IOException => -1L }
+    Option(VectorStore.annIndexes.get((spark, dir))).filter(_.codebookMtime == mtime)
+      .getOrElse {
+        val ix = new VectorStore.AnnIndex(dir, mtime,
+          SimilaritySearch.collectCodebook(spark.read.parquet(codebookPathIn(dir))),
+          readAnnMeta(dir).map(_.calibratedNprobe).filter(_ > 0),
+          () => readTagStats(dir), () => readPqBooks(dir),
+          () => spark.read.parquet(dir).schema)
+        VectorStore.bounded(VectorStore.annIndexes, (spark, dir), ix)
+        ix
+      }
   }
 
-  /** PQ sub-codebooks of the index version at `dir` — same cache
-    * contract as [[codebookOf]]. */
-  private def pqBooksOf(dir: String): Option[Seq[Seq[(Long, Seq[Float])]]] = {
-    val key = (spark, dir, dirMtime(dir))
-    VectorStore.annPqBooks.get(key) match {
-      case null =>
-        val books = readPqBooks(dir)
-        VectorStore.putAnnPqBooks(key, books)
-        books
-      case cached => cached
-    }
-  }
+  private def requireAnnIndex(): VectorStore.AnnIndex = annIndex().getOrElse(
+    throw new IllegalStateException("graft: no ANN index — call buildAnnIndex(k) first"))
 
-  private def dirMtime(dir: String): Long =
-    try fs.getFileStatus(new Path(dir)).getModificationTime
-    catch { case _: java.io.IOException => -1L }
-
-  /** The index data at `dir` as a DataFrame, constructed with an
-    * EXPLICIT schema: schema inference over a parquet dir is a
-    * footer-reading Spark job per call — the last job left on the warm
-    * ANN serve path. Only the SCHEMA is cached (per version dir +
-    * mtime): appends add rows but never columns (maintainAnnIndex
-    * aligns them), while the file listing stays per-call so appended
-    * rows are always visible. */
-  private def annDataOf(dir: String): DataFrame = {
-    val key = (spark, dir, dirMtime(dir))
-    val schema = VectorStore.annSchemas.get(key) match {
-      case null =>
-        val s = spark.read.parquet(dir).schema
-        VectorStore.putAnnSchema(key, s)
-        s
-      case cached => cached
-    }
-    spark.read.schema(schema).parquet(dir)
-  }
+  /** The index data of `ix` with its held schema (schema inference is
+    * a footer-reading Spark job); the file listing stays per call, so
+    * appended rows are always visible. */
+  private def annData(ix: VectorStore.AnnIndex): DataFrame =
+    spark.read.schema(ix.schema).parquet(ix.dir)
 
   /** Measure the recall-vs-probe-coverage curve AT BUILD TIME and
     * return the smallest nprobe whose recall@10 meets
@@ -2505,10 +2490,9 @@ class VectorStore(spark: SparkSession, val root: String,
     * DEFAULT that is silently fast-but-wrong is a correctness bug at
     * the facade (callers tune DOWN explicitly, with the measured curve
     * in hand). */
-  private def resolveNprobe(dir: String, nprobe: Int, nlist: Int): Int =
+  private def resolveNprobe(ix: VectorStore.AnnIndex, nprobe: Int): Int =
     if (nprobe > 0) nprobe
-    else readAnnMeta(dir).map(_.calibratedNprobe).filter(_ > 0)
-      .getOrElse(math.max(1, (3 * nlist + 3) / 4))
+    else ix.calibratedNprobe.getOrElse(math.max(1, (3 * ix.codebook.size + 3) / 4))
 
   /** Fit a k-means codebook over the stored vectors and write the
     * cid-partitioned index. One corpus pass for assignment (the argmin
@@ -2532,7 +2516,8 @@ class VectorStore(spark: SparkSession, val root: String,
     // IVF-PQ: per-subspace k-means sub-codebooks fitted over the stored
     // vectors (a production build fits on a sample; these stores are
     // bounded). Skipped when dim does not divide into subspaces.
-    val dim = table().select(size(col("vector")).as("d")).head().getInt(0)
+    val dim = storedDim().getOrElse(throw new IllegalStateException(
+      "graft: buildAnnIndex on an empty store"))
     val pqBooks: Option[Seq[Seq[(Long, Seq[Float])]]] =
       if (dim % PqSub != 0 || dim < PqSub) None
       else {
@@ -2587,20 +2572,15 @@ class VectorStore(spark: SparkSession, val root: String,
     * unpack into the packed kernels — 4x less I/O on the probed lists. */
   def searchAnn(queryVec: Seq[Float], k: Int = 10, nprobe: Int = 0,
                 quantized: Boolean = false, tags: Seq[String] = Nil): DataFrame = {
-    // resolve the version ONCE: codebook, meta, and data all come from
-    // the same committed dir, so a rebuild landing mid-plan can't pair
-    // this query's probes with another version's lists
-    val dir = currentAnnDir.getOrElse(
-      throw new IllegalStateException(
-        "graft: no ANN index — call buildAnnIndex(k) first"))
+    val ix = requireAnnIndex()
     // mode-aware like searchAuto: a projected store indexed projected
     // vectors, so the query projects through the same basis
     val (qv, metric) =
       if (isProjected) (Pca.projectOne(loadModel(), queryVec).toSeq, "euclidean")
       else (queryVec, "cosine")
-    val codebook = codebookOf(dir)
+    val codebook = ix.codebook
     val nlist = codebook.size
-    var np = resolveNprobe(dir, nprobe, nlist)
+    var np = resolveNprobe(ix, nprobe)
     // filtered ANN: the tag-superset predicate rides INSIDE the probed
     // cid partitions (row filter on the pruned scan, same semantics as
     // search()'s superset filter). The build-time calibration measures
@@ -2616,7 +2596,7 @@ class VectorStore(spark: SparkSession, val root: String,
       else IndexedSeq.empty[Long]
     if (fullOrder.nonEmpty) {
       val margin = k.toLong * AnnFilteredMargin
-      tagStatsOf(dir) match {
+      ix.tagStats match {
         case Some(stats) =>
           // metadata-first (VERDICT r16 next #4): the pool estimate is
           // pure driver arithmetic over the per-(cid, tag set) lower
@@ -2642,20 +2622,20 @@ class VectorStore(spark: SparkSession, val root: String,
           // probe ORDER is query-specific, so a cached np is a hint,
           // never proof.
           def candidates(p: Int): Long = tagSuperset(
-            annDataOf(dir).where(col("cid").isin(fullOrder.take(p): _*)), tags)
+            annData(ix).where(col("cid").isin(fullOrder.take(p): _*)), tags)
             // limit-bounded probe: the count exists only to compare
             // against the margin, never to fully evaluate a huge
             // filtered scan
             .limit((margin + 1).toInt).count()
           // length-prefixed join: tag values may contain any separator
           // character, so "a b"+"c" must not collide with "a"+"b c"
-          val memoKey = (spark, dir,
-            tags.distinct.sorted.map(t => s"${t.length}:$t").mkString("|"))
-          Option(VectorStore.annNpMemo.get(memoKey))
+          val memoKey = tags.distinct.sorted.map(t => s"${t.length}:$t").mkString("|")
+          Option(ix.npMemo.get(memoKey))
             .foreach(m => np = math.min(nlist, math.max(np, m.intValue)))
           while (np < nlist && candidates(np) < margin)
             np = math.min(nlist, np * 2)
-          VectorStore.putAnnNpMemo(memoKey, np)
+          if (ix.npMemo.size >= VectorStore.MaxSnapshotEntries) ix.npMemo.clear()
+          ix.npMemo.put(memoKey, np)
       }
     }
     // reuse the already-computed probe order (the escalation path
@@ -2665,7 +2645,7 @@ class VectorStore(spark: SparkSession, val root: String,
       if (fullOrder.nonEmpty) fullOrder.take(np)
       else SimilaritySearch.probeCids(codebook, qv, np)
     val pruned = tagSuperset(
-      annDataOf(dir).where(col("cid").isin(probes: _*)), tags)
+      annData(ix).where(col("cid").isin(probes: _*)), tags)
     scoreTopK(pruned, qv, k, metric, quantized)
   }
 
@@ -2825,12 +2805,10 @@ class VectorStore(spark: SparkSession, val root: String,
   def searchManyAnn(queries: DataFrame, k: Int = 10,
                     nprobe: Int = 0, quantized: Boolean = false,
                     tags: Seq[String] = Nil): DataFrame = {
-    val dir = currentAnnDir.getOrElse(
-      throw new IllegalStateException(
-        "graft: no ANN index — call buildAnnIndex(k) first"))
-    val codebook = codebookOf(dir)
+    val ix = requireAnnIndex()
+    val codebook = ix.codebook
     val nlist = codebook.size
-    var np = resolveNprobe(dir, nprobe, nlist)
+    var np = resolveNprobe(ix, nprobe)
     val (qproj, metric) = queryColumnMode()
     val (rows, schema) = collectBatch(queries, qproj, MaxAnnBatch,
       s"graft: searchManyAnn got > $MaxAnnBatch queries — the batch and " +
@@ -2855,14 +2833,14 @@ class VectorStore(spark: SparkSession, val root: String,
       // driver arithmetic, no job), else — legacy or oversized-stats
       // index — one grouped count job per round over the lists not
       // counted yet (the final query scans them anyway)
-      val stats = tagStatsOf(dir).map(tagMatchCounts(_, tags))
+      val stats = ix.tagStats.map(tagMatchCounts(_, tags))
       val matched = scala.collection.mutable.Map[Long, Long]() ++ stats.getOrElse(Map.empty)
       def worstPool(): Long = {
         if (stats.isEmpty) {
           val fresh = lidsAt(np).filterNot(matched.contains)
           if (fresh.nonEmpty) {
             matched ++= fresh.map(_ -> 0L)
-            matched ++= tagSuperset(annDataOf(dir).where(col("cid").isin(fresh: _*)), tags)
+            matched ++= tagSuperset(annData(ix).where(col("cid").isin(fresh: _*)), tags)
               .groupBy("cid").count().collect()
               .map(r => r.getAs[Number](0).longValue -> r.getLong(1))
           }
@@ -2882,7 +2860,7 @@ class VectorStore(spark: SparkSession, val root: String,
     // same contract as searchAnn(tags) — selective filters are the
     // caller's nprobe dial, never a re-query fallback
     val idx = tagSuperset(
-        annDataOf(dir).where(col("cid").isin(lidsAt(np): _*)), tags)
+        annData(ix).where(col("cid").isin(lidsAt(np): _*)), tags)
       .withColumnRenamed("cid", "lid")
     require(!quantized || idx.columns.contains("packed"),
       "graft: quantized batched search needs a quantized store (index has no packed column)")
@@ -3041,10 +3019,9 @@ class VectorStore(spark: SparkSession, val root: String,
       // stable)
       require(!isProjected,
         "graft: buildDupGraph needs raw-space vectors — build it before projectAll")
+      val dim = storedDim().getOrElse(throw new IllegalStateException(
+        "graft: buildDupGraph on an empty store"))
       val snap = table()
-      val dim = snap.select(size(col("vector")).as("d")).limit(1).collect()
-        .headOption.map(_.getInt(0)).getOrElse(throw new IllegalStateException(
-          "graft: buildDupGraph on an empty store"))
       val emb = snap.select(col("id").as("vec_id"), col("vector").as("embedding"))
       val pairs = Dedup.embeddingNearDupsLsh(emb, threshold, dim)
         .select(col("v1").as("id1"), col("v2").as("id2"), col("sim_r"))
@@ -3114,10 +3091,9 @@ class VectorStore(spark: SparkSession, val root: String,
     require(newRows.columns.contains("id"),
       "graft: updateDupGraph takes the appended rows' ids (an 'id' column)")
     val threshold = dupThresholdFromMeta()
+    val dim = storedDim().getOrElse(throw new IllegalStateException(
+      "graft: updateDupGraph on an empty store"))
     val snap = table()
-    val dim = snap.select(size(col("vector")).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0)).getOrElse(throw new IllegalStateException(
-        "graft: updateDupGraph on an empty store"))
     val corpus = snap.select(col("id").as("vec_id"), col("vector").as("embedding"))
     val newIds = newRows.select(col("id")).distinct()
     val newEmb = corpus.join(
@@ -3172,19 +3148,15 @@ class VectorStore(spark: SparkSession, val root: String,
    */
   def searchAnnPq(queryVec: Seq[Float], k: Int = 10, nprobe: Int = 0,
                   refineK: Int = 0): DataFrame = {
-    val dir = currentAnnDir.getOrElse(
-      throw new IllegalStateException(
-        "graft: no ANN index — call buildAnnIndex(k) first"))
-    val books = pqBooksOf(dir).getOrElse(
+    val ix = requireAnnIndex()
+    val books = ix.pqBooks.getOrElse(
       throw new IllegalStateException(
         "graft: index has no PQ codes (pre-PQ build or non-divisible dim) — rebuild with buildAnnIndex"))
     val (qv, metric) =
       if (isProjected) (Pca.projectOne(loadModel(), queryVec).toSeq, "euclidean")
       else (queryVec, "cosine")
-    val codebook = codebookOf(dir)
-    val probes = SimilaritySearch.probeCids(codebook, qv,
-      resolveNprobe(dir, nprobe, codebook.size))
-    val pruned = annDataOf(dir).where(col("cid").isin(probes: _*))
+    val probes = SimilaritySearch.probeCids(ix.codebook, qv, resolveNprobe(ix, nprobe))
+    val pruned = annData(ix).where(col("cid").isin(probes: _*))
     val dsub = qv.length / books.size
     def lutCol(f: (Seq[Float], Seq[Float]) => Double): Column =
       books.zipWithIndex.map { case (book, s) =>
@@ -3255,21 +3227,19 @@ class VectorStore(spark: SparkSession, val root: String,
         .map(_._2.toSeq.sortBy(_._2).map { case (_, cid, cv) => (cid, cv) })
     }
 
-  private def maintainAnnIndex(batch: DataFrame): Unit = {
-    val dir = currentAnnDir.getOrElse(return)
-    val codebook = codebookOf(dir)
+  private def maintainAnnIndex(batch: DataFrame): Unit = annIndex().foreach { ix =>
     // appended rows must carry the SAME columns as the built index —
     // including PQ codes (encoded with the committed books; ADVICE r4
     // #4's schema-alignment lesson)
-    withPqCodes(batch.drop("gen"), pqBooksOf(dir))
-      .withColumn("cid", SimilaritySearch.nearestCentroid(col("vector"), codebook))
-      .write.mode(SaveMode.Append).partitionBy("cid").parquet(dir)
-    readAnnMeta(dir).foreach { m =>
+    withPqCodes(batch.drop("gen"), ix.pqBooks)
+      .withColumn("cid", SimilaritySearch.nearestCentroid(col("vector"), ix.codebook))
+      .write.mode(SaveMode.Append).partitionBy("cid").parquet(ix.dir)
+    readAnnMeta(ix.dir).foreach { m =>
       val appended = m.appendedRows + batch.count()
       if (appended > m.rebuildFraction * math.max(m.baseRows, 1L))
         buildAnnIndexLocked(m.k, m.seed, m.rebuildFraction)
       else
-        writeAnnMeta(dir, m.copy(appendedRows = appended))
+        writeAnnMeta(ix.dir, m.copy(appendedRows = appended))
     }
   }
 }
@@ -3283,9 +3253,12 @@ object VectorStore {
 
   private val MaxSnapshotEntries = 256
 
+  /** Tag sets a snapshot holds on the driver (past it `tags` is None),
+    * and the default dppRouteThreshold. */
+  val MaxTagSets = 10000
+
   /** One resolved store snapshot — see the snapshot section of
-    * [[VectorStore]]. `tags` is None past the dppRouteThreshold of the
-    * facade that built it. The table side is built on first use and
+    * [[VectorStore]]. `tags` is None past [[MaxTagSets]]. The table side is built on first use and
     * kept: a failed build (a live gen dir gone) throws to the reader
     * and is retried by the next one, while metadata stays served. A
     * write-through carries its batch's vector dimension (`knownDim`);
@@ -3320,10 +3293,13 @@ object VectorStore {
   private[operators] val snapshots =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Snapshot]()
 
-  private[operators] def putSnapshot(key: (SparkSession, String), v: Snapshot): Unit = {
-    snapshots.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    if (snapshots.size >= MaxSnapshotEntries) snapshots.clear()
-    snapshots.put(key, v); ()
+  /** Put into a companion map, purging stopped sessions' entries and
+    * resetting the map past [[MaxSnapshotEntries]]. */
+  private[operators] def bounded[V](m: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V],
+                                    key: (SparkSession, String), v: V): Unit = {
+    m.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    if (m.size >= MaxSnapshotEntries) m.clear()
+    m.put(key, v); ()
   }
 
   /** Publish a write-through snapshot over the one its writer read
@@ -3351,73 +3327,30 @@ object VectorStore {
     override def invalidateAll(): Unit = m.clear()
   }
 
-  /** Per-(session, ann version dir, dir mtime) tag-stats tables —
-    * values are Option: a recorded None (absent/oversized stats) is
-    * itself a cache hit, so a legacy index doesn't re-probe the
-    * filesystem per query. */
-  private[operators] val annTagStats =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Long),
-      Option[Map[Long, Seq[(Set[String], Long)]]]]()
-
-  private[operators] def putAnnTagStats(key: (SparkSession, String, Long),
-      v: Option[Map[Long, Seq[(Set[String], Long)]]]): Unit = {
-    annTagStats.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    if (annTagStats.size >= MaxSnapshotEntries) annTagStats.clear()
-    annTagStats.put(key, v); ()
+  /** One committed ANN index version, the ANN twin of [[Snapshot]] —
+    * see the snapshot section of [[VectorStore]] for its key and
+    * lifecycle. `calibratedNprobe` is None for uncalibrated legacy
+    * meta; `tagStats` None when absent or oversized, `pqBooks` None for
+    * an index built without PQ. The schema holds for the whole version:
+    * appends add rows but never columns (maintainAnnIndex aligns
+    * them). */
+  private[graft] final class AnnIndex(
+      val dir: String,
+      val codebookMtime: Long,
+      val codebook: Seq[(Long, Seq[Float])],
+      val calibratedNprobe: Option[Int],
+      loadTagStats: () => Option[Map[Long, Seq[(Set[String], Long)]]],
+      loadPqBooks: () => Option[Seq[Seq[(Long, Seq[Float])]]],
+      loadSchema: () => org.apache.spark.sql.types.StructType) {
+    lazy val tagStats: Option[Map[Long, Seq[(Set[String], Long)]]] = loadTagStats()
+    lazy val pqBooks: Option[Seq[Seq[(Long, Seq[Float])]]] = loadPqBooks()
+    lazy val schema: org.apache.spark.sql.types.StructType = loadSchema()
+    /** Escalated nprobe per normalized tag set for the count-job
+      * escalation — a starting hint, re-verified by one count per query
+      * (probe order is query-specific). */
+    val npMemo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
   }
 
-  /** Collected IVF codebooks / PQ sub-codebooks per (session, index
-    * version dir, dir mtime) — serve-path reads of per-version
-    * immutable files. */
-  private[operators] val annCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Long), Seq[(Long, Seq[Float])]]()
-
-  private[operators] def putAnnCodebook(key: (SparkSession, String, Long),
-      v: Seq[(Long, Seq[Float])]): Unit = {
-    annCodebooks.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    if (annCodebooks.size >= MaxSnapshotEntries) annCodebooks.clear()
-    annCodebooks.put(key, v); ()
-  }
-
-  private[operators] val annPqBooks =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Long), Option[Seq[Seq[(Long, Seq[Float])]]]]()
-
-  /** Index data schemas per (session, version dir, mtime) — appends
-    * add rows, never columns, so the schema is per-version immutable
-    * and supplying it explicitly removes the footer-inference job from
-    * every serve-path `spark.read.parquet(indexDir)`. */
-  private[operators] val annSchemas =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Long), org.apache.spark.sql.types.StructType]()
-
-  private[operators] def putAnnSchema(key: (SparkSession, String, Long),
-      v: org.apache.spark.sql.types.StructType): Unit = {
-    annSchemas.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    if (annSchemas.size >= MaxSnapshotEntries) annSchemas.clear()
-    annSchemas.put(key, v); ()
-  }
-
-  private[operators] def putAnnPqBooks(key: (SparkSession, String, Long),
-      v: Option[Seq[Seq[(Long, Seq[Float])]]]): Unit = {
-    annPqBooks.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    if (annPqBooks.size >= MaxSnapshotEntries) annPqBooks.clear()
-    annPqBooks.put(key, v); ()
-  }
-
-  /** Escalated-nprobe memo for the count-job fallback, per (session,
-    * index dir, normalized tag set) — a starting hint, re-verified by
-    * one count per query (probe order is query-specific). */
-  private[operators] val annNpMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), java.lang.Integer]()
-
-  private[operators] def putAnnNpMemo(key: (SparkSession, String, String),
-      np: Int): Unit = {
-    annNpMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    if (annNpMemo.size >= MaxSnapshotEntries) annNpMemo.clear()
-    annNpMemo.put(key, np); ()
-  }
+  private[operators] val annIndexes =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AnnIndex]()
 }
