@@ -378,8 +378,8 @@ object SparkEntry {
         // is one task's decode grain, and the whole narrow
         // parse -> extract -> langid/quality chain inherits the
         // read's partitioning — a 2-shard fixture measured the
-        // engine at 2-task parallelism on a 32-thread box (WebProbe:
-        // read 0.34 s, stats +1.3 s). Real crawls deliver thousands
+        // engine at 2-task parallelism on a 32-thread box (read
+        // 0.34 s, stats +1.3 s). Real crawls deliver thousands
         // of shards; 16 keeps the fixture build cheap while giving
         // the chain real width (Warc.read's minPartitions fix is
         // the other half — binaryFiles otherwise COMBINES small
@@ -1466,7 +1466,7 @@ object SparkEntry {
       // langid expression trees into BOTH the Filter and the Project
       // above it, and per-operator codegen subexpression elimination
       // cannot share across the two — the corpus was tokenized twice
-      // (WebProbe: stats-only 0.48 s vs stats+gate 2.3 s at the old
+      // (stats-only 0.48 s vs stats+gate 2.3 s at the old
       // task grain). A repartition does NOT stop that (filters push
       // through RepartitionByExpression — plans/r17/pipeline_web
       // _before/_after both show the chain inlined at the scan);
@@ -1575,8 +1575,8 @@ object SparkEntry {
         // SHUFFLE_HASH (r18, guide §3.1): the semi-join key set is the
         // FULL orders table — fact-sized, so broadcasting it is wrong at
         // every real scale, and even here AQE's broadcast choice paid a
-        // ~1 s driver collect+build of 1.5M keys per execution (QProbe:
-        // BHJ 2.3 s vs SHJ 1.4 s sf1). The agg side arrives already
+        // ~1 s driver collect+build of 1.5M keys per execution (BHJ
+        // 2.3 s vs SHJ 1.4 s sf1). The agg side arrives already
         // hash-partitioned on the key, so the hint adds only the small
         // o_orderkey exchange; same rows either way.
         .join(o.select(col("o_orderkey")).hint("shuffle_hash"),
@@ -2250,7 +2250,7 @@ object SparkEntry {
     // accumulate block-manager pressure across a 128-query suite).
     // Measured sf1 steady (QueryLoop, 32 threads): r12 13.7 s ->
     // r15 6.1 -> r17 packed-key/single-baskets-branch 5.8 (see the
-    // in-query comment; AssocProbe `variants` reproduces the search).
+    // in-query comment).
     "q_assoc_rules" -> ((s, dir) => {
       // r17 shape (VERDICT r16 next #3 asked for an a-priori singleton
       // prune before the kernel; it was implemented, measured, and
@@ -2263,7 +2263,7 @@ object SparkEntry {
       // while item ids fit in uint32 — decode after the >= 2 filter),
       // so the heavy 12M-row pair shuffle moves 8-byte primitive keys
       // instead of two-field structs and the hash agg probes a long
-      // key (AssocProbe `variants`, sf1, 32 threads: struct key 7.5 s
+      // key (sf1, 32 threads: struct key 7.5 s
       // steady -> packed 6.2; a further variant that sourced cnt /
       // n_orders from a distinct(ok, pk) branch measured 5.8 but buys
       // it with a THIRD corpus scan + a 6M-row exchange — cheap from
@@ -2274,7 +2274,7 @@ object SparkEntry {
       // sort_array FINAL aggregation per branch (rules, cnt, nOrders) —
       // AQE stage reuse shares only the pre-shuffle map side, so two of
       // the three post-shuffle set-builds (the most expensive stage in
-      // the AssocProbe attribution) were pure recomputation. `ok` is
+      // the measured attribution) were pure recomputation. `ok` is
       // dropped before materializing: no consumer reads it, so the
       // pinned blocks carry just the ~4-int item arrays. Storage policy
       // (local[*] localCheckpoint vs cluster persist) in

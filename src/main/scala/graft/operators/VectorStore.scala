@@ -64,8 +64,8 @@ import graft.OracleSql
  * searchManyAnn, annCalibratedNprobe, the insert-time index
  * maintenance) resolves ONE [[VectorStore.AnnIndex]] per (session,
  * index version dir) — the collected codebook and the calibrated auto
- * nprobe, plus the tag stats, PQ books, data schema and escalation memo
- * loaded on first use.
+ * nprobe, plus the tag stats, PQ books and data schema loaded on first
+ * use. One rule ([[probeRule]]) picks the lists every ANN search probes.
  *  - It stays valid while the mtime of `<dir>/_codebook.parquet` is
  *    unchanged. The codebook is written once per version, so an insert
  *    appending into the index (which rewrites `_meta.json` and bumps the
@@ -1013,10 +1013,6 @@ class VectorStore(spark: SparkSession, val root: String,
       .write.mode(SaveMode.Append).partitionBy("cbucket")
       .parquet(contentIdxData)
 
-  /** The pruned probe: fingerprints of `batchHashes` (a `chash` column,
-    * batch-bounded) that are already present. Exposed for the plan
-    * gate — the sidecar scan must show cbucket PartitionFilters, i.e.
-    * it reads ONLY the batch's buckets. */
   /** Sidecar scan with the schema DECLARED: a sidecar rebuilt from an
     * emptied store has no files to infer from (zero-row partitioned
     * write), and schema inference would throw where an empty index is
@@ -1030,6 +1026,10 @@ class VectorStore(spark: SparkSession, val root: String,
           org.apache.spark.sql.types.IntegerType))))
       .parquet(contentIdxData)
 
+  /** The pruned probe: fingerprints of `batchHashes` (a `chash` column,
+    * batch-bounded) that are already present. Exposed for the plan
+    * gate — the sidecar scan must show cbucket PartitionFilters, i.e.
+    * it reads ONLY the batch's buckets. */
   private[graft] def contentIdxProbe(batchHashes: DataFrame): DataFrame = {
     val buckets = batchHashes.select(cbucketCol(col("chash")).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
@@ -1889,7 +1889,6 @@ class VectorStore(spark: SparkSession, val root: String,
       manifest().select("tag_key", "tags").collect()
         .map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toMap)
 
-  /** Score + top-k tail shared by [[search]] and [[searchDpp]]. */
   /** Row-level tag-superset filter: every requested tag present
     * (duplicates collapsed); identity on an empty request. ONE home
     * for the semantics — exact search, single and batched ANN all
@@ -1898,25 +1897,27 @@ class VectorStore(spark: SparkSession, val root: String,
     if (tags.isEmpty) df
     else df.where(tags.distinct.map(t => array_contains(col("tags"), t)).reduce(_ && _))
 
+  /** The similarity of `vec` to `q` under `metric` — the one
+    * metric-to-column mapping of every search and of the nprobe
+    * calibration. Euclidean is negated so "higher = closer" uniformly
+    * (fixes reference quirk, SURVEY.md §2 #15); the f32 modes are
+    * bit-compatible with the reference's f32 kernels
+    * (src/similarity.rs:10-43). */
+  private def simColumn(metric: String, vec: Column, q: Column): Column =
+    metric match {
+      case "cosine" => cosine(vec, q)
+      case "euclidean" => -euclidean(vec, q)
+      case "cosine_f32" => cosineF32(vec, q).cast("double")
+      case "euclidean_f32" => (-euclideanF32(vec, q)).cast("double")
+      case m => throw new IllegalArgumentException(s"graft: unknown metric $m")
+    }
+
+  /** Score + top-k tail shared by [[search]], [[searchDpp]] and the
+    * single-query ANN searches. */
   private def scoreTopK(rows: DataFrame, queryVec: Seq[Float], k: Int,
                         metric: String, quantized: Boolean): DataFrame = {
     val v = if (quantized) unpack(col("packed")) else col("vector")
-    val q = vecLit(queryVec)
-    val scored = metric match {
-      case "cosine" => rows.withColumn("similarity", cosine(v, q))
-      case "euclidean" =>
-        // negate so "higher = closer" uniformly (fixes reference quirk,
-        // SURVEY.md §2 #15)
-        rows.withColumn("similarity", -euclidean(v, q))
-      // f32-parity mode: bit-compatible with the reference's f32 kernels
-      // (src/similarity.rs:10-43)
-      case "cosine_f32" =>
-        rows.withColumn("similarity", cosineF32(v, q).cast("double"))
-      case "euclidean_f32" =>
-        rows.withColumn("similarity", (-euclideanF32(v, q)).cast("double"))
-      case m => throw new IllegalArgumentException(s"graft: unknown metric $m")
-    }
-    scored
+    rows.withColumn("similarity", simColumn(metric, v, vecLit(queryVec)))
       .where(!isnan(col("similarity")))
       .select(col("similarity"), col("id"), col("content"), col("tags"))
       .orderBy(desc("similarity"), asc("id"))
@@ -2201,13 +2202,24 @@ class VectorStore(spark: SparkSession, val root: String,
       tags: Seq[String] = Nil,
       k: Int = 10,
       quantized: Boolean = false): DataFrame = {
-    if (isProjected) {
-      val q = Pca.projectOne(loadModel(), queryVec)
-      search(q.toSeq, tags, k, metric = "euclidean", quantized = quantized)
-    } else {
-      search(queryVec, tags, k, metric = "cosine", quantized = quantized)
-    }
+    val mode = queryMode()
+    search(mode.vec(queryVec), tags, k, metric = mode.metric, quantized = quantized)
   }
+
+  /** The store's query mode: a projected store holds PCA-projected
+    * vectors, so a query projects through the stored basis and scores
+    * by (negated) euclidean; otherwise raw vectors score by cosine. The
+    * basis loads on first use. */
+  private final class QueryMode(projected: Boolean) {
+    val metric: String = if (projected) "euclidean" else "cosine"
+    private lazy val model = loadModel()
+    /** One query vector, projected driver-side. */
+    def vec(q: Seq[Float]): Seq[Float] = if (projected) Pca.projectOne(model, q).toSeq else q
+    /** The projection as a column function, for a query table. */
+    def column: Column => Column = if (projected) Pca.projector(spark, model) else identity
+  }
+
+  private def queryMode(): QueryMode = new QueryMode(isProjected)
 
   // ---- store-integrated ANN: k-means IVF index (VERDICT r2 next-step
   // #5). The codebook persists beside eigen.parquet, the corpus is
@@ -2320,29 +2332,28 @@ class VectorStore(spark: SparkSession, val root: String,
   private val AnnRecallTarget = 0.95
   private val AnnCalibrationQueries = 32
   private val AnnCalibrationK = 10
-  /** Filtered-ANN candidate-pool margin: auto-nprobe escalates until
-    * the post-filter pool holds k x this many rows (or every list is
-    * probed). 10x is the standard IVF over-fetch heuristic — enough
-    * pool that the true top-k's lists are almost surely among the
-    * probed ones even when the filter decimates each list. */
+  /** Filtered-ANN candidate-pool margin: a tagged auto-nprobe search
+    * probes lists until their matching rows reach k x this many (or
+    * every list is probed, see [[probeRule]]). 10x is the standard IVF
+    * over-fetch heuristic — enough pool that the true top-k's lists are
+    * almost surely among the probed ones even when the filter decimates
+    * each list. */
   private val AnnFilteredMargin = 10L
 
-  // ---- per-(cid, tag set) index row counts: the filtered-ANN
-  // escalation's driver metadata (VERDICT r16 next #4 / ADVICE r16 #3:
-  // the auto-nprobe escalation re-ran limit-bounded count JOBS on every
-  // tagged serve call — several Spark jobs per query on the warm path
-  // the snapshot caches were built to clear). Written at build/compact
+  // ---- per-(cid, tag set) index row counts: the driver metadata the
+  // probe rule decides tagged auto-nprobe searches from, with no Spark
+  // job (VERDICT r16 next #4 / ADVICE r16 #3). Written at build/compact
   // time from the exact staged data; incremental appends only ADD rows,
   // so a stale table is a LOWER bound on every (cid, tag set) count —
-  // which keeps every decision below recall-safe: "pool >= margin by
-  // stats" implies the true pool is too, and "stats can't reach margin
-  // anywhere" escalates to a full probe, the maximal-recall answer. ----
+  // which keeps the rule recall-safe: "pool >= margin by stats" implies
+  // the true pool is too, and "stats can't reach margin anywhere"
+  // probes every list, the maximal-recall answer. ----
 
   private def tagStatsPathIn(dir: String) = s"$dir/_tagstats.parquet"
 
   /** Stats past this row count are not persisted (collecting them IS
-    * the serve-time plan; a corpus with 10^5+ distinct (cid, tag set)
-    * cells keeps the count-job escalation instead). */
+    * the serve-time plan; a tagged auto search on an index with 10^5+
+    * distinct (cid, tag set) cells probes every list instead). */
   private val TagStatsMaxRows = 200000L
 
   /** Compute and stage `_tagstats.parquet` for the index data in `dir`
@@ -2357,24 +2368,26 @@ class VectorStore(spark: SparkSession, val root: String,
         .parquet(tagStatsPathIn(dir))
     else
       System.err.println(s"graft: ANN tag stats skipped ($n distinct " +
-        s"(cid, tag set) cells > $TagStatsMaxRows) — filtered auto-nprobe " +
-        "keeps the count-job escalation for this index")
+        s"(cid, tag set) cells > $TagStatsMaxRows) — tagged auto-nprobe " +
+        "searches probe every list of this index")
   }
 
   /** cid -> (tag set, rows) lower bounds of the index version at
     * `dir` (one collect, on a handle's first use). None: stats absent
-    * (legacy index or oversized) or unreadable. */
+    * (legacy index or oversized) or unreadable. Partition inference
+    * types `cid` as int (or long past the int range), so it is read as
+    * a Number. */
   private def readTagStats(dir: String): Option[Map[Long, Seq[(Set[String], Long)]]] =
     if (!fs.exists(new Path(tagStatsPathIn(dir)))) None
     else try {
       Some(spark.read.parquet(tagStatsPathIn(dir))
         .select(col("cid"), col("tags"), col("n")).collect().toSeq
-        .map(r => (r.getLong(0), r.getSeq[String](1).toSet, r.getLong(2)))
+        .map(r => (r.getAs[Number](0).longValue, r.getSeq[String](1).toSet, r.getLong(2)))
         .groupBy(_._1)
         .map { case (cid, rs) => cid -> rs.map(t => (t._2, t._3)) })
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"graft: ANN tag stats unreadable ($e) — " +
-        "filtered auto-nprobe falls back to count jobs"); None
+        "tagged auto-nprobe searches probe every list"); None
     }
 
   /** Per-cid matching-row lower bounds for one tag-superset query —
@@ -2439,7 +2452,6 @@ class VectorStore(spark: SparkSession, val root: String,
   private def calibrateNprobe(codebook: Seq[(Long, Seq[Float])]): Int = {
     val nlist = codebook.size
     if (nlist <= 1) return 1
-    val metric = if (isProjected) "euclidean" else "cosine"
     val qs = table().select(col("id"), col("vector"))
       .limit(AnnCalibrationQueries).collect()
       .map(r => (r.getString(0), r.getSeq[Float](1)))
@@ -2458,9 +2470,6 @@ class VectorStore(spark: SparkSession, val root: String,
       .map { case ((id, v), i) => (i.toLong, id, v) }
       .toDF("qid", "qid_str", "qvec")
       .withColumn("qvec", col("qvec").cast("array<float>")))
-    val simCol =
-      if (metric == "euclidean") -euclidean(col("vector"), col("qvec"))
-      else cosine(col("vector"), col("qvec"))
     val scored = table()
       .select(col("id"),
         SimilaritySearch.nearestCentroid(col("vector"), codebook).as("acid"),
@@ -2471,7 +2480,7 @@ class VectorStore(spark: SparkSession, val root: String,
         element_at(
           element_at(typedLit(probeRanks), (col("qid") + 1).cast("int")),
           (col("acid") + 1).cast("int")).cast("long").as("cid"),
-        simCol.as("sim"))
+        simColumn(queryMode().metric, col("vector"), col("qvec")).as("sim"))
       .where(!isnan(col("sim")))
     // `cid` carries the PROBE RANK (heap tie-break on it is harmless:
     // equal-sim ties are resolved toward lower-rank lists, a rounding
@@ -2493,6 +2502,34 @@ class VectorStore(spark: SparkSession, val root: String,
   private def resolveNprobe(ix: VectorStore.AnnIndex, nprobe: Int): Int =
     if (nprobe > 0) nprobe
     else ix.calibratedNprobe.getOrElse(math.max(1, (3 * ix.codebook.size + 3) / 4))
+
+  /** The probe rule of every ANN search: the lists one query vector
+    * probes, in probe order (a null vector probes none). Built once per
+    * call, pure driver arithmetic, no Spark job.
+    *  - Untagged calls and explicit `nprobe`: the [[resolveNprobe]]
+    *    nearest lists.
+    *  - Tagged auto calls: the calibration measured UNFILTERED list
+    *    coverage, and a selective filter thins every list (VERDICT r15
+    *    next #6). The query probes the shortest prefix of its full
+    *    probe order whose matching rows, by the tag stats' lower bounds,
+    *    reach k x [[AnnFilteredMargin]], and never fewer lists than the
+    *    calibrated nprobe. When no prefix reaches the margin it probes
+    *    every list; so does an index without stats (legacy, oversized
+    *    or unreadable), whose matching counts are all zero. */
+  private def probeRule(ix: VectorStore.AnnIndex, k: Int, nprobe: Int,
+                        tags: Seq[String]): Seq[Float] => Seq[Long] = {
+    val np = resolveNprobe(ix, nprobe)
+    if (tags.isEmpty || nprobe > 0) qv => SimilaritySearch.probeCids(ix.codebook, qv, np)
+    else {
+      val matched = ix.tagStats.fold(Map.empty[Long, Long])(tagMatchCounts(_, tags))
+      val margin = k * AnnFilteredMargin
+      qv => {
+        val order = SimilaritySearch.probeCids(ix.codebook, qv, ix.codebook.size)
+        val reach = order.scanLeft(0L)(_ + matched.getOrElse(_, 0L)).indexWhere(_ >= margin)
+        if (reach < 0) order else order.take(math.max(np, reach))
+      }
+    }
+  }
 
   /** Fit a k-means codebook over the stored vectors and write the
     * cid-partitioned index. One corpus pass for assignment (the argmin
@@ -2566,7 +2603,14 @@ class VectorStore(spark: SparkSession, val root: String,
     * shape as [[search]]. `nprobe = 0` (the default) resolves the
     * build-time-calibrated >=90%-recall operating point from the index
     * meta ([[resolveNprobe]]) — tune DOWN explicitly for speed with
-    * the measured curve in hand. `quantized = true` scores the packed codec
+    * the measured curve in hand. `tags` filters rows inside the probed
+    * lists (the tag-superset semantics of [[search]]); a tagged auto
+    * call probes the shortest prefix of the query's probe order whose
+    * matching rows, by the build-time tag stats, reach k x 10, never
+    * fewer lists than the calibrated nprobe, and every list when the
+    * stats cannot reach that margin or are absent ([[probeRule]]: no
+    * Spark job, no dependence on earlier queries). An explicit nprobe
+    * is never overridden. `quantized = true` scores the packed codec
     * column (stores written with quantize=true index it alongside), and
     * the FuseQuantizedKernels rule collapses cosine/euclidean-over-
     * unpack into the packed kernels — 4x less I/O on the probed lists. */
@@ -2575,78 +2619,11 @@ class VectorStore(spark: SparkSession, val root: String,
     val ix = requireAnnIndex()
     // mode-aware like searchAuto: a projected store indexed projected
     // vectors, so the query projects through the same basis
-    val (qv, metric) =
-      if (isProjected) (Pca.projectOne(loadModel(), queryVec).toSeq, "euclidean")
-      else (queryVec, "cosine")
-    val codebook = ix.codebook
-    val nlist = codebook.size
-    var np = resolveNprobe(ix, nprobe)
-    // filtered ANN: the tag-superset predicate rides INSIDE the probed
-    // cid partitions (row filter on the pruned scan, same semantics as
-    // search()'s superset filter). The build-time calibration measures
-    // UNFILTERED list coverage, so a selective filter thins the probed
-    // lists and the calibrated default silently under-covers (VERDICT
-    // r15 next #6) — on the AUTO path, escalate nprobe (doubling, full
-    // probe order, bounded counts) until the post-filter candidate
-    // pool holds at least k x margin rows or every list is probed.
-    // Explicit-nprobe callers keep exactly what they asked for.
-    val fullOrder =
-      if (tags.nonEmpty && nprobe <= 0 && np < nlist)
-        SimilaritySearch.probeCids(codebook, qv, nlist)
-      else IndexedSeq.empty[Long]
-    if (fullOrder.nonEmpty) {
-      val margin = k.toLong * AnnFilteredMargin
-      ix.tagStats match {
-        case Some(stats) =>
-          // metadata-first (VERDICT r16 next #4): the pool estimate is
-          // pure driver arithmetic over the per-(cid, tag set) lower
-          // bounds — ZERO Spark jobs on the warm filtered path. The
-          // bounds can only understate (appends), so "reached margin"
-          // is proof and "cannot reach margin anywhere" escalates to
-          // the full probe, which is recall-maximal by construction.
-          val matched = tagMatchCounts(stats, tags)
-          if (matched.values.sum < margin) np = nlist
-          else {
-            var acc = 0L; var i = 0
-            while (i < fullOrder.length && acc < margin) {
-              acc += matched.getOrElse(fullOrder(i), 0L); i += 1
-            }
-            np = math.max(np, i)
-          }
-        case None =>
-          // legacy/oversized-stats index: limit-bounded count jobs,
-          // with the escalated np memoized per (index version, tag
-          // set) as a STARTING point (ADVICE r16 #3) — repeat queries
-          // usually verify at their memoized np in one count instead
-          // of re-walking the doubling ladder. The verify count stays:
-          // probe ORDER is query-specific, so a cached np is a hint,
-          // never proof.
-          def candidates(p: Int): Long = tagSuperset(
-            annData(ix).where(col("cid").isin(fullOrder.take(p): _*)), tags)
-            // limit-bounded probe: the count exists only to compare
-            // against the margin, never to fully evaluate a huge
-            // filtered scan
-            .limit((margin + 1).toInt).count()
-          // length-prefixed join: tag values may contain any separator
-          // character, so "a b"+"c" must not collide with "a"+"b c"
-          val memoKey = tags.distinct.sorted.map(t => s"${t.length}:$t").mkString("|")
-          Option(ix.npMemo.get(memoKey))
-            .foreach(m => np = math.min(nlist, math.max(np, m.intValue)))
-          while (np < nlist && candidates(np) < margin)
-            np = math.min(nlist, np * 2)
-          if (ix.npMemo.size >= VectorStore.MaxSnapshotEntries) ix.npMemo.clear()
-          ix.npMemo.put(memoKey, np)
-      }
-    }
-    // reuse the already-computed probe order (the escalation path
-    // sorted the whole codebook once; recomputing would be a redundant
-    // O(nlist log nlist) on the serving path)
-    val probes =
-      if (fullOrder.nonEmpty) fullOrder.take(np)
-      else SimilaritySearch.probeCids(codebook, qv, np)
+    val mode = queryMode()
+    val qv = mode.vec(queryVec)
     val pruned = tagSuperset(
-      annData(ix).where(col("cid").isin(probes: _*)), tags)
-    scoreTopK(pruned, qv, k, metric, quantized)
+      annData(ix).where(col("cid").isin(probeRule(ix, k, nprobe, tags)(qv): _*)), tags)
+    scoreTopK(pruned, qv, k, mode.metric, quantized)
   }
 
   /**
@@ -2684,20 +2661,6 @@ class VectorStore(spark: SparkSession, val root: String,
     }
   }
 
-  /** Query-side projection column + scoring metric for the store's
-    * current mode: projected stores project the query through the
-    * stored basis and score by (negated) euclidean, mirroring
-    * [[search]]'s single-vector path. */
-  private def queryColumnMode(): (Column => Column, String) =
-    if (isProjected) (Pca.projector(spark, loadModel()), "euclidean")
-    else (identity[Column] _, "cosine")
-
-  private def simColumn(metric: String, vec: Column, q: Column): Column =
-    metric match {
-      case "euclidean" => -GraftFunctions.euclidean(vec, q)
-      case _ => GraftFunctions.cosine(vec, q)
-    }
-
   /**
    * Batched EXACT top-k: a query TABLE (qid, qvec) against the store in
    * ONE plan — the store-side counterpart of the suite's
@@ -2720,8 +2683,8 @@ class VectorStore(spark: SparkSession, val root: String,
     // next #8): the scan streams |Q| x |store| scores, so a miscalled
     // million-query batch would run for days — fail loudly with the
     // routing answer
-    val (qproj, metric) = queryColumnMode()
-    val (rows, schema) = collectBatch(queries, qproj, MaxExactBatch,
+    val mode = queryMode()
+    val (rows, schema) = collectBatch(queries, mode.column, MaxExactBatch,
       s"graft: searchMany got > $MaxExactBatch queries — the exact " +
         "path broadcasts the batch and streams |Q| x |store| scores. " +
         "Route large batches through searchManyAnn (probe-pruned, " +
@@ -2737,7 +2700,7 @@ class VectorStore(spark: SparkSession, val root: String,
       case None => snap0
     }
     val scored = tagSuperset(pruned, tags).join(q)
-      .withColumn("similarity", simColumn(metric, col("vector"), col("qv")))
+      .withColumn("similarity", simColumn(mode.metric, col("vector"), col("qv")))
       .where(!isnan(col("similarity")))
     rankPerQuery(scored, k)
   }
@@ -2784,89 +2747,54 @@ class VectorStore(spark: SparkSession, val root: String,
   /**
    * Batched ANN top-k over the committed IVF index. The batch is
    * collected to the driver once ([[collectBatch]], at most
-   * [[MaxAnnBatch]] queries) and every query takes its nprobe nearest
-   * lists from the cached codebook with [[searchAnn]]'s own driver
-   * probe ([[SimilaritySearch.probeCids]]). The union of probed lists
-   * (bounded by the codebook size) becomes a STATIC partition IN-list on
-   * the cid-partitioned index — non-probed lists are never read — and
-   * the (qid, qv, lid) probe table, a local relation, BROADCASTS onto
-   * the pruned scan for per-query assignment. Both come from the same
-   * driver rows, so the scan reads every list a query probes. The
-   * corpus never shuffles, and each index row joins at most its own
-   * list's probes (a row lives in exactly ONE list, so no dedup is
-   * needed). Same version-pinning as [[searchAnn]] (codebook and data
-   * resolve from ONE committed dir). `quantized = true` scores the
-   * packed codec column (quantized stores index it alongside) —
-   * FuseQuantizedKernels collapses kernel-over-unpack into the packed
-   * kernel, so probed lists scan bytes, like [[searchAnn]]'s quantized
-   * mode. A query with a null vector probes nothing and returns no
-   * rows. Returns (qid, rank, similarity, id, content, tags).
+   * [[MaxAnnBatch]] queries) and every query takes the lists
+   * [[searchAnn]] would probe for it, by the same rule ([[probeRule]])
+   * over the cached codebook: the calibrated (or explicit) nprobe
+   * nearest lists, and for a tagged auto call the shortest prefix of
+   * its probe order whose tag-stats matching rows reach k x 10 (never
+   * fewer than the calibrated nprobe; every list without stats or when
+   * the margin is out of reach). So each query's rows equal its
+   * single-query [[searchAnn]] rows, and planning runs no Spark job.
+   * The union of probed lists (bounded by the codebook size) becomes a
+   * STATIC partition IN-list on the cid-partitioned index — non-probed
+   * lists are never read — and the (qid, qv, lid) probe table, a local
+   * relation, BROADCASTS onto the pruned scan for per-query assignment.
+   * Both come from the same driver rows, so the scan reads every list a
+   * query probes. The corpus never shuffles, and each index row joins
+   * at most its own list's probes (a row lives in exactly ONE list, so
+   * no dedup is needed). Same version-pinning as [[searchAnn]]
+   * (codebook and data resolve from ONE committed dir). `quantized =
+   * true` scores the packed codec column (quantized stores index it
+   * alongside) — FuseQuantizedKernels collapses kernel-over-unpack into
+   * the packed kernel, so probed lists scan bytes, like [[searchAnn]]'s
+   * quantized mode. A query with a null vector probes nothing and
+   * returns no rows. Returns (qid, rank, similarity, id, content,
+   * tags).
    */
   def searchManyAnn(queries: DataFrame, k: Int = 10,
                     nprobe: Int = 0, quantized: Boolean = false,
                     tags: Seq[String] = Nil): DataFrame = {
     val ix = requireAnnIndex()
-    val codebook = ix.codebook
-    val nlist = codebook.size
-    var np = resolveNprobe(ix, nprobe)
-    val (qproj, metric) = queryColumnMode()
-    val (rows, schema) = collectBatch(queries, qproj, MaxAnnBatch,
+    val mode = queryMode()
+    val (rows, schema) = collectBatch(queries, mode.column, MaxAnnBatch,
       s"graft: searchManyAnn got > $MaxAnnBatch queries — the batch and " +
         "its probe table are held on the driver and broadcast; split it")
-    // filtered auto-nprobe escalation, batched (VERDICT r15 next #6 —
-    // same under-coverage as searchAnn: the calibration is unfiltered).
-    // The starved query is a PER-QUERY property (tagged rows can be
-    // concentrated in lists only some queries probe), so np doubles for
-    // everyone until the worst query's pool holds k x margin candidates
-    // or every list is probed; each query's full probe order is ranked
-    // once for it. Explicit nprobe is never overridden.
-    val escalates = tags.nonEmpty && nprobe <= 0 && np < nlist
-    val orders = rows.map(r => SimilaritySearch.probeCids(
-      codebook, r.getSeq[Float](1), if (escalates) nlist else np))
-    def lidsAt(p: Int): Seq[Long] = orders.flatMap(_.take(p)).distinct
-    // a null-vector query probes nothing and scores nothing, so it
-    // never asks for more lists
-    val probing = orders.filter(_.nonEmpty)
-    if (escalates && probing.nonEmpty) {
-      val margin = k.toLong * AnnFilteredMargin
-      // matching rows per list: the build-time lower bounds (pure
-      // driver arithmetic, no job), else — legacy or oversized-stats
-      // index — one grouped count job per round over the lists not
-      // counted yet (the final query scans them anyway)
-      val stats = ix.tagStats.map(tagMatchCounts(_, tags))
-      val matched = scala.collection.mutable.Map[Long, Long]() ++ stats.getOrElse(Map.empty)
-      def worstPool(): Long = {
-        if (stats.isEmpty) {
-          val fresh = lidsAt(np).filterNot(matched.contains)
-          if (fresh.nonEmpty) {
-            matched ++= fresh.map(_ -> 0L)
-            matched ++= tagSuperset(annData(ix).where(col("cid").isin(fresh: _*)), tags)
-              .groupBy("cid").count().collect()
-              .map(r => r.getAs[Number](0).longValue -> r.getLong(1))
-          }
-        }
-        probing.map(_.take(np).map(matched.getOrElse(_, 0L)).sum).min
-      }
-      // store-wide short-circuit: when the whole index cannot reach the
-      // margin, every query needs the full probe
-      if (stats.exists(_.values.sum < margin)) np = nlist
-      else while (np < nlist && worstPool() < margin) np = math.min(nlist, np * 2)
-    }
+    val probe = probeRule(ix, k, nprobe, tags)
+    val orders = rows.map(r => probe(r.getSeq[Float](1)))
     val probes = localFrame(
-      rows.zip(orders).flatMap { case (r, o) => o.take(np).map(l => Row(r.get(0), r.get(1), l)) },
+      rows.zip(orders).flatMap { case (r, o) => o.map(l => Row(r.get(0), r.get(1), l)) },
       schema.add("lid", org.apache.spark.sql.types.LongType, nullable = false))
-    // filtered ANN, batched: the tag-superset predicate rides inside
-    // the union of probed lists (row filter BELOW the broadcast join),
-    // same contract as searchAnn(tags) — selective filters are the
-    // caller's nprobe dial, never a re-query fallback
+    // the tag-superset predicate rides inside the union of probed lists
+    // (row filter BELOW the broadcast join), same contract as
+    // searchAnn(tags)
     val idx = tagSuperset(
-        annData(ix).where(col("cid").isin(lidsAt(np): _*)), tags)
+        annData(ix).where(col("cid").isin(orders.flatten.distinct: _*)), tags)
       .withColumnRenamed("cid", "lid")
     require(!quantized || idx.columns.contains("packed"),
       "graft: quantized batched search needs a quantized store (index has no packed column)")
     val vec = if (quantized) GraftFunctions.unpack(col("packed")) else col("vector")
     val scored = idx.join(broadcast(probes), Seq("lid"))
-      .withColumn("similarity", simColumn(metric, vec, col("qv")))
+      .withColumn("similarity", simColumn(mode.metric, vec, col("qv")))
       .where(!isnan(col("similarity")))
     rankPerQuery(scored, k)
   }
@@ -3152,11 +3080,10 @@ class VectorStore(spark: SparkSession, val root: String,
     val books = ix.pqBooks.getOrElse(
       throw new IllegalStateException(
         "graft: index has no PQ codes (pre-PQ build or non-divisible dim) — rebuild with buildAnnIndex"))
-    val (qv, metric) =
-      if (isProjected) (Pca.projectOne(loadModel(), queryVec).toSeq, "euclidean")
-      else (queryVec, "cosine")
-    val probes = SimilaritySearch.probeCids(ix.codebook, qv, resolveNprobe(ix, nprobe))
-    val pruned = annData(ix).where(col("cid").isin(probes: _*))
+    val mode = queryMode()
+    val qv = mode.vec(queryVec)
+    val metric = mode.metric
+    val pruned = annData(ix).where(col("cid").isin(probeRule(ix, k, nprobe, Nil)(qv): _*))
     val dsub = qv.length / books.size
     def lutCol(f: (Seq[Float], Seq[Float]) => Double): Column =
       books.zipWithIndex.map { case (book, s) =>
@@ -3187,21 +3114,6 @@ class VectorStore(spark: SparkSession, val root: String,
     scoreTopK(candidates, qv, k, metric, quantized = false)
   }
 
-  /**
-   * Incremental ANN maintenance (VERDICT r3 next #2): fold an inserted
-   * batch into the live index so [[searchAnn]] serves new rows without
-   * a rebuild. The batch assigns to the EXISTING centroids via the
-   * broadcast-codebook argmin — a pure projection appended into the
-   * cid-partitioned layout, zero extra shuffle. Once appends exceed
-   * `rebuildFraction` of the built size the codebook is refit (same
-   * k/seed) — appended rows follow a drifted distribution the old
-   * centroids never saw, and unbounded drift erodes probe recall.
-   * Callers hold the writer lock (reached only from writeBatch). The
-   * append itself is not transactional: a crash mid-append leaves some
-   * batch rows indexed and the rest stale-by-missing — both states the
-   * approximate-by-contract index already admits; committed STORE data
-   * is never at risk.
-   */
   /** Attach the PQ codes column when sub-codebooks are in play — the
     * same argmin-expression encode as [[SimilaritySearch.pqEncode]],
     * one projection, no shuffle. */
@@ -3227,6 +3139,21 @@ class VectorStore(spark: SparkSession, val root: String,
         .map(_._2.toSeq.sortBy(_._2).map { case (_, cid, cv) => (cid, cv) })
     }
 
+  /**
+   * Incremental ANN maintenance (VERDICT r3 next #2): fold an inserted
+   * batch into the live index so [[searchAnn]] serves new rows without
+   * a rebuild. The batch assigns to the EXISTING centroids via the
+   * broadcast-codebook argmin — a pure projection appended into the
+   * cid-partitioned layout, zero extra shuffle. Once appends exceed
+   * `rebuildFraction` of the built size the codebook is refit (same
+   * k/seed) — appended rows follow a drifted distribution the old
+   * centroids never saw, and unbounded drift erodes probe recall.
+   * Callers hold the writer lock (reached only from writeBatch). The
+   * append itself is not transactional: a crash mid-append leaves some
+   * batch rows indexed and the rest stale-by-missing — both states the
+   * approximate-by-contract index already admits; committed STORE data
+   * is never at risk.
+   */
   private def maintainAnnIndex(batch: DataFrame): Unit = annIndex().foreach { ix =>
     // appended rows must carry the SAME columns as the built index —
     // including PQ codes (encoded with the committed books; ADVICE r4
@@ -3345,10 +3272,6 @@ object VectorStore {
     lazy val tagStats: Option[Map[Long, Seq[(Set[String], Long)]]] = loadTagStats()
     lazy val pqBooks: Option[Seq[Seq[(Long, Seq[Float])]]] = loadPqBooks()
     lazy val schema: org.apache.spark.sql.types.StructType = loadSchema()
-    /** Escalated nprobe per normalized tag set for the count-job
-      * escalation — a starting hint, re-verified by one count per query
-      * (probe order is query-specific). */
-    val npMemo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
   }
 
   private[operators] val annIndexes =

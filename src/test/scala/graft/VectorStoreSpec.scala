@@ -591,38 +591,98 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
-  test("filtered ANN escalation is metadata-first: zero Spark jobs planning a warm tagged searchAnn") {
-    // VERDICT r16 next #4 / ADVICE r16 #3: the escalation re-ran
-    // limit-bounded COUNT jobs per doubling round on every tagged
-    // serve call, and the codebook collect was 1-2 more. Build-time
-    // per-(cid, tag set) stats + the per-version codebook cache answer
-    // the pool estimate from driver metadata: planning a warm tagged
-    // query runs ZERO Spark jobs (the query's own execution is the
-    // first job to start).
+  /** 800 rows in 8 tight clusters around random unit centres (16-d;
+    * the euclidean probe order then follows cosine), so the calibrated
+    * nprobe stays below nlist. 'rare' rows (every 4th) live in clusters
+    * 0 and 4 only: 200 rows, twice k x margin at k = 10, and a query
+    * from another cluster reaches them only by probing further. */
+  private def clusteredStore(): (VectorStore, IndexedSeq[(String, Array[Float], String, Seq[String])]) = {
     val store = freshStore()
-    val rng = new scala.util.Random(83)
-    val rows = (0 until 200).map { i =>
-      (s"v$i", Array.fill(16)(rng.nextGaussian().toFloat), s"c$i",
-        if (i % 10 == 0) Seq("rare", "all") else Seq("common", "all"))
+    val rng = new scala.util.Random(71)
+    val centers = Array.fill(8) {
+      val c = Array.fill(16)(rng.nextGaussian()); val n = math.sqrt(c.map(x => x * x).sum)
+      c.map(_ / n)
+    }
+    val rows = (0 until 800).map { i =>
+      (s"v$i", centers(i % 8).map(c => (c + 0.02 * rng.nextGaussian()).toFloat), s"c$i",
+        if (i % 4 == 0) Seq("rare", "all") else Seq("common", "all"))
     }
     store.insert(df(rows))
-    store.buildAnnIndex(k = 4)
-    // first tagged call loads + caches codebook, meta and tag stats
-    // (jobs allowed here)
-    store.searchAnn(rows(7)._2.toSeq, k = 10, tags = Seq("rare")).count()
-    // plan TWO warm tagged queries (different vectors — the stats path
-    // must not depend on a per-query memo) without executing
-    val (planned, jobs) = SparkTestSession.jobsDuring(Seq(
-      store.searchAnn(rows(23)._2.toSeq, k = 10, tags = Seq("rare")),
-      store.searchAnn(rows(151)._2.toSeq, k = 10, tags = Seq("rare"))))
-    assert(jobs == 0, s"warm filtered-ANN planning still ran $jobs Spark job(s)")
-    // the metadata-planned queries execute correctly: k hits, filter
-    // respected (every 'rare' row also carries 'all')
-    planned.foreach { q =>
-      val got = q.collect()
-      assert(got.length == 10)
-      assert(got.forall(_.getSeq[String](3).contains("rare")))
+    store.buildAnnIndex(k = 8)
+    val np = store.annCalibratedNprobe
+    assert(np.exists(_ < 8), s"calibrated nprobe $np leaves no list to skip")
+    (store, rows)
+  }
+
+  /** Mean recall of a batched result against the exact 'rare'-filtered
+    * top-10 of each query row `qis(qid)`. */
+  private def rareRecall(store: VectorStore, rows: IndexedSeq[(String, Array[Float], String, Seq[String])],
+                         qis: Seq[Int], res: org.apache.spark.sql.DataFrame): Double = {
+    val got = res.select("qid", "id").collect()
+      .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getString(1)).toSet }
+    val rs = qis.zipWithIndex.map { case (qi, i) =>
+      val exactIds = ids(store.search(rows(qi)._2.toSeq, tags = Seq("rare"), k = 10).collect()).toSet
+      got.getOrElse(i.toLong, Set.empty[String]).intersect(exactIds).size.toDouble / exactIds.size
     }
+    rs.sum / rs.size
+  }
+
+  private def batchOf(rows: IndexedSeq[(String, Array[Float], String, Seq[String])], qis: Seq[Int]) =
+    qis.zipWithIndex.map { case (qi, i) => (i.toLong, rows(qi)._2.toSeq) }.toDF("qid", "qvec")
+
+  /** The cid values of the index scan's partition filter: its IN-list,
+    * or the one literal a single-list probe is optimized to. */
+  private def probedCids(res: org.apache.spark.sql.DataFrame): Set[Any] = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, In, InSet, Literal}
+    res.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.partitionFilters
+    }.flatten.flatMap(_.collect {
+      case in: In => in.list.map(_.eval())
+      case in: InSet => in.hset.toSeq
+      case EqualTo(_: Attribute, l: Literal) => Seq(l.value)
+    }.flatten).toSet
+  }
+
+  /** What running `f` printed to System.err. */
+  private def stderrOf(f: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try { f; buf.toString("UTF-8") } finally System.setErr(prev)
+  }
+
+  test("filtered ANN escalation is metadata-first: zero Spark jobs planning a warm tagged searchAnn") {
+    // VERDICT r16 next #4 / ADVICE r16 #3: build-time per-(cid, tag
+    // set) stats answer the pool estimate from driver metadata, so
+    // planning a warm tagged auto query runs ZERO Spark jobs and
+    // probes fewer lists than nlist when the rare rows sit nearby
+    val (store, rows) = clusteredStore()
+    def warm(): Unit = {
+      // the first tagged call loads the handle's schema and tag stats;
+      // an unreadable stats file would print its error here
+      val err = stderrOf(store.searchAnn(rows(7)._2.toSeq, k = 10, tags = Seq("rare")).collect())
+      assert(!err.contains("graft: ANN tag stats"), err)
+    }
+    def check(): Unit = {
+      val qis = Seq(1, 2, 3, 5, 6, 7)
+      val ((singles, many), jobs) = SparkTestSession.jobsDuring((
+        Seq(23, 146).map(qi => store.searchAnn(rows(qi)._2.toSeq, k = 10, tags = Seq("rare"))),
+        store.searchManyAnn(batchOf(rows, qis), k = 10, tags = Seq("rare"))))
+      assert(jobs == 0, s"warm filtered-ANN planning still ran $jobs Spark job(s)")
+      singles.zip(Seq(23, 146)).foreach { case (q, qi) =>
+        val lists = probedCids(q)
+        assert(lists.nonEmpty && lists.size < 8, s"query $qi probed lists $lists")
+        val exactIds = ids(store.search(rows(qi)._2.toSeq, tags = Seq("rare"), k = 10).collect()).toSet
+        val got = ids(q.collect())
+        assert(got.size == 10 && got.toSet.intersect(exactIds).size >= 9, s"query $qi: $got vs $exactIds")
+      }
+      val recall = rareRecall(store, rows, qis, many)
+      assert(recall >= 0.85, s"metadata-planned batched recall $recall below target")
+    }
+    warm(); check()
+    // compaction recomputes the stats into the new version: they load too
+    store.compactAnnIndex()
+    warm(); check()
     store.clear()
   }
 
@@ -686,49 +746,56 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
-  test("stats-less batched escalation: without _tagstats.parquet the tagged auto-nprobe searchManyAnn counts lists and holds >=0.85 recall") {
-    val store = freshStore()
-    val rng = new scala.util.Random(71)
-    // 8 tight clusters around unit centers (the euclidean probe order
-    // then follows cosine), so the calibrated nprobe stays below nlist;
-    // 'rare' rows live in clusters 0 and 4 only, so a query from any
-    // other cluster finds them only by escalating
-    val centers = Array.fill(8) {
-      val c = Array.fill(16)(rng.nextGaussian()); val n = math.sqrt(c.map(x => x * x).sum)
-      c.map(_ / n)
-    }
-    val rows = (0 until 800).map { i =>
-      (s"v$i", centers(i % 8).map(c => (c + 0.02 * rng.nextGaussian()).toFloat), s"c$i",
-        if (i % 4 == 0) Seq("rare", "all") else Seq("common", "all"))
-    }
-    store.insert(df(rows))
-    store.buildAnnIndex(k = 8)
+  test("stats-less tagged auto search: without _tagstats.parquet the searchManyAnn plans with no job, probes every list and holds >=0.85 recall") {
+    val (store, rows) = clusteredStore()
     val np = store.annCalibratedNprobe
-    assert(np.exists(_ < 8), s"calibrated nprobe $np leaves no escalation to run")
     val stats = new java.io.File(store.root, "ann/v0/_tagstats.parquet")
     assert(stats.isDirectory)
     org.apache.commons.io.FileUtils.deleteDirectory(stats)
     val qis = Seq(1, 2, 3, 5, 6, 7, 8)
-    val qdf = qis.zipWithIndex.map { case (qi, i) => (i.toLong, rows(qi)._2.toSeq) }
-      .toDF("qid", "qvec")
-    def recall(res: org.apache.spark.sql.DataFrame): Double = {
-      val got = res.select("qid", "id").collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getString(1)).toSet }
-      val rs = qis.zipWithIndex.map { case (qi, i) =>
-        val exactIds = ids(store.search(rows(qi)._2.toSeq, tags = Seq("rare"), k = 10).collect()).toSet
-        got.getOrElse(i.toLong, Set.empty[String]).intersect(exactIds).size.toDouble / exactIds.size
-      }
-      rs.sum / rs.size
-    }
-    // planning runs the per-list count jobs the stats would have answered
+    val qdf = batchOf(rows, qis)
+    // an untagged call loads the handle's schema; the tagged call then
+    // finds no stats and plans a full probe from driver metadata alone
+    store.searchManyAnn(qdf, k = 10).collect()
     val (planned, jobs) = SparkTestSession.jobsDuring(
       store.searchManyAnn(qdf, k = 10, tags = Seq("rare")))
-    assert(jobs > 0, "no count job: the stats-less escalation did not run")
-    val auto = recall(planned)
+    assert(jobs == 0, s"stats-less planning ran $jobs Spark job(s)")
+    assert(probedCids(planned).size == 8, s"probed ${probedCids(planned)}, not every list")
+    val auto = rareRecall(store, rows, qis, planned)
     assert(auto >= 0.85, s"stats-less batched recall $auto below target")
-    // the escalation is what reaches the floor: the calibrated nprobe alone misses
-    val fixed = recall(store.searchManyAnn(qdf, k = 10, nprobe = np.get, tags = Seq("rare")))
+    // the full probe is what reaches the floor: the calibrated nprobe alone misses
+    val fixed = rareRecall(store, rows, qis,
+      store.searchManyAnn(qdf, k = 10, nprobe = np.get, tags = Seq("rare")))
     assert(fixed < 0.85, s"calibrated nprobe alone already reaches $fixed")
+    store.clear()
+  }
+
+  test("tagged auto searchManyAnn equals searchAnn per query: same ids, ranks and similarities") {
+    val (store, rows) = clusteredStore()
+    val qis = Seq(1, 2, 3, 4, 5, 6, 7, 8, 9, 10)
+    val many = store.searchManyAnn(batchOf(rows, qis), k = 10, tags = Seq("rare")).collect()
+      .groupBy(_.getLong(0)).map { case (q, rs) =>
+        q -> rs.map(r => (r.getLong(1), r.getDouble(2), r.getString(3))).sortBy(_._1).toSeq
+      }
+    qis.zipWithIndex.foreach { case (qi, i) =>
+      val single = store.searchAnn(rows(qi)._2.toSeq, k = 10, tags = Seq("rare")).collect()
+        .zipWithIndex.map { case (r, j) => (j + 1L, r.getDouble(0), r.getString(1)) }.toSeq
+      assert(single.size == 10 && many(i.toLong) == single, s"query $qi: batch ${many(i.toLong)} vs single $single")
+    }
+    store.clear()
+  }
+
+  test("a tagged auto searchAnn probes the same lists on a fresh handle as after other tagged queries") {
+    val (store, rows) = clusteredStore()
+    def lists(qi: Int) = probedCids(store.searchAnn(rows(qi)._2.toSeq, k = 10, tags = Seq("rare")))
+    // rows 0 and 8 sit in a 'rare' cluster: their own list holds the margin
+    val fresh = lists(8)
+    assert(fresh.nonEmpty && fresh.size < 8, s"fresh handle probed $fresh")
+    // queries from clusters without 'rare' rows probe further
+    val others = Seq(1, 2, 3, 5, 6, 7).map(lists)
+    assert(others.exists(_.size > fresh.size), s"fresh $fresh, others $others")
+    store.searchManyAnn(batchOf(rows, Seq(1, 3, 5)), k = 10, tags = Seq("rare")).collect()
+    assert(lists(8) == fresh, s"history changed the probed lists: ${lists(8)} vs $fresh")
     store.clear()
   }
 
