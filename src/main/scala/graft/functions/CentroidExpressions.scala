@@ -118,7 +118,22 @@ object CentroidKernel {
       out(c) = dot / (snx * java.lang.Math.sqrt(ny))
       c += 1
     }
-    new GenericArrayData(out)
+    // unboxed: GenericArrayData would box every element
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** The euclidean twin of [[allCosines]]: the NEGATED distance of
+    * `vec` to every reference vector ("higher = closer", as the
+    * searches rank), each element bit-identical to
+    * `-graft_euclidean(vec, ref_i)` (the [[EuclideanDistance]] fold).
+    * The exact batched search's kernel on projected stores
+    * ([[QueryBatch.score]]). */
+  def allNegEuclideans(vec: ArrayData, flat: Array[Float], n: Int, d: Int): ArrayData = {
+    checkDim(vec, d)
+    val out = new Array[Double](n)
+    var c = 0
+    while (c < n) { out(c) = -distTo(vec, flat, c * d, d); c += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** (id, sim) of the MOST-cosine-similar reference vector — the

@@ -1,19 +1,10 @@
 package graft.operators
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
-/** One scored candidate row in a batched (multi-query) search. */
-case class Scored(qid: Long, cid: Long, sim: Double)
-
-/** One query's result list. */
-case class TopHits(qid: Long, hits: Seq[Hit])
-case class Hit(cid: Long, sim: Double)
+import graft.functions.{GraftFunctions, TopKHeaps}
 
 /**
  * Batched multi-query top-k ("similarity join"): for each query vector,
@@ -25,11 +16,16 @@ case class Hit(cid: Long, sim: Double)
  *     -> Project [sim]
  *     -> per-query top-k
  *
- * Two per-query top-k strategies:
- *  - window row_number() <= k: simplest, but sorts each group fully;
- *  - a typed Aggregator with a bounded heap: map-side partial combine,
- *    O(n log k) per partition, only k rows per (query, partition) cross
- *    the shuffle — the scalable path, mirroring the reference's heap.
+ * Per-query top-k over such a scored (qid, cid, sim) stream:
+ *  - [[perQueryTopKWindow]], row_number() <= k: the query side may be
+ *    unbounded; Spark rewrites the rank filter to WindowGroupLimit;
+ *  - [[perQueryTopKHeap]], the bounded-heap aggregate
+ *    [[graft.functions.TopKHeaps]] grouped by qid: map-side partial
+ *    combine, only k entries per (query, partition) cross the shuffle.
+ *    The same aggregate ranks `VectorStore.searchMany`, where one
+ *    aggregate keeps a heap per query and no pair row exists.
+ * Both rank by (sim desc, cid asc). The heap drops NaN and null sims;
+ * the window keeps them, so its callers filter NaN first.
  */
 object TopK {
 
@@ -57,60 +53,15 @@ object TopK {
       .where(col("rank") <= k)
   }
 
-  /** Bounded-heap Aggregator: the buffer never exceeds k entries, so the
-    * partial aggregation (map-side combine) shrinks the shuffle to
-    * k rows per query per partition. */
-  class TopKAggregator(k: Int) extends Aggregator[Scored, mutable.PriorityQueue[Hit], Seq[Hit]] {
-    // min-heap by sim (head = worst kept hit); ties broken on cid so the
-    // result is deterministic regardless of partitioning.
-    private implicit val ord: Ordering[Hit] =
-      Ordering.by[Hit, (Double, Long)](h => (-h.sim, h.cid))
-
-    override def zero: mutable.PriorityQueue[Hit] = mutable.PriorityQueue.empty[Hit]
-
-    private def push(b: mutable.PriorityQueue[Hit], h: Hit): mutable.PriorityQueue[Hit] = {
-      if (b.size < k) b.enqueue(h)
-      else {
-        val worst = b.head
-        if (h.sim > worst.sim || (h.sim == worst.sim && h.cid < worst.cid)) {
-          b.dequeue(); b.enqueue(h)
-        }
-      }
-      b
-    }
-
-    override def reduce(b: mutable.PriorityQueue[Hit], a: Scored): mutable.PriorityQueue[Hit] =
-      push(b, Hit(a.cid, a.sim))
-
-    override def merge(b1: mutable.PriorityQueue[Hit], b2: mutable.PriorityQueue[Hit]): mutable.PriorityQueue[Hit] = {
-      b2.foreach(h => push(b1, h))
-      b1
-    }
-
-    override def finish(b: mutable.PriorityQueue[Hit]): Seq[Hit] =
-      b.toSeq.sortBy(h => (-h.sim, h.cid))
-
-    override def bufferEncoder: Encoder[mutable.PriorityQueue[Hit]] =
-      Encoders.kryo[mutable.PriorityQueue[Hit]]
-    override def outputEncoder: Encoder[Seq[Hit]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Hit]]()
-  }
-
-  /** Aggregator-based per-query top-k. Input columns (qid, cid, sim). */
-  def perQueryTopKHeap(spark: SparkSession, scored: DataFrame, k: Int): DataFrame = {
-    import spark.implicits._
-    val ds: Dataset[Scored] = scored.select("qid", "cid", "sim").as[Scored]
-    val agg = new TopKAggregator(k).toColumn.name("hits")
-    ds.groupByKey(_.qid)
-      .agg(agg)
-      .toDF("qid", "hits")
-      .select(col("qid"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(
-        col("qid"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("hit.cid").as("cid"),
-        col("hit.sim").as("sim"))
-  }
+  /** Heap-based per-query top-k over (qid, cid, sim): one
+    * [[graft.functions.TopKHeaps]] heap per qid, ranked by (sim desc,
+    * cid asc) in `cid`'s own type order; NaN and null sims are dropped.
+    * Columns (qid, rank, cid, sim). */
+  def perQueryTopKHeap(spark: SparkSession, scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy(col("qid"))
+      .agg(TopKHeaps.column(array(col("sim")), col("cid"), Nil, k).as("hits"))
+      .select(col("qid"), inline(col("hits")))
+      .select(col("qid"), col("rank"), col("id").as("cid"), col("similarity").as("sim"))
 
   /** Score every (query, corpus) pair: queries side broadcast. Columns:
     * queries(qid, qvec), corpus(cid, cvec) -> (qid, cid, sim). */

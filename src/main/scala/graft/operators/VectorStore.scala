@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, QueryBatch, TopKHeaps}
 import graft.OracleSql
 
 /**
@@ -2663,34 +2663,46 @@ class VectorStore(spark: SparkSession, val root: String,
 
   /**
    * Batched EXACT top-k: a query TABLE (qid, qvec) against the store in
-   * ONE plan — the store-side counterpart of the suite's
-   * knn_multiquery shape. The batch is collected to the driver once
-   * ([[collectBatch]]: at most [[MaxExactBatch]] queries, a larger
-   * frame fails with the routing answer after reading ceiling + 1
-   * rows) and broadcast as a local relation; the scored stream is
-   * per-query-ranked through a qid-partitioned window whose rank filter
-   * Spark rewrites to WindowGroupLimit, so only k rows per query per
-   * partition survive to the shuffle. Mode-aware like [[search]].
-   * Returns (qid, rank, similarity, id, content, tags).
+   * ONE scan — the store-side counterpart of the suite's knn_multiquery
+   * shape, and victor's one-scan bounded-heap loop (src/db.rs:257-272)
+   * run for the whole batch at once. The batch is collected to the
+   * driver once ([[collectBatch]]: at most [[MaxExactBatch]] queries, a
+   * larger frame fails with the routing answer after reading ceiling + 1
+   * rows) and held as one broadcast float matrix
+   * ([[graft.functions.QueryBatch]]), never as plan literals. Each store
+   * row is scored against every query by one kernel call (the cosine,
+   * or the negated euclidean distance on a projected store, each
+   * bit-identical to the per-pair kernel), and one
+   * [[graft.functions.TopKHeaps]] aggregate keeps each qid's k best
+   * (similarity desc, id asc; NaN and null scores dropped), carrying
+   * content and tags only for the rows a heap admits. No (query, row)
+   * pair is ever a row: the partial aggregate ships at most |Q| x k
+   * entries per partition to one merge. Query rows sharing a qid form
+   * one group; a null-vector query returns no rows; a query whose
+   * dimension differs from the store's fails on the driver when the
+   * snapshot knows that dimension (otherwise in the first task). Same
+   * tag pruning as [[search]]. Returns (qid, rank, similarity, id,
+   * content, tags).
    *
-   * For query batches large enough that |Q| x |store| streaming is the
+   * For query batches large enough that |Q| x |store| scoring is the
    * bottleneck, use [[searchManyAnn]] — probes prune the scan to
    * ~nprobe/C of the index.
    */
   def searchMany(queries: DataFrame, k: Int = 10,
                  tags: Seq[String] = Nil): DataFrame = {
     // ENFORCE the batch contract instead of trusting it (VERDICT r7
-    // next #8): the scan streams |Q| x |store| scores, so a miscalled
+    // next #8): the scan scores |Q| x |store| pairs, so a miscalled
     // million-query batch would run for days — fail loudly with the
     // routing answer
     val mode = queryMode()
-    val (rows, schema) = collectBatch(queries, mode.column, MaxExactBatch,
+    val (rows, schema) = collectBatch(queries, c => asVec(mode.column(c)), MaxExactBatch,
       s"graft: searchMany got > $MaxExactBatch queries — the exact " +
-        "path broadcasts the batch and streams |Q| x |store| scores. " +
+        "path broadcasts the batch and scores |Q| x |store| pairs. " +
         "Route large batches through searchManyAnn (probe-pruned, " +
         "corpus never shuffles) instead")
-    val q = broadcast(localFrame(rows, schema))
     val s = snapshot()
+    val batch = QueryBatch(spark, rows, schema("qid").dataType, mode.metric,
+      s.flatMap(_.dimIfKnown))
     val snap0 = tableOf(s)
     // same two-level tag filter as [[search]]: manifest-resolved
     // tag_key IN-list so non-matching PARTITIONS are never read, plus
@@ -2699,10 +2711,10 @@ class VectorStore(spark: SparkSession, val root: String,
       case Some(keys) => snap0.where(col("tag_key").isin(keys: _*))
       case None => snap0
     }
-    val scored = tagSuperset(pruned, tags).join(q)
-      .withColumn("similarity", simColumn(mode.metric, col("vector"), col("qv")))
-      .where(!isnan(col("similarity")))
-    rankPerQuery(scored, k)
+    tagSuperset(pruned, tags)
+      .agg(TopKHeaps.column(QueryBatch.scores(col("vector"), batch), col("id"),
+        Seq(col("content"), col("tags")), k, Some(batch)).as("top"))
+      .select(inline(col("top")))
   }
 
   /** Queries per [[searchMany]] call: far above any sane exact batch,
@@ -3206,6 +3218,8 @@ object VectorStore {
       * it finds a row. */
     def dim(read: => Option[Int]): Option[Int] =
       dimension.orElse { val d = read; dimension = d; d }
+    /** The stored vector dimension if known, without reading. */
+    def dimIfKnown: Option[Int] = dimension
   }
 
   /** A snapshot's table: the DataFrame, the listed parquet relation a

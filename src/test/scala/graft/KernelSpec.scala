@@ -196,6 +196,64 @@ class KernelSpec extends AnyFunSuite {
     assert(p1 == got.map(_._1))
   }
 
+  /** Run `f` with expressions evaluated interpreted (NO_CODEGEN, no
+    * whole-stage codegen) or compiled (CODEGEN_ONLY). */
+  private def withCodegen[T](mode: String)(f: => T): T = {
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val before = keys.map(k => k -> conf.getOption(k))
+    conf.set(keys(0), mode)
+    conf.set(keys(1), (mode == "CODEGEN_ONLY").toString)
+    try f
+    finally before.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
+  test("all-reference kernels: element i of graft_all_cosines and of a query batch's scores is the per-pair kernel against reference i, bit for bit, interpreted and compiled") {
+    import graft.functions.QueryBatch
+    val inf = Float.PositiveInfinity
+    // references in unsorted id order: graft_all_cosines folds them by
+    // ascending id, a query batch in its own (here: ascending) order
+    val refs = Seq[(Long, Seq[Float])](
+      (7L, Seq(1f, 2f, 3f)), (2L, Seq(-1f, 0.5f, 0f)), (5L, Seq(0f, 0f, 0f)), (3L, Seq(inf, 1f, 0f)))
+    val vecs = Seq[Seq[Float]](Seq(0.3f, -2f, 5f), Seq(Float.NaN, 1f, 1f), Seq(inf, 0f, 1f),
+      Seq(-inf, -inf, 2f), Seq(0f, 0f, 0f), null)
+    // the empty dimension: empty vectors against empty references
+    val emptyRefs = Seq[(Long, Seq[Float])]((4L, Nil), (1L, Nil))
+    def bits(a: Seq[Double]) = a.map(java.lang.Double.doubleToRawLongBits)
+    for ((rs, vs) <- Seq((refs, vecs), (emptyRefs, Seq(Nil, null)))) {
+      val sorted = rs.sortBy(_._1)
+      def batch(metric: String) = QueryBatch(spark, sorted.map(r => org.apache.spark.sql.Row(r._1, r._2)),
+        org.apache.spark.sql.types.LongType, metric, None)
+      val negEuclidean = (v: org.apache.spark.sql.Column, r: org.apache.spark.sql.Column) => -euclidean(v, r)
+      val kernels = Seq(
+        ("graft_all_cosines", call_function("graft_all_cosines", col("v"),
+          array(rs.map(r => lit(r._1)): _*), array(rs.map(r => vecLit(r._2)): _*)), cosine _),
+        ("cosine batch", QueryBatch.scores(col("v"), batch("cosine")), cosine _),
+        ("euclidean batch", QueryBatch.scores(col("v"), batch("euclidean")), negEuclidean))
+      for ((name, all, pair) <- kernels) {
+        // repartition keeps the projection off the local relation, where
+        // the optimizer would fold it (interpreted) before execution
+        val scored = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("i", "v")
+          .withColumn("v", col("v").cast("array<float>")).repartition(1)
+          .select(col("i"), all.as("all"), array(sorted.map(r => pair(col("v"), vecLit(r._2))): _*).as("pairs"))
+        val byMode = Seq("NO_CODEGEN", "CODEGEN_ONLY").map { mode =>
+          withCodegen(mode)(scored.collect().sortBy(_.getLong(0)).map { r =>
+            if (r.isNullAt(1)) {
+              assert(r.getSeq[Any](2).forall(_ == null), s"$name: null vec, pairs ${r.get(2)}")
+              None
+            } else {
+              val got = bits(r.getSeq[Double](1))
+              assert(got == bits(r.getSeq[Double](2)), s"$name ($mode) row ${r.getLong(0)}: ${r.get(1)} vs ${r.get(2)}")
+              Some(got)
+            }
+          }.toSeq)
+        }
+        assert(byMode.head == byMode.last, s"$name: interpreted ${byMode.head} vs compiled ${byMode.last}")
+        assert(byMode.head.count(_.isEmpty) == 1, s"$name: the null vec scores null")
+      }
+    }
+  }
+
   test("term-counts kernel == Column-form per-term filter counts (r9 #2)") {
     import graft.operators.Dedup
     val docs = Seq(

@@ -217,6 +217,28 @@ class PlanSpec extends AnyFunSuite {
     store.clear()
   }
 
+  test("searchMany: one scan into one top-k heap aggregate — no join, no window, a plan that does not grow with the batch") {
+    val root = Files.createTempDirectory("graft-manyheap").toString
+    val store = new VectorStore(spark, root)
+    import spark.implicits._
+    store.insert((0 until 64).map { i =>
+      (s"id$i", Array(math.cos(i / 10.0).toFloat, math.sin(i / 10.0).toFloat, (i % 7).toFloat),
+        s"c$i", Seq(if (i % 2 == 0) "t1" else "t2"))
+    }.toDF("id", "vector", "content", "tags")
+      .withColumn("vector", col("vector").cast("array<float>")))
+    def batch(n: Int) = (0 until n).map(i => (i.toLong, Seq(1f, i.toFloat, 0.5f))).toDF("qid", "qvec")
+    val p4 = plan(store.searchMany(batch(4), k = 3, tags = Seq("t1")))
+    assert(Seq("Join", "Window").forall(n => !p4.contains(n)), p4)
+    assert(p4.contains("graft_topk_heaps") && p4.contains("graft_batch_scores"), p4)
+    val scanLine = p4.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
+    assert(scanLine.contains("tag_key"), s"no partition filter on tag_key:\n$scanLine")
+    // expression and plan ids aside, 1024 queries print like 4
+    def shape(p: String) = p.replaceAll("\\d+", "0")
+    val p1024 = plan(store.searchMany(batch(1024), k = 3, tags = Seq("t1")))
+    assert(shape(p1024).length <= shape(p4).length, s"4 queries:\n$p4\n1024 queries:\n$p1024")
+    store.clear()
+  }
+
   test("searchManyAnn: static partition pruning on probed lists + WindowGroupLimit") {
     val root = Files.createTempDirectory("graft-manyann").toString
     val store = new VectorStore(spark, root)

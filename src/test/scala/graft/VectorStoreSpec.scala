@@ -1190,6 +1190,142 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
+  /** searchMany's retired formulation, kept as the oracle: the batch
+    * broadcast-joined onto the store (one row per (query, store row)
+    * pair, content and tags on each), scored per pair, NaN dropped and
+    * ranked through a qid window. Its null similarities (a null vector
+    * on either side) survive `!isnan` and rank last, so they are
+    * dropped here: searchMany drops them in its heaps. */
+  private def windowSearchMany(store: VectorStore, queries: org.apache.spark.sql.DataFrame,
+                               k: Int, tags: Seq[String] = Nil) = {
+    import graft.functions.GraftFunctions.{cosine, euclidean}
+    val projected = store.isProjected
+    val qv =
+      if (projected) graft.operators.Pca.projector(spark, store.loadModel())(col("qvec"))
+      else col("qvec")
+    val q = broadcast(queries.select(col("qid"), qv.as("qv")))
+    val rows = tags.distinct.foldLeft(store.table())((t, tag) => t.where(array_contains(col("tags"), tag)))
+    val sim = if (projected) -euclidean(col("vector"), col("qv")) else cosine(col("vector"), col("qv"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(desc("similarity"), asc("id"))
+    rows.join(q)
+      .withColumn("similarity", sim)
+      .where(!isnan(col("similarity")))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k && col("similarity").isNotNull)
+      .select(col("qid"), col("rank"), col("similarity"), col("id"), col("content"), col("tags"))
+  }
+
+  /** Result rows as comparable values, similarity by its bits. */
+  private def manyRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("qid", "rank", "similarity", "id", "content", "tags").collect().map { r =>
+      r.toSeq.updated(2, java.lang.Double.doubleToRawLongBits(r.getDouble(2))).mkString("|")
+    }.toSeq.sorted
+
+  test("searchMany == the retired join + window on the sf0.001 fixture: k = 1, 5, 10, untagged and tagged") {
+    val store = freshStore()
+    val vt = graft.core.Tables.vectorTable(spark, "/root/testdata/sf0.001")
+      .select(col("id").cast("string").as("id"), col("vector"), col("content"), col("tags"))
+    store.insert(vt)
+    val qvs = vt.where(col("id").cast("long") < 12)
+      .select(col("id").cast("long").as("qid"), col("vector").as("qvec"))
+    val tag = vt.select(explode(col("tags"))).limit(1).head().getString(0)
+    for (k <- Seq(1, 5, 10); tags <- Seq(Nil, Seq(tag))) {
+      val got = manyRows(store.searchMany(qvs, k, tags))
+      assert(got.nonEmpty && got == manyRows(windowSearchMany(store, qvs, k, tags)),
+        s"k = $k, tags = $tags")
+    }
+    def columns(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(columns(store.searchMany(qvs, 5)) == columns(windowSearchMany(store, qvs, 5)))
+    store.clear()
+  }
+
+  test("searchMany == the retired join + window on a projected (euclidean) store") {
+    val store = freshStore()
+    val rng = new scala.util.Random(11)
+    val rows = (0 until 60).map(i => (s"v$i", Array.fill(8)(rng.nextGaussian().toFloat), s"c$i", Seq("t")))
+    store.insert(df(rows))
+    store.projectAll(3)
+    val qs = rows.take(7).zipWithIndex.map { case (r, i) => (i.toLong, r._2.toSeq) }.toDF("qid", "qvec")
+    for (k <- Seq(1, 4)) {
+      val got = manyRows(store.searchMany(qs, k))
+      assert(got.length == 7 * k && got == manyRows(windowSearchMany(store, qs, k)), s"k = $k")
+    }
+    store.clear()
+  }
+
+  test("searchMany edge cases == the retired join + window: string-id ties, NaN and null vectors, null and duplicate qids, k past the matches") {
+    val store = freshStore()
+    store.insert(Seq(
+      // one vector under ids whose string order ("10" < "2" < "9") is not
+      // their numeric order: three tied similarities
+      ("9", Seq(1f, 0f), "nine", Seq("t")),
+      ("10", Seq(1f, 0f), "ten", Seq("t")),
+      ("2", Seq(1f, 0f), "two", Seq("t", "u")),
+      ("b", Seq(0.6f, 0.8f), "b", Seq("u")),
+      ("z", Seq(0f, 0f), "zero: NaN cosine", Seq("t")),
+      ("n", null, "null vector", Seq("t")))
+      .toDF("id", "vector", "content", "tags").withColumn("vector", col("vector").cast("array<float>")))
+    val qs = Seq[(java.lang.Long, Seq[Float])](
+      (0L, Seq(1f, 0f)),
+      (1L, null),               // no rows
+      (2L, Seq(0f, 1f)),        // qid 2 twice: one merged group
+      (2L, Seq(0.6f, 0.8f)),
+      (3L, Seq(0f, 0f)),        // NaN against every row: no rows
+      (null, Seq(0.6f, 0.8f)))  // a null qid is a group of its own
+      .toDF("qid", "qvec").withColumn("qvec", col("qvec").cast("array<float>"))
+    for (k <- Seq(1, 2, 10); tags <- Seq(Nil, Seq("t"))) {
+      val got = manyRows(store.searchMany(qs, k, tags))
+      assert(got == manyRows(windowSearchMany(store, qs, k, tags)), s"k = $k, tags = $tags")
+    }
+    val top = store.searchMany(qs, 10).collect()
+    assert(!top.exists(r => !r.isNullAt(0) && Set(1L, 3L).contains(r.getLong(0))))
+    // the ties rank by string id, and k = 10 returns every scoring row
+    assert(top.filter(r => !r.isNullAt(0) && r.getLong(0) == 0L).map(_.getString(3)).toSeq
+      == Seq("10", "2", "9", "b"))
+    // the duplicate qid merged: one group holding the 4 scoring rows
+    // once per query row, ranked 1..8
+    val twice = top.filter(r => !r.isNullAt(0) && r.getLong(0) == 2L)
+    assert(twice.map(_.getLong(1)).sorted.toSeq == (1L to 8L))
+    store.clear()
+  }
+
+  test("the top-k heap ranks like the window: 0.0 ties -0.0, NaN and null scores dropped, ids in their own type's order") {
+    import graft.operators.TopK
+    val scored = Seq[(Long, String, java.lang.Double)](
+      (1L, "9", 0.0), (1L, "10", -0.0), (1L, "2", 0.0), (1L, "a", Double.NaN),
+      (1L, "b", null), (1L, "c", -0.5), (1L, "d", 0.25),
+      (2L, "x", -0.0), (2L, "w", 0.0), (2L, "y", Double.NaN))
+      .toDF("qid", "cid", "sim")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "rank", "cid", "sim").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))).toSeq.sortBy(t => (t._1, t._2))
+    for (k <- Seq(1, 2, 3, 10)) {
+      val window = TopK.perQueryTopKWindow(
+        scored.where(!isnan(col("sim")) && col("sim").isNotNull), k)
+        .withColumn("rank", col("rank").cast("long"))
+      val heap = rowsOf(TopK.perQueryTopKHeap(spark, scored, k))
+      assert(heap.map(t => (t._1, t._2, t._3)) == rowsOf(window).map(t => (t._1, t._2, t._3)), s"k = $k")
+    }
+    assert(rowsOf(TopK.perQueryTopKHeap(spark, scored, 3)).map(_._3) == Seq("d", "10", "2", "w", "x"))
+  }
+
+  test("searchMany: a wrong-dimension batch fails on the driver with the kernel's message, before any job") {
+    val store = freshStore()
+    store.insert(df(Seq(("a", Array(1f, 0f), "a", Seq("t")))))
+    // the manifest exists now, so this insert writes the snapshot
+    // through, with its dimension
+    store.insert(df(Seq(("b", Array(0f, 1f), "b", Seq("t")))))
+    val bad = Seq((0L, Seq(1f, 0f)), (1L, Seq(1f, 0f, 0f))).toDF("qid", "qvec")
+    val (e, jobs) = SparkTestSession.jobsDuring(
+      intercept[IllegalArgumentException](store.searchMany(bad, k = 1)))
+    assert(e.getMessage.contains("graft: vector dimension mismatch"), e.getMessage)
+    assert(jobs == 0, s"the dimension check ran $jobs Spark job(s)")
+    // a batch of the store's dimension but the wrong one alone fails too
+    intercept[IllegalArgumentException](store.searchMany(Seq((0L, Seq(1f, 0f, 0f))).toDF("qid", "qvec"), k = 1))
+    store.clear()
+  }
+
   test("searchManyAnn: probed batch equals exact batch when all lists are probed") {
     val store = freshStore()
     val vt = graft.core.Tables.vectorTable(spark, "/root/testdata/sf0.001")
