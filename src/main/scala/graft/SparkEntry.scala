@@ -65,6 +65,15 @@ object SparkEntry {
                       idCol: String = "vec_id"): DataFrame =
     TopK.topKRanked(scored, k, Seq(desc(simCol), asc(idCol)))
 
+  /** The split of the batched-search rows: embeddings `vec_id < 8` as
+    * the queries (qid, qvec), those at `vec_id >= corpusFrom` as the
+    * corpus (cid, cvec, corpusCols...). */
+  private def knnSplit(emb: DataFrame, corpusFrom: Long = 8,
+                       corpusCols: Seq[String] = Nil): (DataFrame, DataFrame) =
+    (emb.where(col("vec_id") < 8).select(col("vec_id").as("qid"), col("embedding").as("qvec")),
+     emb.where(col("vec_id") >= corpusFrom)
+       .select(Seq(col("vec_id").as("cid"), col("embedding").as("cvec")) ++ corpusCols.map(col): _*))
+
   /** A fixture cache: one value per (session, key), built by the
     * first caller; entries of stopped sessions are purged on every
     * access. See [[dupPairsCache]] for the contract. */
@@ -580,42 +589,30 @@ object SparkEntry {
 
     // ---- batched / approximate similarity search ----
 
-    // similarity join: 8 queries x top-5 over the rest (window top-k)
+    // similarity join: 8 queries x top-5 over the rest (the exact
+    // batch: one scan, one heap per query, no pair rows)
     "knn_multiquery" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus = emb.where(col("vec_id") >= 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      TopK.perQueryTopKWindow(TopK.scoreAllPairs(queries, corpus), 5)
-        .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"))
+      val (queries, corpus) = knnSplit(Tables.load(s, dir, "embeddings"))
+      TopK.exactJoin(queries, corpus, 5)
+        .select(col("qid"), col("rank"), col("cid"))
         .orderBy("qid", "rank")
     }),
 
     // k-NN label classification: majority vote among each query's
-    // top-10 neighbors (brute-force head here — 8 queries; the
-    // classify tail composes with the lsh/ivf heads at scale)
+    // top-10 neighbors (exact head here — 8 queries, each neighbor's
+    // label carried by the heap; the classify tail composes with the
+    // lsh/ivf heads at scale)
     "knn_classify" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus = emb.where(col("vec_id") >= 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      SimilaritySearch.classifyByVote(
-          TopK.perQueryTopKWindow(TopK.scoreAllPairs(queries, corpus), 10),
-          emb.where(col("vec_id") >= 8)
-            .select(col("vec_id").as("cid"), col("label")))
+      val (queries, corpus) = knnSplit(Tables.load(s, dir, "embeddings"), corpusCols = Seq("label"))
+      SimilaritySearch.voteByLabel(TopK.exactJoin(queries, corpus, 10, Seq("label")))
         .orderBy("qid")
     }),
 
-    // same result via the bounded-heap Aggregator (map-side combine)
+    // knn_multiquery's oracle twin: the same exact batch, gated
+    // against the same DuckDB window
     "knn_multiquery_heap" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus = emb.where(col("vec_id") >= 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      TopK.perQueryTopKHeap(s, TopK.scoreAllPairs(queries, corpus), 5)
+      val (queries, corpus) = knnSplit(Tables.load(s, dir, "embeddings"))
+      TopK.exactJoin(queries, corpus, 5)
         .select(col("qid"), col("rank"), col("cid"))
         .orderBy("qid", "rank")
     }),
@@ -629,11 +626,7 @@ object SparkEntry {
     // TABLES (knn_multiquery's broadcast brute force is right only for
     // a handful of queries)
     "ann_lsh_join" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus = emb.where(col("vec_id") >= 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val (queries, corpus) = knnSplit(Tables.load(s, dir, "embeddings"))
       SimilaritySearch.lshJoin(queries, corpus, k = 5, d = 64)
         .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"))
         .orderBy("qid", "rank")
@@ -647,14 +640,10 @@ object SparkEntry {
     // (both legs are SQL-expressible, so DuckDB recomputes system AND
     // relevance from scratch)
     "ann_eval" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus = emb.where(col("vec_id") >= 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val (queries, corpus) = knnSplit(Tables.load(s, dir, "embeddings"))
       val sys = SimilaritySearch.lshJoin(queries, corpus, k = 5, d = 64)
         .select(col("qid"), col("cid").as("id"), col("rank").cast("long").as("rank"))
-      val rel = TopK.perQueryTopKHeap(s, TopK.scoreAllPairs(queries, corpus), 5)
+      val rel = TopK.exactJoin(queries, corpus, 5)
         .select(col("qid"), col("cid").as("id"))
       Search.rankEval(sys, rel, 5).orderBy("qid")
     }),
@@ -663,11 +652,7 @@ object SparkEntry {
     // near-dup threshold per query — banded-LSH candidates, dup band
     // excluded before the per-query top-k
     "pairs_hard_negatives" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus = emb.where(col("vec_id") >= 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val (queries, corpus) = knnSplit(Tables.load(s, dir, "embeddings"))
       SimilaritySearch.hardNegatives(queries, corpus, k = 5, d = 64)
         .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"),
           round(col("sim"), 4).as("sim_r"))
@@ -2070,18 +2055,16 @@ object SparkEntry {
       TextAnalysis.lmScore(Tables.load(s, dir, "documents"))
         .orderBy("doc_id")),
 
-    // batched multi-query IVF ANN: probe table (Q x nprobe) broadcast
-    // onto the argmin-assigned corpus — ONE equi-join, corpus never
-    // shuffles; the IVF counterpart of ann_lsh_join
+    // batched multi-query IVF ANN: driver-probed table (Q x nprobe)
+    // broadcast onto the argmin-assigned corpus — ONE equi-join, corpus
+    // never shuffles, one heap per query; the IVF counterpart of
+    // ann_lsh_join
     "ann_ivf_join" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val centroids = emb.where(col("vec_id") < 16)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val codebook = SimilaritySearch.collectCodebook(centroids)
-      val queries = emb.where(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val corpus = emb.where(col("vec_id") >= 16)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val (queries, corpus) = knnSplit(emb, corpusFrom = 16)
       SimilaritySearch.ivfJoin(queries, corpus, codebook, nprobe = 2, k = 5)
         .orderBy("qid", "rank")
     }),

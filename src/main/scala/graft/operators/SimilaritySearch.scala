@@ -166,8 +166,8 @@ object SimilaritySearch {
   /**
    * Banded LSH similarity JOIN: per-query top-k over a query TABLE vs a
    * corpus TABLE, with candidates from a (band, key) sign-LSH equi-join
-   * — the scale shape for batched ANN. `TopK.scoreAllPairs` (broadcast
-   * brute force) is right for a handful of queries; at millions of
+   * — the scale shape for batched ANN. [[TopK.exactJoin]] (exact, the
+   * batch broadcast) is right for a bounded batch; at millions of
    * queries x billions of corpus rows the cross product is impossible,
    * while this is bands x (|Q| + |C|) exploded rows through one
    * hash-partitioned join, then per-query top-k via WindowGroupLimit.
@@ -315,23 +315,26 @@ object SimilaritySearch {
 
   /** k-NN CLASSIFICATION tail: majority label among each query's
     * retrieved neighbors (ties to the smallest label). Composable with
-    * ANY retrieval head — brute-force [[TopK.scoreAllPairs]] for a
-    * handful of queries, [[lshJoin]]/[[ivfSearch]] candidates at
-    * scale — because it consumes just (qid, cid) pairs plus a
-    * (cid, label) side that joins broadcast when the label table is a
-    * dimension or co-partitioned when it is the corpus itself.
+    * ANY retrieval head — [[TopK.exactJoin]] for a bounded batch,
+    * [[lshJoin]]/[[ivfJoin]] candidates at scale — because it consumes
+    * just (qid, cid) pairs plus a (cid, label) side that joins broadcast
+    * when the label table is a dimension or co-partitioned when it is
+    * the corpus itself. Returns (qid, pred_label, votes), see
+    * [[voteByLabel]]. */
+  def classifyByVote(topk: DataFrame, labels: DataFrame): DataFrame =
+    voteByLabel(topk.select("qid", "cid").join(labels, Seq("cid")))
+
+  /** The vote of [[classifyByVote]] over (qid, label) neighbor rows: one
+    * aggregate per (qid, label), then per qid the least (-votes, label).
     * Unlabeled neighbors (null label) ABSTAIN — they are dropped from
     * the vote, never elected as a NULL prediction. A query whose every
     * neighbor abstains is absent from the output.
     * Returns (qid, pred_label, votes). */
-  def classifyByVote(topk: DataFrame, labels: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("votes"), asc("label"))
-    topk.select("qid", "cid").join(labels.where(col("label").isNotNull), Seq("cid"))
+  def voteByLabel(labeled: DataFrame): DataFrame =
+    labeled.where(col("label").isNotNull)
       .groupBy(col("qid"), col("label")).agg(count(lit(1)).as("votes"))
-      .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-      .select(col("qid"), col("label").as("pred_label"), col("votes"))
-  }
+      .groupBy(col("qid")).agg(min(struct((-col("votes")).as("nv"), col("label"))).as("w"))
+      .select(col("qid"), col("w.label").as("pred_label"), (-col("w.nv")).as("votes"))
 
   /** IVF assignment: (vec_id, cid, embedding) with the expression-based
     * argmin — a pure projection over the scan, zero shuffle. */
@@ -463,15 +466,18 @@ object SimilaritySearch {
   /**
    * Batched IVF ANN join — many queries against the corpus through ONE
    * broadcast equi-join on probed inverted-list ids (the IVF
-   * counterpart of [[lshJoin]]). Plan shape:
+   * counterpart of [[lshJoin]]), ranked by [[TopK.ivfBatch]], the same
+   * path as the store's `searchManyAnn`:
+   *  - the batch is collected to the driver once ([[TopK.collectBatch]],
+   *    at most [[TopK.MaxIvfBatch]] queries) and each query takes its
+   *    nprobe nearest lists there ([[probeCids]]);
    *  - corpus rows get their list id from the broadcast-codebook argmin
-   *    expression ([[nearestCentroid]]) — a projection, zero shuffle;
-   *  - each query resolves its nprobe nearest lists from the SAME
-   *    plan-constant codebook (explode to Q x C rows, WindowGroupLimit
-   *    keeps nprobe — the query side is tiny by definition);
-   *  - the probe table (Q x nprobe rows) BROADCASTS onto the assigned
-   *    corpus — the corpus never shuffles; only the probed fraction
-   *    (~nprobe/C of rows) carries into the per-query top-k window.
+   *    expression ([[nearestCentroid]]) — a projection, zero shuffle —
+   *    and rows outside every probed list are filtered out;
+   *  - the (qid, qv, lid) probe table BROADCASTS onto the assigned
+   *    corpus — the corpus never shuffles — and one bounded heap per
+   *    qid keeps its k best (sim desc, cid asc; NaN and null sims
+   *    dropped, so a null-vector query returns no rows). No window.
    * At 100 TB with a [[buildIvfIndex]] layout the same join prunes
    * non-probed list partitions statically.
    *
@@ -479,24 +485,15 @@ object SimilaritySearch {
    */
   def ivfJoin(queries: DataFrame, corpus: DataFrame,
               codebook: Seq[(Long, Seq[Float])], nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsLit = array(codebook.sortBy(_._1).map { case (cid, cv) =>
-      struct(lit(cid).as("lid"), vecLit(cv).as("cv"))
-    }: _*)
-    val w = Window.partitionBy("qid").orderBy(asc("dist"), asc("lid"))
-    val probed = queries
-      .select(col("qid"), col("qvec"), explode(centsLit).as("c"))
-      .select(col("qid"), col("qvec"), col("c.lid").as("lid"),
-        euclidean(col("qvec"), col("c.cv")).as("dist"))
-      .withColumn("prn", row_number().over(w))
-      .where(col("prn") <= nprobe)
-      .select("qid", "qvec", "lid")
-    val asg = corpus
+    val (rows, schema) = TopK.collectBatch(queries, asVec, TopK.MaxIvfBatch,
+      s"graft: ivfJoin got > ${TopK.MaxIvfBatch} queries — the batch and " +
+        "its probe table are held on the driver and broadcast; split it")
+    def lists(probed: Seq[Long]) = corpus.select(col("cid"), col("cvec"))
       .withColumn("lid", nearestCentroid(col("cvec"), codebook))
-    val scored = asg.join(broadcast(probed), "lid")
-      .select(col("qid"), col("cid"), cosine(col("cvec"), col("qvec")).as("sim"))
-    TopK.perQueryTopKWindow(scored, k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("cid"))
+      .where(col("lid").isin(probed: _*))
+    TopK.ivfBatch(rows, schema, probeCids(codebook, _, nprobe), lists,
+        cosine(col("cvec"), col("qv")), Nil, k)
+      .select(col("qid"), col("rank"), col("cid"))
   }
 
   // ---- product quantization: codes + asymmetric-distance search ----

@@ -1,31 +1,35 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.functions.{GraftFunctions, TopKHeaps}
+import graft.functions.{GraftFunctions, QueryBatch, TopKHeaps}
 
 /**
- * Batched multi-query top-k ("similarity join"): for each query vector,
- * the k nearest corpus vectors. The reference engine answers one query
- * per call (src/db.rs:217-283); at cluster scale the natural unit is a
- * *batch* of queries scored in one corpus pass:
- *
- *   corpus JOIN broadcast(queries)  -- no shuffle of the big side
- *     -> Project [sim]
- *     -> per-query top-k
- *
- * Per-query top-k over such a scored (qid, cid, sim) stream:
- *  - [[perQueryTopKWindow]], row_number() <= k: the query side may be
- *    unbounded; Spark rewrites the rank filter to WindowGroupLimit;
- *  - [[perQueryTopKHeap]], the bounded-heap aggregate
- *    [[graft.functions.TopKHeaps]] grouped by qid: map-side partial
- *    combine, only k entries per (query, partition) cross the shuffle.
- *    The same aggregate ranks `VectorStore.searchMany`, where one
- *    aggregate keeps a heap per query and no pair row exists.
- * Both rank by (sim desc, cid asc). The heap drops NaN and null sims;
- * the window keeps them, so its callers filter NaN first.
+ * Per-query top-k ("similarity join"): for each query vector, the k
+ * nearest corpus vectors. The reference engine answers one query per
+ * call with one scan and one bounded heap (src/db.rs:257-272); a batch
+ * runs that loop for all its queries in one corpus pass. Every batch
+ * whose queries are collected on the driver ([[collectBatch]]) ranks
+ * through [[graft.functions.TopKHeaps]], in one of two ways:
+ *  - [[exactBatch]]: the batch is one broadcast
+ *    [[graft.functions.QueryBatch]]; each corpus row is scored against
+ *    every query by one kernel call, and one aggregate keeps a heap per
+ *    qid. No (query, row) pair is ever a row: no join, no window
+ *    (`VectorStore.searchMany`, [[exactJoin]]).
+ *  - [[ivfBatch]]: each query's probed lists, resolved on the driver,
+ *    form a (qid, qv, lid) probe table broadcast onto the list-assigned
+ *    corpus; that pair stream (rows of probed lists only) reduces
+ *    through the grouped heap [[perQueryTopKHeap]]
+ *    (`VectorStore.searchManyAnn`, `SimilaritySearch.ivfJoin`).
+ * [[perQueryTopKWindow]] is left for query sides that are not bounded
+ * (the banded-LSH joins). All rank by (sim desc, cid asc). The heaps
+ * drop NaN and null sims; the window keeps them, so its callers filter
+ * NaN first.
  */
 object TopK {
 
@@ -45,7 +49,8 @@ object TopK {
   }
 
   /** Window-based per-query top-k over a scored DataFrame with columns
-    * (qid, cid, sim). Deterministic tie-break on cid. */
+    * (qid, cid, sim), for a query side that is not bounded.
+    * Deterministic tie-break on cid. */
   def perQueryTopKWindow(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(desc("sim"), asc("cid"))
     scored
@@ -53,23 +58,89 @@ object TopK {
       .where(col("rank") <= k)
   }
 
-  /** Heap-based per-query top-k over (qid, cid, sim): one
+  /** Heap-based per-query top-k over (qid, cid, sim, payload...): one
     * [[graft.functions.TopKHeaps]] heap per qid, ranked by (sim desc,
-    * cid asc) in `cid`'s own type order; NaN and null sims are dropped.
-    * Columns (qid, rank, cid, sim). */
-  def perQueryTopKHeap(spark: SparkSession, scored: DataFrame, k: Int): DataFrame =
+    * cid asc) in `cid`'s own type order; NaN and null sims are dropped,
+    * and only kept rows carry their payload columns. Columns (qid, rank,
+    * cid, sim, payload...). */
+  def perQueryTopKHeap(scored: DataFrame, k: Int, payload: Seq[String] = Nil): DataFrame =
     scored.groupBy(col("qid"))
-      .agg(TopKHeaps.column(array(col("sim")), col("cid"), Nil, k).as("hits"))
+      .agg(TopKHeaps.column(array(col("sim")), col("cid"), payload.map(col), k).as("hits"))
       .select(col("qid"), inline(col("hits")))
-      .select(col("qid"), col("rank"), col("id").as("cid"), col("similarity").as("sim"))
+      .select(Seq(col("qid"), col("rank"), col("id").as("cid"), col("similarity").as("sim")) ++
+        payload.map(col): _*)
 
-  /** Score every (query, corpus) pair: queries side broadcast. Columns:
-    * queries(qid, qvec), corpus(cid, cvec) -> (qid, cid, sim). */
-  def scoreAllPairs(queries: DataFrame, corpus: DataFrame): DataFrame = {
-    val q = broadcast(queries.select(col("qid"), col("qvec")))
-    corpus.select(col("cid"), col("cvec"))
-      .join(q)
-      .withColumn("sim", GraftFunctions.cosine(col("cvec"), col("qvec")))
-      .select("qid", "cid", "sim")
+  /** Queries per exact batch: far above any sane exact batch, far below
+    * anything that could stress a broadcast. */
+  val MaxExactBatch = 65536
+  /** Queries per IVF batch: the batch and its |Q| x nprobe probe table
+    * are held on the driver and broadcast. */
+  val MaxIvfBatch = 1 << 20
+
+  /** The query batch as driver rows (qid, qv), `qv` being `qvec`
+    * projected by `qproj`, collected ONCE through limit(ceiling + 1):
+    * the ceiling check reads at most ceiling + 1 rows of an unbounded
+    * frame, and a nondeterministic or expensive query plan is evaluated
+    * once for everything the search derives from it. */
+  def collectBatch(queries: DataFrame, qproj: Column => Column,
+                   ceiling: Int, tooMany: => String): (Seq[Row], StructType) = {
+    val q = queries.select(col("qid"), qproj(col("qvec")).as("qv"))
+    val rows = q.limit(ceiling + 1).collect()
+    require(rows.length <= ceiling, tooMany)
+    (rows.toSeq, q.schema)
+  }
+
+  /** Exact per-query top-k of a collected batch (qid, qv: array<float>)
+    * over every row of `corpus`, in one scan and one aggregate: the
+    * batch is one broadcast [[graft.functions.QueryBatch]] (a null-vector
+    * query is left out; query rows sharing a qid share one heap), `vec`
+    * is scored against all of it by one kernel call (`metric` cosine,
+    * or euclidean for the negated distance), and each qid keeps its k
+    * best (similarity desc, `id` asc; NaN and null scores dropped),
+    * carrying `payload` only for the rows a heap admits. A dimension
+    * that differs from the batch's, or from `storeDim`, fails on the
+    * driver when known, else in the first task. Returns (qid, rank,
+    * similarity, id, payload...). */
+  def exactBatch(rows: Seq[Row], schema: StructType, corpus: DataFrame, vec: Column, id: Column,
+                 payload: Seq[Column], k: Int, metric: String = "cosine",
+                 storeDim: Option[Int] = None): DataFrame = {
+    val batch = QueryBatch(corpus.sparkSession, rows, schema("qid").dataType, metric, storeDim)
+    corpus.agg(TopKHeaps.column(QueryBatch.scores(vec, batch), id, payload, k, Some(batch)).as("top"))
+      .select(inline(col("top")))
+  }
+
+  /** [[exactBatch]] of a query table (qid, qvec) over a corpus table
+    * (cid, cvec, payload...) by cosine, at most [[MaxExactBatch]]
+    * queries. Columns (qid, rank, cid, sim, payload...). */
+  def exactJoin(queries: DataFrame, corpus: DataFrame, k: Int,
+                payload: Seq[String] = Nil): DataFrame = {
+    val (rows, schema) = collectBatch(queries, GraftFunctions.asVec, MaxExactBatch,
+      s"graft: exact top-k got > $MaxExactBatch queries — route large batches through an ANN join")
+    exactBatch(rows, schema, corpus, col("cvec"), col("cid"), payload.map(col), k)
+      .select(Seq(col("qid"), col("rank"), col("id").as("cid"), col("similarity").as("sim")) ++
+        payload.map(col): _*)
+  }
+
+  /** IVF per-query top-k of a collected batch (qid, qv): `probe` names
+    * each query's lists on the driver (no lists for a null vector);
+    * `lists` gives the corpus restricted to the union of probed lists,
+    * with columns (lid, cid, payload...) and whatever `sim` reads; the
+    * (qid, qv, lid) probe table, a local relation, broadcasts onto it,
+    * and `sim` scores each (row, query) pair. A row lives in one list,
+    * so it meets each query at most once. Columns (qid, rank, cid, sim,
+    * payload...). */
+  def ivfBatch(rows: Seq[Row], schema: StructType, probe: Seq[Float] => Seq[Long],
+               lists: Seq[Long] => DataFrame, sim: Column, payload: Seq[String], k: Int): DataFrame = {
+    val orders = rows.map(r => probe(r.getSeq[Float](1)))
+    val corpus = lists(orders.flatten.distinct)
+    val probes = corpus.sparkSession.createDataFrame(
+      rows.zip(orders).flatMap { case (r, o) => o.map(l => Row(r.get(0), r.get(1), l)) }.asJava,
+      schema.add("lid", LongType, nullable = false))
+    // the heap drops NaN itself; the isnan filter is where perfbench's
+    // tracer counts the scored pairs
+    val scored = corpus.join(broadcast(probes), Seq("lid"))
+      .withColumn("sim", sim)
+      .where(!isnan(col("sim")))
+    perQueryTopKHeap(scored, k, payload)
   }
 }

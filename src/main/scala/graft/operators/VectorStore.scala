@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, QueryBatch, TopKHeaps}
+import graft.functions.GraftFunctions
 import graft.OracleSql
 
 /**
@@ -2485,7 +2485,7 @@ class VectorStore(spark: SparkSession, val root: String,
     // `cid` carries the PROBE RANK (heap tie-break on it is harmless:
     // equal-sim ties are resolved toward lower-rank lists, a rounding
     // detail of the estimate, not of any served result)
-    val ranks = TopK.perQueryTopKHeap(spark, scored, AnnCalibrationK)
+    val ranks = TopK.perQueryTopKHeap(scored, AnnCalibrationK)
       .select("cid").collect().map(_.getLong(0).toInt)
     if (ranks.isEmpty) return nlist
     val total = ranks.length.toDouble
@@ -2663,30 +2663,21 @@ class VectorStore(spark: SparkSession, val root: String,
 
   /**
    * Batched EXACT top-k: a query TABLE (qid, qvec) against the store in
-   * ONE scan — the store-side counterpart of the suite's knn_multiquery
-   * shape, and victor's one-scan bounded-heap loop (src/db.rs:257-272)
-   * run for the whole batch at once. The batch is collected to the
-   * driver once ([[collectBatch]]: at most [[MaxExactBatch]] queries, a
-   * larger frame fails with the routing answer after reading ceiling + 1
-   * rows) and held as one broadcast float matrix
-   * ([[graft.functions.QueryBatch]]), never as plan literals. Each store
-   * row is scored against every query by one kernel call (the cosine,
-   * or the negated euclidean distance on a projected store, each
-   * bit-identical to the per-pair kernel), and one
-   * [[graft.functions.TopKHeaps]] aggregate keeps each qid's k best
-   * (similarity desc, id asc; NaN and null scores dropped), carrying
-   * content and tags only for the rows a heap admits. No (query, row)
-   * pair is ever a row: the partial aggregate ships at most |Q| x k
-   * entries per partition to one merge. Query rows sharing a qid form
-   * one group; a null-vector query returns no rows; a query whose
-   * dimension differs from the store's fails on the driver when the
-   * snapshot knows that dimension (otherwise in the first task). Same
-   * tag pruning as [[search]]. Returns (qid, rank, similarity, id,
-   * content, tags).
-   *
-   * For query batches large enough that |Q| x |store| scoring is the
-   * bottleneck, use [[searchManyAnn]] — probes prune the scan to
-   * ~nprobe/C of the index.
+   * ONE scan and one aggregate, [[TopK.exactBatch]] — victor's
+   * one-scan bounded-heap loop (src/db.rs:257-272) run for the whole
+   * batch. The batch is collected once, at most [[TopK.MaxExactBatch]]
+   * queries (a larger frame fails with the routing answer after reading
+   * ceiling + 1 rows), and broadcast as one float matrix; each store row
+   * is scored against every query by one kernel call (cosine, or the
+   * negated euclidean distance on a projected store) and each qid keeps
+   * its k best (similarity desc, id asc; NaN and null scores dropped),
+   * content and tags carried only by the kept rows. Query rows sharing
+   * a qid form one group; a null-vector query returns no rows; a query
+   * whose dimension differs from the store's fails on the driver when
+   * the snapshot knows that dimension (otherwise in the first task).
+   * Same tag pruning as [[search]]. Returns (qid, rank, similarity, id,
+   * content, tags). When |Q| x |store| scoring is the bottleneck, use
+   * [[searchManyAnn]].
    */
   def searchMany(queries: DataFrame, k: Int = 10,
                  tags: Seq[String] = Nil): DataFrame = {
@@ -2695,14 +2686,12 @@ class VectorStore(spark: SparkSession, val root: String,
     // million-query batch would run for days — fail loudly with the
     // routing answer
     val mode = queryMode()
-    val (rows, schema) = collectBatch(queries, c => asVec(mode.column(c)), MaxExactBatch,
-      s"graft: searchMany got > $MaxExactBatch queries — the exact " +
+    val (rows, schema) = TopK.collectBatch(queries, c => asVec(mode.column(c)), TopK.MaxExactBatch,
+      s"graft: searchMany got > ${TopK.MaxExactBatch} queries — the exact " +
         "path broadcasts the batch and scores |Q| x |store| pairs. " +
         "Route large batches through searchManyAnn (probe-pruned, " +
         "corpus never shuffles) instead")
     val s = snapshot()
-    val batch = QueryBatch(spark, rows, schema("qid").dataType, mode.metric,
-      s.flatMap(_.dimIfKnown))
     val snap0 = tableOf(s)
     // same two-level tag filter as [[search]]: manifest-resolved
     // tag_key IN-list so non-matching PARTITIONS are never read, plus
@@ -2711,104 +2700,49 @@ class VectorStore(spark: SparkSession, val root: String,
       case Some(keys) => snap0.where(col("tag_key").isin(keys: _*))
       case None => snap0
     }
-    tagSuperset(pruned, tags)
-      .agg(TopKHeaps.column(QueryBatch.scores(col("vector"), batch), col("id"),
-        Seq(col("content"), col("tags")), k, Some(batch)).as("top"))
-      .select(inline(col("top")))
-  }
-
-  /** Queries per [[searchMany]] call: far above any sane exact batch,
-    * far below anything that could stress a broadcast. */
-  private val MaxExactBatch = 65536
-  /** Queries per [[searchManyAnn]] call: the batch and its
-    * |Q| x nprobe probe table are held on the driver and broadcast. */
-  private val MaxAnnBatch = 1 << 20
-
-  /** The query batch as driver rows (qid, qv), `qv` projected for the
-    * store's mode by `qproj`, collected ONCE through
-    * limit(ceiling + 1): the ceiling check reads at most ceiling + 1
-    * rows of an unbounded frame, and a nondeterministic or expensive
-    * query plan is evaluated once for everything the search derives
-    * from it. */
-  private def collectBatch(queries: DataFrame, qproj: Column => Column,
-      ceiling: Int, tooMany: => String): (Seq[Row], org.apache.spark.sql.types.StructType) = {
-    val q = queries.select(col("qid"), qproj(col("qvec")).as("qv"))
-    val rows = q.limit(ceiling + 1).collect()
-    require(rows.length <= ceiling, tooMany)
-    (rows.toSeq, q.schema)
-  }
-
-  private def localFrame(rows: Seq[Row],
-                         schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-  }
-
-  /** Top k per qid by similarity (ties on id), as (qid, rank,
-    * similarity, id, content, tags). */
-  private def rankPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("similarity"), asc("id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("similarity"),
-        col("id"), col("content"), col("tags"))
+    TopK.exactBatch(rows, schema, tagSuperset(pruned, tags), col("vector"), col("id"),
+      Seq(col("content"), col("tags")), k, mode.metric, s.flatMap(_.dimIfKnown))
   }
 
   /**
-   * Batched ANN top-k over the committed IVF index. The batch is
-   * collected to the driver once ([[collectBatch]], at most
-   * [[MaxAnnBatch]] queries) and every query takes the lists
-   * [[searchAnn]] would probe for it, by the same rule ([[probeRule]])
-   * over the cached codebook: the calibrated (or explicit) nprobe
-   * nearest lists, and for a tagged auto call the shortest prefix of
-   * its probe order whose tag-stats matching rows reach k x 10 (never
-   * fewer than the calibrated nprobe; every list without stats or when
-   * the margin is out of reach). So each query's rows equal its
-   * single-query [[searchAnn]] rows, and planning runs no Spark job.
-   * The union of probed lists (bounded by the codebook size) becomes a
-   * STATIC partition IN-list on the cid-partitioned index — non-probed
-   * lists are never read — and the (qid, qv, lid) probe table, a local
-   * relation, BROADCASTS onto the pruned scan for per-query assignment.
-   * Both come from the same driver rows, so the scan reads every list a
-   * query probes. The corpus never shuffles, and each index row joins
-   * at most its own list's probes (a row lives in exactly ONE list, so
-   * no dedup is needed). Same version-pinning as [[searchAnn]]
-   * (codebook and data resolve from ONE committed dir). `quantized =
-   * true` scores the packed codec column (quantized stores index it
-   * alongside) — FuseQuantizedKernels collapses kernel-over-unpack into
-   * the packed kernel, so probed lists scan bytes, like [[searchAnn]]'s
-   * quantized mode. A query with a null vector probes nothing and
-   * returns no rows. Returns (qid, rank, similarity, id, content,
-   * tags).
+   * Batched ANN top-k over the committed IVF index, [[TopK.ivfBatch]].
+   * The batch is collected once (at most [[TopK.MaxIvfBatch]] queries)
+   * and every query takes the lists [[searchAnn]] would probe for it, by
+   * the same driver-side rule ([[probeRule]]), so each query's rows
+   * equal its single-query [[searchAnn]] rows and planning runs no Spark
+   * job. The union of probed lists becomes a STATIC partition IN-list on
+   * the cid-partitioned index (non-probed lists are never read), the
+   * (qid, qv, lid) probe table broadcasts onto that scan (the corpus
+   * never shuffles; a row lives in ONE list, so it meets each query at
+   * most once), and one bounded heap per qid keeps its k best
+   * (similarity desc, id asc; NaN and null scores dropped), content and
+   * tags carried only by the kept rows. No window. Same version-pinning
+   * as [[searchAnn]]. `quantized = true` scores the packed codec column
+   * through the fused packed kernel, like [[searchAnn]]'s quantized
+   * mode. A null-vector query probes nothing and returns no rows.
+   * Returns (qid, rank, similarity, id, content, tags).
    */
   def searchManyAnn(queries: DataFrame, k: Int = 10,
                     nprobe: Int = 0, quantized: Boolean = false,
                     tags: Seq[String] = Nil): DataFrame = {
     val ix = requireAnnIndex()
     val mode = queryMode()
-    val (rows, schema) = collectBatch(queries, mode.column, MaxAnnBatch,
-      s"graft: searchManyAnn got > $MaxAnnBatch queries — the batch and " +
+    val (rows, schema) = TopK.collectBatch(queries, mode.column, TopK.MaxIvfBatch,
+      s"graft: searchManyAnn got > ${TopK.MaxIvfBatch} queries — the batch and " +
         "its probe table are held on the driver and broadcast; split it")
-    val probe = probeRule(ix, k, nprobe, tags)
-    val orders = rows.map(r => probe(r.getSeq[Float](1)))
-    val probes = localFrame(
-      rows.zip(orders).flatMap { case (r, o) => o.map(l => Row(r.get(0), r.get(1), l)) },
-      schema.add("lid", org.apache.spark.sql.types.LongType, nullable = false))
+    require(!quantized || ix.schema.fieldNames.contains("packed"),
+      "graft: quantized batched search needs a quantized store (index has no packed column)")
+    val vec = if (quantized) GraftFunctions.unpack(col("packed")) else col("vector")
     // the tag-superset predicate rides inside the union of probed lists
     // (row filter BELOW the broadcast join), same contract as
     // searchAnn(tags)
-    val idx = tagSuperset(
-        annData(ix).where(col("cid").isin(orders.flatten.distinct: _*)), tags)
-      .withColumnRenamed("cid", "lid")
-    require(!quantized || idx.columns.contains("packed"),
-      "graft: quantized batched search needs a quantized store (index has no packed column)")
-    val vec = if (quantized) GraftFunctions.unpack(col("packed")) else col("vector")
-    val scored = idx.join(broadcast(probes), Seq("lid"))
-      .withColumn("similarity", simColumn(mode.metric, vec, col("qv")))
-      .where(!isnan(col("similarity")))
-    rankPerQuery(scored, k)
+    def lists(probed: Seq[Long]) =
+      tagSuperset(annData(ix).where(col("cid").isin(probed: _*)), tags)
+        .withColumnRenamed("cid", "lid").withColumnRenamed("id", "cid")
+    TopK.ivfBatch(rows, schema, probeRule(ix, k, nprobe, tags), lists,
+        simColumn(mode.metric, vec, col("qv")), Seq("content", "tags"), k)
+      .select(col("qid"), col("rank"), col("sim").as("similarity"), col("cid").as("id"),
+        col("content"), col("tags"))
   }
 
   // ---- near-dup pair graph: a versioned store artifact ----

@@ -21,8 +21,7 @@ object AnnTune {
     val queries = emb.where(col("vec_id") < nQ)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val corpus = emb.select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val exact = TopK.perQueryTopKWindow(TopK.scoreAllPairs(queries, corpus), 10)
-      .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = TopK.exactJoin(queries, corpus, 10).select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val qvs = queries.orderBy("qid").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     def recall(got: Set[(Long, Long)]): Double =

@@ -76,9 +76,7 @@ object Recall {
       df.select(col("qid").cast("long"), col("cid").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val exact = pairs(
-      TopK.perQueryTopKWindow(TopK.scoreAllPairs(queries, corpus), k)
-        .select("qid", "cid"))
+    val exact = pairs(TopK.exactJoin(queries, corpus, k))
 
     // single-query families: one driver loop over the nQ query vectors,
     // each call the production query-by-value entry point

@@ -12,21 +12,56 @@ class OperatorSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
+  /** Every (query, corpus) pair scored, the query side broadcast: the
+    * pair-stream oracle of the per-query rankers. queries (qid, qvec),
+    * corpus (cid, cvec) -> (qid, cid, sim). */
+  private def scoreAllPairs(queries: org.apache.spark.sql.DataFrame,
+                            corpus: org.apache.spark.sql.DataFrame) =
+    corpus.select(col("cid"), col("cvec"))
+      .join(broadcast(queries.select(col("qid"), col("qvec"))))
+      .withColumn("sim", graft.functions.GraftFunctions.cosine(col("cvec"), col("qvec")))
+      .select("qid", "cid", "sim")
+
   test("heap aggregator top-k == window top-k (SURVEY §7 heap vs window)") {
     val emb = Tables.load(spark, dir, "embeddings")
     val queries = emb.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val corpus = emb.where(col("vec_id") >= 5)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val scored = TopK.scoreAllPairs(queries, corpus)
+    val scored = scoreAllPairs(queries, corpus)
     val viaWindow = TopK.perQueryTopKWindow(scored, 7)
       .select(col("qid"), col("rank").cast("long"), col("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val viaHeap = TopK.perQueryTopKHeap(spark, scored, 7)
+    val viaHeap = TopK.perQueryTopKHeap(scored, 7)
       .select(col("qid"), col("rank"), col("cid"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaHeap == viaWindow)
     assert(viaHeap.size == 5 * 7)
+  }
+
+  test("ivfJoin == its retired window-probe formulation on the sf0.001 fixture: nprobe 1, 2, 4") {
+    import graft.functions.GraftFunctions
+    import graft.operators.SimilaritySearch
+    import VectorStoreSpec.windowProbe
+    val emb = Tables.load(spark, dir, "embeddings")
+    val codebook = SimilaritySearch.collectCodebook(emb.where(col("vec_id") < 16)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
+    val queries = emb.where(col("vec_id") < 8)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val corpus = emb.where(col("vec_id") >= 16)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("qid"), col("rank").cast("long"), col("cid")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    for (np <- Seq(1, 2, 4); k <- Seq(1, 5)) {
+      val probed = windowProbe(queries, codebook, np).select("qid", "qv", "lid")
+      val retired = TopK.perQueryTopKWindow(
+        corpus.withColumn("lid", SimilaritySearch.nearestCentroid(col("cvec"), codebook))
+          .join(broadcast(probed), "lid")
+          .select(col("qid"), col("cid"), GraftFunctions.cosine(col("cvec"), col("qv")).as("sim")), k)
+      val got = rowsOf(SimilaritySearch.ivfJoin(queries, corpus, codebook, np, k))
+      assert(got.length == 8 * k && got == rowsOf(retired), s"nprobe $np, k $k")
+    }
   }
 
   test("bandedKeys replaces input band/key columns instead of duplicating them") {
@@ -766,7 +801,7 @@ class OperatorSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = pairs(joined)
-    val brute = pairs(TopK.perQueryTopKWindow(TopK.scoreAllPairs(queries, corpus), 5))
+    val brute = pairs(TopK.perQueryTopKWindow(scoreAllPairs(queries, corpus), 5))
     val recalls = (0L until 8L).map { q =>
       val b = brute.filter(_._1 == q).map(_._2)
       lsh.filter(_._1 == q).map(_._2).intersect(b).size.toDouble / b.size

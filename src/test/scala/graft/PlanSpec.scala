@@ -239,7 +239,7 @@ class PlanSpec extends AnyFunSuite {
     store.clear()
   }
 
-  test("searchManyAnn: static partition pruning on probed lists + WindowGroupLimit") {
+  test("searchManyAnn: static partition pruning on probed lists, one heap per query, no window") {
     val root = Files.createTempDirectory("graft-manyann").toString
     val store = new VectorStore(spark, root)
     import spark.implicits._
@@ -255,11 +255,11 @@ class PlanSpec extends AnyFunSuite {
       .toDF("qid", "qvec").withColumn("qvec", col("qvec").cast("array<float>"))
     val p = plan(store.searchManyAnn(qs, k = 3, nprobe = 2))
     // the probed-list union reaches the index scan as a STATIC partition
-    // IN-list (non-probed lists never read) and the per-query rank
-    // filter runs as WindowGroupLimit (bounded pre-shuffle)
+    // IN-list (non-probed lists never read) and one bounded heap per
+    // qid ranks the pairs (at most k per query leave each partition)
     val scanLine = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(scanLine.contains("cid"), s"no static partition filter on cid:\n$scanLine\n${p.take(3000)}")
-    assert(p.contains("WindowGroupLimit"), p.take(3000))
+    assert(p.contains("graft_topk_heaps") && !p.contains("Window"), p.take(3000))
     store.clear()
   }
 
@@ -503,7 +503,41 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(SparkEntry.queries("ann_ivf_join")(spark, dir))
     assert(!p.contains("CartesianProduct"), p.take(3000))
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
-    assert(p.contains("WindowGroupLimit"), p.take(3000))
+    assert(p.contains("graft_topk_heaps"), p.take(3000))
+  }
+
+  test("bounded query batches rank through heaps: no window in the knn and IVF rows, no join in the exact rows, no generator under the IVF join") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    import org.apache.spark.sql.execution.{SparkPlan => Phys}
+    def has(p: Phys)(f: PartialFunction[Phys, Boolean]) = p.find(n => f.applyOrElse(n, (_: Phys) => false)).isDefined
+    def window(p: Phys) = has(p) { case _: WindowExec | _: WindowGroupLimitExec => true }
+    val exactRows = Seq("knn_multiquery", "knn_multiquery_heap", "knn_classify")
+    val plans = (exactRows :+ "ann_ivf_join").map(n => n -> SparkEntry.queries(n)(spark, dir).queryExecution.sparkPlan).toMap
+    for ((n, p) <- plans) {
+      assert(!window(p) && p.toString.contains("graft_topk_heaps"), s"$n:\n${p.treeString.take(3000)}")
+      assert(!exactRows.contains(n) || !p.toString.contains("Join"), s"$n:\n${p.treeString.take(3000)}")
+    }
+    // ivfJoin: the probe is driver arithmetic, not an exploded codebook;
+    // the one generator unpacks the heaps above the aggregate
+    val ivf = plans("ann_ivf_join")
+    val joins = ivf.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.nonEmpty && joins.forall(j => !has(j) { case _: GenerateExec => true }),
+      ivf.treeString.take(3000))
+    val store = new VectorStore(spark, Files.createTempDirectory("graft-heaps").toString)
+    import spark.implicits._
+    store.insert((0 until 32).map { i =>
+      (s"id$i", Array(math.cos(i / 5.0).toFloat, math.sin(i / 5.0).toFloat, (i % 3).toFloat), s"c$i", Seq("t"))
+    }.toDF("id", "vector", "content", "tags").withColumn("vector", col("vector").cast("array<float>")))
+    store.buildAnnIndex(4)
+    val qs = Seq((0L, Seq(1f, 0f, 1f)), (1L, Seq(0f, 1f, 2f))).toDF("qid", "qvec")
+      .withColumn("qvec", col("qvec").cast("array<float>"))
+    for (auto <- Seq(store.searchManyAnn(qs, k = 3), store.searchManyAnn(qs, k = 3, tags = Seq("t")))) {
+      val p = auto.queryExecution.sparkPlan
+      assert(!window(p), p.treeString.take(3000))
+    }
+    store.clear()
   }
 
   test("ann_ivf plan has no Exchange (broadcast-codebook argmin, IN-list probe)") {

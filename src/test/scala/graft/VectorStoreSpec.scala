@@ -2,16 +2,18 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.VectorStore
+import graft.operators.{SimilaritySearch, VectorStore}
 
 /** Integration tests mirroring the reference's own end-to-end suite
   * (src/tests.rs:3-143): store/retrieve, opposite vectors, tag
   * semantics, dimension-mismatch rejection, clear. */
 class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import VectorStoreSpec.windowProbe
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -1304,10 +1306,10 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       val window = TopK.perQueryTopKWindow(
         scored.where(!isnan(col("sim")) && col("sim").isNotNull), k)
         .withColumn("rank", col("rank").cast("long"))
-      val heap = rowsOf(TopK.perQueryTopKHeap(spark, scored, k))
+      val heap = rowsOf(TopK.perQueryTopKHeap(scored, k))
       assert(heap.map(t => (t._1, t._2, t._3)) == rowsOf(window).map(t => (t._1, t._2, t._3)), s"k = $k")
     }
-    assert(rowsOf(TopK.perQueryTopKHeap(spark, scored, 3)).map(_._3) == Seq("d", "10", "2", "w", "x"))
+    assert(rowsOf(TopK.perQueryTopKHeap(scored, 3)).map(_._3) == Seq("d", "10", "2", "w", "x"))
   }
 
   test("searchMany: a wrong-dimension batch fails on the driver with the kernel's message, before any job") {
@@ -1415,25 +1417,6 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
-  /** searchManyAnn's retired Spark-side probe, kept as the oracle:
-    * each query's `p` nearest lists by explode over the codebook +
-    * row_number() OVER (PARTITION BY qid ORDER BY dist, lid). */
-  private def windowProbe(qs: org.apache.spark.sql.DataFrame,
-                          codebook: Seq[(Long, Seq[Float])], p: Int) = {
-    import graft.functions.GraftFunctions
-    val cents = array(codebook.sortBy(_._1).map { case (cid, cv) =>
-      struct(lit(cid).as("lid"), GraftFunctions.vecLit(cv).as("cv"))
-    }: _*)
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(asc("dist"), asc("lid"))
-    qs.select(col("qid"), col("qvec").as("qv"), explode(cents).as("c"))
-      .select(col("qid"), col("qv"), col("c.lid").as("lid"),
-        GraftFunctions.euclidean(col("qv"), col("c.cv")).as("dist"))
-      .withColumn("prn", row_number().over(pw))
-      .where(col("prn") <= p)
-      .select(col("qid"), col("qv"), col("lid"), col("dist"))
-  }
-
   /** The newest committed ANN index dir of `store` and its codebook. */
   private def annIndex(store: VectorStore): (String, Seq[(Long, Seq[Float])]) = {
     val v = new java.io.File(s"${store.root}/ann").list()
@@ -1515,6 +1498,94 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((0L, Seq(1f, 0f))).toDF("qid", "qvec"), k = 5, nprobe = 2))
     assert(e.getMessage.contains("graft: vector dimension mismatch"), e.getMessage)
     store.clear()
+  }
+
+  /** searchManyAnn's retired ranking, kept as the oracle: the same
+    * driver probe (each query's `nprobe` nearest lists), the (qid, qv,
+    * lid) table broadcast-joined onto the probed lists of the index at
+    * `dir`, NaN dropped and the pairs ranked through a qid window. Its
+    * null similarities survive `!isnan` and rank last, so they are
+    * dropped here: searchManyAnn drops them in its heaps. */
+  private def windowSearchManyAnn(dir: String, codebook: Seq[(Long, Seq[Float])],
+                                  queries: org.apache.spark.sql.DataFrame, k: Int, nprobe: Int,
+                                  tags: Seq[String] = Nil, quantized: Boolean = false) = {
+    import scala.jdk.CollectionConverters._
+    import graft.functions.GraftFunctions
+    val q = queries.select(col("qid"), col("qvec").as("qv"))
+    val probes = q.collect().toSeq.flatMap { r =>
+      graft.operators.SimilaritySearch.probeCids(codebook,
+        if (r.isNullAt(1)) null else r.getSeq[Float](1), nprobe).map(l => Row(r.get(0), r.get(1), l))
+    }
+    val probed = spark.createDataFrame(probes.asJava,
+      q.schema.add("lid", org.apache.spark.sql.types.LongType, nullable = false))
+    val vec = if (quantized) GraftFunctions.unpack(col("packed")) else col("vector")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(desc("similarity"), asc("id"))
+    tags.foldLeft(spark.read.parquet(dir).where(col("cid").isin(probes.map(_.getLong(2)).distinct: _*)))(
+        (t, tag) => t.where(array_contains(col("tags"), tag)))
+      .withColumnRenamed("cid", "lid")
+      .join(broadcast(probed), Seq("lid"))
+      .withColumn("similarity", GraftFunctions.cosine(vec, col("qv")))
+      .where(!isnan(col("similarity")))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k && col("similarity").isNotNull)
+      .select(col("qid"), col("rank"), col("similarity"), col("id"), col("content"), col("tags"))
+  }
+
+  test("searchManyAnn edge cases == the retired join + window: string-id ties, zero and null vectors in a probed list, null and duplicate qids, k past the probed rows, quantized") {
+    for (quantized <- Seq(false, true)) {
+      val store = freshStore()
+      store.insert(Seq(
+        // one vector under ids whose string order ("10" < "2" < "9") is
+        // not their numeric order: three tied similarities
+        ("9", Seq(1f, 0f), "nine", Seq("t")),
+        ("10", Seq(1f, 0f), "ten", Seq("t")),
+        ("2", Seq(1f, 0f), "two", Seq("t", "u")),
+        ("b", Seq(0.6f, 0.8f), "b", Seq("u")),
+        ("c", Seq(0f, 1f), "c", Seq("t")),
+        ("d", Seq(-1f, 0.1f), "d", Seq("t")),
+        ("e", Seq(-0.8f, -0.6f), "e", Seq("u")),
+        ("z", Seq(0f, 0f), "zero: NaN cosine", Seq("t")))
+        .toDF("id", "vector", "content", "tags").withColumn("vector", col("vector").cast("array<float>")),
+        quantize = quantized)
+      store.buildAnnIndex(2)
+      val (dir, codebook) = annIndex(store)
+      // the store indexes a null vector under no list; put one into the
+      // list that holds "9", as a hand-built index could
+      val ix = spark.read.parquet(dir)
+      val nineList = ix.where(col("id") === "9").select(col("cid").cast("long")).head().getLong(0)
+      val nulled = Seq("vector") ++ Seq("packed").filter(ix.columns.contains)
+      nulled.foldLeft(ix.where(col("id") === "9")
+          .withColumn("id", lit("n")).withColumn("content", lit("null vector")))(
+          (t, c) => t.withColumn(c, lit(null).cast(ix.schema(c).dataType)))
+        .select(ix.columns.map(col): _*)
+        .write.mode("append").partitionBy("cid").parquet(dir)
+      assert(spark.read.parquet(dir).where(col("id") === "n" && col("cid") === nineList).count() == 1)
+      val zeroList = ix.where(col("id") === "z").select(col("cid").cast("long")).head().getLong(0)
+      val qs = Seq[(java.lang.Long, Seq[Float])](
+        (0L, Seq(1f, 0f)),
+        (1L, null),               // probes nothing: no rows
+        (2L, Seq(0f, 1f)),        // qid 2 twice: one merged group
+        (2L, Seq(0.6f, 0.8f)),
+        (3L, Seq(0f, 0f)),        // NaN against every row: no rows
+        (null, Seq(0.6f, 0.8f)))  // a null qid is a group of its own
+        .toDF("qid", "qvec").withColumn("qvec", col("qvec").cast("array<float>"))
+      for (np <- Seq(1, 2); k <- Seq(1, 2, 20); tags <- Seq(Nil, Seq("t"))) {
+        val got = manyRows(store.searchManyAnn(qs, k, np, quantized, tags))
+        assert(got.nonEmpty && got == manyRows(windowSearchManyAnn(dir, codebook, qs, k, np, tags, quantized)),
+          s"quantized = $quantized, nprobe = $np, k = $k, tags = $tags")
+      }
+      // the probed lists hold the null and the zero vector
+      val probed = SimilaritySearch.probeCids(codebook, Seq(1f, 0f), 2).toSet
+      assert(probed(nineList) && probed(zeroList))
+      val top = store.searchManyAnn(qs, 20, 2, quantized).collect()
+      assert(!top.exists(r => !r.isNullAt(0) && Set(1L, 3L).contains(r.getLong(0))))
+      assert(!top.exists(r => Set("n", "z").contains(r.getString(3))))
+      // k past the probed rows: every scoring row once, the ties by string id
+      val first = top.filter(r => !r.isNullAt(0) && r.getLong(0) == 0L).sortBy(_.getLong(1))
+      assert(first.length == 7 && first.take(3).map(_.getString(3)).toSeq == Seq("10", "2", "9"))
+      store.clear()
+    }
   }
 
   test("batched searches resolve on the driver: no job before the action, <= 3 jobs per warm ANN call, one evaluation of the batch") {
@@ -2429,5 +2500,26 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dirs2 == Set("ingest"), s"legacy ledger must be reused, got $dirs2")
     assert(store2.table().count() == 1)
     store2.clear()
+  }
+}
+
+object VectorStoreSpec {
+  /** searchManyAnn's retired Spark-side probe, kept as the oracle:
+    * each query's `p` nearest lists by explode over the codebook +
+    * row_number() OVER (PARTITION BY qid ORDER BY dist, lid). */
+  def windowProbe(qs: org.apache.spark.sql.DataFrame,
+                  codebook: Seq[(Long, Seq[Float])], p: Int) = {
+    import graft.functions.GraftFunctions
+    val cents = array(codebook.sortBy(_._1).map { case (cid, cv) =>
+      struct(lit(cid).as("lid"), GraftFunctions.vecLit(cv).as("cv"))
+    }: _*)
+    val pw = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(asc("dist"), asc("lid"))
+    qs.select(col("qid"), col("qvec").as("qv"), explode(cents).as("c"))
+      .select(col("qid"), col("qv"), col("c.lid").as("lid"),
+        GraftFunctions.euclidean(col("qv"), col("c.cv")).as("dist"))
+      .withColumn("prn", row_number().over(pw))
+      .where(col("prn") <= p)
+      .select(col("qid"), col("qv"), col("lid"), col("dist"))
   }
 }
