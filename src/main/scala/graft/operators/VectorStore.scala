@@ -23,14 +23,17 @@ import graft.OracleSql
  *   <root>/manifest_delta/v<k>/        # O(batch) insert deltas for base v<k>
  *
  * Generation commits (the r3 judge's top item): a partition's LIVE data
- * is the gen its manifest row names; rewrites (upsert / compact /
- * projectAll) write NEW gen dirs next to the old ones and commit by
- * writing manifest base v<k+1> — ONE atomic rename, so a reader that
- * resolved the manifest at plan time sees a complete, consistent
- * snapshot for the whole read: old generations are never touched, let
- * alone deleted, while any reader could still hold them. Superseded
- * generations and manifest versions are reclaimed by an explicit
- * [[vacuum]] after a grace period (the Delta/Iceberg retention model).
+ * is the gen its manifest row names. Every rewrite (upsert, delete,
+ * deleteByTags, compact, projectAll) publishes through ONE function,
+ * [[rewritePartitions]]: it stages the rows it is given at the next gen
+ * in one staging dir, renames each staged gen dir next to the old
+ * ones, and commits by writing manifest base v<k+1> — ONE atomic
+ * rename, so a reader that resolved the manifest at plan time sees a
+ * complete, consistent snapshot for the whole read: old generations
+ * are never touched, let alone deleted, while any reader could still
+ * hold them. Superseded generations and manifest versions are
+ * reclaimed by an explicit [[vacuum]] after a grace period (the
+ * Delta/Iceberg retention model).
  * Manifest deltas are scoped to their base version, so a new base
  * atomically supersedes every outstanding delta — no stale-delta
  * resurrection window.
@@ -55,7 +58,8 @@ import graft.OracleSql
  *    own commit into the next snapshot (max-gen rule, re-listing only
  *    the gen dirs the batch wrote, schema kept), so a search right
  *    after an insert runs no metadata job.
- *  - A rewrite (upsert, delete, compact, projectAll, clear) drops it.
+ *  - A rewrite (upsert, delete, deleteByTags, compact, projectAll) or
+ *    a clear drops it.
  *  - A cold rebuild (first read, another session or process wrote)
  *    reads the manifest once and lets Spark list the gen dirs (in
  *    parallel past its discovery threshold).
@@ -352,6 +356,45 @@ class VectorStore(spark: SparkSession, val root: String,
     require(fs.rename(src, dst), s"graft: generation commit $src -> $dst failed")
   }
 
+  /** The one partition-rewrite commit — every writer that replaces
+    * stored rows ([[upsert]], [[delete]], [[deleteByTags]], [[compact]],
+    * [[projectAll]]) publishes through it. `rows` (each carrying its
+    * `tag_key`) are written at [[nextGen]] into one staging dir,
+    * partitioned by (tag_key, gen); each staged gen dir is renamed into
+    * its partition ([[commitGenDir]]); then ONE manifest base commits
+    * the lot: a key of `affected` with no staged rows VANISHES, a staged
+    * key moves to the new gen, every other key keeps its gen. `rows =
+    * None` is a pure prune with no staging write. Nothing is deleted at
+    * commit time, so concurrent readers keep their snapshot, and a crash
+    * before the manifest write leaves only unreferenced debris for
+    * [[vacuum]]. One staging dir suffices: the writer lock (held by the
+    * caller) serializes rewrites. */
+  private def rewritePartitions(affected: Seq[String], rows: Option[DataFrame]): Unit = {
+    val newGen = nextGen()
+    val tmp = s"$root/rewrite_tmp"
+    val staged = rows.fold(Set.empty[String]) { r =>
+      r.withColumn("gen", lit(newGen))
+        .write.mode(SaveMode.Overwrite).partitionBy("tag_key", "gen").parquet(tmp)
+      fs.listStatus(new Path(tmp)).toSeq
+        .map(_.getPath.getName).filter(_.startsWith("tag_key="))
+        .map(_.stripPrefix("tag_key=")).toSet
+    }
+    for (key <- affected if staged(key)) commitGenDir(tmp, key, newGen)
+    val vanished = affected.filterNot(staged)
+    val survivors = affected.filter(staged)
+    val base = manifest().select("tag_key", "tags", "gen")
+    val pruned =
+      if (vanished.isEmpty) base
+      else base.where(!col("tag_key").isin(vanished: _*))
+    val bumped =
+      if (survivors.isEmpty) pruned
+      else pruned.withColumn("gen",
+        when(col("tag_key").isin(survivors: _*), lit(newGen))
+          .otherwise(col("gen")))
+    writeManifest(bumped) // THE commit point
+    fs.delete(new Path(tmp), true)
+  }
+
   /**
    * Append rows (id, vector, content, tags). Assigns UUIDs when `id`
    * is absent (reference assigns uuid-v4 at insert, src/db.rs:151).
@@ -615,14 +658,15 @@ class VectorStore(spark: SparkSession, val root: String,
    *
    * Reader-safe generation commit (VERDICT r3 next #1): surviving rows
    * of affected partitions — old rows minus overwritten ids, PLUS the
-   * batch's new rows for those same partitions — are staged as new gen
-   * dirs and become visible in ONE manifest-version rename. A reader
-   * concurrent with (or a crash during) the upsert sees either the
-   * complete pre-upsert snapshot or the complete post-upsert state of
-   * every affected partition; old versions are reclaimed later by
-   * [[vacuum]]. Batch rows for UNaffected partitions append after the
-   * commit (a crash between loses only that trailing append — an
-   * incomplete insert, never a half-applied overwrite).
+   * batch's new rows for those same partitions — go through the one
+   * partition rewrite ([[rewritePartitions]]) and become visible in ONE
+   * manifest-version rename. A reader concurrent with (or a crash
+   * during) the upsert sees either the complete pre-upsert snapshot or
+   * the complete post-upsert state of every affected partition; old
+   * versions are reclaimed later by [[vacuum]]. Batch rows for
+   * UNaffected partitions append after the commit (a crash between
+   * loses only that trailing append — an incomplete insert, never a
+   * half-applied overwrite).
    */
   def upsert(df: DataFrame, quantize: Boolean = false): Unit = withWriterLock() {
     // upsert-by-id is meaningless without caller-supplied ids — without
@@ -667,12 +711,8 @@ class VectorStore(spark: SparkSession, val root: String,
           .where(col("tag_key").isin(affected: _*))
           .join(broadcast(ids), Seq("id"), "left_anti")
         val incoming = prepared.where(col("tag_key").isin(affected: _*))
-        val newGen = nextGen()
-        val tmp = s"$root/upsert_tmp"
-        kept.unionByName(incoming, allowMissingColumns = true)
-          .withColumn("gen", lit(newGen))
-          .write.mode(SaveMode.Overwrite).partitionBy("tag_key", "gen").parquet(tmp)
-        commitRewrite(tmp, affected, newGen)
+        rewritePartitions(affected,
+          Some(kept.unionByName(incoming, allowMissingColumns = true)))
         prepared.where(!col("tag_key").isin(affected: _*))
       }
     // ANN: rewritten partitions may have removed indexed row versions;
@@ -692,56 +732,22 @@ class VectorStore(spark: SparkSession, val root: String,
     persistHasPacked(q) // no-op when writeBatch already recorded it
   }
 
-  /** Publish rewritten affected partitions in ONE manifest rename —
-    * the reader-safe generation commit shared by [[upsert]] and
-    * [[delete]]. A partition with no staged rows VANISHES from the
-    * manifest (its old gens become vacuum garbage; nothing is deleted
-    * at commit time, so concurrent readers keep their snapshot). */
-  private def commitRewrite(tmp: String, affected: Seq[String],
-                            newGen: Int): Unit = {
-    val staged = fs.listStatus(new Path(tmp)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("tag_key="))
-      .map(_.stripPrefix("tag_key=")).toSet
-    for (key <- affected if staged(key)) commitGenDir(tmp, key, newGen)
-    val vanished = affected.filterNot(staged)
-    val base = manifest().select("tag_key", "tags", "gen")
-    val pruned =
-      if (vanished.isEmpty) base
-      else base.where(!col("tag_key").isin(vanished: _*))
-    val survivors = affected.filter(staged)
-    val bumped =
-      if (survivors.isEmpty) pruned
-      else pruned.withColumn("gen",
-        when(col("tag_key").isin(survivors: _*), lit(newGen))
-          .otherwise(col("gen")))
-    writeManifest(bumped) // THE commit point
-    fs.delete(new Path(tmp), true)
-  }
-
   /**
    * Delete rows by id — the takedown / right-to-be-forgotten lifecycle
    * op a 100 TB training-data store cannot run without (a single
-   * removal request must not rewrite the corpus). Partition-selective
-   * exactly like [[upsert]]: only tag_key partitions holding a doomed
-   * id are rewritten (semi-join probe, store never shuffles), staged as
-   * new gen dirs, and published in ONE manifest rename — readers see
-   * the complete pre- or post-delete snapshot, never a half-applied
-   * one. Returns the number of rows removed (0 when no id matches —
-   * unknown ids are not an error, matching idempotent takedown
-   * semantics).
+   * removal request must not rewrite the corpus). Partition-selective:
+   * only tag_key partitions holding a doomed id are rewritten
+   * (semi-join probe, store never shuffles) through the one partition
+   * rewrite ([[rewritePartitions]]) — readers see the complete pre- or
+   * post-delete snapshot, never a half-applied one. Returns the number
+   * of rows removed (0 when no id matches — unknown ids are not an
+   * error, matching idempotent takedown semantics).
    *
    * The delete is LOGICAL at commit time: superseded generations stay
    * on disk for time travel ([[tableAt]]) until [[vacuum]] reclaims
    * them — a hard takedown is therefore `delete(ids)` followed by
-   * `vacuum(0)`. The ANN index is dropped when any partition is
-   * rewritten (serving deleted rows from a stale index would undo the
-   * takedown); rebuild with [[buildAnnIndex]]. The committed dup graph
-   * is PRUNED instead: pairs between surviving rows stay valid (their
-   * vectors did not change), so a new `dup/v<k+1>` without any
-   * doomed-id pair commits alongside — [[nearDups]]/[[dupComponents]]
-   * can never serve a deleted id. (A crash between the two commits
-   * leaves the old graph current; its `_meta.json` lineage lacks the
-   * `deleted_ids` record, making the staleness detectable.)
+   * `vacuum(0)`. Derived state follows [[takedown]]: the ANN index
+   * drops, the dup graph is pruned.
    */
   def delete(ids: DataFrame): Long = withWriterLock() {
     require(ids.columns.contains("id"),
@@ -760,24 +766,7 @@ class VectorStore(spark: SparkSession, val root: String,
       val kept = table()
         .where(col("tag_key").isin(affected: _*))
         .join(broadcast(idSet), Seq("id"), "left_anti")
-      // removals: the sidecars cannot subtract — invalidate both
-      invalidateContentIdx()
-      invalidateNearIdx()
-      val newGen = nextGen()
-      val tmp = s"$root/delete_tmp"
-      kept.withColumn("gen", lit(newGen))
-        .write.mode(SaveMode.Overwrite).partitionBy("tag_key", "gen").parquet(tmp)
-      commitRewrite(tmp, affected, newGen)
-      fs.delete(new Path(annRoot), true)
-      if (dupVersions().nonEmpty) {
-        val pruned = nearDups()
-          .join(broadcast(idSet.select(col("id").as("id1"))), Seq("id1"), "left_anti")
-          .join(broadcast(idSet.select(col("id").as("id2"))), Seq("id2"), "left_anti")
-          .select("id1", "id2", "sim_r") // USING joins front the keys
-        commitDupVersion(pruned,
-          s"""{"threshold":${dupThresholdFromMeta()},"pruned_from":${dupVersions().last},"deleted_ids":$n}""")
-      }
-      n
+      takedown(affected, Some(kept), broadcast(idSet), n)
     }
   }
 
@@ -786,14 +775,14 @@ class VectorStore(spark: SparkSession, val root: String,
    * of `tags` — "drop this source/license/crawl from the corpus", the
    * other removal request a 100 TB training-data store actually gets.
    * Because the store partitions by tag_key, the doomed rows are whole
-   * partitions: the commit is a manifest prune (ONE rename — the same
-   * reader-safe point as every other commit), no row is rewritten and
-   * no partition is even scanned beyond a narrow count + id projection
-   * (row count for the return value, ids for the dup-graph prune) —
-   * O(affected partitions) metadata work at any corpus size. Old
-   * generations stay for [[tableAt]] time travel until [[vacuum]]
-   * (hard takedown = deleteByTags + vacuum(0)); ANN index drops, dup
-   * graph prunes, both exactly like [[delete]].
+   * partitions: the commit is the partition rewrite with no rows
+   * ([[rewritePartitions]] — a pure manifest prune, ONE rename), no row
+   * is rewritten and no partition is even scanned beyond a narrow count
+   * + id projection (row count for the return value, ids for the
+   * dup-graph prune) — O(affected partitions) metadata work at any
+   * corpus size. Old generations stay for [[tableAt]] time travel until
+   * [[vacuum]] (hard takedown = deleteByTags + vacuum(0)); derived
+   * state follows [[takedown]].
    */
   def deleteByTags(tags: Seq[String]): Long = withWriterLock() {
     require(tags.nonEmpty,
@@ -804,28 +793,42 @@ class VectorStore(spark: SparkSession, val root: String,
     if (affected.isEmpty) 0L
     else {
       val doomed = table().where(col("tag_key").isin(affected: _*))
-      val n = doomed.count()
-      val doomedIds = doomed.select(col("id")).distinct()
-      // removals: the sidecars cannot subtract — invalidate both
-      invalidateContentIdx()
-      invalidateNearIdx()
-      writeManifest(manifest().select("tag_key", "tags", "gen")
-        .where(!col("tag_key").isin(affected: _*))) // THE commit point
-      fs.delete(new Path(annRoot), true)
-      if (dupVersions().nonEmpty) {
-        // NO broadcast hint: a dropped source can be corpus-scale, so
-        // the doomed-id side is not bounded the way delete(ids)'s
-        // caller-supplied set is — Spark broadcasts when it fits and
-        // hash-joins otherwise (the pair table is the small side)
-        val pruned = nearDups()
-          .join(doomedIds.select(col("id").as("id1")), Seq("id1"), "left_anti")
-          .join(doomedIds.select(col("id").as("id2")), Seq("id2"), "left_anti")
-          .select("id1", "id2", "sim_r")
-        commitDupVersion(pruned,
-          s"""{"threshold":${dupThresholdFromMeta()},"pruned_from":${dupVersions().last},"deleted_ids":$n}""")
-      }
-      n
+      // NO broadcast hint on the ids: a dropped source can be
+      // corpus-scale, so the doomed-id side is not bounded the way
+      // delete(ids)'s caller-supplied set is — Spark broadcasts when it
+      // fits and hash-joins otherwise (the pair table is the small side)
+      takedown(affected, None, doomed.select(col("id")).distinct(), doomed.count())
     }
+  }
+
+  /** The commit and derived-state upkeep shared by [[delete]] and
+    * [[deleteByTags]]: `n` rows with ids `doomedIds` leave the
+    * `affected` partitions, whose survivors are `kept`. The sidecars
+    * cannot subtract, so both are invalidated BEFORE the commit. After
+    * it the ANN index is dropped (serving deleted rows from a stale
+    * index would undo the takedown; rebuild with [[buildAnnIndex]]) and
+    * the committed dup graph is PRUNED: pairs between surviving rows
+    * stay valid (their vectors did not change), so a new `dup/v<k+1>`
+    * without any doomed-id pair commits alongside — [[nearDups]] and
+    * [[dupComponents]] can never serve a deleted id. (A crash between
+    * the two commits leaves the old graph current; its `_meta.json`
+    * lineage lacks the `deleted_ids` record, making the staleness
+    * detectable.) */
+  private def takedown(affected: Seq[String], kept: Option[DataFrame],
+                       doomedIds: DataFrame, n: Long): Long = {
+    invalidateContentIdx()
+    invalidateNearIdx()
+    rewritePartitions(affected, kept)
+    fs.delete(new Path(annRoot), true)
+    if (dupVersions().nonEmpty) {
+      val pruned = nearDups()
+        .join(doomedIds.select(col("id").as("id1")), Seq("id1"), "left_anti")
+        .join(doomedIds.select(col("id").as("id2")), Seq("id2"), "left_anti")
+        .select("id1", "id2", "sim_r") // USING joins front the keys
+      commitDupVersion(pruned,
+        s"""{"threshold":${dupThresholdFromMeta()},"pruned_from":${dupVersions().last},"deleted_ids":$n}""")
+    }
+    n
   }
 
   /** Convenience overload: delete by literal ids (long or string key
@@ -884,11 +887,20 @@ class VectorStore(spark: SparkSession, val root: String,
                      org.apache.spark.sql.streaming.Trigger.AvailableNow(),
                    checkpointLocation: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
+    drainStream(stream, "ingest", trigger, checkpointLocation)(insert(_, quantize))
+
+  /** The ingest stream body shared by [[insertStream]],
+    * [[insertStreamDedup]] and [[insertStreamNearDedup]]: each
+    * micro-batch goes through `write`, offsets checkpoint under
+    * `checkpointLocation` or else [[defaultCheckpoint]] for `kind`. */
+  private def drainStream(stream: DataFrame, kind: String,
+                          trigger: org.apache.spark.sql.streaming.Trigger,
+                          checkpointLocation: Option[String])(write: DataFrame => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
-      .foreachBatch((batch: DataFrame, _: Long) => insert(batch, quantize))
+      .foreachBatch((batch: DataFrame, _: Long) => write(batch))
       .option("checkpointLocation",
-        checkpointLocation.getOrElse(
-          defaultCheckpoint("ingest", stream)))
+        checkpointLocation.getOrElse(defaultCheckpoint(kind, stream)))
       .trigger(trigger)
       .start()
 
@@ -1317,13 +1329,8 @@ class VectorStore(spark: SparkSession, val root: String,
                               org.apache.spark.sql.streaming.Trigger.AvailableNow(),
                             checkpointLocation: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch((batch: DataFrame, _: Long) => insertNearDedup(batch, quantize))
-      .option("checkpointLocation",
-        checkpointLocation.getOrElse(
-          defaultCheckpoint("ingest_neardedup", stream)))
-      .trigger(trigger)
-      .start()
+    drainStream(stream, "ingest_neardedup", trigger, checkpointLocation)(
+      insertNearDedup(_, quantize))
 
   /**
    * Dedup-on-ingest: [[insertStream]] with exact content deduplication
@@ -1343,13 +1350,7 @@ class VectorStore(spark: SparkSession, val root: String,
                           org.apache.spark.sql.streaming.Trigger.AvailableNow(),
                         checkpointLocation: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch((batch: DataFrame, _: Long) => insertDedup(batch, quantize))
-      .option("checkpointLocation",
-        checkpointLocation.getOrElse(
-          defaultCheckpoint("ingest_dedup", stream)))
-      .trigger(trigger)
-      .start()
+    drainStream(stream, "ingest_dedup", trigger, checkpointLocation)(insertDedup(_, quantize))
 
   /**
    * The ingest twin's QUERY-side counterpart: serve a STREAM of query
@@ -1575,8 +1576,10 @@ class VectorStore(spark: SparkSession, val root: String,
         fs.delete(new Path(deltaPathFor(v)), true)
       }
     }
-    for (t <- Seq("upsert_tmp", "delete_tmp", "data_compact_tmp", "data_tmp",
-      "manifest_tmp.parquet", "ann_tmp", "dup_tmp", "eigen_tmp.parquet",
+    // rewrite_tmp is the one partition-rewrite staging dir; the four
+    // names after it are staging dirs of older releases' rewrites
+    for (t <- Seq("rewrite_tmp", "upsert_tmp", "delete_tmp", "data_compact_tmp",
+      "data_tmp", "manifest_tmp.parquet", "ann_tmp", "dup_tmp", "eigen_tmp.parquet",
       "contentidx_tmp", "neardupidx_tmp", "tokenizer_tmp")) {
       val p = new Path(s"$root/$t")
       if (fs.exists(p) && expired(p)) fs.delete(p, true)
@@ -1586,47 +1589,8 @@ class VectorStore(spark: SparkSession, val root: String,
     for (st <- fs.listStatus(new Path(root))
            if st.getPath.getName.startsWith("_lock.stale.") && expired(st.getPath))
       fs.delete(st.getPath, false)
-    // content-fingerprint sidecar: fold the per-trigger append files
-    // back to ~one per bucket (vacuum never changes live contents, so
-    // this is purely a small-files compaction under the marker dance)
-    if (contentIdxValid) {
-      val it = fs.listFiles(new Path(contentIdxData), true)
-      var nFiles = 0
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-      }
-      if (nFiles > ContentIdxBuckets * 4) {
-        fs.delete(contentIdxMarker, false)
-        val tmp = s"$root/contentidx_tmp"
-        contentIdxTable()
-          .select("chash", "cbucket").distinct()
-          .write.mode(SaveMode.Overwrite).partitionBy("cbucket").parquet(tmp)
-        fs.delete(new Path(contentIdxData), true)
-        require(fs.rename(new Path(tmp), new Path(contentIdxData)),
-          "graft: contentidx compaction rename failed")
-        fs.create(contentIdxMarker, true).close()
-      }
-    }
-    // near-dup signature sidecar: same small-files compaction (dup band
-    // rows from replayed appends also fold away — distinct is safe:
-    // probe semantics are set-membership on (band, key, signature))
-    if (nearIdxValid) {
-      val it = fs.listFiles(new Path(nearIdxData), true)
-      var nFiles = 0
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-      }
-      if (nFiles > ContentIdxBuckets * 4) {
-        fs.delete(nearIdxMarker, false)
-        val tmp = s"$root/neardupidx_tmp"
-        nearIdxTable().distinct()
-          .write.mode(SaveMode.Overwrite).partitionBy("bbucket").parquet(tmp)
-        fs.delete(new Path(nearIdxData), true)
-        require(fs.rename(new Path(tmp), new Path(nearIdxData)),
-          "graft: neardupidx compaction rename failed")
-        fs.create(nearIdxMarker, true).close()
-      }
-    }
+    compactSidecar("contentidx", contentIdxData, contentIdxMarker, "cbucket")(contentIdxTable())
+    compactSidecar("neardupidx", nearIdxData, nearIdxMarker, "bbucket")(nearIdxTable())
     // superseded ANN index versions (rebuilds leave v<k> behind so
     // concurrent readers never hit a gap — reclaimed here, same contract
     // as manifest versions); once any version exists, pre-versioning
@@ -1653,6 +1617,32 @@ class VectorStore(spark: SparkSession, val root: String,
       if (expired(p)) fs.delete(p, true)
     }
   }
+
+  /** Vacuum's small-files compaction of one live sidecar (`name` =
+    * its dir under the root): past `ContentIdxBuckets * 4` parquet
+    * files, fold `rows` back to ~one file per `bucketCol` bucket under
+    * the marker dance. Vacuum never changes live contents, and
+    * `distinct` is safe because both probes are set-membership tests
+    * (the near-dup sidecar's replayed band rows fold away too). */
+  private def compactSidecar(name: String, data: String, marker: Path,
+                             bucketCol: String)(rows: => DataFrame): Unit =
+    if (fs.exists(marker)) {
+      val it = fs.listFiles(new Path(data), true)
+      var nFiles = 0
+      while (it.hasNext) {
+        if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
+      }
+      if (nFiles > ContentIdxBuckets * 4) {
+        fs.delete(marker, false)
+        val tmp = s"$root/${name}_tmp"
+        rows.distinct()
+          .write.mode(SaveMode.Overwrite).partitionBy(bucketCol).parquet(tmp)
+        fs.delete(new Path(data), true)
+        require(fs.rename(new Path(tmp), new Path(data)),
+          s"graft: $name compaction rename failed")
+        fs.create(marker, true).close()
+      }
+    }
 
   /** Driver-side superset pruning: distinct tag-sets are few; resolve
     * the matching partition keys and let static partition pruning skip
@@ -1937,28 +1927,18 @@ class VectorStore(spark: SparkSession, val root: String,
    * partitions because `partitionBy` on the write restores the
    * directory layout regardless of task placement.
    *
-   * Reader-safe (VERDICT r3 next #1): the rewrite stages a fresh gen
-   * dir per partition and commits them ALL in one manifest-version
-   * rename — a reader concurrent with compaction resolves either the
-   * old snapshot (whose files are untouched until [[vacuum]]) or the
-   * new one, never a partial mix and never a missing directory. A
-   * crash before the manifest commit leaves only unreferenced staging
-   * garbage.
+   * Reader-safe (VERDICT r3 next #1): every live partition goes
+   * through the one partition rewrite ([[rewritePartitions]]) and
+   * commits in one manifest-version rename — a reader concurrent with
+   * compaction resolves either the old snapshot (whose files are
+   * untouched until [[vacuum]]) or the new one, never a partial mix and
+   * never a missing directory. A crash before the manifest commit
+   * leaves only unreferenced staging garbage. Rows do not change, so
+   * the ANN index, both sidecars and the dup graph stay valid.
    */
   def compact(): Unit = withWriterLock() {
-    val newGen = nextGen()
-    val rewritten = table().withColumn("gen", lit(newGen))
-      .hint("rebalance", "tag_key")
-    val tmp = s"$root/data_compact_tmp"
-    rewritten.write.mode(SaveMode.Overwrite).partitionBy("tag_key", "gen").parquet(tmp)
-    val staged = fs.listStatus(new Path(tmp)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("tag_key="))
-      .map(_.stripPrefix("tag_key="))
-    for (key <- staged) commitGenDir(tmp, key, newGen)
-    writeManifest(manifest()
-      .where(col("tag_key").isin(staged: _*))
-      .select(col("tag_key"), col("tags"), lit(newGen).as("gen")))
-    fs.delete(new Path(tmp), true)
+    rewritePartitions(liveGens().keys.toSeq,
+      Some(table().hint("rebalance", "tag_key")))
   }
 
   /**
@@ -2107,18 +2087,24 @@ class VectorStore(spark: SparkSession, val root: String,
    * for the rewrite — fixes the reference's per-file re-centering quirk
    * (src/db.rs:320; divergence documented in SURVEY §2 #27).
    *
-   * Commits like [[compact]]: staged gen dirs + one manifest rename, so
-   * a concurrent reader never sees a missing or partial directory. The
-   * basis is STAGED under a temp name and renamed into place
-   * immediately after the manifest commit (ADVICE r6 #4 — writing it
-   * before the commit left a full-parquet-write-sized window where a
-   * reader paired the new basis with old-dimension data and projected
-   * queries scored against unprojected vectors, returning NaN-filtered
-   * or empty results). The residual skew is the gap between two
+   * Commits through the one partition rewrite ([[rewritePartitions]],
+   * every live partition): one manifest rename, so a concurrent reader
+   * never sees a missing or partial directory. The basis is STAGED
+   * under a temp name before that commit and renamed into place
+   * immediately after it (ADVICE r6 #4 — writing it before the commit
+   * left a full-parquet-write-sized window where a reader paired the
+   * new basis with old-dimension data and projected queries scored
+   * against unprojected vectors, returning NaN-filtered or empty
+   * results). The residual skew is the gap between two
    * renames — inherent to any online schema migration without a
    * unified metadata root; a reader in that sliver sees projected data
    * with [[isProjected]] still false, i.e. a dimension-mismatched
    * cosine that NaN-filters to empty rather than silently-wrong rows.
+   *
+   * The ANN index is dropped after the commit: its codebook and lists
+   * are in raw space, so index appends and ANN searches would fail on
+   * the projected store (rebuild with [[buildAnnIndex]]). The dup graph
+   * (stable pair ids) and the content-keyed sidecars survive.
    */
   def projectAll(k: Int): Unit = withWriterLock() {
     require(!isProjected, "graft: store is already projected")
@@ -2134,6 +2120,7 @@ class VectorStore(spark: SparkSession, val root: String,
     if (fs.exists(eigenStaged)) {
       val stagedK = loadModelAt(eigenStaged.toString).k
       if (storedDim().contains(stagedK)) {
+        fs.delete(new Path(annRoot), true) // the crash may predate the index drop
         require(fs.rename(eigenStaged, new Path(eigenPath)),
           s"graft: basis recovery rename to $eigenPath failed")
         throw new IllegalStateException(
@@ -2159,23 +2146,11 @@ class VectorStore(spark: SparkSession, val root: String,
       if (projected0.columns.contains("packed"))
         projected0.withColumn("packed", pack(col("vector")))
       else projected0
-    val newGen = nextGen()
-    val tmp = s"$root/data_tmp"
-    projected.withColumn("gen", lit(newGen))
-      .write.mode(SaveMode.Overwrite).partitionBy("tag_key", "gen").parquet(tmp)
-    val staged = fs.listStatus(new Path(tmp)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("tag_key="))
-      .map(_.stripPrefix("tag_key="))
-    val eigenTmp = new Path(s"$root/eigen_tmp.parquet")
-    fs.delete(eigenTmp, true) // crashed-writer debris
-    saveModelAt(model, eigenTmp.toString)
-    for (key <- staged) commitGenDir(tmp, key, newGen)
-    writeManifest(manifest()
-      .where(col("tag_key").isin(staged: _*))
-      .select(col("tag_key"), col("tags"), lit(newGen).as("gen")))
-    require(fs.rename(eigenTmp, new Path(eigenPath)),
+    saveModelAt(model, eigenStaged.toString)
+    rewritePartitions(liveGens().keys.toSeq, Some(projected))
+    fs.delete(new Path(annRoot), true)
+    require(fs.rename(eigenStaged, new Path(eigenPath)),
       s"graft: basis commit rename to $eigenPath failed")
-    fs.delete(new Path(tmp), true)
   }
 
   /** Size-threshold projection trigger (reference: file > 1,000,000 B on

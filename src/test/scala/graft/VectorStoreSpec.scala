@@ -2501,6 +2501,165 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store2.table().count() == 1)
     store2.clear()
   }
+
+  test("projectAll drops the raw-space ANN index: the next insert commits once, a rebuilt index serves the projected store") {
+    val store = freshStore()
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 200).map(i =>
+      (s"p$i", Array.fill(16)(rnd.nextGaussian().toFloat), s"c$i", Seq("t")))
+    store.insert(df(rows))
+    store.buildAnnIndex(4)
+    val rootDir = java.nio.file.Paths.get(store.root)
+    val rawIndex = copyTree(rootDir.resolve("ann").toString)
+    store.projectAll(4)
+    // the stale index's append used to fail this insert AFTER its rows
+    // committed, so a retry wrote them twice
+    store.insert(df((200 until 210).map(i =>
+      (s"p$i", Array.fill(16)(rnd.nextGaussian().toFloat), s"c$i", Seq("t")))))
+    assert(store.table().count() == 210)
+    assert(!store.hasAnnIndex, "projectAll must drop the raw-space index")
+    store.buildAnnIndex(4)
+    val hits = store.searchAnn(rows(5)._2.toSeq, k = 5, nprobe = 4).collect()
+    assert(hits.length == 5)
+    assert(hits.head.getAs[String]("id") == "p5", hits.map(_.getAs[String]("id")).mkString(","))
+    // a crash after the data commit, before the index drop and the basis
+    // rename: the retry's recovery also drops the raw-space index
+    org.apache.commons.io.FileUtils.deleteDirectory(rootDir.resolve("ann").toFile)
+    Files.move(java.nio.file.Paths.get(rawIndex), rootDir.resolve("ann"))
+    Files.move(rootDir.resolve("eigen.parquet"), rootDir.resolve("eigen_tmp.parquet"))
+    assert(store.hasAnnIndex && !store.isProjected)
+    intercept[IllegalStateException] { store.projectAll(4) }
+    assert(store.isProjected && !store.hasAnnIndex)
+    store.clear()
+  }
+
+  /** Copy a directory tree (a store root or one of its artifacts,
+    * checksums included) to a fresh temp dir. */
+  private def copyTree(src: String): String = {
+    val to = Files.createTempDirectory("graft-store-copy").toFile
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src), to)
+    to.toString
+  }
+
+  test("derived state after each rewrite: which of the ANN index, both sidecars and the dup graph survive") {
+    val rnd = new scala.util.Random(11)
+    val vecs = (0 until 24).map(_ => Array.fill(8)(rnd.nextGaussian().toFloat))
+    // d2 and d3 repeat d0 and d1: one sure dup pair per tag set
+    def vec(i: Int) = if (i == 2 || i == 3) vecs(i - 2) else vecs(i)
+    def rowsOf(r: Range) = df(r.map(i => (s"d$i", vec(i),
+      s"document $i talks about subject number $i", Seq(if (i % 2 == 0) "t1" else "t2"))))
+    val base = new VectorStore(spark, Files.createTempDirectory("graft-store").toString,
+      contentIdxMinBytes = 0L)
+    base.insert(rowsOf(0 until 16))
+    base.insertDedup(rowsOf(16 until 20))
+    base.insertNearDedup(rowsOf(20 until 24))
+    base.buildDupGraph()
+    base.buildAnnIndex(2)
+    assert(base.table().count() == 24)
+    assert(base.hasAnnIndex && base.contentIdxValid && base.nearIdxValid && base.hasDupGraph)
+    val builtMeta = base.dupMeta()
+    def pairsOf(s: VectorStore) = s.nearDups().collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    val builtPairs = pairsOf(base)
+    assert(builtPairs.contains(("d0", "d2")) && builtPairs.contains(("d1", "d3")), builtPairs.toString)
+    // (rewrite, ids it removes, index kept, content sidecar kept,
+    //  near-dup sidecar kept, dup graph: kept / pruned / dropped)
+    val matrix = Seq[(String, VectorStore => Unit, Set[String], Boolean, Boolean, Boolean, String)](
+      ("upsert", _.upsert(df(Seq(("d0", vecs(5), "d0 rewritten", Seq("t1"))))),
+        Set.empty, false, false, false, "dropped"),
+      ("delete", s => assert(s.deleteIds(Seq("d2")) == 1L),
+        Set("d2"), false, false, false, "pruned"),
+      ("deleteByTags", s => assert(s.deleteByTags(Seq("t2")) == 12L),
+        (1 until 24 by 2).map(i => s"d$i").toSet, false, false, false, "pruned"),
+      ("compact", _.compact(), Set.empty, true, true, true, "kept"),
+      ("projectAll", _.projectAll(2), Set.empty, false, true, true, "kept"))
+    for ((name, rewrite, removed, ann, content, near, dup) <- matrix) {
+      val store = new VectorStore(spark, copyTree(base.root), contentIdxMinBytes = 0L)
+      rewrite(store)
+      val ids = store.table().select("id").collect().map(_.getString(0)).toSet
+      assert(ids == (0 until 24).map(i => s"d$i").toSet -- removed, s"$name: $ids")
+      assert(store.hasAnnIndex == ann, s"$name: ANN index")
+      assert(store.contentIdxValid == content, s"$name: content sidecar")
+      assert(store.nearIdxValid == near, s"$name: near-dup sidecar")
+      dup match {
+        case "kept" =>
+          assert(store.dupMeta() == builtMeta, s"$name: ${store.dupMeta()}")
+          assert(pairsOf(store) == builtPairs, s"$name: dup pairs")
+        case "pruned" =>
+          assert(store.dupMeta().exists(_.contains("\"pruned_from\"")), s"$name: ${store.dupMeta()}")
+          assert(pairsOf(store) == builtPairs.filterNot { case (a, b) =>
+            removed(a) || removed(b) }, s"$name: dup pairs")
+        case "dropped" => assert(!store.hasDupGraph, s"$name: dup graph")
+      }
+      store.clear()
+    }
+    base.clear()
+  }
+
+  /** Plant a crashed rewrite's debris: a stale row in the staging dir
+    * and in an orphan gen dir at exactly the next gen of every live
+    * partition — nothing the manifest names. */
+  private def plantRewriteDebris(store: VectorStore, dim: Int): Unit = {
+    val staleDir = Files.createTempDirectory("graft-stale").resolve("rows").toString
+    df(Seq(("stale", Array.fill(dim)(1f), "stale row", Seq("t1"))))
+      .coalesce(1).write.parquet(staleDir)
+    val part = new java.io.File(staleDir).listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    val live = store.manifest().select("tag_key", "gen").collect()
+      .map(r => (r.getString(0), r.getInt(1)))
+    val next = live.map(_._2).max + 1
+    for ((key, _) <- live; dir <- Seq(s"data/tag_key=$key/gen=$next",
+                                      s"rewrite_tmp/tag_key=$key/gen=$next")) {
+      val d = java.nio.file.Paths.get(store.root, dir)
+      Files.createDirectories(d)
+      Files.copy(part, d.resolve(part.getFileName))
+    }
+  }
+
+  /** On-disk (tag_key, gen) dirs under the store's data root. */
+  private def genDirsOnDisk(store: VectorStore): Set[(String, Int)] =
+    new java.io.File(s"${store.root}/data").listFiles().toSet
+      .filter(_.getName.startsWith("tag_key="))
+      .flatMap { k =>
+        k.listFiles().toSet.filter(_.getName.startsWith("gen=")).map(g =>
+          (k.getName.stripPrefix("tag_key="), g.getName.stripPrefix("gen=").toInt))
+      }
+
+  test("crash debris of compact, delete, deleteByTags and projectAll: invisible before, not merged after, reaped by vacuum") {
+    val rnd = new scala.util.Random(3)
+    val rows = (0 until 12).map(i => (s"r$i", Array.fill(6)(rnd.nextGaussian().toFloat),
+      s"c$i", Seq(if (i % 2 == 0) "t1" else "t2")))
+    val all = rows.map(_._1).toSet
+    val cases = Seq[(String, VectorStore => Unit, Set[String])](
+      ("compact", _.compact(), all),
+      ("delete", s => assert(s.deleteIds(Seq("r0")) == 1L), all - "r0"),
+      ("deleteByTags", s => assert(s.deleteByTags(Seq("t1")) == 6L),
+        all.filter(_.stripPrefix("r").toInt % 2 == 1)),
+      ("projectAll", _.projectAll(2), all))
+    for ((name, rewrite, after) <- cases) {
+      val store = freshStore()
+      store.insert(df(rows))
+      def ids() = store.table().select("id").collect().map(_.getString(0)).toSet
+      plantRewriteDebris(store, 6)
+      store.refresh() // a cold read lists only the gen dirs the manifest names
+      assert(ids() == all, s"$name: debris visible before the rewrite")
+      assert(store.search(rows(1)._2.toSeq, k = 12).count() == 12, name)
+      rewrite(store)
+      assert(ids() == after, s"$name: stale rows merged: ${ids()}")
+      store.refresh() // a cold read of the committed snapshot agrees
+      assert(ids() == after, s"$name: cold read ${ids()}")
+      if (name == "projectAll")
+        assert(store.table().select(size(col("vector"))).distinct().collect()
+          .map(_.getInt(0)).toSeq == Seq(2))
+      store.vacuum(0L)
+      val live = store.manifest().select("tag_key", "gen").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSet
+      assert(genDirsOnDisk(store) == live, s"$name: vacuum left ${genDirsOnDisk(store) -- live}")
+      assert(!new java.io.File(s"${store.root}/rewrite_tmp").exists, s"$name: staging debris")
+      assert(ids() == after, s"$name: after vacuum")
+      store.clear()
+    }
+  }
 }
 
 object VectorStoreSpec {
