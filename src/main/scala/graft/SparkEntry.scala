@@ -74,6 +74,13 @@ object SparkEntry {
      emb.where(col("vec_id") >= corpusFrom)
        .select(Seq(col("vec_id").as("cid"), col("embedding").as("cvec")) ++ corpusCols.map(col): _*))
 
+  /** The fixed IVF codebook of the oracle rows: embeddings `vec_id < 16`
+    * as the centroids, cid = vec_id (a k-means fit is not reproducible
+    * in SQL; assignment and probing are the same either way). */
+  private def seedCodebook(emb: DataFrame): Seq[(Long, Seq[Float])] =
+    SimilaritySearch.collectCodebook(emb.where(col("vec_id") < 16)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
+
   /** A fixture cache: one value per (session, key), built by the
     * first caller; entries of stopped sessions are purged on every
     * access. See [[dupPairsCache]] for the contract. */
@@ -464,9 +471,7 @@ object SparkEntry {
     // matryoshkaTopK (the stored prefix IS the slice; OperatorSpec
     // pins the equality), so the oracle SQL is unchanged.
     "ann_matryoshka" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val q = emb.where(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0)
+      val (q, _) = SimilaritySearch.queryById(Tables.load(s, dir, "embeddings"), 0L)
       SimilaritySearch.matryoshkaIndexTopK(
         s, prefixIndexPath(s, dir), q, excludeId = Some(0L))
     }),
@@ -496,9 +501,7 @@ object SparkEntry {
     // DuckDB oracle as knn_tag_filtered
     "knn_tag_filtered_sql" -> ((s, dir) => {
       val view = sqlStoreView(s, dir)
-      val qv = Tables.load(s, dir, "embeddings")
-        .where(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0)
+      val (qv, _) = SimilaritySearch.queryById(Tables.load(s, dir, "embeddings"), 0L)
       // float->double literals round-trip exactly; the cast back to
       // array<float> recovers the bit-identical query vector
       val vecSql = qv.map(_.toDouble).mkString("array(", ",", ")")
@@ -608,18 +611,22 @@ object SparkEntry {
         .orderBy("qid")
     }),
 
-    // knn_multiquery's oracle twin: the same exact batch, gated
-    // against the same DuckDB window
+    // knn_multiquery's answer through the grouped heap of the IVF
+    // batch (TopK.perQueryTopKHeap over ivfJoin's probe pairs): the
+    // seed codebook with all 16 lists probed puts every corpus row in
+    // one probed list, so the result is exact and gated against the
+    // same DuckDB window
     "knn_multiquery_heap" -> ((s, dir) => {
-      val (queries, corpus) = knnSplit(Tables.load(s, dir, "embeddings"))
-      TopK.exactJoin(queries, corpus, 5)
-        .select(col("qid"), col("rank"), col("cid"))
+      val emb = Tables.load(s, dir, "embeddings")
+      val (queries, corpus) = knnSplit(emb)
+      SimilaritySearch.ivfJoin(queries, corpus, seedCodebook(emb), nprobe = 16, k = 5)
         .orderBy("qid", "rank")
     }),
 
     // sign-LSH bucketed ANN
     "ann_lsh" -> ((s, dir) => {
-      SimilaritySearch.lshSearch(Tables.load(s, dir, "embeddings"), qid = 0L, k = 5, d = 64)
+      val (qv, corpus) = SimilaritySearch.queryById(Tables.load(s, dir, "embeddings"), 0L)
+      SimilaritySearch.lshSearchVec(corpus, qv, k = 5, d = 64)
     }),
 
     // batched ANN as a banded LSH JOIN — the scale path for query
@@ -661,32 +668,31 @@ object SparkEntry {
 
     // IVF coarse-quantized ANN (fixed codebook, nprobe=2)
     "ann_ivf" -> ((s, dir) => {
-      SimilaritySearch.ivfSearch(Tables.load(s, dir, "embeddings"),
-        qid = 42L, nCentroids = 16, nprobe = 2, k = 5)
+      val emb = Tables.load(s, dir, "embeddings")
+      val (qv, corpus) = SimilaritySearch.queryById(emb, 42L)
+      SimilaritySearch.ivfSearchVec(corpus, seedCodebook(emb), qv, nprobe = 2, k = 5)
     }),
 
-    // filtered ANN: the tag predicate rides inside the probed cells
-    // (row filter after the cid IN-list), never a post-hoc re-query —
+    // filtered ANN: the tag predicate filters the corpus the probed
+    // cells scan (assignment is per row, so these are the rows the
+    // oracle filters inside the cells), never a post-hoc re-query —
     // the selective-filter/nprobe tradeoff is the caller's dial
     "ann_ivf_filtered" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val centroids = emb.where(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val qv = emb.where(col("vec_id") === 42L)
-        .select(col("embedding")).head().getSeq[Float](0)
-      SimilaritySearch.ivfSearchVecFiltered(
-        Tables.vectorTable(s, dir).where(col("id") =!= 42L),
-        centroids, qv, nprobe = 2, k = 5,
-        pred = array_contains(col("tags"), "de"),
-        vecCol = "vector", idCol = "id")
+      val (qv, corpus) = SimilaritySearch.queryById(Tables.vectorTable(s, dir)
+        .select(col("id").as("vec_id"), col("vector").as("embedding"), col("tags")), 42L)
+      SimilaritySearch.ivfSearchVec(corpus.where(array_contains(col("tags"), "de")),
+          seedCodebook(Tables.load(s, dir, "embeddings")), qv, nprobe = 2, k = 5)
+        .select(col("rank"), col("vec_id").as("id"))
     }),
 
     // IVF scored over the 8-bit codec: same assignment/probing, packed
     // scoring via FuseQuantizedKernels (oracle-pins the fused kernel's
     // dequantize-then-cosine numerics, not just the plan shape)
     "ann_ivf_quantized" -> ((s, dir) => {
-      SimilaritySearch.ivfSearchQuantized(Tables.load(s, dir, "embeddings"),
-        qid = 42L, nCentroids = 16, nprobe = 2, k = 5)
+      val emb = Tables.load(s, dir, "embeddings")
+      val (qv, corpus) = SimilaritySearch.queryById(emb, 42L)
+      SimilaritySearch.ivfSearchVec(corpus, seedCodebook(emb), qv, nprobe = 2, k = 5,
+        scoredVec = unpack(pack(col("embedding"))))
     }),
 
     // PCA fit + projection. The eigenbasis itself is sign-ambiguous and
@@ -1185,10 +1191,7 @@ object SparkEntry {
     // per-cluster size + top doc-frequency tokens
     "text_cluster" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
-      val codebook = emb.where(col("vec_id") < 16)
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      val asg = SimilaritySearch.ivfAssign(emb, codebook)
+      val asg = SimilaritySearch.ivfAssign(emb, seedCodebook(emb))
         .select(col("vec_id").as("doc_id"), col("cid"))
       TextAnalysis.topicClusters(Tables.load(s, dir, "documents"), asg)
         .orderBy("cid")
@@ -1199,10 +1202,7 @@ object SparkEntry {
     // ranked over unigrams UNION surviving "a_b" phrase tokens
     "text_phrase_topics" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
-      val codebook = emb.where(col("vec_id") < 16)
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-      val asg = SimilaritySearch.ivfAssign(emb, codebook)
+      val asg = SimilaritySearch.ivfAssign(emb, seedCodebook(emb))
         .select(col("vec_id").as("doc_id"), col("cid"))
       TextAnalysis.phraseTopics(Tables.load(s, dir, "documents"), asg,
           topK = 3, minCount = 10L, topPhrases = 50)
@@ -1979,8 +1979,7 @@ object SparkEntry {
     // from the raw tables
     "hybrid_streamed" -> ((s, dir) => {
       val store = new graft.operators.VectorStore(s, streamedStoreRoot(s, dir))
-      val qv = Tables.load(s, dir, "embeddings")
-        .where(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
+      val (qv, _) = SimilaritySearch.queryById(Tables.load(s, dir, "embeddings"), 0L)
       store.searchHybrid(qv, Search.DefaultTerms, k = 10)
         .select(col("rank"), col("id"), col("content"),
           col("rrf_score"), col("n_legs"))
@@ -2061,11 +2060,8 @@ object SparkEntry {
     // ann_lsh_join
     "ann_ivf_join" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
-      val centroids = emb.where(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val codebook = SimilaritySearch.collectCodebook(centroids)
       val (queries, corpus) = knnSplit(emb, corpusFrom = 16)
-      SimilaritySearch.ivfJoin(queries, corpus, codebook, nprobe = 2, k = 5)
+      SimilaritySearch.ivfJoin(queries, corpus, seedCodebook(emb), nprobe = 2, k = 5)
         .orderBy("qid", "rank")
     }),
 
@@ -2099,7 +2095,9 @@ object SparkEntry {
     // (4 bytes/vector); asymmetric-distance scoring = 8 LUT lookups +
     // adds per row, zero shuffle
     "ann_pq" -> ((s, dir) => {
-      SimilaritySearch.pqSearch(Tables.load(s, dir, "embeddings"), qid = 42L)
+      val emb = Tables.load(s, dir, "embeddings")
+      val (qv, corpus) = SimilaritySearch.queryById(emb, 42L)
+      SimilaritySearch.pqSearchVec(corpus, qv, SimilaritySearch.pqCodebooks(emb, 8, 16), k = 5)
     }),
 
     // chunk -> hash-embed -> pool: document embedding as the

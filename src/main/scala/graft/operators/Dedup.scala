@@ -892,7 +892,7 @@ object Dedup {
    *
    * `centroids` defaults to the fixed seed-row codebook (rows with
    * vec_id < nCentroids — deterministic and oracle-reproducible, like
-   * [[SimilaritySearch.ivfSearch]]); production passes
+   * the `ann_ivf` oracle row's codebook); production passes
    * [[SimilaritySearch.kmeansCentroids]], which changes recall, not
    * shape.
    *

@@ -18,14 +18,21 @@ import graft.functions.GraftFunctions._
  *    broadcast-codebook argmin EXPRESSION (plan constant, zero shuffle —
  *    round 1 used a Window.partitionBy(vec_id), which repartitioned the
  *    whole corpus to argmin 16 centroids; VERDICT r1 What's-wrong #4).
- *    A query probes the nprobe nearest centroid lists; with `cid` as a
- *    partition column ([[buildIvfIndex]]) probes prune at file level.
+ *    A query probes the nprobe nearest centroid lists; on the store's
+ *    committed index (`VectorStore.buildAnnIndex`, `cid` a partition
+ *    column) probes prune at file level.
  *
  * Hyperplanes are deterministic (integer LCG -> double in [-0.5, 0.5]),
  * shared with the DuckDB oracle. The IVF codebook for the oracle query
  * uses fixed seed rows as centroids — a documented stand-in for the
  * k-means fit in [[kmeansCentroids]] (assignment/probe machinery is
  * identical either way).
+ *
+ * Each family has one single-query search, and it takes the query
+ * vector by value: [[lshSearchVec]], [[ivfSearchVec]], [[pqSearchVec]].
+ * The oracle rows and tests address a query by row id through
+ * [[queryById]]. All three drop NaN scores before ranking, as the
+ * store's scans and the heaps do.
  */
 object SimilaritySearch {
 
@@ -121,47 +128,42 @@ object SimilaritySearch {
     (0L until (1L << m)).filter(java.lang.Long.bitCount(_) <= r).map(bucket ^ _)
   }
 
+  /** A query addressed by row id, as the oracle rows and tests address
+    * their queries: the vector of row `qid` of a (vec_id, embedding)
+    * table, by a pushdown-filtered point lookup, and the table without
+    * that row as the corpus. */
+  def queryById(emb: DataFrame, qid: Long): (Seq[Float], DataFrame) = {
+    val qv = emb.where(col("vec_id") === qid)
+      .select("embedding").collect().headOption
+      .getOrElse(throw new NoSuchElementException(s"graft: no vector with vec_id=$qid"))
+      .getSeq[Float](0)
+    (qv, emb.where(col("vec_id") =!= qid))
+  }
+
+  /** The ranking tail of the single-query searches: NaN scores dropped,
+    * then (rank, vec_id) of the k best by (sim desc, vec_id asc). */
+  private def topBySim(scored: DataFrame, k: Int): DataFrame =
+    TopK.topKRanked(scored.where(!isnan(col("sim"))), k, Seq(desc("sim"), asc("vec_id")))
+      .select(col("rank"), col("vec_id"))
+
   /**
    * Multi-probe bucketed ANN: top-k cosine among vectors whose bucket is
    * within `probeHamming` flips of the query's (round 1 probed only the
    * exact bucket and returned 1 of k rows on thin buckets — VERDICT r1
    * next-step #10). The probe set is an IN-list filter: partition- and
-   * row-group-prunable, no join.
+   * row-group-prunable, no join, and no corpus scan for the query
+   * vector.
    */
-  def lshSearch(emb: DataFrame, qid: Long, k: Int, d: Int,
-                nPlanes: Int = graft.OracleSql.LshPlanes,
-                probeHamming: Int = graft.OracleSql.LshProbeHamming): DataFrame = {
-    // driver-side single-row lookup of the query vector — the oracle
-    // harness addresses queries by row id; production calls take the
-    // vector by value ([[lshSearchVec]]) and never touch the corpus for
-    // it (VERDICT r3 What's-wrong #3)
-    val qv = lookupVec(emb, qid)
-    lshSearchVec(emb.where(col("vec_id") =!= qid), qv, k, d, nPlanes, probeHamming)
-  }
-
-  /** Query-by-value multi-probe LSH search — the production entry point:
-    * no corpus scan for the query vector, the probe IN-list prunes at
-    * file level when `bucket` is a partition column. */
   def lshSearchVec(emb: DataFrame, qv: Seq[Float], k: Int, d: Int,
                    nPlanes: Int = graft.OracleSql.LshPlanes,
                    probeHamming: Int = graft.OracleSql.LshProbeHamming): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val probes = probeBuckets(signBucketOf(qv, d, nPlanes), nPlanes, probeHamming)
-    val scored = emb
+    topBySim(emb
       .withColumn("bucket", signBucket(col("embedding"), d, nPlanes))
       .where(col("bucket").isin(probes: _*))
-      .withColumn("sim", cosine(col("embedding"), vecLit(qv)))
-    TopK.topKRanked(scored, k, Seq(desc("sim"), asc("vec_id")))
-      .select(col("rank"), col("vec_id"))
+      .withColumn("sim", cosine(col("embedding"), vecLit(qv))), k)
   }
-
-  /** Point lookup of a query vector by row id — pushdown-filtered, used
-    * only by the qid oracle forms. */
-  private def lookupVec(emb: DataFrame, qid: Long): Seq[Float] =
-    emb.where(col("vec_id") === qid)
-      .select("embedding").collect().headOption
-      .getOrElse(throw new NoSuchElementException(s"graft: no vector with vec_id=$qid"))
-      .getSeq[Float](0)
 
   /**
    * Banded LSH similarity JOIN: per-query top-k over a query TABLE vs a
@@ -180,7 +182,9 @@ object SimilaritySearch {
    */
   /** The banded-LSH candidate stream shared by [[lshJoin]] and
     * [[hardNegatives]]: distinct (qid, cid) pairs from the (band, key)
-    * equi-join, scored ONCE each — never a cross product.
+    * equi-join, scored ONCE each — never a cross product. NaN scores
+    * (a zero vector on either side) are dropped here: the per-query
+    * window would rank them first.
     *
     * Order of operations matters at scale (VERDICT r6 What's-wrong #1 —
     * the r6 form scored inside the banded join and deduped the scored
@@ -238,6 +242,7 @@ object SimilaritySearch {
       .join(queries.select(col("qid"), col("qvec")), Seq("qid"))
       .select(col("qid"), col("cid"),
         cosine(col("cvec"), col("qvec")).as("sim"))
+      .where(!isnan(col("sim")))
   }
 
   def lshJoin(queries: DataFrame, corpus: DataFrame, k: Int, d: Int,
@@ -382,86 +387,29 @@ object SimilaritySearch {
     }
 
   /**
-   * IVF probe search over an explicit codebook. Plan shape:
+   * IVF probe search. Plan shape:
    *   Scan -> Project[argmin cid] -> Filter[cid IN probes] ->
    *   Project[sim] -> TakeOrderedAndProject(k)
-   * — no Exchange anywhere (assignment is an expression, probes are an
-   * IN-list, top-k is per-partition heaps).
+   * — no Exchange anywhere (assignment is an expression, probes are a
+   * driver-side IN-list, top-k is per-partition heaps). The corpus is
+   * (vec_id, embedding, ...): rows are assigned to lists on `embedding`
+   * and scored as cosine(`scoredVec`, qv). The 8-bit codec passes
+   * `unpack(pack(embedding))`, which FuseQuantizedKernels collapses
+   * into the packed kernel, so probed lists score straight from bytes.
+   *
+   * Filtered ANN filters the corpus before the call. The assignment is
+   * a per-row projection, so that keeps exactly the rows a filter
+   * inside the probed lists keeps (on the store's index:
+   * [[graft.operators.VectorStore.searchAnn]] with tags). A selective
+   * predicate thins the probed lists, so k results under a tight filter
+   * need a higher nprobe; the operator never falls back to re-querying.
    */
-  def ivfSearchWith(emb: DataFrame, centroids: DataFrame, qid: Long, nprobe: Int, k: Int): DataFrame = {
-    // driver-side single-row query-vector lookup (see lshSearch note)
-    val qv = lookupVec(emb, qid)
-    ivfSearchVec(emb.where(col("vec_id") =!= qid), centroids, qv, nprobe, k)
-  }
-
-  /** Query-by-value IVF probe search — the production entry point (no
-    * corpus scan for the query vector). */
-  def ivfSearchVec(emb: DataFrame, centroids: DataFrame, qv: Seq[Float],
-                   nprobe: Int, k: Int): DataFrame = {
-    val codebook = collectCodebook(centroids)
-    val probes = probeCids(codebook, qv, nprobe)
-    val scored = emb
+  def ivfSearchVec(corpus: DataFrame, codebook: Seq[(Long, Seq[Float])], qv: Seq[Float],
+                   nprobe: Int, k: Int, scoredVec: Column = col("embedding")): DataFrame =
+    topBySim(corpus
       .withColumn("cid", nearestCentroid(col("embedding"), codebook))
-      .where(col("cid").isin(probes: _*))
-      .withColumn("sim", cosine(col("embedding"), vecLit(qv)))
-    TopK.topKRanked(scored, k, Seq(desc("sim"), asc("vec_id")))
-      .select(col("rank"), col("vec_id"))
-  }
-
-  /** Predicate-filtered IVF probe search (filtered ANN): the metadata
-    * predicate rides the SAME pruned probe scan as the similarity — a
-    * post-assignment row filter on a flat corpus here, a row filter
-    * inside the probed cid partitions on the store's committed index
-    * ([[graft.operators.VectorStore.searchAnn]] with tags). The
-    * standard filtered-ANN caveat is the caller's dial, not a silent
-    * failure: a selective predicate thins the probed lists, so k
-    * results under a tight filter need a higher nprobe (the
-    * recall-vs-probe tradeoff the committed-index recall curve
-    * measures) — the operator never falls back to re-querying. */
-  def ivfSearchVecFiltered(corpus: DataFrame, centroids: DataFrame,
-                           qv: Seq[Float], nprobe: Int, k: Int, pred: Column,
-                           vecCol: String = "embedding",
-                           idCol: String = "vec_id"): DataFrame = {
-    val codebook = collectCodebook(centroids)
-    val probes = probeCids(codebook, qv, nprobe)
-    val scored = corpus
-      .withColumn("cid", nearestCentroid(col(vecCol), codebook))
-      .where(col("cid").isin(probes: _*) && pred)
-      .withColumn("sim", cosine(col(vecCol), vecLit(qv)))
-    TopK.topKRanked(scored, k, Seq(desc("sim"), asc(idCol)))
-      .select(col("rank"), col(idCol))
-  }
-
-  /** IVF with the fixed seed-row codebook (oracle-reproducible variant;
-    * see kmeansCentroids for the fitted codebook). */
-  def ivfSearch(emb: DataFrame, qid: Long, nCentroids: Int, nprobe: Int, k: Int): DataFrame = {
-    val centroids = emb.where(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    ivfSearchWith(emb, centroids, qid, nprobe, k)
-  }
-
-  /** [[ivfSearch]] scored over the 8-bit codec instead of the raw
-    * vectors — the quantized-store ANN path ([[graft.operators
-    * .VectorStore.searchAnn]] with quantized=true), oracle-reproducible:
-    * assignment and probing use raw vectors exactly like [[ivfSearch]],
-    * but similarity is cosine(unpack(packed), q), which the
-    * FuseQuantizedKernels rule collapses into the packed kernel — the
-    * probed lists are scored straight from bytes (4x less I/O on a
-    * stored index). */
-  def ivfSearchQuantized(emb: DataFrame, qid: Long, nCentroids: Int,
-                         nprobe: Int, k: Int): DataFrame = {
-    val centroids = emb.where(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val qv = lookupVec(emb, qid)
-    val codebook = collectCodebook(centroids)
-    val probes = probeCids(codebook, qv, nprobe)
-    val scored = emb.where(col("vec_id") =!= qid)
-      .withColumn("cid", nearestCentroid(col("embedding"), codebook))
-      .where(col("cid").isin(probes: _*))
-      .withColumn("sim", cosine(unpack(pack(col("embedding"))), vecLit(qv)))
-    TopK.topKRanked(scored, k, Seq(desc("sim"), asc("vec_id")))
-      .select(col("rank"), col("vec_id"))
-  }
+      .where(col("cid").isin(probeCids(codebook, qv, nprobe): _*))
+      .withColumn("sim", cosine(scoredVec, vecLit(qv))), k)
 
   /**
    * Batched IVF ANN join — many queries against the corpus through ONE
@@ -478,8 +426,8 @@ object SimilaritySearch {
    *    corpus — the corpus never shuffles — and one bounded heap per
    *    qid keeps its k best (sim desc, cid asc; NaN and null sims
    *    dropped, so a null-vector query returns no rows). No window.
-   * At 100 TB with a [[buildIvfIndex]] layout the same join prunes
-   * non-probed list partitions statically.
+   * On the store's committed index (`cid` a partition column) the
+   * same join prunes non-probed lists statically: `searchManyAnn`.
    *
    * queries: (qid, qvec); corpus: (cid, cvec). Returns (qid, rank, cid).
    */
@@ -528,69 +476,57 @@ object SimilaritySearch {
     }
   }
 
-  /**
-   * Asymmetric-distance PQ search: the query precomputes the per-
-   * (subspace, code) squared-distance table driver-side (nSub x nCodes
-   * doubles — KB metadata); corpus rows score as nSub literal-array
-   * lookups + adds over their CODES, never touching raw vectors. The
-   * I/O story at 100 TB: a PQ-encoded corpus scans at ~4 bytes/vector
-   * (vs 256 for f32, 64 for the 8-bit scalar codec) and the scan stays
-   * a pure projection + TakeOrderedAndProject — zero shuffle.
-   * (Here codes are derived in the same plan; a stored deployment
-   * materializes them at write time like buildIvfIndex does cids.)
-   */
-  def pqSearch(emb: DataFrame, qid: Long, nSub: Int = 8, nCodes: Int = 16,
-               k: Int = 5): DataFrame = {
-    val books = pqCodebooks(emb, nSub, nCodes)
-    val qv = lookupVec(emb, qid)
-    pqSearchVec(emb.where(col("vec_id") =!= qid), qv, books, k)
-  }
-
-  /** Asymmetric squared-distance column for a query over PQ codes:
-    * per-(subspace, code) LUTs computed driver-side as literal arrays,
-    * scored as nSub lookups + adds per row. LUT entries use the same
-    * sequential fold order the oracle's list_sum uses. */
-  def pqAdcDist(vecCol: Column, qv: Seq[Float],
-                books: Seq[Seq[(Long, Seq[Float])]]): Column = {
+  /** Asymmetric-distance (ADC) score of PQ codes against a query. The
+    * query builds one lookup table per subspace on the driver (one
+    * entry per code, each a sequential f64 fold like the oracle's
+    * list_sum); a row scores as nSub literal-array lookups + adds over
+    * its codes, never touching its raw vector. `codes(s)` is subspace
+    * s's code: the cid (0 until nCodes) of its centroid in `books(s)`.
+    * Euclidean scores the squared distance (ascending is nearest).
+    * Cosine scores the cosine of the reconstructed vector from a dot
+    * and a squared-norm table (dot(q, x) ~ sum_s dot(q_s, c_code),
+    * |x|^2 ~ sum_s |c_code|^2), and -2 for a zero reconstruction. */
+  private[operators] def pqAdc(codes: Seq[Column], qv: Seq[Float],
+                               books: Seq[Seq[(Long, Seq[Float])]], metric: String): Column = {
     val dsub = qv.length / books.size
-    val luts: Seq[Seq[Double]] = books.zipWithIndex.map { case (book, s) =>
-      val q = qv.slice(s * dsub, (s + 1) * dsub)
-      book.sortBy(_._1).map { case (_, c) =>
-        var acc = 0.0
-        var i = 0
-        while (i < dsub) {
-          val dd = q(i).toDouble - c(i).toDouble; acc += dd * dd; i += 1
-        }
-        acc
-      }
+    def lut(f: (Seq[Float], Seq[Float]) => Double): Column =
+      books.zip(codes).zipWithIndex.map { case ((book, code), s) =>
+        val qs = qv.slice(s * dsub, (s + 1) * dsub)
+        element_at(array(book.sortBy(_._1).map { case (_, c) => lit(f(qs, c)) }: _*),
+          (code + 1).cast("int"))
+      }.reduce(_ + _)
+    def dot(a: Seq[Float], b: Seq[Float]): Double =
+      a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+    if (metric == "euclidean")
+      lut((q, c) => q.indices.foldLeft(0.0) { (acc, i) =>
+        val d = q(i).toDouble - c(i).toDouble; acc + d * d
+      })
+    else {
+      val n2C = lut((_, c) => dot(c, c))
+      when(n2C > 0.0, lut(dot) / (lit(math.sqrt(dot(qv, qv))) * sqrt(n2C))).otherwise(lit(-2.0))
     }
-    val codes = pqEncode(vecCol, books)
-    codes.zipWithIndex.map { case (cc, s) =>
-      element_at(array(luts(s).map(lit): _*), (cc + 1).cast("int"))
-    }.reduce(_ + _)
   }
 
-  /** Query-by-value PQ search over an arbitrary corpus — the production
-    * entry point ([[pqSearch]] is the qid-addressed oracle form): no
-    * corpus scan for the query vector, books fitted or seeded by the
-    * caller. `refineK > 0` re-scores the top refineK ADC candidates
-    * exactly on their raw vectors (the IVFPQ refine shape
-    * [[graft.operators.VectorStore.searchAnnPq]] uses) — at 4-bit code
-    * granularity ADC ordering alone ranks coarsely, and the refine pass
-    * recovers the exact order at refineK-rows cost. */
+  /** PQ search by query value, books fitted or seeded by the caller:
+    * corpus rows are encoded in the plan ([[pqEncode]]) and ranked by
+    * euclidean ADC ([[pqAdc]]), the scan a pure projection +
+    * TakeOrderedAndProject with zero shuffle. A stored deployment
+    * encodes at write time instead: the store's index keeps the codes
+    * ([[graft.operators.VectorStore.searchAnnPq]] scores them with the
+    * same [[pqAdc]]). `refineK > 0` re-scores the top refineK ADC
+    * candidates exactly on their raw vectors (NaN cosines dropped):
+    * at 4-bit code granularity ADC ordering alone ranks coarsely, and
+    * the refine pass recovers the exact order at refineK-rows cost. */
   def pqSearchVec(corpus: DataFrame, qv: Seq[Float],
                   books: Seq[Seq[(Long, Seq[Float])]], k: Int,
                   refineK: Int = 0): DataFrame = {
-    val scored = corpus.withColumn("dist2", pqAdcDist(col("embedding"), qv, books))
+    val scored = corpus.withColumn("dist2",
+      pqAdc(pqEncode(col("embedding"), books), qv, books, "euclidean"))
     val adcTop = TopK.topKRanked(scored, if (refineK > 0) refineK else k,
       Seq(asc("dist2"), asc("vec_id")))
     if (refineK <= 0) adcTop.select(col("rank"), col("vec_id"))
-    else {
-      val exact = adcTop.drop("rank", "dist2")
-        .withColumn("sim", cosine(col("embedding"), vecLit(qv)))
-      TopK.topKRanked(exact, k, Seq(desc("sim"), asc("vec_id")))
-        .select(col("rank"), col("vec_id"))
-    }
+    else topBySim(adcTop.drop("rank", "dist2")
+      .withColumn("sim", cosine(col("embedding"), vecLit(qv))), k)
   }
 
   /**
@@ -717,27 +653,6 @@ object SimilaritySearch {
     val exact = coarse.drop("rank", "pre_sim")
       .withColumn("sim", cosine(col("embedding"), vecLit(qv)))
     TopK.topKRanked(exact, k, Seq(desc("sim"), asc("vec_id")))
-      .select(col("rank"), col("vec_id"))
-  }
-
-  // ---- store-integrated IVF index: cid as a partition column ----
-
-  /** Materialize the corpus partitioned by assigned centroid: at 100 TB
-    * a probe then reads nprobe/C of the files (static partition
-    * pruning), not the whole corpus. */
-  def buildIvfIndex(emb: DataFrame, codebook: Seq[(Long, Seq[Float])], path: String): Unit =
-    emb.withColumn("cid", nearestCentroid(col("embedding"), codebook))
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-
-  /** Probe search over a [[buildIvfIndex]] layout: the cid IN-list
-    * becomes static partition pruning — non-probed lists are never read. */
-  def searchIvfIndex(spark: SparkSession, path: String, codebook: Seq[(Long, Seq[Float])],
-                     qv: Seq[Float], nprobe: Int, k: Int): DataFrame = {
-    val probes = probeCids(codebook, qv, nprobe)
-    val scored = spark.read.parquet(path)
-      .where(col("cid").isin(probes: _*))
-      .withColumn("sim", cosine(col("embedding"), vecLit(qv)))
-    TopK.topKRanked(scored, k, Seq(desc("sim"), asc("vec_id")))
       .select(col("rank"), col("vec_id"))
   }
 }

@@ -28,8 +28,8 @@ import graft.functions.{GraftFunctions, QueryBatch, TopKHeaps}
  *    (`VectorStore.searchManyAnn`, `SimilaritySearch.ivfJoin`).
  * [[perQueryTopKWindow]] is left for query sides that are not bounded
  * (the banded-LSH joins). All rank by (sim desc, cid asc). The heaps
- * drop NaN and null sims; the window keeps them, so its callers filter
- * NaN first.
+ * drop NaN and null sims; the window keeps them, so the banded-LSH
+ * candidate stream drops NaN before it (`lshScoredCandidates`).
  */
 object TopK {
 

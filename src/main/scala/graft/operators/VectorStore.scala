@@ -2982,18 +2982,18 @@ class VectorStore(spark: SparkSession, val root: String,
   /**
    * IVF-PQ search (the FAISS IVFPQ shape): probe pruning like
    * [[searchAnn]], but the probed lists are PRESELECTED by asymmetric
-   * PQ distance — per-(subspace, code) lookup tables computed from the
-   * query driver-side, scored as `PqSub` literal-array lookups per row
-   * over the stored 8-byte codes — and only the `refineK` ADC survivors
-   * are re-scored exactly on their raw vectors. At 100 TB the ADC pass
-   * reads codes (8 B/vector) instead of f32 vectors (256 B) across the
-   * probed lists; exact scoring touches refineK rows.
+   * PQ distance over the stored 8-byte codes
+   * ([[SimilaritySearch.pqAdc]]: per-subspace lookup tables built from
+   * the query on the driver, `PqSub` literal-array lookups per row) —
+   * and only the `refineK` ADC survivors are re-scored exactly on their
+   * raw vectors. At 100 TB the ADC pass reads codes (8 B/vector)
+   * instead of f32 vectors (256 B) across the probed lists; exact
+   * scoring touches refineK rows.
    *
-   * Cosine mode approximates via reconstructed dot and norm LUTs
-   * (dot(q, x) ~ sum_s dot(q_s, c_code) and |x|^2 ~ sum_s |c_code|^2);
-   * projected stores use the euclidean distance^2 LUT directly. The
-   * exact refine pass makes the end result's quality that of the
-   * preselect recall, not the code granularity.
+   * A raw store ranks by the reconstructed cosine, a projected store by
+   * the euclidean distance^2 (the store's metric). The exact refine
+   * pass makes the end result's quality that of the preselect recall,
+   * not the code granularity.
    */
   def searchAnnPq(queryVec: Seq[Float], k: Int = 10, nprobe: Int = 0,
                   refineK: Int = 0): DataFrame = {
@@ -3005,26 +3005,8 @@ class VectorStore(spark: SparkSession, val root: String,
     val qv = mode.vec(queryVec)
     val metric = mode.metric
     val pruned = annData(ix).where(col("cid").isin(probeRule(ix, k, nprobe, Nil)(qv): _*))
-    val dsub = qv.length / books.size
-    def lutCol(f: (Seq[Float], Seq[Float]) => Double): Column =
-      books.zipWithIndex.map { case (book, s) =>
-        val qs = qv.slice(s * dsub, (s + 1) * dsub)
-        val lut = book.map { case (_, cv) => f(qs, cv) }
-        element_at(array(lut.map(lit): _*), element_at(col("pq"), s + 1) + 1)
-      }.reduce(_ + _)
-    def dot(a: Seq[Float], b: Seq[Float]): Double =
-      a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
-    val adc = metric match {
-      case "euclidean" =>
-        lutCol((q, c) => q.indices.foldLeft(0.0) { (acc, i) =>
-          val d = q(i).toDouble - c(i).toDouble; acc + d * d
-        })
-      case _ =>
-        val qn = math.sqrt(dot(qv, qv))
-        val dotC = lutCol(dot)
-        val n2C = lutCol((_, c) => dot(c, c))
-        when(n2C > 0.0, dotC / (lit(qn) * sqrt(n2C))).otherwise(lit(-2.0))
-    }
+    val adc = SimilaritySearch.pqAdc(
+      books.indices.map(s => element_at(col("pq"), s + 1)), qv, books, metric)
     val order =
       if (metric == "euclidean") Seq(asc("adc"), asc("id"))
       else Seq(desc("adc"), asc("id"))

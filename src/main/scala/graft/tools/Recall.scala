@@ -86,9 +86,8 @@ object Recall {
           .map(r => (qid, r.getLong(0)))
       }.toSet
 
-    val centroids = emb.where(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val codebook = SimilaritySearch.collectCodebook(centroids)
+    val codebook = SimilaritySearch.collectCodebook(emb.where(col("vec_id") < 16)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
     val books = SimilaritySearch.pqCodebooks(emb, 8, 16)
     // fitted 8-bit books, full-corpus fit up to 50k rows, a ~1/7
     // deterministic sample beyond (production fits on a sample too —
@@ -156,7 +155,7 @@ object Recall {
       storePqNarrow,
       single("lsh")(qv => SimilaritySearch.lshSearchVec(corpusEmb, qv, k, d)),
       single("ivf")(qv =>
-        SimilaritySearch.ivfSearchVec(corpusEmb, centroids, qv, nprobe = 2, k = k)),
+        SimilaritySearch.ivfSearchVec(corpusEmb, codebook, qv, nprobe = 2, k = k)),
       single("pq")(qv => SimilaritySearch.pqSearchVec(corpusEmb, qv, books, k)),
       // the production IVFPQ shape (searchAnnPq): 8-bit books FITTED on
       // a deterministic sample + ADC preselect + exact refine — the

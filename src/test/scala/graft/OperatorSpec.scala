@@ -203,8 +203,9 @@ class OperatorSpec extends AnyFunSuite {
   test("k-means IVF: nprobe=4 of 8 clusters recalls most of brute-force top-10") {
     import graft.operators.SimilaritySearch
     val emb = Tables.load(spark, dir, "embeddings")
-    val centroids = SimilaritySearch.kmeansCentroids(emb, k = 8)
-    val ivf = SimilaritySearch.ivfSearchWith(emb, centroids, qid = 3L, nprobe = 4, k = 10)
+    val codebook = SimilaritySearch.collectCodebook(SimilaritySearch.kmeansCentroids(emb, k = 8))
+    val (qv, corpus) = SimilaritySearch.queryById(emb, 3L)
+    val ivf = SimilaritySearch.ivfSearchVec(corpus, codebook, qv, nprobe = 4, k = 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val brute = SparkEntry.queries("knn_topk")(spark, dir) // qid 0; redo for qid 3
     val q = emb.where(col("vec_id") === 3).select(col("embedding").as("qv"))
@@ -771,7 +772,8 @@ class OperatorSpec extends AnyFunSuite {
     val emb = Tables.load(spark, "/root/testdata/sf0.01", "embeddings")
     val qids = Seq(0L, 1L, 2L, 3L, 42L, 100L)
     val recalls = qids.map { qid =>
-      val lsh = SimilaritySearch.lshSearch(emb, qid = qid, k = 5, d = 64)
+      val (qv, corpus) = SimilaritySearch.queryById(emb, qid)
+      val lsh = SimilaritySearch.lshSearchVec(corpus, qv, k = 5, d = 64)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       assert(lsh.size == 5, s"qid=$qid: expected 5 rows, got ${lsh.size} (thin buckets?)")
       val q = emb.where(col("vec_id") === qid).select(col("embedding").as("qv"))
@@ -783,6 +785,27 @@ class OperatorSpec extends AnyFunSuite {
     }
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.5, s"mean LSH recall too low: $mean (per-query $recalls)")
+  }
+
+  test("LSH similarity join drops a zero-vector corpus row; the other rows are unchanged") {
+    import graft.operators.SimilaritySearch
+    val emb = Tables.load(spark, dir, "embeddings")
+    val queries = emb.where(col("vec_id") < 100)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val corpus = emb.where(col("vec_id") >= 100)
+    // the zero vector's band keys are all 0: some query must share one
+    // for the zero row to become a candidate at all
+    val colliding = SimilaritySearch.bandedKeys(queries, "qvec", 64,
+      graft.OracleSql.EmbLshBands, graft.OracleSql.EmbLshRows).where(col("key") === 0L).count()
+    assert(colliding > 0, "no query collides with the zero vector")
+    def joined(c: org.apache.spark.sql.DataFrame) =
+      SimilaritySearch.lshJoin(queries,
+          c.select(col("vec_id").as("cid"), col("embedding").as("cvec")), k = 5, d = 64)
+        .select("qid", "rank", "cid").collect()
+        .map(r => (r.getLong(0), r.getInt(1).toLong, r.getLong(2))).toSet
+    val got = joined(withZeroRow(corpus))
+    assert(!got.exists(_._3 == -1L), got.filter(_._3 == -1L).toSeq.sortBy(_._1).take(5).mkString(","))
+    assert(got == joined(corpus))
   }
 
   test("LSH similarity join: equi-join candidates only, bounded recall vs brute force") {
@@ -992,7 +1015,38 @@ class OperatorSpec extends AnyFunSuite {
     for (r <- seedCodes; s <- 0 until 8)
       assert(r.getLong(1 + s) == r.getLong(0), s"seed ${r.getLong(0)} subspace $s")
     // and the search returns exactly k ranked rows
-    assert(SimilaritySearch.pqSearch(emb, qid = 3L).count() == 5)
+    val (qv, corpus) = SimilaritySearch.queryById(emb, 3L)
+    assert(SimilaritySearch.pqSearchVec(corpus, qv, books, k = 5).count() == 5)
+  }
+
+  /** The sf0.001 embeddings plus one all-zero vector (vec_id -1): its
+    * cosine against any query is NaN. */
+  private def withZeroRow(emb: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    emb.select("vec_id", "embedding").unionByName(Seq((-1L, Seq.fill(64)(0f))).toDF("vec_id", "embedding"))
+  }
+
+  test("single-query searches drop a zero-vector row's NaN score instead of ranking it first") {
+    import graft.operators.SimilaritySearch
+    val emb = Tables.load(spark, dir, "embeddings")
+    val (qv, corpus) = SimilaritySearch.queryById(emb, 3L)
+    val zeroed = withZeroRow(corpus)
+    val codebook = SimilaritySearch.collectCodebook(emb.where(col("vec_id") < 16)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
+    val books = SimilaritySearch.pqCodebooks(emb, nSub = 8, nCodes = 16)
+    // every bucket, every list and every ADC candidate is probed, so the
+    // zero row reaches the ranking in all three searches
+    val searches = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "lsh" -> (c => SimilaritySearch.lshSearchVec(c, qv, k = 5, d = 64, probeHamming = 8)),
+      "ivf" -> (c => SimilaritySearch.ivfSearchVec(c, codebook, qv, nprobe = 16, k = 5)),
+      "pq" -> (c => SimilaritySearch.pqSearchVec(c, qv, books, k = 5, refineK = 1000)))
+    for ((name, search) <- searches) {
+      def ranked(c: org.apache.spark.sql.DataFrame) =
+        search(c).orderBy("rank").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val got = ranked(zeroed)
+      assert(got.size == 5 && !got.exists(_._2 == -1L), s"$name: $got")
+      assert(got == ranked(corpus), name)
+    }
   }
 
   test("tf-idf keywords: a doc-unique token outranks a ubiquitous one") {

@@ -513,18 +513,20 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.{SparkPlan => Phys}
     def has(p: Phys)(f: PartialFunction[Phys, Boolean]) = p.find(n => f.applyOrElse(n, (_: Phys) => false)).isDefined
     def window(p: Phys) = has(p) { case _: WindowExec | _: WindowGroupLimitExec => true }
-    val exactRows = Seq("knn_multiquery", "knn_multiquery_heap", "knn_classify")
-    val plans = (exactRows :+ "ann_ivf_join").map(n => n -> SparkEntry.queries(n)(spark, dir).queryExecution.sparkPlan).toMap
+    val exactRows = Seq("knn_multiquery", "knn_classify")
+    val ivfRows = Seq("knn_multiquery_heap", "ann_ivf_join")
+    val plans = (exactRows ++ ivfRows).map(n => n -> SparkEntry.queries(n)(spark, dir).queryExecution.sparkPlan).toMap
     for ((n, p) <- plans) {
       assert(!window(p) && p.toString.contains("graft_topk_heaps"), s"$n:\n${p.treeString.take(3000)}")
       assert(!exactRows.contains(n) || !p.toString.contains("Join"), s"$n:\n${p.treeString.take(3000)}")
     }
     // ivfJoin: the probe is driver arithmetic, not an exploded codebook;
     // the one generator unpacks the heaps above the aggregate
-    val ivf = plans("ann_ivf_join")
-    val joins = ivf.collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.nonEmpty && joins.forall(j => !has(j) { case _: GenerateExec => true }),
-      ivf.treeString.take(3000))
+    for (n <- ivfRows) {
+      val joins = plans(n).collect { case j: BroadcastHashJoinExec => j }
+      assert(joins.nonEmpty && joins.forall(j => !has(j) { case _: GenerateExec => true }),
+        s"$n:\n${plans(n).treeString.take(3000)}")
+    }
     val store = new VectorStore(spark, Files.createTempDirectory("graft-heaps").toString)
     import spark.implicits._
     store.insert((0 until 32).map { i =>
@@ -593,18 +595,18 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("IVF index layout: probes prune partitions statically (cid partition column)") {
-    import graft.operators.SimilaritySearch
-    val emb = graft.core.Tables.load(spark, dir, "embeddings")
-    val centroids = emb.where(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val codebook = SimilaritySearch.collectCodebook(centroids)
-    val path = Files.createTempDirectory("graft-ivf").toString + "/idx"
-    SimilaritySearch.buildIvfIndex(emb, codebook, path)
-    val qv = emb.where(col("vec_id") === 7).select("embedding").head().getSeq[Float](0)
-    val q = SimilaritySearch.searchIvfIndex(spark, path, codebook, qv, nprobe = 2, k = 5)
+    // the store's committed ANN index is the cid-partitioned layout
+    val store = new VectorStore(spark, Files.createTempDirectory("graft-ivf").toString)
+    val vt = graft.core.Tables.vectorTable(spark, dir)
+      .select(col("id").cast("string").as("id"), col("vector"), col("content"), col("tags"))
+    store.insert(vt)
+    store.buildAnnIndex(4)
+    val qv = vt.where(col("id") === "7").select("vector").head().getSeq[Float](0)
+    val q = store.searchAnn(qv, k = 5, nprobe = 2)
     val scanLine = plan(q).linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(scanLine.contains("cid"), s"no partition filter on cid:\n$scanLine")
     assert(q.count() == 5)
+    store.clear()
   }
 
   test("bucketed co-located join plans with no Exchange (amortized shuffle)") {

@@ -1135,6 +1135,67 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
+  test("IVF-PQ: searchAnnPq ranks as the per-subspace lookup-table formulation, raw and projected") {
+    import graft.functions.GraftFunctions.{cosine, euclidean, vecLit}
+    // the ADC formulation searchAnnPq carried before it shared
+    // SimilaritySearch.pqAdc: one literal table per subspace indexed by
+    // the stored `pq` codes, cosine from dot and squared-norm tables;
+    // every list probed, so the index data is the candidate set
+    def expected(store: VectorStore, q: Seq[Float], k: Int, refineK: Int): Seq[String] = {
+      val dir = new java.io.File(s"${store.root}/ann").listFiles()
+        .filter(_.getName.startsWith("v")).maxBy(_.getName.stripPrefix("v").toInt).getPath
+      val books = spark.read.parquet(s"$dir/_pq_codebooks.parquet")
+        .select("sub", "cid", "cvec").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Float](2)))
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map(_._2.toSeq.sortBy(_._2).map { case (_, cid, cv) => (cid, cv) })
+      val projected = store.isProjected
+      val qv = if (projected) graft.operators.Pca.projectOne(store.loadModel(), q).toSeq else q
+      val dsub = qv.length / books.size
+      def lutCol(f: (Seq[Float], Seq[Float]) => Double) =
+        books.zipWithIndex.map { case (book, s) =>
+          val qs = qv.slice(s * dsub, (s + 1) * dsub)
+          val lut = book.map { case (_, cv) => f(qs, cv) }
+          element_at(array(lut.map(lit): _*), element_at(col("pq"), s + 1) + 1)
+        }.reduce(_ + _)
+      def dot(a: Seq[Float], b: Seq[Float]): Double =
+        a.indices.foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
+      val (adc, sim) =
+        if (projected)
+          (lutCol((a, c) => a.indices.foldLeft(0.0) { (acc, i) =>
+            val d = a(i).toDouble - c(i).toDouble; acc + d * d
+          }), -euclidean(col("vector"), vecLit(qv)))
+        else {
+          val n2C = lutCol((_, c) => dot(c, c))
+          (when(n2C > 0.0, lutCol(dot) / (lit(math.sqrt(dot(qv, qv))) * sqrt(n2C))).otherwise(lit(-2.0)),
+            cosine(col("vector"), vecLit(qv)))
+        }
+      spark.read.parquet(dir).withColumn("adc", adc)
+        .orderBy(if (projected) asc("adc") else desc("adc"), asc("id"))
+        .limit(if (refineK > 0) refineK else 4 * k)
+        .withColumn("similarity", sim).where(!isnan(col("similarity")))
+        .orderBy(desc("similarity"), asc("id")).limit(k)
+        .collect().map(_.getAs[String]("id")).toSeq
+    }
+    val vt = graft.core.Tables.vectorTable(spark, "/root/testdata/sf0.001")
+      .select(col("id").cast("string").as("id"), col("vector"), col("content"), col("tags"))
+    val q = vt.where(col("id") === "0").select("vector").head().getSeq[Float](0)
+    for (project <- Seq(false, true)) {
+      val store = freshStore()
+      store.insert(vt)
+      if (project) store.projectAll(16)
+      store.buildAnnIndex(4)
+      assert(store.isProjected == project)
+      for (refineK <- Seq(0, 40)) {
+        val got = store.searchAnnPq(q, k = 10, nprobe = 4, refineK = refineK)
+          .collect().map(_.getAs[String]("id")).toSeq
+        assert(got.size == 10, s"projected=$project refineK=$refineK: $got")
+        assert(got == expected(store, q, 10, refineK), s"projected=$project refineK=$refineK")
+      }
+      store.clear()
+    }
+  }
+
   test("projectAll crash recovery: committed-but-unrenamed basis is completed, never refit") {
     val store = freshStore()
     val rows = (0 until 30).map { i =>
