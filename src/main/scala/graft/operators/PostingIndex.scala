@@ -38,10 +38,10 @@ import org.apache.spark.sql.functions._
  * vacuum — holds `_writer_lock` (atomic create-if-absent, spin up to
  * `lockTimeoutMs`, loud failure carrying the lock's age so a slow
  * writer is distinguishable from crash wreckage). Readers are
- * lock-free (they only ever see committed renames). The legacy flat
- * layout written by [[Search.buildPostingIndex]] (no
- * `_postings.json`) keeps working everywhere —
- * [[Search.phraseMatchIndexed]] dispatches on the meta file.
+ * lock-free (they only ever see committed renames). The flat
+ * rebuild-only layout that [[Search.buildPostingIndex]] writes (no
+ * `_postings.json`) is the other layout [[Search.phraseMatchIndexed]]
+ * reads; it dispatches on the meta file.
  */
 object PostingIndex {
 
@@ -61,8 +61,8 @@ object PostingIndex {
 
   private def metaPath(path: String) = new Path(s"$path/_postings.json")
 
-  /** True when `path` is a versioned posting index (vs the legacy flat
-    * layout or nothing at all). */
+  /** True when `path` is a versioned posting index (vs the flat
+    * [[Search.buildPostingIndex]] layout or nothing at all). */
   def isVersioned(spark: SparkSession, path: String): Boolean =
     fsOf(spark, path).exists(metaPath(path))
 
@@ -76,11 +76,11 @@ object PostingIndex {
         s"graft: malformed _postings.json at $path: $s"))
   }
 
-  // ---- commit protocol: stage -> rename -> marker LAST, with
-  // legacy-vs-wreckage disambiguation — ONE implementation shared with
-  // [[VectorStore]]; see [[VersionedCommit]] (VERDICT r14 #4, r15 #4;
-  // ADVICE r15 #2). Version roots are `v<k>` Dirs under the index
-  // path; gen dirs are `gen=<g>` Dirs under the live version root. ----
+  // ---- commit protocol: stage -> rename -> marker LAST; a version or
+  // gen dir is committed iff it carries the marker — ONE implementation
+  // shared with [[VectorStore]]; see [[VersionedCommit]] (VERDICT r14
+  // #4, r15 #4). Version roots are `v<k>` Dirs under the index path;
+  // gen dirs are `gen=<g>` Dirs under the live version root. ----
 
   private def versionsDir(spark: SparkSession, path: String) =
     VersionedCommit.Dir(fsOf(spark, path), path)
@@ -93,7 +93,7 @@ object PostingIndex {
       .getOrElse(throw new IllegalStateException(
         s"graft: posting index at $path has no committed version"))
 
-  /** ALL gen dirs of v<k> — allocation and adoption see partials too. */
+  /** ALL gen dirs of v<k>, crash-partial ones included. */
   private def gensOf(spark: SparkSession, path: String, v: Int): Seq[Int] =
     gensDir(spark, path, v).all()
 
@@ -107,9 +107,9 @@ object PostingIndex {
         posexplode(Dedup.tokens(col(textCol))).as(Seq("pos", "tok")))
       .withColumn("tb", (crc32(col("tok").cast("binary")) % nBuckets).cast("int"))
 
-  /** Stage `df` (partitioned by tb) and one-rename it to `dest`.
+  /** Stage `df` (partitioned by tb) and commit it as `v<v>/gen=<g>`.
     * Clears any stale stage left by a crashed writer first. */
-  private def stageAndCommit(df: DataFrame, path: String, dest: String,
+  private def stageAndCommit(df: DataFrame, path: String, v: Int, g: Int,
                              genMeta: String): Unit = {
     val spark = df.sparkSession
     val fs = fsOf(spark, path)
@@ -119,25 +119,19 @@ object PostingIndex {
       .write.mode(SaveMode.Overwrite).partitionBy("tb").parquet(stage.toString)
     val out = fs.create(new Path(s"$stage/_gen.json"), true)
     out.write(genMeta.getBytes("UTF-8")); out.close()
-    val destPath = new Path(dest)
-    fs.mkdirs(destPath.getParent)
-    require(!fs.exists(destPath), s"graft: posting commit target $dest exists")
-    require(fs.rename(stage, destPath),
-      s"graft: posting index commit rename to $dest failed")
     // markers strictly LAST: gen dir first, then the version dir —
     // readers require both, so a crash anywhere above leaves the
     // previous committed state fully intact
-    fs.create(new Path(destPath, VersionedCommit.CommittedMarker), true).close()
-    fs.create(new Path(destPath.getParent, VersionedCommit.CommittedMarker), true).close()
+    gensDir(spark, path, v).commit(stage, g, "posting index")
+    versionsDir(spark, path).mark(v)
   }
 
   /** Initialize the index from the current corpus: meta + v<k>/gen=0.
-    * Allocation (not a hardcoded v0) + the format sentinel it plants
-    * make a CRASHED first create recoverable (ADVICE r15 #2): the
-    * partial version dir is sentinel-marked wreckage — invisible to
-    * readers, skipped by this retry (which commits past it), reaped by
-    * [[vacuum]] — where a hardcoded v0 target wedged permanently on
-    * `commit target exists`. */
+    * Allocation (not a hardcoded v0) makes a CRASHED first create
+    * recoverable (ADVICE r15 #2): its partial version dir carries no
+    * marker, so it is wreckage — invisible to readers, skipped by this
+    * retry (which commits past it), reaped by [[vacuum]] — where a
+    * hardcoded v0 target wedged permanently on `commit target exists`. */
   def create(docs: DataFrame, path: String, nBuckets: Int = 64,
              idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(nBuckets > 0, s"graft: buckets $nBuckets must be positive")
@@ -147,8 +141,8 @@ object PostingIndex {
       require(!fs.exists(metaPath(path)),
         s"graft: posting index already exists at $path — use append/compact")
       val v = versionsDir(spark, path).allocate()
-      stageAndCommit(postings(docs, nBuckets, idCol, textCol), path,
-        s"$path/v$v/gen=0", s"""{"op":"create"}""")
+      stageAndCommit(postings(docs, nBuckets, idCol, textCol), path, v, 0,
+        s"""{"op":"create"}""")
       val out = fs.create(metaPath(path), true)
       out.write(s"""{"buckets":$nBuckets}""".getBytes("UTF-8")); out.close()
     }
@@ -165,23 +159,19 @@ object PostingIndex {
     withWriterLock(spark, path) {
       val b = buckets(spark, path)
       val v = liveVersion(spark, path)
-      // adopt a legacy (pre-marker/pre-sentinel) index under the lock:
-      // stamp its version + gen dirs committed so the mixed
-      // marked/unmarked state cannot hide them from readers; then
-      // allocate past ALL gen dirs (a crashed partial gen must never
-      // be re-targeted — its rename would fail)
-      versionsDir(spark, path).adopt()
+      // allocate past ALL gen dirs: a crashed partial gen must never be
+      // re-targeted (its rename would fail)
       val g = gensDir(spark, path, v).allocate()
-      stageAndCommit(postings(docs, b, idCol, textCol), path,
-        s"$path/v$v/gen=$g", s"""{"op":"append","version":$v,"gen":$g}""")
+      stageAndCommit(postings(docs, b, idCol, textCol), path, v, g,
+        s"""{"op":"append","version":$v,"gen":$g}""")
     }
   }
 
   /** Every committed posting of the live version: (doc_id, pos, tok,
     * tb, gen) — one partition-discovered scan, statically prunable on
-    * tb across all generations. Crash-partial gen dirs (marker-less in
-    * a marked version) are excluded via an explicit path list under
-    * the same basePath, so partition columns survive. */
+    * tb across all generations. Crash-partial gen dirs (no marker) are
+    * excluded via an explicit path list under the same basePath, so
+    * partition columns survive. */
   def scan(spark: SparkSession, path: String): DataFrame = {
     val v = liveVersion(spark, path)
     val all = gensOf(spark, path, v)
@@ -220,7 +210,7 @@ object PostingIndex {
       val merged = scan(spark, path).select("doc_id", "pos", "tok", "tb")
       // allocate past ALL version dirs incl. a crashed partial compact
       val next = versionsDir(spark, path).allocate()
-      stageAndCommit(merged, path, s"$path/v$next/gen=0",
+      stageAndCommit(merged, path, next, 0,
         s"""{"op":"compact","from_version":$v,"merged_gens":${gens.size}}""")
     }
 

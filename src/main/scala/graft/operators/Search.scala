@@ -282,7 +282,7 @@ object Search {
    *
    * Serves both layouts: a versioned [[PostingIndex]] (generations are
    * just more partition directories under the same static tb filter —
-   * `buckets` comes from the index meta) and the legacy flat
+   * `buckets` comes from the index meta) and the flat rebuild-only
    * [[buildPostingIndex]] tree (pass its `buckets`).
    */
   def phraseMatchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,

@@ -31,8 +31,9 @@ import graft.functions.GraftFunctions._
  * Each family has one single-query search, and it takes the query
  * vector by value: [[lshSearchVec]], [[ivfSearchVec]], [[pqSearchVec]].
  * The oracle rows and tests address a query by row id through
- * [[queryById]]. All three drop NaN scores before ranking, as the
- * store's scans and the heaps do.
+ * [[queryById]]. All three, and the matryoshka preselect + refine
+ * searches, drop NaN scores before ranking, as the store's scans and
+ * the heaps do.
  */
 object SimilaritySearch {
 
@@ -590,13 +591,15 @@ object SimilaritySearch {
   }
 
   /** Coarse stage over a [[buildPrefixIndex]] layout — split out so the
-    * plan gate can assert its scan schema EXCLUDES `embedding`. */
+    * plan gate can assert its scan schema EXCLUDES `embedding`. A
+    * zero-prefix row's NaN score is dropped, not ranked first. */
   private[graft] def matryoshkaCoarse(base: DataFrame, qv: Seq[Float],
                                       dims: Int, refineK: Int): DataFrame =
     TopK.topKRanked(
       base.select(col("vec_id"),
         graft.functions.GraftFunctions.cosine(
-          col("vec_prefix"), vecLit(qv.take(dims))).as("pre_sim")),
+          col("vec_prefix"), vecLit(qv.take(dims))).as("pre_sim"))
+        .where(!isnan(col("pre_sim"))),
       refineK, Seq(desc("pre_sim"), asc("vec_id")))
 
   /**
@@ -635,6 +638,7 @@ object SimilaritySearch {
     val exact = base.where(col("vec_id").isin(ids: _*))
       .select(col("vec_id"),
         graft.functions.GraftFunctions.cosine(col("embedding"), vecLit(qv)).as("sim"))
+      .where(!isnan(col("sim")))
     TopK.topKRanked(exact, k, Seq(desc("sim"), asc("vec_id")))
       .select(col("rank"), col("vec_id"))
   }
@@ -645,13 +649,17 @@ object SimilaritySearch {
       s"graft: prefix dims $dims outside 1..${qv.length}")
     require(refineK >= k, s"graft: refineK $refineK must be >= k $k")
     graft.functions.GraftFunctions.register(corpus.sparkSession)
+    // NaN scores (a zero vector or zero prefix) are dropped before each
+    // ranking, as in every other search
     val pre = corpus
       .withColumn("pre_sim",
         cosine(slice(col("embedding"), 1, dims), vecLit(qv.take(dims))))
+      .where(!isnan(col("pre_sim")))
     val coarse = TopK.topKRanked(pre, refineK,
       Seq(desc("pre_sim"), asc("vec_id")))
     val exact = coarse.drop("rank", "pre_sim")
       .withColumn("sim", cosine(col("embedding"), vecLit(qv)))
+      .where(!isnan(col("sim")))
     TopK.topKRanked(exact, k, Seq(desc("sim"), asc("vec_id")))
       .select(col("rank"), col("vec_id"))
   }

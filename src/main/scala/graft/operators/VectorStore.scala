@@ -36,7 +36,11 @@ import graft.OracleSql
  * Delta/Iceberg retention model).
  * Manifest deltas are scoped to their base version, so a new base
  * atomically supersedes every outstanding delta — no stale-delta
- * resurrection window.
+ * resurrection window. The committed manifest is the ONE reading of
+ * the store (Delta's rule: a file the log does not name is not in the
+ * table): data it does not name — a crashed insert's rows, a crashed
+ * rewrite's gens, anything under a root with no committed manifest —
+ * is debris that reads as zero rows and that [[vacuum]] reaps.
  *
  * Tag-superset partition pruning (reference src/db.rs:687-706) is done
  * driver-side: the distinct (tag_key -> tags) manifest is tiny (one row
@@ -145,87 +149,45 @@ class VectorStore(spark: SparkSession, val root: String,
       org.apache.spark.sql.types.IntegerType)))
 
   // ---- versioned-dir commit protocol: stage -> rename -> marker
-  // LAST, with legacy-vs-wreckage disambiguation via the store-level
-  // format sentinel. ONE implementation shared with [[PostingIndex]] —
-  // see [[VersionedCommit]] for the full contract (VERDICT r14 #4,
-  // r15 #4; ADVICE r15 #2). These thin aliases keep the call sites
-  // readable. ----
+  // LAST; a version dir is committed iff it carries the marker. ONE
+  // implementation shared with [[PostingIndex]] — see
+  // [[VersionedCommit]] for the full contract (VERDICT r14 #4, r15
+  // #4). ----
 
   private def vdir(dirPath: String, suffix: String = "") =
     VersionedCommit.Dir(fs, dirPath, suffix = suffix)
 
-  private def committedVersionsIn(dirPath: String, suffix: String = ""): Seq[Int] =
-    vdir(dirPath, suffix).committed()
-
-  /** Every version on disk including crash-partial ones — allocation
-    * and vacuum must see them all. */
-  private def allVersionsIn(dirPath: String, suffix: String = ""): Seq[Int] =
-    vdir(dirPath, suffix).all()
-
-  /** Next version number (adopts genuine legacy stores, skips past
-    * crash-partial dirs — [[VersionedCommit.Dir.allocate]]). Writer
+  /** Commit the staged `tmp` as the next version under `dirPath`
+    * ([[VersionedCommit.Dir.commit]]); returns that version. Writer
     * lock held by caller. */
-  private def allocateVersion(dirPath: String, suffix: String = ""): Int =
-    vdir(dirPath, suffix).allocate()
-
-  /** Rename the staged dir to its final versioned name and mark it
-    * committed — the marker write is strictly LAST. */
-  private def commitVersionDir(tmp: Path, dst: Path, what: String): Unit = {
-    require(fs.rename(tmp, dst), s"graft: $what commit rename to $dst failed")
-    fs.create(new Path(dst, VersionedCommit.CommittedMarker), true).close()
+  private def commitNextVersion(dirPath: String, tmp: Path, what: String,
+                                suffix: String = ""): Int = {
+    val d = vdir(dirPath, suffix)
+    val next = d.allocate()
+    d.commit(tmp, next, what)
+    next
   }
 
-  private def manifestVersions(): Seq[Int] =
-    committedVersionsIn(manifestDir, ".parquet")
+  private def manifestVersions(): Seq[Int] = vdir(manifestDir, ".parquet").committed()
 
   private def currentManifestVersion: Option[Int] = manifestVersions().lastOption
   private def basePathFor(v: Int) = s"$manifestDir/v$v.parquet"
   private def deltaPathFor(v: Int) = s"$manifestDeltaRoot/v$v"
 
-  /** Live (tag_key, gen) pairs discovered from the data layout itself —
-    * the bootstrap/legacy path when no manifest base exists (and the
-    * seed for the first base). Takes the max gen per partition; under a
-    * manifest-less store there are no committed-vs-orphan distinctions
-    * to draw. */
-  private def listingLive(): Seq[(String, Int)] =
-    if (!fs.exists(new Path(dataPath))) Nil
-    else fs.listStatus(new Path(dataPath)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("tag_key="))
-      .flatMap { d =>
-        val gens = fs.listStatus(d.getPath).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toInt)
-        if (gens.isEmpty) None
-        else Some((d.getPath.getName.stripPrefix("tag_key="), gens.max))
-      }
-
   private def genDir(key: String, gen: Int) = s"$dataPath/tag_key=$key/gen=$gen"
 
   /** The (tag_key, tags, gen, tags_csv) snapshot spec = newest base
-    * version + its scoped delta files; falls back to data-layout
-    * discovery for stores written before the manifest existed. A new
-    * base version atomically supersedes ALL deltas of the old version
-    * (deltas live under manifest_delta/v<k>), so a crash can never
-    * resurrect a pruned tag set from a stale delta. `tags_csv` =
-    * ",t1,t2," — a delimiter-wrapped rendering so superset tests are
-    * string `contains` predicates, which Spark's dynamic-partition-
-    * pruning planner recognizes as selective (`array_contains` is not
-    * in its isLikelySelective list). */
+    * version + its scoped delta files; no rows while no manifest is
+    * committed. A new base version atomically supersedes ALL deltas of
+    * the old version (deltas live under manifest_delta/v<k>), so a
+    * crash can never resurrect a pruned tag set from a stale delta.
+    * `tags_csv` = ",t1,t2," — a delimiter-wrapped rendering so superset
+    * tests are string `contains` predicates, which Spark's
+    * dynamic-partition-pruning planner recognizes as selective
+    * (`array_contains` is not in its isLikelySelective list). */
   def manifest(): DataFrame = {
-    val resolved = currentManifestVersion match {
-      case Some(v) => manifestAt(v)
-      case None =>
-        listingLive() match {
-          case Seq() =>
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], manifestSchema)
-          case live =>
-            spark.read.option("basePath", dataPath)
-              .parquet(live.map { case (k, g) => genDir(k, g) }: _*)
-              .select(col("tag_key").cast("string"),
-                normTags(col("tags")).as("tags"), col("gen").cast("int"))
-              .distinct()
-        }
-    }
+    val resolved = currentManifestVersion.map(manifestAt).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], manifestSchema))
     resolved.withColumn("tags_csv",
       concat(lit(","), concat_ws(",", col("tags")), lit(",")))
   }
@@ -245,19 +207,15 @@ class VectorStore(spark: SparkSession, val root: String,
     * O(batch), where a full rewrite is O(all distinct sets) per insert
     * and becomes the insert bottleneck at millions of tag sets. Deltas
     * fold into a fresh base opportunistically past
-    * [[ManifestCompactThreshold]] files. The FIRST write (or a legacy
-    * store) seeds the full base via [[manifest]]'s discovery fallback —
-    * seeding from the batch alone would permanently hide every older
-    * partition from tag search. */
+    * [[ManifestCompactThreshold]] files. The FIRST write commits the
+    * batch's sets as the first base: no manifest means no committed
+    * data. */
   private def updateManifest(sets: Seq[(String, Seq[String], Int)]): Unit = {
     val newSets = spark.createDataFrame(
       spark.sparkContext.parallelize(sets.map { case (k, t, g) => Row(k, t, g) }, 1),
       manifestSchema)
     currentManifestVersion match {
-      case None =>
-        writeManifest(
-          manifest().select("tag_key", "tags", "gen").unionByName(newSets)
-            .groupBy("tag_key", "tags").agg(max("gen").as("gen")))
+      case None => writeManifest(newSets)
       case Some(v) =>
         newSets.coalesce(1).write.mode(SaveMode.Append).parquet(deltaPathFor(v))
         val nDelta = fs.listStatus(new Path(deltaPathFor(v)))
@@ -275,18 +233,17 @@ class VectorStore(spark: SparkSession, val root: String,
     * a no-manifest window). Old versions and their delta dirs are
     * reclaimed by [[vacuum]]. */
   private def writeManifest(sets: DataFrame): Unit = {
-    val next = allocateVersion(manifestDir, ".parquet")
     val tmp = new Path(s"$root/manifest_tmp.parquet")
     sets.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.mkdirs(new Path(manifestDir))
-    commitVersionDir(tmp, new Path(basePathFor(next)), "manifest")
+    commitNextVersion(manifestDir, tmp, "manifest", ".parquet")
     // a new base drops the snapshot: rewrites leave the next read to
     // rebuild it, and an insert's threshold fold publishes its own
     VectorStore.snapshots.remove(cacheKey); ()
   }
 
-  /** Highest gen referenced anywhere (manifest or layout); rewrites
-    * commit as this + 1. */
+  /** Highest gen the manifest references; rewrites commit as this + 1
+    * (a crashed writer's orphan at that gen is replaced,
+    * [[commitGenDir]]). */
   private def nextGen(): Int = liveGens().values.foldLeft(-1)(math.max) + 1
 
   /** Join the current per-partition gen onto a prepared batch so
@@ -294,54 +251,54 @@ class VectorStore(spark: SparkSession, val root: String,
     * manifest must NOT default to gen 0: its partition dir may still
     * hold superseded or taken-down generations awaiting vacuum
     * (deleteByTags, an upsert that vanished the partition, a crashed
-    * writer), and appending into such a dir would RESURRECT every old
-    * row the moment the manifest re-lists that (key, gen). Absent keys
-    * instead revive at (their max on-disk gen + 1) — an O(new-keys)
-    * listing at driver-metadata scale; keys with no dir at all start
-    * at gen 0 as before. The live gens come from the snapshot (no
-    * Spark job); the join broadcasts. */
-  private def withGen(snap: Option[VectorStore.Snapshot], prepared: DataFrame): DataFrame =
-    snap match {
-      case None => prepared.withColumn("gen", lit(0))
-      case Some(s) =>
-        val live = s.gens
-        // Revival can only apply to a key whose partition DIR survives
-        // outside the manifest (deleteByTags, vanished upsert partition,
-        // crashed writer). One driver listing of the data root detects
-        // whether any such orphan exists; in the common no-orphan case
-        // every manifest-absent key has no dir, gen 0 is correct, and the
-        // per-batch distinct job + per-key listings are skipped entirely
-        // (ADVICE r9 #4) — the broadcast join's coalesce(gen, 0) fallback
-        // already encodes that fast path.
-        val orphanDirsExist = fs.exists(new Path(dataPath)) &&
-          fs.listStatus(new Path(dataPath)).exists { st =>
-            val n = st.getPath.getName
-            n.startsWith("tag_key=") && !live.contains(n.stripPrefix("tag_key="))
-          }
-        val absent =
-          if (!orphanDirsExist) Array.empty[String]
-          else prepared.select("tag_key").distinct().collect()
-            .map(_.getString(0)).filterNot(live.contains)
-        val revive = absent.map { k =>
-          val dir = new Path(s"$dataPath/tag_key=$k")
-          val g =
-            if (!fs.exists(dir)) 0
-            else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-              .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toInt)
-              .foldLeft(-1)(math.max) + 1
-          (k, g)
-        }
-        val genRows = (live.toSeq ++ revive).map { case (k, g) => Row(k, g) }
-        val genDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(genRows.toList, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("tag_key",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("gen",
-              org.apache.spark.sql.types.IntegerType))))
-        prepared.join(broadcast(genDf), Seq("tag_key"), "left")
-          .withColumn("gen", coalesce(col("gen"), lit(0)))
+    * writer, a crashed FIRST insert under a root with no manifest), and
+    * appending into such a dir would RESURRECT every old row the moment
+    * the manifest re-lists that (key, gen). Absent keys instead revive
+    * at (their max on-disk gen + 1) — an O(new-keys) listing at
+    * driver-metadata scale; keys with no dir at all start at gen 0. The
+    * live gens come from the snapshot (no Spark job; empty without a
+    * manifest); the join broadcasts. */
+  private def withGen(live: Map[String, Int], prepared: DataFrame): DataFrame = {
+    // Revival can only apply to a key whose partition DIR survives
+    // outside the manifest. One driver listing of the data root detects
+    // whether any such orphan exists; in the common no-orphan case every
+    // manifest-absent key has no dir, gen 0 is correct, and the
+    // per-batch distinct job + per-key listings are skipped entirely
+    // (ADVICE r9 #4) — the broadcast join's coalesce(gen, 0) fallback
+    // already encodes that fast path.
+    val orphanDirsExist = fs.exists(new Path(dataPath)) &&
+      fs.listStatus(new Path(dataPath)).exists { st =>
+        val n = st.getPath.getName
+        n.startsWith("tag_key=") && !live.contains(n.stripPrefix("tag_key="))
+      }
+    val absent =
+      if (!orphanDirsExist) Array.empty[String]
+      else prepared.select("tag_key").distinct().collect()
+        .map(_.getString(0)).filterNot(live.contains)
+    val revive = absent.map { k =>
+      val dir = new Path(s"$dataPath/tag_key=$k")
+      val g =
+        if (!fs.exists(dir)) 0
+        else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+          .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toInt)
+          .foldLeft(-1)(math.max) + 1
+      (k, g)
     }
+    val genRows = (live.toSeq ++ revive).map { case (k, g) => Row(k, g) }
+    // a fresh store has nothing to join: every key starts at gen 0
+    if (genRows.isEmpty) prepared.withColumn("gen", lit(0))
+    else {
+      val genDf = spark.createDataFrame(
+        spark.sparkContext.parallelize(genRows.toList, 1),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("tag_key",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("gen",
+            org.apache.spark.sql.types.IntegerType))))
+      prepared.join(broadcast(genDf), Seq("tag_key"), "left")
+        .withColumn("gen", coalesce(col("gen"), lit(0)))
+    }
+  }
 
   /** Commit one rewritten partition generation: rename the staged gen
     * dir into the partition dir. An existing target can only be an
@@ -454,14 +411,14 @@ class VectorStore(spark: SparkSession, val root: String,
     * reader sees either no basis or the complete one, never a partial
     * parquet write. Crash window: if the process dies after the data
     * commit but before the basis rename, the store holds
-    * projection-space rows with `isProjected` false — detectable
-    * (re-running refuses on the non-empty store) and recoverable
-    * (`clear(force = true)` + re-import); the window is a one-call
-    * migration's, not steady-state ingest's. The SAME window is a live
-    * race (ADVICE r14 #3): searches take no lock, so a reader querying
-    * between the row commit and the basis rename sees k-dim
-    * projection-space rows in a store whose mode still reads as raw
-    * and scores raw-space queries against them — this migration
+    * projection-space rows with `isProjected` false until the next
+    * [[vacuum]] or [[projectAll]] finishes the rename, exactly as for
+    * a crashed projection ([[finishStagedProjection]]); the window is
+    * a one-call migration's, not steady-state ingest's. The SAME window
+    * is a live race (ADVICE r14 #3): searches take no lock, so a
+    * reader querying between the row commit and the basis rename sees
+    * k-dim projection-space rows in a store whose mode still reads as
+    * raw and scores raw-space queries against them — this migration
     * REQUIRES no concurrent readers on the target store (it imports
     * into an EMPTY store by contract, so "no readers yet" is the
     * natural deployment; serving starts after the import returns). */
@@ -492,9 +449,8 @@ class VectorStore(spark: SparkSession, val root: String,
         } finally cached.unpersist(blocking = false)
         // stage + rename, exactly like projectAll's basis commit: a
         // reader racing the migration must never see a partial parquet
-        val staged = s"$root/eigen_tmp.parquet"
-        saveModelAt(model, staged)
-        require(fs.rename(new Path(staged), new Path(eigenPath)),
+        saveModelAt(model, eigenStaged.toString)
+        require(fs.rename(eigenStaged, new Path(eigenPath)),
           s"graft: adopted-basis rename to $eigenPath failed")
       }
     }
@@ -547,14 +503,16 @@ class VectorStore(spark: SparkSession, val root: String,
     }
 
   /** Whether the store carries the packed codec column; None when the
-    * store has no live rows AND no persisted layout yet. The persisted
-    * bit wins (survives empty+vacuumed states); legacy stores (no
-    * marker) fall back to probing the live snapshot and are upgraded on
-    * their next write. */
+    * store has no committed manifest AND no persisted layout yet. The
+    * persisted bit wins (survives empty+vacuumed states). Without it
+    * the live snapshot is probed: [[writeBatch]] commits the manifest
+    * before `_layout.json`, so a crash between the two leaves rows whose
+    * layout only the snapshot knows. */
   private def storedHasPacked: Option[Boolean] =
     persistedHasPacked.orElse {
-      if (!exists) None
-      else try Some(table().columns.contains("packed"))
+      val snap = snapshot()
+      if (snap.isEmpty) None
+      else try Some(tableOf(snap).columns.contains("packed"))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     }
 
@@ -608,7 +566,7 @@ class VectorStore(spark: SparkSession, val root: String,
     // the store. localCheckpoint materializes the batch once (batches
     // are bounded; the store, not the batch, is the 100 TB side) and
     // both writes read the same rows.
-    val out0 = withGen(prev, finalizeBatch(prepared, quantize))
+    val out0 = withGen(liveGens(prev), finalizeBatch(prepared, quantize))
     // a live sidecar adds a third consumer of the batch plan (data
     // write + manifest distinct + fingerprint append) — pin for it
     // exactly as for the ANN maintenance case (review-pass r10 #4)
@@ -870,12 +828,7 @@ class VectorStore(spark: SparkSession, val root: String,
    * resumes from committed offsets instead of replaying the whole
    * source into duplicate appends (ADVICE r2 #3; insert is not
    * idempotent by id), and two DIFFERENT sources never share a ledger.
-   * Two caveats (ADVICE r10 #2): a store created before the per-source
-   * scheme keeps its legacy fixed-name ledger for the ONE stream that
-   * owns it — starting any ADDITIONAL source against such a store
-   * requires an explicit `checkpointLocation` (the default would adopt
-   * the legacy ledger and cross-talk offsets; the adoption is logged).
-   * And several streams over the SAME source definition are
+   * Several streams over the SAME source definition are
    * indistinguishable by plan — those always need explicit
    * per-stream `checkpointLocation`s. Delivery is at-least-once at
    * micro-batch granularity: a crash between the insert and the offset
@@ -904,37 +857,21 @@ class VectorStore(spark: SparkSession, val root: String,
       .trigger(trigger)
       .start()
 
-  /** Default checkpoint dir: per-source derived key, EXCEPT that a
-    * store already carrying the pre-r10 fixed-name ledger keeps it —
-    * switching an existing single-stream deployment to the derived
-    * name would abandon its offsets and replay the whole source into
-    * duplicate appends (review-pass r10 #1). Grandfathered stores
-    * stay single-ledger (the documented pre-r10 contract); new stores
-    * get per-source isolation. */
+  /** Default checkpoint dir: the per-source ledger
+    * `_checkpoints/<kind>_<source-key>`. A store whose only ledger is
+    * the shared fixed-name `_checkpoints/<kind>` of older releases
+    * fails the start instead: the per-source default would replay the
+    * whole source into duplicate appends, and which source owns the
+    * shared ledger is the caller's knowledge, not the store's. */
   private def defaultCheckpoint(kind: String, stream: DataFrame): String = {
-    val legacy = s"$root/_checkpoints/$kind"
-    val derived = s"${legacy}_${sourceCheckpointKey(stream)}"
-    // DERIVED wins when it exists: a store that already committed
-    // offsets under the per-source name must never fall back to a
-    // stale legacy ledger left beside it (that replays the source —
-    // review-pass r10 #2). Only a store whose SOLE ledger is the
-    // legacy fixed name keeps it; additional sources against such a
-    // store need explicit checkpointLocation (documented above).
-    if (fs.exists(new Path(derived))) derived
-    else if (fs.exists(new Path(legacy))) {
-      // Audible, not silent (ADVICE r10 #2): this source has never
-      // committed under its derived key, so it may be a SECOND source
-      // adopting the single pre-r10 ledger — which replays/skips
-      // offsets that belong to the original stream. Legitimate for the
-      // one grandfathered stream; anything else must pass an explicit
-      // checkpointLocation.
-      System.err.println(s"[graft] $kind stream is adopting the legacy " +
-        s"shared checkpoint $legacy (no per-source ledger $derived yet). " +
-        "If this store drains MORE than one source, pass an explicit " +
-        "checkpointLocation per source — sharing the legacy ledger " +
-        "cross-talks their offsets.")
-      legacy
-    } else derived
+    val shared = s"$root/_checkpoints/$kind"
+    val perSource = s"${shared}_${sourceCheckpointKey(stream)}"
+    if (!fs.exists(new Path(perSource)) && fs.exists(new Path(shared)))
+      throw new IllegalStateException(s"graft: $shared is a shared $kind " +
+        "checkpoint ledger from an older release — pass checkpointLocation " +
+        "explicitly (that path to resume the stream that owns it, a new one " +
+        "for any other source)")
+    perSource
   }
 
   /** Stable per-source checkpoint key (ADVICE r9 #3): two DIFFERENT
@@ -1398,34 +1335,31 @@ class VectorStore(spark: SparkSession, val root: String,
   /** The stored vector dimension, None while the store has no rows.
     * Served by the snapshot: a write-through carries its batch's, a
     * cold snapshot reads one row once. */
-  private def storedDim(): Option[Int] =
-    if (!exists) None
-    else {
-      val snap = snapshot()
-      def read(): Option[Int] = try {
-        tableOf(snap).select(size(col("vector"))).limit(1).collect()
-          .headOption.map(_.getInt(0))
-      } catch {
-        // the data dir can exist yet hold no live files (an upsert that
-        // overwrote every row of every affected partition)
-        case _: org.apache.spark.sql.AnalysisException => None
-      }
-      snap.fold(read())(_.dim(read()))
-    }
+  private def storedDim(): Option[Int] = snapshot().flatMap { snap =>
+    snap.dim(try {
+      snap.data.table.select(size(col("vector"))).limit(1).collect()
+        .headOption.map(_.getInt(0))
+    } catch {
+      // the data dir can exist yet hold no live files (an upsert that
+      // overwrote every row of every affected partition)
+      case _: org.apache.spark.sql.AnalysisException => None
+    })
+  }
 
   def exists: Boolean = fs.exists(new Path(dataPath))
 
   /** The live store as a DataFrame: the snapshot spec (manifest) is
     * resolved to the exact generation dirs it names, so a concurrent
     * rewrite can neither hide files from this reader nor leak
-    * uncommitted ones into it. Served from the [[snapshot]]: sound
-    * because its key changes on EVERY protocol write and the files a
-    * committed snapshot names are immutable until vacuum — which never
-    * touches live generations. */
+    * uncommitted ones into it; zero rows while no manifest is
+    * committed. Served from the [[snapshot]]: sound because its key
+    * changes on EVERY protocol write and the files a committed snapshot
+    * names are immutable until vacuum — which never touches live
+    * generations. */
   def table(): DataFrame = tableOf(snapshot())
 
   private def tableOf(snap: Option[VectorStore.Snapshot]): DataFrame =
-    snap.map(_.data.table).getOrElse(legacyTable())
+    snap.map(_.data.table).getOrElse(emptySnapshot())
 
   /** Snapshots are keyed by (session, root) in the COMPANION, not per
     * instance (VERDICT r16 what's-wrong #1): the common serving and
@@ -1446,14 +1380,6 @@ class VectorStore(spark: SparkSession, val root: String,
     * backup) that happen to reproduce the key exactly. */
   def refresh(): Unit = { VectorStore.snapshots.remove(cacheKey); () }
 
-  /** A store with no manifest (never written, or written before the
-    * manifest existed): read from the data layout itself, uncached —
-    * there is no version key to cache on. */
-  private def legacyTable(): DataFrame = listingLive() match {
-    case Seq() => spark.read.parquet(dataPath) // keeps empty-store errors
-    case live => readGens(live)
-  }
-
   /** Spark's own read of the given (tag_key, gen) dirs: its listing
     * (parallel past the discovery threshold) and footer schema
     * inference. */
@@ -1463,20 +1389,21 @@ class VectorStore(spark: SparkSession, val root: String,
       .drop("gen")
 
   /** Zero-row DataFrame in the store's schema: probed from the on-disk
-    * files when any exist (footer metadata only — keeps packed /
+    * files when any are readable (footer metadata only — keeps packed /
     * projected layouts exact), else the canonical insert schema. The
     * canonical fallback cannot know about a `packed` column (no files
     * left to probe), so a quantized store that is BOTH emptied and
     * fully vacuumed fails quantized search analysis loudly instead of
     * returning zero rows — acceptable: that state requires vacuuming
-    * away every superseded generation of an empty store. */
+    * away every superseded generation of an empty store. A crashed
+    * writer's partial files fall back the same way. */
   private def emptySnapshot(): DataFrame = {
     val schema =
       try {
         val raw = spark.read.parquet(dataPath).schema
         org.apache.spark.sql.types.StructType(raw.filterNot(_.name == "gen"))
       } catch {
-        case _: org.apache.spark.sql.AnalysisException =>
+        case scala.util.control.NonFatal(_) =>
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("id",
               org.apache.spark.sql.types.StringType),
@@ -1546,13 +1473,17 @@ class VectorStore(spark: SparkSession, val root: String,
    * than `graceMs` (readers resolve a snapshot at plan time; the grace
    * must exceed the longest-running query, exactly Delta's VACUUM
    * retention contract). Holding the writer lock keeps a concurrent
-   * rewrite from committing new gens mid-sweep.
+   * rewrite from committing new gens mid-sweep. A staged basis that a
+   * crashed projection left behind its data commit is not debris but
+   * the committed data's only basis: vacuum finishes its rename
+   * ([[finishStagedProjection]]) before sweeping.
    */
   def vacuum(graceMs: Long = 3600000L): Unit = withWriterLock() {
     val cutoff = System.currentTimeMillis() - graceMs
     def expired(p: Path): Boolean =
       try fs.getFileStatus(p).getModificationTime < cutoff
       catch { case _: java.io.IOException => false }
+    finishStagedProjection()
     val live = liveGens()
     if (fs.exists(new Path(dataPath)))
       for (d <- fs.listStatus(new Path(dataPath))
@@ -1569,18 +1500,16 @@ class VectorStore(spark: SparkSession, val root: String,
     // partial v<k> (marker-less, object-store rename) is wreckage to
     // reap after the same grace period
     val cur = currentManifestVersion
-    for (v <- allVersionsIn(manifestDir, ".parquet") if !cur.contains(v)) {
+    for (v <- vdir(manifestDir, ".parquet").all() if !cur.contains(v)) {
       val base = new Path(basePathFor(v))
       if (expired(base)) {
         fs.delete(base, true)
         fs.delete(new Path(deltaPathFor(v)), true)
       }
     }
-    // rewrite_tmp is the one partition-rewrite staging dir; the four
-    // names after it are staging dirs of older releases' rewrites
-    for (t <- Seq("rewrite_tmp", "upsert_tmp", "delete_tmp", "data_compact_tmp",
-      "data_tmp", "manifest_tmp.parquet", "ann_tmp", "dup_tmp", "eigen_tmp.parquet",
-      "contentidx_tmp", "neardupidx_tmp", "tokenizer_tmp")) {
+    // every staging name a writer uses
+    for (t <- Seq("rewrite_tmp", "manifest_tmp.parquet", "ann_tmp", "dup_tmp",
+      "eigen_tmp.parquet", "contentidx_tmp", "neardupidx_tmp", "tokenizer_tmp")) {
       val p = new Path(s"$root/$t")
       if (fs.exists(p) && expired(p)) fs.delete(p, true)
     }
@@ -1591,30 +1520,14 @@ class VectorStore(spark: SparkSession, val root: String,
       fs.delete(st.getPath, false)
     compactSidecar("contentidx", contentIdxData, contentIdxMarker, "cbucket")(contentIdxTable())
     compactSidecar("neardupidx", nearIdxData, nearIdxMarker, "bbucket")(nearIdxTable())
-    // superseded ANN index versions (rebuilds leave v<k> behind so
-    // concurrent readers never hit a gap — reclaimed here, same contract
-    // as manifest versions); once any version exists, pre-versioning
-    // legacy index files directly under ann/ are superseded debris too
-    val curAnn = annVersions().lastOption
-    for (v <- allVersionsIn(annRoot) if !curAnn.contains(v)) {
-      val p = new Path(s"$annRoot/v$v")
-      if (expired(p)) fs.delete(p, true)
-    }
-    if (curAnn.isDefined && fs.exists(new Path(annRoot)))
-      for (c <- fs.listStatus(new Path(annRoot))
-             if !c.getPath.getName.matches("v\\d+") && expired(c.getPath))
-        fs.delete(c.getPath, true)
-    // superseded dup-graph versions: same versioned-commit contract
-    val curDup = dupVersions().lastOption
-    for (v <- allVersionsIn(dupRoot) if !curDup.contains(v)) {
-      val p = new Path(s"$dupRoot/v$v")
-      if (expired(p)) fs.delete(p, true)
-    }
-    // superseded tokenizer versions: same versioned-commit contract
-    val curTok = tokenizerVersions.lastOption
-    for (v <- allVersionsIn(tokenizerRoot) if !curTok.contains(v)) {
-      val p = new Path(s"$tokenizerRoot/v$v")
-      if (expired(p)) fs.delete(p, true)
+    // superseded and crash-partial ANN index, dup-graph and tokenizer
+    // versions (rebuilds leave v<k> behind so concurrent readers never
+    // hit a gap — reclaimed here, same contract as manifest versions)
+    for (artifact <- Seq(annRoot, dupRoot, tokenizerRoot)) {
+      val d = vdir(artifact)
+      val cur = d.committed().lastOption
+      for (v <- d.all() if !cur.contains(v) && expired(d.pathOf(v)))
+        fs.delete(d.pathOf(v), true)
     }
   }
 
@@ -1765,7 +1678,7 @@ class VectorStore(spark: SparkSession, val root: String,
   }
 
   /** The current snapshot, None for a store with no committed manifest
-    * (those read the data layout uncached — [[legacyTable]]). */
+    * (it has no committed data: [[table]] reads zero rows). */
   private[graft] def snapshot(): Option[VectorStore.Snapshot] = {
     val key = snapshotKey()
     if (key._1 < 0) None
@@ -1866,13 +1779,13 @@ class VectorStore(spark: SparkSession, val root: String,
         fs.getFileBlockLocations(f, 0L, f.getLen))
     }
 
-  /** Live tag_key -> gen: the snapshot's, else the data layout's. */
+  /** Live tag_key -> gen: the snapshot's; empty without a manifest. */
   private def liveGens(snap: Option[VectorStore.Snapshot] = snapshot()): Map[String, Int] =
-    snap.map(_.gens).getOrElse(listingLive().toMap)
+    snap.map(_.gens).getOrElse(Map.empty)
 
   /** Live tag_key -> tag set: the snapshot's up to
     * [[VectorStore.MaxTagSets]], else one manifest collect (past the
-    * cap, or a store with no manifest). */
+    * cap; empty without a manifest). */
   private def liveTagSets(snap: Option[VectorStore.Snapshot] = snapshot())
       : Map[String, Seq[String]] =
     snap.flatMap(_.tags).getOrElse(
@@ -2027,6 +1940,9 @@ class VectorStore(spark: SparkSession, val root: String,
   // ---- projected (PCA) mode: reference src/db.rs:233-241, 287-367 ----
 
   private val eigenPath = s"$root/eigen.parquet" // analog of eigen.bin
+  /** Where [[projectAll]] and [[importVictor]] stage a basis before
+    * its rename to [[eigenPath]]. */
+  private val eigenStaged = new Path(s"$root/eigen_tmp.parquet")
 
   /**
    * Register the store for PLAIN SQL with automatic tag-superset
@@ -2108,26 +2024,12 @@ class VectorStore(spark: SparkSession, val root: String,
    */
   def projectAll(k: Int): Unit = withWriterLock() {
     require(!isProjected, "graft: store is already projected")
-    // Crash recovery BEFORE refitting: a previous projectAll that died
-    // between its manifest commit and the basis rename left projected
-    // DATA with no committed basis — isProjected is false, and a naive
-    // retry would fit on already-projected vectors and double-project
-    // the store. The staged basis' k tells the two crash points apart:
-    // stored dim == staged k means the manifest commit happened (finish
-    // the rename and stop); otherwise the crash predated the commit and
-    // the stage file is plain debris.
-    val eigenStaged = new Path(s"$root/eigen_tmp.parquet")
-    if (fs.exists(eigenStaged)) {
-      val stagedK = loadModelAt(eigenStaged.toString).k
-      if (storedDim().contains(stagedK)) {
-        fs.delete(new Path(annRoot), true) // the crash may predate the index drop
-        require(fs.rename(eigenStaged, new Path(eigenPath)),
-          s"graft: basis recovery rename to $eigenPath failed")
-        throw new IllegalStateException(
-          "graft: completed a crashed projection's basis commit — the store was already projected; not refitting")
-      } else fs.delete(eigenStaged, true)
-    }
-    // the recovery heuristic above is only sound if k is ALWAYS below
+    // Crash recovery BEFORE refitting: a naive retry would fit on
+    // already-projected vectors and double-project the store
+    if (finishStagedProjection())
+      throw new IllegalStateException(
+        "graft: completed a crashed projection's basis commit — the store was already projected; not refitting")
+    // the recovery heuristic is only sound if k is ALWAYS below
     // the pre-projection dimension (ADVICE r7 #1: Pca.fit allows
     // k == d, and a crash after staging a same-dim basis but before the
     // manifest commit would make a retry read storedDim == stagedK,
@@ -2146,11 +2048,33 @@ class VectorStore(spark: SparkSession, val root: String,
       if (projected0.columns.contains("packed"))
         projected0.withColumn("packed", pack(col("vector")))
       else projected0
-    saveModelAt(model, eigenStaged.toString)
+    saveModelAt(model, eigenStaged.toString) // replaces a pre-commit crash's stage
     rewritePartitions(liveGens().keys.toSeq, Some(projected))
     fs.delete(new Path(annRoot), true)
     require(fs.rename(eigenStaged, new Path(eigenPath)),
       s"graft: basis commit rename to $eigenPath failed")
+  }
+
+  /** Finish a projection that crashed between its data commit and its
+    * basis rename ([[projectAll]], or [[importVictor]]'s migration):
+    * the store then holds projected DATA with no committed basis
+    * (`isProjected` false), and the staged basis is the only copy of
+    * the one that data was projected with. The staged basis' k tells
+    * the two crash points apart: stored dim == staged k means the data
+    * commit happened, so the rename is finished (and the raw-space ANN
+    * index dropped, since the crash may predate its drop); otherwise
+    * the crash predated the commit and the stage is debris, left for
+    * the next stage write or [[vacuum]]'s sweep. Returns whether it
+    * finished one. Writer lock held by caller. */
+  private def finishStagedProjection(): Boolean = {
+    val finish = !isProjected && fs.exists(eigenStaged) &&
+      storedDim().contains(loadModelAt(eigenStaged.toString).k)
+    if (finish) {
+      fs.delete(new Path(annRoot), true)
+      require(fs.rename(eigenStaged, new Path(eigenPath)),
+        s"graft: basis recovery rename to $eigenPath failed")
+    }
+    finish
   }
 
   /** Size-threshold projection trigger (reference: file > 1,000,000 B on
@@ -2239,30 +2163,23 @@ class VectorStore(spark: SparkSession, val root: String,
     * insert() could open via the staleness-fraction trigger). Superseded
     * versions are reclaimed by [[vacuum]] after its grace period, which
     * also protects readers that resolved v<k> just before v<k+1>
-    * committed. */
-  private def annVersions(): Seq[Int] = committedVersionsIn(annRoot)
-
-  /** Newest committed index dir. Pre-versioning stores kept the index
-    * files directly under ann/ — that legacy layout resolves as version
-    * -1 (any v0 build supersedes it). */
+    * committed. The newest one is the index; nothing else under ann/
+    * is read. */
   private def currentAnnDir: Option[String] =
-    annVersions().lastOption.map(v => s"$annRoot/v$v")
-      .orElse {
-        if (fs.exists(new Path(codebookPathIn(annRoot)))) Some(annRoot) else None
-      }
+    vdir(annRoot).committed().lastOption.map(v => s"$annRoot/v$v")
 
   def hasAnnIndex: Boolean = currentAnnDir.isDefined
 
   /** The build-time-calibrated auto nprobe of the live index (None: no
-    * index, or uncalibrated legacy meta — see [[resolveNprobe]]). */
+    * index, or no readable `_meta.json` — see [[resolveNprobe]]). */
   def annCalibratedNprobe: Option[Int] = annIndex().flatMap(_.calibratedNprobe)
 
   /** (k, seed, rebuildFraction, baseRows, appendedRows,
     * calibratedNprobe) of the live index. Tiny driver-side JSON, no
-    * Spark job. `calibratedNprobe = 0` = uncalibrated (legacy build). */
+    * Spark job. */
   private case class AnnMeta(k: Int, seed: Long, rebuildFraction: Double,
                              baseRows: Long, appendedRows: Long,
-                             calibratedNprobe: Int = 0)
+                             calibratedNprobe: Int)
 
   private def writeAnnMeta(dir: String, m: AnnMeta): Unit = {
     val tmp = new Path(s"$dir/_meta.json.tmp")
@@ -2276,9 +2193,10 @@ class VectorStore(spark: SparkSession, val root: String,
     require(fs.rename(tmp, dst), s"graft: ANN meta commit rename failed")
   }
 
-  /** Missing/corrupt meta (legacy or crash-windowed index) degrades to
-    * "no staleness tracking": appends still fold in, the rebuild trigger
-    * re-arms at the next explicit build. */
+  /** Missing/corrupt meta (the delete-then-rename window of
+    * [[writeAnnMeta]]) degrades to "no staleness tracking": appends
+    * still fold in, the rebuild trigger re-arms at the next explicit
+    * build. */
   private def readAnnMeta(dir: String): Option[AnnMeta] = {
     val annMetaPath = s"$dir/_meta.json"
     if (!fs.exists(new Path(annMetaPath))) None
@@ -2292,7 +2210,7 @@ class VectorStore(spark: SparkSession, val root: String,
         field("k").get.toInt, field("seed").get.toLong,
         field("rebuild_fraction").get.toDouble,
         field("base_rows").get.toLong, field("appended_rows").get.toLong,
-        field("calibrated_nprobe").map(_.toInt).getOrElse(0)))
+        field("calibrated_nprobe").get.toInt))
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -2349,9 +2267,8 @@ class VectorStore(spark: SparkSession, val root: String,
 
   /** cid -> (tag set, rows) lower bounds of the index version at
     * `dir` (one collect, on a handle's first use). None: stats absent
-    * (legacy index or oversized) or unreadable. Partition inference
-    * types `cid` as int (or long past the int range), so it is read as
-    * a Number. */
+    * (oversized) or unreadable. Partition inference types `cid` as int
+    * (or long past the int range), so it is read as a Number. */
   private def readTagStats(dir: String): Option[Map[Long, Seq[(Set[String], Long)]]] =
     if (!fs.exists(new Path(tagStatsPathIn(dir)))) None
     else try {
@@ -2389,7 +2306,7 @@ class VectorStore(spark: SparkSession, val root: String,
       .getOrElse {
         val ix = new VectorStore.AnnIndex(dir, mtime,
           SimilaritySearch.collectCodebook(spark.read.parquet(codebookPathIn(dir))),
-          readAnnMeta(dir).map(_.calibratedNprobe).filter(_ > 0),
+          readAnnMeta(dir).map(_.calibratedNprobe),
           () => readTagStats(dir), () => readPqBooks(dir),
           () => spark.read.parquet(dir).schema)
         VectorStore.bounded(VectorStore.annIndexes, (spark, dir), ix)
@@ -2469,11 +2386,11 @@ class VectorStore(spark: SparkSession, val root: String,
   }
 
   /** AUTO nprobe (`nprobe <= 0`): the build-time calibrated >=90%-
-    * recall operating point from the index meta; a legacy uncalibrated
-    * index falls back to 3/4 list coverage — recall-first, because a
-    * DEFAULT that is silently fast-but-wrong is a correctness bug at
-    * the facade (callers tune DOWN explicitly, with the measured curve
-    * in hand). */
+    * recall operating point from the index meta; an index whose meta is
+    * missing ([[readAnnMeta]]) falls back to 3/4 list coverage —
+    * recall-first, because a DEFAULT that is silently fast-but-wrong is
+    * a correctness bug at the facade (callers tune DOWN explicitly,
+    * with the measured curve in hand). */
   private def resolveNprobe(ix: VectorStore.AnnIndex, nprobe: Int): Int =
     if (nprobe > 0) nprobe
     else ix.calibratedNprobe.getOrElse(math.max(1, (3 * ix.codebook.size + 3) / 4))
@@ -2489,8 +2406,8 @@ class VectorStore(spark: SparkSession, val root: String,
     *    probe order whose matching rows, by the tag stats' lower bounds,
     *    reach k x [[AnnFilteredMargin]], and never fewer lists than the
     *    calibrated nprobe. When no prefix reaches the margin it probes
-    *    every list; so does an index without stats (legacy, oversized
-    *    or unreadable), whose matching counts are all zero. */
+    *    every list; so does an index without stats (oversized or
+    *    unreadable), whose matching counts are all zero. */
   private def probeRule(ix: VectorStore.AnnIndex, k: Int, nprobe: Int,
                         tags: Seq[String]): Seq[Float] => Seq[Long] = {
     val np = resolveNprobe(ix, nprobe)
@@ -2519,9 +2436,6 @@ class VectorStore(spark: SparkSession, val root: String,
     withWriterLock() { buildAnnIndexLocked(k, seed, rebuildFraction) }
 
   private def buildAnnIndexLocked(k: Int, seed: Long, rebuildFraction: Double): Unit = {
-    // pre-release layouts kept the codebook at the root; sweep it so a
-    // stale copy can't linger beside the committed in-dir one
-    fs.delete(new Path(s"$root/codebook.parquet"), true)
     val centroids = SimilaritySearch.kmeansCentroids(
       table().select(col("vector").as("embedding")), k, seed)
     val codebook = SimilaritySearch.collectCodebook(centroids)
@@ -2567,9 +2481,7 @@ class VectorStore(spark: SparkSession, val root: String,
     // writer lock serializes version allocation) + marker; the old
     // version stays readable until vacuum, so concurrent searches
     // never hit a gap
-    val next = allocateVersion(annRoot)
-    fs.mkdirs(new Path(annRoot))
-    commitVersionDir(tmp, new Path(s"$annRoot/v$next"), "ANN index")
+    commitNextVersion(annRoot, tmp, "ANN index")
   }
 
   /** Approximate top-k over the ANN index: probe the `nprobe` nearest
@@ -2611,13 +2523,14 @@ class VectorStore(spark: SparkSession, val root: String,
    * (codebooks copied into the staged dir, same one-rename guarantee).
    * Appended-staleness tracking carries over: compaction changes file
    * geometry, not distribution drift, so the rebuild trigger's
-   * appendedRows is preserved.
+   * appendedRows is preserved. It stages in the build's `ann_tmp`: the
+   * writer lock serializes the two.
    */
   def compactAnnIndex(): Unit = withWriterLock() {
     currentAnnDir match {
       case None => ()
       case Some(dir) =>
-        val tmp = new Path(s"$root/ann_compact_tmp")
+        val tmp = new Path(s"$root/ann_tmp")
         fs.delete(tmp, true)
         spark.read.parquet(dir).hint("rebalance", "cid")
           .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(tmp.toString)
@@ -2631,8 +2544,7 @@ class VectorStore(spark: SparkSession, val root: String,
         // append-stale) lower bounds tighten back to exact
         writeTagStats(tmp.toString)
         readAnnMeta(dir).foreach(writeAnnMeta(tmp.toString, _))
-        val next = allocateVersion(annRoot)
-        commitVersionDir(tmp, new Path(s"$annRoot/v$next"), "ANN compaction")
+        commitNextVersion(annRoot, tmp, "ANN compaction")
     }
   }
 
@@ -2735,7 +2647,7 @@ class VectorStore(spark: SparkSession, val root: String,
 
   /** Committed tokenizer versions, oldest -> newest — the loadable
     * history until [[vacuum]] reclaims superseded versions. */
-  def tokenizerVersions: Seq[Int] = committedVersionsIn(tokenizerRoot)
+  def tokenizerVersions: Seq[Int] = vdir(tokenizerRoot).committed()
 
   /** Train a tokenizer over `docs` and COMMIT it as `tokenizer/v<k+1>`:
     * BPE merges ([[Bpe.train]], `bpeK` merges, `checkpointEvery`
@@ -2791,10 +2703,7 @@ class VectorStore(spark: SparkSession, val root: String,
           s"""{"bpe_k":$bpeK,"wordpiece_v":$wordpieceV,"max_piece_len":$maxPieceLen,"corpus_fp":$fingerprint,"n_docs":${fp.getLong(2)}}"""
             .getBytes("UTF-8"))
         finally out.close()
-        val next = allocateVersion(tokenizerRoot)
-        fs.mkdirs(new Path(tokenizerRoot))
-        commitVersionDir(tmp, new Path(s"$tokenizerRoot/v$next"), "tokenizer")
-        next
+        commitNextVersion(tokenizerRoot, tmp, "tokenizer")
       } finally words.unpersist(blocking = false)
     }
 
@@ -2838,7 +2747,7 @@ class VectorStore(spark: SparkSession, val root: String,
 
   private val dupRoot = s"$root/dup"
 
-  private def dupVersions(): Seq[Int] = committedVersionsIn(dupRoot)
+  private def dupVersions(): Seq[Int] = vdir(dupRoot).committed()
 
   /**
    * Materialize the banded sign-LSH near-dup PAIR GRAPH over the stored
@@ -2895,9 +2804,7 @@ class VectorStore(spark: SparkSession, val root: String,
     val out = fs.create(new Path(s"$tmp/_meta.json"), true)
     out.write(metaJson.getBytes("UTF-8"))
     out.close()
-    val next = allocateVersion(dupRoot)
-    fs.mkdirs(new Path(dupRoot))
-    commitVersionDir(tmp, new Path(s"$dupRoot/v$next"), "dup-graph")
+    commitNextVersion(dupRoot, tmp, "dup-graph")
   }
 
   /** The committed dup graph's _meta.json (raw string), newest version. */
@@ -3161,11 +3068,11 @@ object VectorStore {
 
   /** One committed ANN index version, the ANN twin of [[Snapshot]] —
     * see the snapshot section of [[VectorStore]] for its key and
-    * lifecycle. `calibratedNprobe` is None for uncalibrated legacy
-    * meta; `tagStats` None when absent or oversized, `pqBooks` None for
-    * an index built without PQ. The schema holds for the whole version:
-    * appends add rows but never columns (maintainAnnIndex aligns
-    * them). */
+    * lifecycle. `calibratedNprobe` is None when `_meta.json` is
+    * unreadable; `tagStats` None when absent or oversized, `pqBooks`
+    * None for an index built without PQ. The schema holds for the
+    * whole version: appends add rows but never columns
+    * (maintainAnnIndex aligns them). */
   private[graft] final class AnnIndex(
       val dir: String,
       val codebookMtime: Long,

@@ -3,43 +3,29 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
- * THE versioned-dir commit protocol (VERDICT r15 next #4: the
- * `_COMMITTED`/marker/adoption/allocation logic had grown two copies —
- * [[VectorStore]] and [[PostingIndex]] — with a third candidate in the
- * streaming WARC offset ledger; one home or they drift).
+ * THE versioned-dir commit protocol, shared by [[VectorStore]] and
+ * [[PostingIndex]] (VERDICT r15 next #4: one home or the copies drift).
  *
  * A versioned artifact (`manifest/v<k>.parquet`, `ann/v<k>`,
  * `dup/v<k>`, `tokenizer/v<k>`, posting `v<k>` + `gen=<g>`) commits as:
  * stage to a tmp dir -> rename to the final versioned name -> write a
- * `_COMMITTED` marker file into it LAST. On a filesystem with atomic
- * directory rename the marker is belt-and-braces; on an object store
- * (S3A/GCS/ABFS: "rename" = per-object copy + delete) a crash
- * mid-rename leaves a PARTIAL final dir, and the marker is what keeps
- * it invisible:
- *  - RESOLUTION reads the newest version CARRYING the marker;
- *  - ALLOCATION takes max over ALL dirs + 1, so a crashed partial
- *    v<k> is never re-targeted (its rename would fail);
- *  - VACUUM iterates ALL dirs, so crash wreckage is reaped after the
- *    grace period like any superseded version.
- *
- * Legacy vs wreckage (ADVICE r15 #2 — the protocol's one ambiguity):
- * an all-marker-less version list used to read as "legacy pre-marker
- * store, everything readable", which is CORRECT for data written
- * before the marker protocol but WRONG for a fresh store whose
- * first-ever commit crashed mid-"rename" — the partial v0 would be
- * readable wreckage, and the next write would stamp it `_COMMITTED`,
- * defeating the protocol in exactly its target scenario. The
- * disambiguator is a store-level FORMAT sentinel (`_GRAFT_FORMAT`, a
- * zero-byte file in the protocol root) written by [[Dir.allocate]]
- * BEFORE any version dir can exist:
- *  - sentinel present + no version markers  => crashed first commit:
- *    nothing is readable, nothing gets adopted, allocation skips past;
- *  - sentinel absent + marker-less dirs     => genuine legacy store:
- *    readable, and the next locked write adopts (stamps) it — writing
- *    the sentinel at the same time, closing the window for good.
- * Single-FILE renames (eigen.bin basis, _meta.json) stay plain: an
- * object PUT/copy is atomic per object, so there is no partial-file
- * window — only the documented absent-file windows.
+ * `_COMMITTED` marker file into it LAST ([[Dir.commit]]). The marker IS
+ * the commit: a dir is committed if and only if it carries the marker,
+ * and a dir without one is wreckage, whatever it holds. On a filesystem
+ * with atomic directory rename the marker is belt-and-braces; on an
+ * object store (S3A/GCS/ABFS: "rename" = per-object copy + delete) a
+ * crash mid-rename leaves a PARTIAL final dir, and the missing marker
+ * is what keeps it invisible:
+ *  - RESOLUTION reads the newest marked version;
+ *  - ALLOCATION takes max over ALL dirs + 1, so a crashed partial v<k>
+ *    is never re-targeted (its rename would fail);
+ *  - VACUUM iterates ALL dirs, so wreckage is reaped after the grace
+ *    period like any superseded version.
+ * A crashed FIRST commit is therefore no special case: its partial v0
+ * is unmarked, nothing reads it, and the retry commits v1.
+ * Single-FILE renames (eigen basis, _meta.json) stay plain: an object
+ * PUT/copy is atomic per object, so there is no partial-file window —
+ * only the documented absent-file windows.
  *
  * Callers hold their writer lock across allocate+stage+commit; this
  * object is pure filesystem mechanics and does no locking itself.
@@ -47,7 +33,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 private[operators] object VersionedCommit {
 
   val CommittedMarker = "_COMMITTED"
-  val FormatMarker = "_GRAFT_FORMAT"
 
   /** One protocol root whose children are `<prefix><k><suffix>` dirs
     * (e.g. `v3.parquet` under manifest/, `gen=2` under a posting
@@ -72,78 +57,29 @@ private[operators] object VersionedCommit {
             fs.exists(new Path(st.getPath, CommittedMarker)))
         }.sortBy(_._1)
 
-    def hasFormatMarker: Boolean =
-      fs.exists(new Path(s"$root/$FormatMarker"))
-
-    /** Marker-less dirs with no sentinel = data from before the marker
-      * protocol; with the sentinel they are crash wreckage. `sentinel`
-      * is passed in so one RPC serves every decision in a call chain
-      * (VERDICT r16 what's-wrong #1: the allocate path paid the
-      * listStatus + sentinel probes twice per write). */
-    private def isLegacy(dirs: Seq[(Int, Boolean)], sentinel: Boolean): Boolean =
-      dirs.nonEmpty && !dirs.exists(_._2) && !sentinel
-
-    /** Versions safe to READ: the marked ones; ALL of them only for a
-      * genuine legacy (pre-sentinel) store. */
-    def committed(): Seq[Int] = {
-      val dirs = list()
-      val marked = dirs.filter(_._2).map(_._1)
-      if (marked.nonEmpty) marked
-      // the sentinel probe only runs when it can change the answer
-      // (all-marker-less listing) — the common committed-store read
-      // stays one listStatus + per-dir marker checks
-      else if (isLegacy(dirs, hasFormatMarker)) dirs.map(_._1)
-      else Nil
-    }
+    /** Versions safe to READ: the marked ones. */
+    def committed(): Seq[Int] = list().filter(_._2).map(_._1)
 
     /** Every version on disk including crash-partial ones — allocation
       * and vacuum must see them all. */
     def all(): Seq[Int] = list().map(_._1)
 
-    /** Adopt a genuine legacy store (its dirs were written by the old
-      * atomic-rename protocol — stamp them committed so the mixed
-      * legacy/partial ambiguity closes going forward; once the
-      * sentinel or any marker exists, marker-less dirs are crash
-      * wreckage and must NOT be stamped) and plant the format
-      * sentinel. Idempotent; caller holds the writer lock. */
-    def adopt(): Unit = adopt(list())
-
-    private def adopt(dirs: Seq[(Int, Boolean)]): Unit = {
-      fs.mkdirs(new Path(root))
-      val sentinel = hasFormatMarker
-      if (isLegacy(dirs, sentinel))
-        // stamp NEWEST-first: adoption is per-dir fs.create calls and a
-        // crash mid-way leaves only the stamped subset readable — with
-        // descending order the surviving committed set always contains
-        // the true newest version, so readers stay correct and the
-        // unmarked remainder is all BELOW live (reaped by vacuum as
-        // ordinary superseded versions, never the newest data)
-        dirs.sortBy(-_._1).foreach { case (v, _) => mark(v) }
-      if (!sentinel)
-        fs.create(new Path(s"$root/$FormatMarker"), true).close()
-    }
-
-    /** Allocate the next version number: [[adopt]] first (so a fresh
-      * store's crashed first commit is never mistaken for legacy),
-      * then max over ALL dirs + 1 — a crashed partial v<k> is never
-      * re-targeted. ONE listing serves both the adoption decision and
-      * the allocation (they were separate listStatus calls — a fixed
-      * per-write cost that multiplies by micro-batch count in
-      * streaming ingest). Caller holds the writer lock. */
-    def allocate(): Int = {
-      val dirs = list()
-      adopt(dirs)
-      dirs.map(_._1).lastOption.map(_ + 1).getOrElse(0)
-    }
+    /** The next version number: max over ALL dirs + 1, so a crashed
+      * partial v<k> is never re-targeted. Caller holds the writer lock. */
+    def allocate(): Int = all().lastOption.map(_ + 1).getOrElse(0)
 
     /** Stamp one version committed (marker write; idempotent). */
     def mark(v: Int): Unit =
       fs.create(new Path(pathOf(v), CommittedMarker), true).close()
 
-    /** Rename the staged dir to its final versioned name and mark it
-      * committed — the marker write is strictly LAST. */
+    /** Rename the staged dir to its final versioned name (creating the
+      * root first) and mark it committed — the marker write is strictly
+      * LAST. The target must not exist: a rename onto an existing dir
+      * would nest the stage inside it. */
     def commit(tmp: Path, v: Int, what: String): Path = {
       val dst = pathOf(v)
+      fs.mkdirs(new Path(root))
+      require(!fs.exists(dst), s"graft: $what commit target $dst exists")
       require(fs.rename(tmp, dst), s"graft: $what commit rename to $dst failed")
       mark(v)
       dst

@@ -1034,12 +1034,18 @@ class OperatorSpec extends AnyFunSuite {
     val codebook = SimilaritySearch.collectCodebook(emb.where(col("vec_id") < 16)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec")))
     val books = SimilaritySearch.pqCodebooks(emb, nSub = 8, nCodes = 16)
-    // every bucket, every list and every ADC candidate is probed, so the
-    // zero row reaches the ranking in all three searches
+    // every bucket, every list and every preselect candidate is probed,
+    // so the zero row reaches the ranking in every search
     val searches = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
       "lsh" -> (c => SimilaritySearch.lshSearchVec(c, qv, k = 5, d = 64, probeHamming = 8)),
       "ivf" -> (c => SimilaritySearch.ivfSearchVec(c, codebook, qv, nprobe = 16, k = 5)),
-      "pq" -> (c => SimilaritySearch.pqSearchVec(c, qv, books, k = 5, refineK = 1000)))
+      "pq" -> (c => SimilaritySearch.pqSearchVec(c, qv, books, k = 5, refineK = 1000)),
+      "matryoshka" -> (c => SimilaritySearch.matryoshkaTopK(c, qv, k = 5, refineK = 1000)),
+      "matryoshka_index" -> { c =>
+        val path = java.nio.file.Files.createTempDirectory("graft-prefix").toString + "/idx"
+        SimilaritySearch.buildPrefixIndex(c, 16, path)
+        SimilaritySearch.matryoshkaIndexTopK(spark, path, qv, k = 5, refineK = 1000)
+      })
     for ((name, search) <- searches) {
       def ranked(c: org.apache.spark.sql.DataFrame) =
         search(c).orderBy("rank").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -1909,22 +1915,18 @@ class OperatorSpec extends AnyFunSuite {
       r.getAs[Int]("tb") == Search.termBucket(r.getString(0), 64)))
   }
 
-  test("crashed FIRST create is wreckage, not legacy: sentinel disambiguates, retry recovers (ADVICE r15 #2)") {
+  test("crashed FIRST create is wreckage: retry commits past it, vacuum reaps it; an unmarked index has no committed version") {
     import graft.operators.{PostingIndex, Search}
     import org.apache.hadoop.fs.Path
     val docs = Tables.load(spark, dir, "documents")
     val idx = java.nio.file.Files.createTempDirectory("graft-pidx-crash").toString + "/i"
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate a first-ever create crashing mid-"rename" on an object
-    // store: a partial v0/gen=0 full of garbage, the format sentinel
-    // already planted (allocation writes it before staging), no
-    // markers, no meta. The OLD protocol read all-marker-less as
-    // "legacy, readable" and the retry wedged on `commit target v0
-    // exists`; now the sentinel marks it wreckage.
+    // store: a partial v0/gen=0 full of garbage, no markers, no meta.
+    // A dir without the marker is wreckage, so nothing reads it.
     fs.mkdirs(new Path(s"$idx/v0/gen=0"))
     val g = fs.create(new Path(s"$idx/v0/gen=0/part-00000.parquet"), true)
     g.write("not parquet".getBytes("UTF-8")); g.close()
-    fs.create(new Path(s"$idx/_GRAFT_FORMAT"), true).close()
     // retry: must succeed by committing PAST the wreckage, and the
     // wreckage must never surface in a scan
     PostingIndex.create(docs, idx)
@@ -1936,25 +1938,18 @@ class OperatorSpec extends AnyFunSuite {
     PostingIndex.vacuum(spark, idx)
     assert(!fs.exists(new Path(s"$idx/v0")), "vacuum left the crashed v0")
     assert(Search.phraseMatchIndexed(spark, idx, Seq("table", "hash")).count() == hits.length)
-    // contrast: a GENUINE legacy versioned index (pre-marker data: no
-    // sentinel, no markers anywhere) stays readable and is adopted —
-    // stamped + sentinel'd — by the next locked append
-    val leg = java.nio.file.Files.createTempDirectory("graft-pidx-leg").toString + "/i"
-    PostingIndex.create(docs, leg)
-    val lfs = new Path(leg).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val want = Search.phraseMatchIndexed(spark, leg, Seq("table", "hash")).collect().length
-    // strip the protocol down to pre-marker state
-    lfs.delete(new Path(s"$leg/_GRAFT_FORMAT"), false)
-    lfs.delete(new Path(s"$leg/v0/_COMMITTED"), false)
-    lfs.delete(new Path(s"$leg/v0/_GRAFT_FORMAT"), false)
-    lfs.delete(new Path(s"$leg/v0/gen=0/_COMMITTED"), false)
-    assert(Search.phraseMatchIndexed(spark, leg, Seq("table", "hash")).count() == want,
-      "legacy (pre-marker) index must stay readable")
-    PostingIndex.append(docs.limit(0), leg) // adopts under the lock
-    assert(lfs.exists(new Path(s"$leg/_GRAFT_FORMAT")))
-    assert(lfs.exists(new Path(s"$leg/v0/_COMMITTED")))
-    assert(lfs.exists(new Path(s"$leg/v0/gen=0/_COMMITTED")))
-    assert(Search.phraseMatchIndexed(spark, leg, Seq("table", "hash")).count() == want)
+    // committed means marked: an index whose markers are gone has no
+    // committed version, so reads and appends both fail and say so
+    val bare = java.nio.file.Files.createTempDirectory("graft-pidx-bare").toString + "/i"
+    PostingIndex.create(docs, bare)
+    val bfs = new Path(bare).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    bfs.delete(new Path(s"$bare/v0/_COMMITTED"), false)
+    bfs.delete(new Path(s"$bare/v0/gen=0/_COMMITTED"), false)
+    val read = intercept[IllegalStateException](
+      Search.phraseMatchIndexed(spark, bare, Seq("table", "hash")).collect())
+    assert(read.getMessage.contains("no committed version"), read.getMessage)
+    val append = intercept[IllegalStateException](PostingIndex.append(docs.limit(0), bare))
+    assert(append.getMessage.contains("no committed version"), append.getMessage)
   }
 
   test("incremental posting index == rebuild; compaction/vacuum lifecycle; crash stage ignored") {

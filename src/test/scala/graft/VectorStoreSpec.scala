@@ -268,22 +268,36 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
-  test("legacy store without a manifest file: search falls back, next insert repairs without hiding old partitions") {
-    val root = Files.createTempDirectory("graft-legacy").toString
+  test("rows no committed manifest names are debris: reads see none, a retried first insert lands past them, vacuum reaps them") {
+    // a store that was never written reads as zero rows
+    assert(freshStore().table().count() == 0)
+    val root = Files.createTempDirectory("graft-first-crash").toString
     val store = new VectorStore(spark, root)
     store.insert(df(Seq(
       ("a", Array(1f, 0f), "x", Seq("t1")),
       ("b", Array(0f, 1f), "y", Seq("t2")))))
-    // simulate a pre-manifest store
+    val key = store.manifest().where(array_contains(col("tags"), "t1"))
+      .select("tag_key").head().getString(0)
+    // simulate a first insert that crashed after its data write, before
+    // its manifest commit and layout write: gen-0 rows, nothing names them
     import scala.reflect.io.Directory
     new Directory(new java.io.File(s"$root/manifest")).deleteRecursively()
     new Directory(new java.io.File(s"$root/manifest_delta")).deleteRecursively()
-    // fallback: partition discovery still answers tag search
-    assert(store.search(Seq(1f, 0f), tags = Seq("t1"), k = 5).count() == 1)
-    // the next insert rebuilds the manifest WITHOUT hiding old tag sets
-    store.insert(df(Seq(("c", Array(0.5f, 0.5f), "z", Seq("t3")))))
+    new java.io.File(s"$root/_layout.json").delete()
+    assert(store.table().count() == 0)
+    assert(store.search(Seq(1f, 0f), tags = Seq("t1"), k = 5).count() == 0)
+    // the retry revives the tag set past the debris and shows only its own rows
+    store.insert(df(Seq(("c", Array(0.5f, 0.5f), "z", Seq("t1")))))
+    assert(new java.io.File(s"$root/data/tag_key=$key/gen=1").isDirectory)
+    assert(store.table().select("id").as[String].collect().toSeq == Seq("c"))
     assert(store.search(Seq(1f, 0f), tags = Seq("t1"), k = 5).count() == 1)
     assert(store.searchDpp(Seq(1f, 0f), tags = Seq("t1"), k = 5).count() == 1)
+    store.vacuum(0L)
+    assert(!new java.io.File(s"$root/data/tag_key=$key/gen=0").exists)
+    val keys = new java.io.File(s"$root/data").listFiles().map(_.getName)
+      .filter(_.startsWith("tag_key=")).toSet
+    assert(keys == Set(s"tag_key=$key"), s"vacuum left $keys")
+    assert(store.table().select("id").as[String].collect().toSeq == Seq("c"))
     store.clear()
   }
 
@@ -435,7 +449,7 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // leftover staging dirs — nothing references them
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$root/data/tag_key=$key/gen=99"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/upsert_tmp"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/rewrite_tmp"))
     assert(store.search(Seq(1f, 0f), k = 1).head().getAs[String]("content") == "v1")
     // the next upsert commits cleanly past the debris
     store.upsert(df(Seq(("a", Array(1f, 0f), "v2", Seq("t1")))))
@@ -446,7 +460,7 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gens = new java.io.File(s"$root/data/tag_key=$key").listFiles()
       .map(_.getName).filter(_.startsWith("gen=")).toSet
     assert(!gens.contains("gen=99") && !gens.contains("gen=0"), s"vacuum left $gens")
-    assert(!new java.io.File(s"$root/upsert_tmp").exists)
+    assert(!new java.io.File(s"$root/rewrite_tmp").exists)
     assert(store.search(Seq(1f, 0f), k = 1).head().getAs[String]("content") == "v2")
     store.clear()
   }
@@ -1223,6 +1237,32 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
+  test("vacuum finishes a crashed projection's basis rename instead of reaping the staged basis") {
+    val store = freshStore()
+    val rows = (0 until 30).map { i =>
+      (s"id$i", Array.tabulate(6)(j => math.sin(i * 0.7 + j).toFloat), s"c$i", Seq("t"))
+    }
+    store.insert(df(rows))
+    store.projectAll(2)
+    // the crash window: projected data committed, basis staged, not renamed
+    val rootDir = java.nio.file.Paths.get(store.root)
+    java.nio.file.Files.move(rootDir.resolve("eigen.parquet"),
+      rootDir.resolve("eigen_tmp.parquet"))
+    assert(!store.isProjected)
+    // the staged basis is the committed data's only basis: vacuum must
+    // finish its rename, however old it is
+    store.vacuum(0L)
+    assert(store.isProjected, "vacuum reaped the committed data's only basis")
+    assert(!java.nio.file.Files.exists(rootDir.resolve("eigen_tmp.parquet")))
+    // the store keeps working as a projected store
+    val ex = intercept[IllegalArgumentException] { store.projectAll(2) }
+    assert(ex.getMessage.contains("already projected"), ex.getMessage)
+    store.insert(df(Seq(("n", Array.tabulate(6)(j => math.cos(j).toFloat), "n", Seq("t")))))
+    assert(store.table().count() == 31)
+    assert(store.searchAuto(rows.head._2.toSeq, k = 3).count() == 3)
+    store.clear()
+  }
+
   test("searchMany: batched exact top-k agrees with per-query search; tag filter holds") {
     val store = freshStore()
     val vt = graft.core.Tables.vectorTable(spark, "/root/testdata/sf0.001")
@@ -1975,6 +2015,24 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.clear()
   }
 
+  test("compactAnnIndex stages in the build's ann_tmp: stale debris there is replaced, vacuum leaves no staging dir") {
+    val store = freshStore()
+    store.insert(df((0 until 20).map(i =>
+      (s"v$i", Array(i.toFloat, (20 - i).toFloat), s"c$i", Seq("t")))))
+    store.buildAnnIndex(2)
+    // a crashed build or compaction left garbage in the staging dir
+    val stale = java.nio.file.Paths.get(store.root, "ann_tmp", "part-00000.parquet")
+    java.nio.file.Files.createDirectories(stale.getParent)
+    java.nio.file.Files.write(stale, "not parquet".getBytes("UTF-8"))
+    store.compactAnnIndex()
+    assert(store.searchAnn(Seq(1f, 2f), k = 3).count() == 3)
+    store.vacuum(0L)
+    val left = new java.io.File(store.root).listFiles().map(_.getName).filter(_.contains("_tmp"))
+    assert(left.isEmpty, s"vacuum left staging entries: ${left.mkString(",")}")
+    assert(store.searchAnn(Seq(1f, 2f), k = 3).count() == 3)
+    store.clear()
+  }
+
   test("IVF-PQ: an index whose dim cannot subspace-split fails searchAnnPq loudly") {
     val store = freshStore()
     store.insert(df((0 until 20).map(i =>
@@ -2549,16 +2607,22 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ckptDirs().size == 2, s"distinct sources must not share a checkpoint: ${ckptDirs()}")
     assert(store.table().count() == 2)
     store.clear()
-    // GRANDFATHERING (review-pass r10 #1): a store already carrying
-    // the pre-r10 fixed-name ledger keeps it — else its offsets would
-    // be abandoned and the whole source replayed into duplicates
+    // a store whose only ledger is the shared fixed-name one of older
+    // releases: the default cannot tell which source owns it (a new
+    // per-source ledger would replay that source into duplicates), so
+    // the start fails, naming the path
     val store2 = freshStore()
-    assert(new java.io.File(s"${store2.root}/_checkpoints").mkdirs())
-    assert(new java.io.File(s"${store2.root}/_checkpoints/ingest").mkdirs())
-    store2.insertStream(spark.readStream.schema(schema).parquet(srcA))
-      .awaitTermination()
-    val dirs2 = new java.io.File(s"${store2.root}/_checkpoints").listFiles().map(_.getName).toSet
-    assert(dirs2 == Set("ingest"), s"legacy ledger must be reused, got $dirs2")
+    val shared = s"${store2.root}/_checkpoints/ingest"
+    assert(new java.io.File(shared).mkdirs())
+    val ex = intercept[IllegalStateException](
+      store2.insertStream(spark.readStream.schema(schema).parquet(srcA)))
+    assert(ex.getMessage.contains(shared) && ex.getMessage.contains("checkpointLocation"),
+      ex.getMessage)
+    // passing it explicitly resumes the stream that owns it
+    store2.insertStream(spark.readStream.schema(schema).parquet(srcA),
+      checkpointLocation = Some(shared)).awaitTermination()
+    assert(new java.io.File(s"${store2.root}/_checkpoints").listFiles().map(_.getName).toSet
+      == Set("ingest"))
     assert(store2.table().count() == 1)
     store2.clear()
   }
