@@ -1,10 +1,12 @@
 #!/usr/bin/env bash
 # Scale-parity gate (VERDICT r14 next #7): the driver's hash gate runs
-# at sf0.01; this runs the SAME Verify-dump + DuckDB compare for 25
+# at sf0.01; this runs the SAME Verify-dump + DuckDB compare for 27
 # rows at sf0.1 once per round: the scale-shaped dedup / ANN / exact
 # batch / pipeline families, store_delete (the row that runs the
-# store's partition rewrite), and ingest_dedup (a fresh store built
-# through the first insert and a default stream checkpoint). It writes
+# store's partition rewrite), ingest_dedup (a fresh store built
+# through the first insert and a default stream checkpoint), and the
+# phrase search pair text_phrase_search / text_phrase_indexed (scan
+# and posting-index probe against one oracle). It writes
 # PARITY_sf01.json next to the round's correctness artifact.
 # ingest_neardedup is left out: its DuckDB oracle (recursive component
 # labelling) exhausts 12.5 GiB at sf0.1.
@@ -13,7 +15,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.1}"
 OUT=/tmp/graft_parity_sf01
-ROWS="dedup_exact,dedup_minhash,dedup_clusters,dedup_simhash,dedup_substring,dedup_semantic,dedup_embedding_lsh,ann_lsh,ann_ivf,ann_ivf_filtered,ann_ivf_quantized,ann_ivf_join,ann_lsh_join,ann_pq,ann_matryoshka,ann_maxsim,pipeline_curate,pipeline_web,warc_read,knn_multiquery,knn_multiquery_heap,knn_classify,ann_eval,store_delete,ingest_dedup"
+ROWS="dedup_exact,dedup_minhash,dedup_clusters,dedup_simhash,dedup_substring,dedup_semantic,dedup_embedding_lsh,ann_lsh,ann_ivf,ann_ivf_filtered,ann_ivf_quantized,ann_ivf_join,ann_lsh_join,ann_pq,ann_matryoshka,ann_maxsim,pipeline_curate,pipeline_web,warc_read,knn_multiquery,knn_multiquery_heap,knn_classify,ann_eval,store_delete,ingest_dedup,text_phrase_search,text_phrase_indexed"
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT $ROWS" 1>&2
 python3 scripts/parity.py "$SF" "$OUT" | tee /tmp/parity_sf01.txt 1>&2

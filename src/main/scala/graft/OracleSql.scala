@@ -202,7 +202,7 @@ object OracleSql {
   }
 
   /** DuckDB CTE: fingerprint-derived PSEUDO-signatures for docs below
-    * the 2-token shingle floor (mirror of VectorStore.fullSigsOf) —
+    * the 2-token shingle floor (mirror of IngestSidecar.fullSigsOf) —
     * identical trivial contents agree 16/16, different fingerprints
     * differ in every slot. Needs `mhr` (real sigs); yields `mh`. */
   def pseudoSigCte: String = {

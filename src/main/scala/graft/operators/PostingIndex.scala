@@ -5,12 +5,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Incremental maintenance for the positional posting index
- * (VERDICT r12 next #6): [[Search.buildPostingIndex]] is rebuild-only,
- * which at 100 TB means a daily-append corpus re-tokenizes the world
- * to index one day. This object gives the index the same lifecycle
- * discipline as the store's dup-graph sidecar (versioned one-rename
- * commits, lineage in underscore meta files, validate-before-destroy):
+ * The positional posting index that [[Search.phraseMatchIndexed]]
+ * probes: (doc_id, pos, tok) rows partitioned on disk by
+ * `tb = crc32(tok) % buckets`, maintained incrementally (VERDICT r12
+ * next #6) — a rebuild-only index at 100 TB would make a daily-append
+ * corpus re-tokenize the world to index one day. The index has the
+ * same lifecycle discipline as the store's dup-graph sidecar
+ * (versioned one-rename commits, lineage in underscore meta files,
+ * validate-before-destroy):
  *
  * Layout: `path/_postings.json` ({"buckets":B}, written once at
  * create — the bucket hash is the index's identity and can never
@@ -38,10 +40,7 @@ import org.apache.spark.sql.functions._
  * vacuum — holds `_writer_lock` (atomic create-if-absent, spin up to
  * `lockTimeoutMs`, loud failure carrying the lock's age so a slow
  * writer is distinguishable from crash wreckage). Readers are
- * lock-free (they only ever see committed renames). The flat
- * rebuild-only layout that [[Search.buildPostingIndex]] writes (no
- * `_postings.json`) is the other layout [[Search.phraseMatchIndexed]]
- * reads; it dispatches on the meta file.
+ * lock-free (they only ever see committed renames).
  */
 object PostingIndex {
 
@@ -61,14 +60,12 @@ object PostingIndex {
 
   private def metaPath(path: String) = new Path(s"$path/_postings.json")
 
-  /** True when `path` is a versioned posting index (vs the flat
-    * [[Search.buildPostingIndex]] layout or nothing at all). */
-  def isVersioned(spark: SparkSession, path: String): Boolean =
-    fsOf(spark, path).exists(metaPath(path))
-
   /** The index's bucket count, from the create-time meta. */
   def buckets(spark: SparkSession, path: String): Int = {
     val fs = fsOf(spark, path)
+    if (!fs.exists(metaPath(path)))
+      throw new IllegalStateException(
+        s"graft: no posting index at $path (no _postings.json; build one with PostingIndex.create)")
     val in = fs.open(metaPath(path))
     val s = try scala.io.Source.fromInputStream(in).mkString finally in.close()
     "\"buckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)

@@ -252,25 +252,6 @@ object Search {
   }
 
   /**
-   * Materialize the positional posting index: (doc_id, pos, tok) rows
-   * partitioned on disk by `tb = crc32(tok) % buckets`. One tokenize
-   * pass over the corpus, one shuffle to concentrate each term bucket
-   * into its partition directory — after that, any phrase/term query
-   * reads ONLY the buckets its terms hash to ([[phraseMatchIndexed]]),
-   * which is the inverted-index economics the scan-side
-   * [[phraseMatch]] can only approximate with a post-scan filter.
-   */
-  def buildPostingIndex(docs: DataFrame, path: String, buckets: Int = 64,
-                        idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    require(buckets > 0, s"graft: buckets $buckets must be positive")
-    docs.select(col(idCol).as("doc_id"),
-        posexplode(graft.operators.Dedup.tokens(col(textCol))).as(Seq("pos", "tok")))
-      .withColumn("tb", (crc32(col("tok").cast("binary")) % buckets).cast("int"))
-      .repartition(col("tb"))
-      .write.mode("overwrite").partitionBy("tb").parquet(path)
-  }
-
-  /**
    * [[phraseMatch]] against a materialized posting index: the phrase's
    * term set resolves to a STATIC `tb IN (...)` partition filter (the
    * driver computes the CRC32 buckets before planning — no job, no
@@ -280,23 +261,20 @@ object Search {
    * the scan-side operator (spec-pinned), different IO class: the
    * corpus is never read at query time.
    *
-   * Serves both layouts: a versioned [[PostingIndex]] (generations are
-   * just more partition directories under the same static tb filter —
-   * `buckets` comes from the index meta) and the flat rebuild-only
-   * [[buildPostingIndex]] tree (pass its `buckets`).
+   * `path` is a [[PostingIndex]] (its generations are just more
+   * partition directories under the same static tb filter; `buckets`
+   * comes from the index meta). A dir without that meta fails, naming
+   * the path.
    */
   def phraseMatchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                         phrase: Seq[String], buckets: Int = 64): DataFrame = {
+                         phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "graft: phrase must have at least one term")
     require(phrase.forall(t => t.nonEmpty && t.matches("[a-z0-9]+")),
       s"graft: phrase terms must be normalized [a-z0-9]+ tokens, got ${phrase.mkString(" ")}")
-    val versioned = PostingIndex.isVersioned(spark, path)
-    val nBuckets = if (versioned) PostingIndex.buckets(spark, path) else buckets
+    val nBuckets = PostingIndex.buckets(spark, path)
     val terms = phrase.distinct
     val tbs = terms.map(termBucket(_, nBuckets)).distinct
-    val base = if (versioned) PostingIndex.scan(spark, path)
-               else spark.read.parquet(path)
-    val toks = base
+    val toks = PostingIndex.scan(spark, path)
       .where(col("tb").isin(tbs: _*))       // static partition pruning
       .where(col("tok").isin(terms: _*))    // pushed row-group filter
     phraseHits(toks, phrase)

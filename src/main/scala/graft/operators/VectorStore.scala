@@ -81,6 +81,11 @@ import graft.OracleSql
  *  - A rebuild or compaction commits a new version dir, and a clear()
  *    followed by a rebuild at the same path writes a new codebook; both
  *    resolve a new handle (one codebook collect, one `_meta.json` read).
+ *
+ * Dedup-on-ingest sidecars: [[insertDedup]] and [[insertNearDedup]]
+ * each probe one [[IngestSidecar]] (content fingerprints, near-dup
+ * band signatures). The store keeps both in one list, and every write
+ * path (an append, an upsert, a takedown, vacuum) loops over it.
  */
 class VectorStore(spark: SparkSession, val root: String,
                   writerLockTimeoutMs: Long = 600000L,
@@ -462,7 +467,8 @@ class VectorStore(spark: SparkSession, val root: String,
     * new rows (quantized search then silently drops them), and packing
     * rows into an unquantized store mixes schemas the same way — the
     * flag only decides the layout of the FIRST batch. */
-  private def insertLocked(df: DataFrame, quantize: Boolean): Unit = {
+  private def insertLocked(df: DataFrame, quantize: Boolean,
+                           sidecarRows: Map[IngestSidecar, DataFrame] = Map.empty): Unit = {
     val q = storedHasPacked match {
       case Some(stored) =>
         require(!quantize || stored,
@@ -471,7 +477,7 @@ class VectorStore(spark: SparkSession, val root: String,
       case None => quantize
     }
     val (batch, dim) = prepareBatch(df)
-    writeBatch(batch, dim, q)
+    writeBatch(batch, dim, q, sidecarRows)
   }
 
   private val layoutPath = s"$root/_layout.json"
@@ -557,8 +563,11 @@ class VectorStore(spark: SparkSession, val root: String,
 
   /** Append a [[prepareBatch]]-validated frame into the live gen dirs,
     * record its tag sets, and write the commit through to the
-    * snapshot, with the batch's vector dimension `dim`. */
-  private def writeBatch(prepared: DataFrame, dim: Int, quantize: Boolean): Unit = {
+    * snapshot, with the batch's vector dimension `dim`. Each live
+    * sidecar folds the batch in, from `sidecarRows` when the caller
+    * already derived its rows. */
+  private def writeBatch(prepared: DataFrame, dim: Int, quantize: Boolean,
+                         sidecarRows: Map[IngestSidecar, DataFrame] = Map.empty): Unit = {
     val prev = snapshot()
     // when an ANN index will fold this batch in, pin the batch first:
     // id assignment is uuid() — NONdeterministic — so re-running the
@@ -568,18 +577,13 @@ class VectorStore(spark: SparkSession, val root: String,
     // both writes read the same rows.
     val out0 = withGen(liveGens(prev), finalizeBatch(prepared, quantize))
     // a live sidecar adds a third consumer of the batch plan (data
-    // write + manifest distinct + fingerprint append) — pin for it
+    // write + manifest distinct + sidecar append) — pin for it
     // exactly as for the ANN maintenance case (review-pass r10 #4)
-    val idxLive = contentIdxValid
-    val nearLive = nearIdxValid
-    val out = if (hasAnnIndex || idxLive || nearLive) out0.localCheckpoint() else out0
-    // sidecar marker dance (content fingerprints AND near-dup
-    // signatures): EVERY appending path adds contents, so a live
-    // sidecar must fold the batch in or go invalid — a crash between
-    // the data write and a sidecar append leaves that marker off,
-    // forcing a rebuild instead of a silently incomplete index
-    if (idxLive) fs.delete(contentIdxMarker, false)
-    if (nearLive) fs.delete(nearIdxMarker, false)
+    val live = sidecars.filter(_.valid)
+    val out = if (hasAnnIndex || live.nonEmpty) out0.localCheckpoint() else out0
+    // EVERY appending path adds contents, so a live sidecar folds the
+    // batch in, marker off until it has ([[IngestSidecar]])
+    live.foreach(_.beginAppend())
     // cluster the batch by its write-partition key before the
     // partitionBy write (guide §6: coalesce on write): an N-partition
     // input otherwise fans out into up to N files under EVERY tag_key
@@ -596,14 +600,7 @@ class VectorStore(spark: SparkSession, val root: String,
     updateManifest(sets)
     prev.foreach(writeThrough(_, sets, out.schema, dim))
     persistHasPacked(quantize)
-    if (idxLive) {
-      appendContentIdx(out)
-      fs.create(contentIdxMarker, true).close()
-    }
-    if (nearLive) {
-      appendNearIdx(out)
-      fs.create(nearIdxMarker, true).close()
-    }
+    live.foreach(s => s.append(sidecarRows.getOrElse(s, s.rowsOf(out))))
     maintainAnnIndex(out)
   }
 
@@ -637,11 +634,6 @@ class VectorStore(spark: SparkSession, val root: String,
   }
 
   private def upsertLocked(df: DataFrame, quantize: Boolean): Unit = {
-    // overwritten ids can REMOVE contents from the live view — the
-    // fingerprint sidecar cannot subtract, so it goes invalid here and
-    // rebuilds on the next insertDedup
-    invalidateContentIdx()
-    invalidateNearIdx()
     // the store's layout wins over the flag: appending packed-less rows
     // to a quantized store would null the codec for the new rows, and
     // appending packed rows to an unquantized store would produce a
@@ -669,6 +661,11 @@ class VectorStore(spark: SparkSession, val root: String,
           .where(col("tag_key").isin(affected: _*))
           .join(broadcast(ids), Seq("id"), "left_anti")
         val incoming = prepared.where(col("tag_key").isin(affected: _*))
+        // overwritten ids can REMOVE contents from the live view, and a
+        // sidecar cannot subtract: both drop and rebuild on the next
+        // dedup insert. An upsert of new ids only adds contents, which
+        // writeBatch folds in.
+        sidecars.foreach(_.invalidate())
         rewritePartitions(affected,
           Some(kept.unionByName(incoming, allowMissingColumns = true)))
         prepared.where(!col("tag_key").isin(affected: _*))
@@ -774,8 +771,7 @@ class VectorStore(spark: SparkSession, val root: String,
     * detectable.) */
   private def takedown(affected: Seq[String], kept: Option[DataFrame],
                        doomedIds: DataFrame, n: Long): Long = {
-    invalidateContentIdx()
-    invalidateNearIdx()
+    sidecars.foreach(_.invalidate())
     rewritePartitions(affected, kept)
     fs.delete(new Path(annRoot), true)
     if (dupVersions().nonEmpty) {
@@ -894,30 +890,12 @@ class VectorStore(spark: SparkSession, val root: String,
     d.take(6).map(b => f"$b%02x").mkString
   }
 
-  // ---- content-fingerprint sidecar: the dedup-on-ingest probe index
-  // (VERDICT r9 What's-wrong #3). The r8 probe LEFT-SEMI-scanned the
-  // whole store's content column per trigger — column-pruned and
-  // shuffle-free, but a full corpus pass that dominates every
-  // micro-batch at 100 TB. The sidecar holds the DISTINCT SHA-256
-  // fingerprints of live contents, hive-partitioned by a 64-way hash
-  // bucket, so a trigger's probe statically prunes to the batch's
-  // buckets: per-trigger bytes scale with corpus/64 worst-case and
-  // with the BATCH's bucket spread (tiny) for the small triggers
-  // streaming actually runs. Consistency: the sidecar is exact
-  // (= live distinct fingerprints) whenever its _OK marker exists;
-  // every appending write runs marker-off -> data -> sidecar append ->
-  // marker-on, so a crash mid-sequence just forces a rebuild (one
-  // narrow store scan — the cost the OLD probe paid every trigger);
-  // content-REMOVING ops (upsert, delete family) invalidate it
-  // outright. Fingerprint equality stands in for content equality
-  // (2^-128 collision odds — the content-addressable-storage
-  // convention); the null-content sentinel cannot collide with a real
-  // 64-hex digest, preserving the null-SAFE dedup semantics. ----
+  // ---- dedup-on-ingest: the two sidecars ([[IngestSidecar]]) and
+  // the insert policies they serve ----
 
-  private[graft] val ContentIdxBuckets = 64
-  private val contentIdxDir = s"$root/contentidx"
-  private val contentIdxData = s"$contentIdxDir/data"
-  private def contentIdxMarker = new Path(s"$contentIdxDir/_OK")
+  private[graft] val contentIdx = IngestSidecar.content(spark, fs, root)
+  private[graft] val nearIdx = IngestSidecar.nearDup(spark, fs, root)
+  private val sidecars = Seq(contentIdx, nearIdx)
 
   /** Threshold gate (measured r10): below `contentIdxMinBytes` of
     * store data the OLD direct content probe is cheaper than the
@@ -931,62 +909,15 @@ class VectorStore(spark: SparkSession, val root: String,
     try fs.getContentSummary(new Path(dataPath)).getLength >= contentIdxMinBytes
     catch { case _: java.io.IOException => false }
 
-  private def chashCol(c: Column): Column =
-    coalesce(sha2(c, 256), lit("__graft_null__"))
-
-  private def cbucketCol(ch: Column): Column =
-    pmod(xxhash64(ch), lit(ContentIdxBuckets.toLong)).cast("int")
-
-  private[graft] def contentIdxValid: Boolean = fs.exists(contentIdxMarker)
-
-  private def invalidateContentIdx(): Unit = {
-    fs.delete(new Path(contentIdxDir), true); ()
-  }
-
-  private def rebuildContentIdx(): Unit = {
-    fs.delete(new Path(contentIdxDir), true)
-    table().select(chashCol(col("content")).as("chash")).distinct()
-      .withColumn("cbucket", cbucketCol(col("chash")))
-      .write.mode(SaveMode.Overwrite).partitionBy("cbucket")
-      .parquet(contentIdxData)
-    fs.create(contentIdxMarker, true).close()
-  }
-
-  /** Append a batch's fingerprints (distinct within the batch — dup
-    * rows against EXISTING entries are harmless for the semi-join
-    * probe and fold away on the next rebuild). Caller handles the
-    * marker dance. */
-  private def appendContentIdx(batch: DataFrame): Unit =
-    batch.select(chashCol(col("content")).as("chash")).distinct()
-      .withColumn("cbucket", cbucketCol(col("chash")))
-      .write.mode(SaveMode.Append).partitionBy("cbucket")
-      .parquet(contentIdxData)
-
-  /** Sidecar scan with the schema DECLARED: a sidecar rebuilt from an
-    * emptied store has no files to infer from (zero-row partitioned
-    * write), and schema inference would throw where an empty index is
-    * the correct answer. */
-  private def contentIdxTable(): DataFrame =
-    spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("chash",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("cbucket",
-          org.apache.spark.sql.types.IntegerType))))
-      .parquet(contentIdxData)
-
   /** The pruned probe: fingerprints of `batchHashes` (a `chash` column,
     * batch-bounded) that are already present. Exposed for the plan
     * gate — the sidecar scan must show cbucket PartitionFilters, i.e.
     * it reads ONLY the batch's buckets. */
-  private[graft] def contentIdxProbe(batchHashes: DataFrame): DataFrame = {
-    val buckets = batchHashes.select(cbucketCol(col("chash")).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    contentIdxTable()
-      .where(col("cbucket").isin(buckets: _*))
+  private[graft] def contentIdxProbe(batchHashes: DataFrame): DataFrame =
+    contentIdx.scanBuckets(
+        batchHashes.select(IngestSidecar.cbucket(col("chash")).as("cbucket")))
       .join(broadcast(batchHashes), Seq("chash"), "left_semi")
       .select("chash").distinct()
-  }
 
   /**
    * Content-deduplicating append: drop rows whose `content` already
@@ -1019,9 +950,9 @@ class VectorStore(spark: SparkSession, val root: String,
             .where(col("__graft_rn") === 1).drop("__graft_rn")
         } else df.dropDuplicates("content")
       val fresh0 =
-        if (exists && (contentIdxValid || contentIdxWorthwhile)) {
-          if (!contentIdxValid) rebuildContentIdx()
-          val withH = inBatch.withColumn("__graft_chash", chashCol(col("content")))
+        if (exists && (contentIdx.valid || contentIdxWorthwhile)) {
+          if (!contentIdx.valid) contentIdx.rebuild(table())
+          val withH = inBatch.withColumn("__graft_chash", IngestSidecar.chash(col("content")))
           // pinned: read by the bucket collect, the semi-join probe,
           // and nothing else re-derives the batch
           val batchHashes = withH
@@ -1049,129 +980,20 @@ class VectorStore(spark: SparkSession, val root: String,
       if (!fresh.isEmpty) insertLocked(fresh, quantize)
     }
 
-  // ---- NEAR-dup (MinHash) dedup-on-ingest: the FUZZY twin of the
-  // exact content sidecar. Policy: two docs are near-dups when an LSH
-  // band of their MinHash signatures matches AND >= NearDupSigAgreeMin
-  // of the 16 slots agree (the estimator-level analogue of the batch
-  // family's exact-Jaccard verify — see OracleSql.NearDupSigAgreeMin
-  // for why signatures, not text, verify at ingest). The sidecar holds
-  // one row per live (doc, band): the band's 4 slots (the match key)
-  // plus the full 16-slot signature (the verifier), partitioned by a
-  // 64-way bucket of s0 so a trigger's probe statically prunes to the
-  // batch's buckets. Same exactness contract as the content sidecar:
-  // marker dance on every append, invalidation on removal, rebuild =
-  // one store shingle pass. ----
-
-  private val nearIdxDir = s"$root/neardupidx"
-  private val nearIdxData = s"$nearIdxDir/data"
-  private def nearIdxMarker = new Path(s"$nearIdxDir/_OK")
-  private[graft] def nearIdxValid: Boolean = fs.exists(nearIdxMarker)
-  private def invalidateNearIdx(): Unit = {
-    fs.delete(new Path(nearIdxDir), true); ()
-  }
-
-  /** (doc_id = store id, m0..m15) MinHash signatures over `content`
-    * for docs AT OR ABOVE the 2-token shingle floor. */
-  private[graft] def sigsOf(rows: DataFrame): DataFrame =
-    graft.operators.Dedup.minhashSignatures(
-      graft.operators.Dedup.shingles(rows, "id", "content"))
-
-  /** [[sigsOf]] plus PSEUDO-signatures for docs below the shingle
-    * floor: 16 affine maps (the MinHash constants) of the mirrored
-    * rolling-hash content fingerprint. Identical trivial contents get
-    * identical pseudo-signatures (16/16 agreement — exact dedup);
-    * different fingerprints differ in EVERY slot (affine maps mod P
-    * are injective in fp), so nothing else ever matches. This is what
-    * makes a replayed below-floor row idempotent (review-pass r10 #1):
-    * without it, no-signature docs re-inserted on replay and broke the
-    * documented idempotence contract AND id uniqueness. Null content
-    * maps through the same sentinel as the content sidecar. */
-  private[graft] def fullSigsOf(rows: DataFrame): DataFrame = {
-    val real = sigsOf(rows)
-    val pseudo = rows
-      .join(real.select(col("doc_id").as("id")), Seq("id"), "left_anti")
-      .withColumn("__fp_src", coalesce(col("content"), lit("__graft_null__")))
-      .withColumn("__fp", graft.operators.TextAnalysis.fingerprint("__fp_src"))
-      .select(col("id").as("doc_id") +:
-        (0 until OracleSql.MinHashK).map(i =>
-          ((lit(OracleSql.MinHashA(i)) * (col("__fp") % OracleSql.MinHashP)
-            + lit(OracleSql.MinHashB(i))) % OracleSql.MinHashP).as(s"m$i")): _*)
-    real.unionByName(pseudo)
-  }
-
-  private def mSlots: Seq[String] = (0 until OracleSql.MinHashK).map(i => s"m$i")
-
-  /** One row per (doc, band): (band, s0..s3 match key, m0..m15). */
-  private[graft] def bandRowsOf(sigs: DataFrame): DataFrame = {
-    val bandCol = explode(array((0 until OracleSql.LshBands).map { b =>
-      struct(lit(b).as("band") +:
-        (0 until OracleSql.LshRows).map(r =>
-          col(s"m${b * OracleSql.LshRows + r}").as(s"s$r")): _*)
-    }: _*))
-    sigs.select(col("doc_id") +: mSlots.map(col) :+ bandCol.as("bk"): _*)
-      .select(Seq(col("doc_id"), col("bk.band").as("band")) ++
-        (0 until OracleSql.LshRows).map(r => col(s"bk.s$r").as(s"s$r")) ++
-        mSlots.map(col): _*)
-      .withColumn("bbucket", pmod(col("s0"), lit(ContentIdxBuckets.toLong)).cast("int"))
-  }
-
-  /** Sidecar scan with the schema declared (same empty-store rationale
-    * as [[contentIdxTable]]). */
-  private def nearIdxTable(): DataFrame = {
-    import org.apache.spark.sql.types._
-    val fields = Seq(StructField("band", IntegerType)) ++
-      (0 until OracleSql.LshRows).map(r => StructField(s"s$r", LongType)) ++
-      mSlots.map(m => StructField(m, LongType)) :+
-      StructField("bbucket", IntegerType)
-    spark.read.schema(StructType(fields)).parquet(nearIdxData)
-  }
-
-  private def rebuildNearIdx(): Unit = {
-    fs.delete(new Path(nearIdxDir), true)
-    bandRowsOf(fullSigsOf(table().select(col("id"), col("content"))))
-      .drop("doc_id")
-      .write.mode(SaveMode.Overwrite).partitionBy("bbucket").parquet(nearIdxData)
-    fs.create(nearIdxMarker, true).close()
-  }
-
-  /** Per-batch sidecar append. `insertNearDedup` threads its already-
-    * computed survivor signatures through [[pendingNearSigs]] so the
-    * hot streaming path does not shingle the batch twice (review-pass
-    * r10 #6); other append paths (plain insert into a near-indexed
-    * store) compute them here. */
-  private def appendNearIdx(batch: DataFrame): Unit = {
-    val sigs = pendingNearSigs match {
-      case Some(pre) => pre.join(
-        broadcast(batch.select(col("id")).distinct()),
-        pre("doc_id") === col("id"), "left_semi")
-      case None => fullSigsOf(batch.select(col("id"), col("content")))
-    }
-    bandRowsOf(sigs)
-      .drop("doc_id")
-      .write.mode(SaveMode.Append).partitionBy("bbucket").parquet(nearIdxData)
-  }
-
-  /** Set (under the writer lock) by insertNearDedup around its
-    * insertLocked call; consumed by [[appendNearIdx]]. */
-  private var pendingNearSigs: Option[DataFrame] = None
-
-  /** Batch ids that near-dup a STORED doc: batch band rows probe the
-    * bucket-pruned sidecar on the band key, agreement >= the floor
-    * verifies. Exposed for the plan gate (the sidecar scan must show
-    * bbucket PartitionFilters). */
+  /** Batch ids that near-dup a STORED doc: batch band rows
+    * ([[IngestSidecar.bandRowsOf]]) probe the bucket-pruned sidecar on
+    * the band key, and >= [[OracleSql.NearDupSigAgreeMin]] of the 16
+    * slots agreeing verifies (the estimator-level analogue of the
+    * batch family's exact-Jaccard verify — see NearDupSigAgreeMin for
+    * why signatures, not text, verify at ingest). Exposed for the plan
+    * gate (the sidecar scan must show bbucket PartitionFilters). */
   private[graft] def nearIdxProbe(batchBands: DataFrame): DataFrame = {
-    val buckets = batchBands.select(col("bbucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
     val bb = batchBands.select(Seq(col("doc_id"), col("band")) ++
-      (0 until OracleSql.LshRows).map(r => col(s"s$r")) ++
-      mSlots.map(m => col(m).as(s"b$m")): _*)
-    val agree = mSlots.map(m =>
-      when(col(m) === col(s"b$m"), 1).otherwise(0)).reduce(_ + _)
-    nearIdxTable()
-      .where(col("bbucket").isin(buckets: _*))
-      .join(broadcast(bb),
-        Seq("band") ++ (0 until OracleSql.LshRows).map(r => s"s$r"))
-      .where(agree >= OracleSql.NearDupSigAgreeMin)
+      IngestSidecar.bandKey.map(col) ++
+      IngestSidecar.mSlots.map(m => col(m).as(s"b$m")): _*)
+    nearIdx.scanBuckets(batchBands)
+      .join(broadcast(bb), "band" +: IngestSidecar.bandKey)
+      .where(IngestSidecar.agreement("", "b") >= OracleSql.NearDupSigAgreeMin)
       .select(col("doc_id").as("id")).distinct()
   }
 
@@ -1184,9 +1006,9 @@ class VectorStore(spark: SparkSession, val root: String,
    * SemDeDup/minhash family keep convention; ids are required — the
    * policy is id-ordered). Exact duplicates are near-dups at 16/16
    * agreement; docs below the 2-token shingle floor carry a
-   * fingerprint-derived PSEUDO-signature ([[fullSigsOf]]), so trivial
-   * contents dedup EXACTLY (and replays stay idempotent) while never
-   * fuzzy-matching anything. Policy note: the two stages run in
+   * fingerprint-derived PSEUDO-signature ([[IngestSidecar.fullSigsOf]]),
+   * so trivial contents dedup EXACTLY (and replays stay idempotent)
+   * while never fuzzy-matching anything. Policy note: the two stages run in
    * sequence — in-batch components collapse to the min id FIRST, then
    * the survivor probes the store; if the survivor store-drops, its
    * whole in-batch component is dropped for that trigger (the content
@@ -1206,17 +1028,15 @@ class VectorStore(spark: SparkSession, val root: String,
       require(df.columns.contains("id"),
         "graft: insertNearDedup needs caller-assigned ids (the in-batch" +
           " survivor policy is min-id per near-dup component)")
-      val mh = graft.core.Materialize(fullSigsOf(df))
+      val mh = graft.core.Materialize(IngestSidecar.fullSigsOf(df))
       // in-batch: banded candidates -> agreement verify -> components
       val cand = graft.operators.Dedup.lshCandidates(mh)
       val a = mh.select(col("doc_id").as("d1") +:
-        mSlots.map(m => col(m).as(s"a$m")): _*)
+        IngestSidecar.mSlots.map(m => col(m).as(s"a$m")): _*)
       val b = mh.select(col("doc_id").as("d2") +:
-        mSlots.map(m => col(m).as(s"b$m")): _*)
-      val agree = mSlots.map(m =>
-        when(col(s"a$m") === col(s"b$m"), 1).otherwise(0)).reduce(_ + _)
+        IngestSidecar.mSlots.map(m => col(m).as(s"b$m")): _*)
       val verified = cand.join(a, Seq("d1")).join(b, Seq("d2"))
-        .where(agree >= OracleSql.NearDupSigAgreeMin)
+        .where(IngestSidecar.agreement("a", "b") >= OracleSql.NearDupSigAgreeMin)
         .select("d1", "d2")
       // components need long ids: dense rank over the batch's ids (one
       // batch-wide window — bounded by the trigger)
@@ -1239,17 +1059,19 @@ class VectorStore(spark: SparkSession, val root: String,
       // vs store: signature-sidecar probe, bucket-pruned
       val fresh =
         if (exists) {
-          if (!nearIdxValid) rebuildNearIdx()
+          if (!nearIdx.valid) nearIdx.rebuild(table())
           val survSigs = mh.join(broadcast(dropIds),
             mh("doc_id") === col("__drop_id"), "left_anti")
-          val dup = nearIdxProbe(bandRowsOf(survSigs))
+          val dup = nearIdxProbe(IngestSidecar.bandRowsOf(survSigs))
           inBatch.join(broadcast(dup.select(col("id").as("__dup_id"))),
               col("id") === col("__dup_id"), "left_anti")
             .localCheckpoint(false) // pin: same multi-consumer rationale as insertDedup
         } else inBatch
-      pendingNearSigs = Some(mh)
-      try { if (!fresh.isEmpty) insertLocked(fresh, quantize) }
-      finally pendingNearSigs = None
+      // the written rows' band rows come from the signatures above, so
+      // the batch is shingled once per trigger (review-pass r10 #6)
+      val bands = IngestSidecar.bandRowsOf(mh.join(broadcast(fresh.select("id").distinct()),
+        mh("doc_id") === col("id"), "left_semi")).drop("doc_id")
+      if (!fresh.isEmpty) insertLocked(fresh, quantize, Map(nearIdx -> bands))
     }
 
   /**
@@ -1509,7 +1331,7 @@ class VectorStore(spark: SparkSession, val root: String,
     }
     // every staging name a writer uses
     for (t <- Seq("rewrite_tmp", "manifest_tmp.parquet", "ann_tmp", "dup_tmp",
-      "eigen_tmp.parquet", "contentidx_tmp", "neardupidx_tmp", "tokenizer_tmp")) {
+      "eigen_tmp.parquet", "tokenizer_tmp") ++ sidecars.map(_.staging)) {
       val p = new Path(s"$root/$t")
       if (fs.exists(p) && expired(p)) fs.delete(p, true)
     }
@@ -1518,8 +1340,7 @@ class VectorStore(spark: SparkSession, val root: String,
     for (st <- fs.listStatus(new Path(root))
            if st.getPath.getName.startsWith("_lock.stale.") && expired(st.getPath))
       fs.delete(st.getPath, false)
-    compactSidecar("contentidx", contentIdxData, contentIdxMarker, "cbucket")(contentIdxTable())
-    compactSidecar("neardupidx", nearIdxData, nearIdxMarker, "bbucket")(nearIdxTable())
+    sidecars.foreach(_.compact())
     // superseded and crash-partial ANN index, dup-graph and tokenizer
     // versions (rebuilds leave v<k> behind so concurrent readers never
     // hit a gap — reclaimed here, same contract as manifest versions)
@@ -1530,32 +1351,6 @@ class VectorStore(spark: SparkSession, val root: String,
         fs.delete(d.pathOf(v), true)
     }
   }
-
-  /** Vacuum's small-files compaction of one live sidecar (`name` =
-    * its dir under the root): past `ContentIdxBuckets * 4` parquet
-    * files, fold `rows` back to ~one file per `bucketCol` bucket under
-    * the marker dance. Vacuum never changes live contents, and
-    * `distinct` is safe because both probes are set-membership tests
-    * (the near-dup sidecar's replayed band rows fold away too). */
-  private def compactSidecar(name: String, data: String, marker: Path,
-                             bucketCol: String)(rows: => DataFrame): Unit =
-    if (fs.exists(marker)) {
-      val it = fs.listFiles(new Path(data), true)
-      var nFiles = 0
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1
-      }
-      if (nFiles > ContentIdxBuckets * 4) {
-        fs.delete(marker, false)
-        val tmp = s"$root/${name}_tmp"
-        rows.distinct()
-          .write.mode(SaveMode.Overwrite).partitionBy(bucketCol).parquet(tmp)
-        fs.delete(new Path(data), true)
-        require(fs.rename(new Path(tmp), new Path(data)),
-          s"graft: $name compaction rename failed")
-        fs.create(marker, true).close()
-      }
-    }
 
   /** Driver-side superset pruning: distinct tag-sets are few; resolve
     * the matching partition keys and let static partition pruning skip

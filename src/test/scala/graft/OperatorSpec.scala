@@ -1897,10 +1897,10 @@ class OperatorSpec extends AnyFunSuite {
 
   test("indexed phrase search == scan phrase search; bucket hash write/query-identical") {
     import spark.implicits._
-    import graft.operators.Search
+    import graft.operators.{PostingIndex, Search}
     val docs = Tables.load(spark, dir, "documents")
-    val idx = java.nio.file.Files.createTempDirectory("graft-postings-spec").toString
-    Search.buildPostingIndex(docs, idx)
+    val idx = java.nio.file.Files.createTempDirectory("graft-postings-spec").toString + "/i"
+    PostingIndex.create(docs, idx)
     for (phrase <- Seq(Seq("table", "hash"), Seq("a", "a"), Seq("slow", "hash", "batch"))) {
       val scan = Search.phraseMatch(docs, phrase).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -1910,9 +1910,14 @@ class OperatorSpec extends AnyFunSuite {
     }
     // every written (tok, tb) pair agrees with the driver-side hash —
     // the equality that makes the probe's IN-list STATIC pruning
-    val pairs = spark.read.parquet(idx).select("tok", "tb").distinct().collect()
+    val pairs = PostingIndex.scan(spark, idx).select("tok", "tb").distinct().collect()
     assert(pairs.nonEmpty && pairs.forall(r =>
       r.getAs[Int]("tb") == Search.termBucket(r.getString(0), 64)))
+    // a dir that is not a posting index fails, naming the path
+    val none = java.nio.file.Files.createTempDirectory("graft-postings-none").toString
+    val e = intercept[IllegalStateException](
+      Search.phraseMatchIndexed(spark, none, Seq("table", "hash")))
+    assert(e.getMessage.contains(none), e.getMessage)
   }
 
   test("crashed FIRST create is wreckage: retry commits past it, vacuum reaps it; an unmarked index has no committed version") {

@@ -425,7 +425,7 @@ class PlanSpec extends AnyFunSuite {
     store.insertDedup(Seq(("rx", Array(9f, 9f), "content-x", Seq("t")))
       .toDF("id", "vector", "content", "tags")
       .withColumn("vector", col("vector").cast("array<float>")))
-    assert(store.contentIdxValid)
+    assert(store.contentIdx.valid)
     // a one-content batch probes ONE bucket: the sidecar scan must show
     // a cbucket partition filter (static pruning), not a full read
     val batchHashes = Seq("content-5").toDF("c")
@@ -454,13 +454,14 @@ class PlanSpec extends AnyFunSuite {
       "a fresh unrelated sentence about tide pools and barnacles", Seq("t")))
       .toDF("id", "vector", "content", "tags")
       .withColumn("vector", col("vector").cast("array<float>")))
-    assert(store.nearIdxValid)
+    assert(store.nearIdx.valid)
     // a one-doc batch probes at most LshBands buckets: the sidecar scan
     // must show a bbucket partition filter (static pruning), not a
     // full read
     val probeRows = Seq(("q1", "completely different words about mountain trails and cedar"))
       .toDF("id", "content")
-    val p = store.nearIdxProbe(store.bandRowsOf(store.sigsOf(probeRows)))
+    val p = store.nearIdxProbe(
+      graft.operators.IngestSidecar.bandRowsOf(graft.operators.IngestSidecar.sigsOf(probeRows)))
       .queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[[^\\]]*\\]".r.findFirstIn(p).getOrElse("")
     assert(pf.contains("bbucket") && (pf.contains(" IN ") || pf.contains("=")),
@@ -1002,8 +1003,8 @@ class PlanSpec extends AnyFunSuite {
     // partition filter here means the probe reads the whole index,
     // which at corpus scale is the difference between ms and minutes.
     val docs = graft.core.Tables.load(spark, dir, "documents")
-    val idx = Files.createTempDirectory("graft-postings-plan").toString
-    graft.operators.Search.buildPostingIndex(docs, idx)
+    val idx = Files.createTempDirectory("graft-postings-plan").toString + "/i"
+    graft.operators.PostingIndex.create(docs, idx)
     // a phrase with hits at this SF — zero hits would let AQE collapse
     // the final plan to EmptyRelation and hide the scan being gated
     val df = graft.operators.Search.phraseMatchIndexed(
@@ -1035,9 +1036,9 @@ class PlanSpec extends AnyFunSuite {
       assert(m.value <= expected,
         s"index scan read ${m.value} bucket dirs, phrase needs <= $expected")
 
-    // the VERSIONED (incremental) layout must keep the identical
-    // pruning economics: generations are more partition directories
-    // under the same static tb filter, so a G-generation index reads
+    // an appended index must keep the identical pruning economics:
+    // generations are more partition directories under the same
+    // static tb filter, so a G-generation index reads
     // at most G x |distinct term buckets| leaf dirs — an append can
     // never change the probe's plan shape, only its directory count
     val vidx = Files.createTempDirectory("graft-postings-vplan").toString + "/i"

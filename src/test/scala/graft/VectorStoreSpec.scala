@@ -2441,7 +2441,7 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("b2", Array(0f, 1f), "cb", Nil),
       ("c", Array(1f, 1f), "cc", Nil))))
     assert(idsOf() == Set("a", "b", "c"))
-    assert(store.contentIdxValid, "sidecar should be live after insertDedup")
+    assert(store.contentIdx.valid, "sidecar should be live after insertDedup")
     // a PLAIN insert must fold into the live sidecar (writeBatch hook):
     // its content then dedups on the next insertDedup trigger
     store.insert(df(Seq(("d", Array(1f, 2f), "cd", Nil))))
@@ -2452,10 +2452,10 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // deletion invalidates (the sidecar cannot subtract); the content
     // becomes insertable again — exactly the live-store semantics
     assert(store.deleteIds(Seq("c")) == 1L)
-    assert(!store.contentIdxValid, "delete must invalidate the sidecar")
+    assert(!store.contentIdx.valid, "delete must invalidate the sidecar")
     store.insertDedup(df(Seq(("c9", Array(1f, 1f), "cc", Nil))))
     assert(idsOf() == Set("a", "b", "d", "e", "c9"))
-    assert(store.contentIdxValid, "probe rebuilds the sidecar")
+    assert(store.contentIdx.valid, "probe rebuilds the sidecar")
     // null contents stay null-SAFE: exactly one null row ever
     store.insertDedup(df(Seq(("n1", Array(3f, 0f), null, Nil))))
     store.insertDedup(df(Seq(("n2", Array(0f, 3f), null, Nil))))
@@ -2485,7 +2485,7 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       "for the tide to turn beneath a pale wide sky"
     store.insertNearDedup(df(Seq(row("e", tweaked), row("f", skyText))))
     assert(idsOf() == Set("a", "d", "f"), idsOf().toString)
-    assert(store.nearIdxValid)
+    assert(store.nearIdx.valid)
     // plain insert folds into the live signature sidecar (writeBatch hook)
     val fresh = "a third corpus about sailing across cold northern seas " +
       "with patched canvas sails and a stubborn wooden rudder that creaks"
@@ -2494,7 +2494,7 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(idsOf() == Set("a", "d", "f", "g"), idsOf().toString)
     // deletion invalidates; the freed content family is insertable again
     assert(store.deleteIds(Seq("a")) == 1L)
-    assert(!store.nearIdxValid)
+    assert(!store.nearIdx.valid)
     store.insertNearDedup(df(Seq(row("i", base))))
     assert(idsOf() == Set("d", "f", "g", "i"), idsOf().toString)
     // below the 2-token shingle floor: the fingerprint pseudo-signature
@@ -2548,7 +2548,7 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     store.insertDedup(df(Seq(
       ("a", Array(1f, 0f), "ca", Nil), ("b", Array(0f, 1f), "cb", Nil))))
     store.insertDedup(df(Seq(("c", Array(1f, 1f), "cc", Nil)))) // sidecar live
-    assert(store.contentIdxValid)
+    assert(store.contentIdx.valid)
     assert(store.deleteIds(Seq("a", "b", "c")) == 3L)
     // next trigger: rebuild over the EMPTY live snapshot, everything
     // is fresh (deleted contents are re-insertable)
@@ -2559,6 +2559,72 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the rebuilt sidecar keeps deduping
     store.insertDedup(df(Seq(("d2", Array(2f, 0f), "cd", Nil))))
     assert(store.table().count() == 2)
+    store.clear()
+  }
+
+  test("upsert drops the sidecars only when it overwrites a stored id: a rejected or id-fresh upsert leaves both live") {
+    val store = new VectorStore(spark,
+      Files.createTempDirectory("graft-store").toString,
+      contentIdxMinBytes = 0L)
+    def idsOf() = store.table().select("id").collect().map(_.getString(0)).toSet
+    val text = "the quick brown fox jumps over the lazy dog while seventeen " +
+      "green turtles watch a vector database merge stream batches under " +
+      "heavy filter pressure near the sorted column store"
+    store.insert(df(Seq(("a", Array(1f, 0f), "ca", Nil))))
+    store.insertDedup(df(Seq(("b", Array(0f, 1f), "cb", Nil))))
+    store.insertNearDedup(df(Seq(("c", Array(1f, 1f), "cc", Nil))))
+    assert(store.contentIdx.valid && store.nearIdx.valid)
+    // (a) a batch the dimension check rejects changes nothing
+    val e = intercept[IllegalArgumentException](
+      store.upsert(df(Seq(("a", Array(1f, 2f, 3f), "ca3", Nil)))))
+    assert(e.getMessage.contains("dimension"), e.getMessage)
+    assert(store.contentIdx.valid && store.nearIdx.valid, "a rejected upsert dropped a sidecar")
+    // (b) new ids only: the upsert only adds contents, which the
+    // append folds into both sidecars
+    store.upsert(df(Seq(("u", Array(2f, 1f), text, Nil))))
+    assert(idsOf() == Set("a", "b", "c", "u"))
+    assert(store.contentIdx.valid && store.nearIdx.valid, "an id-fresh upsert dropped a sidecar")
+    store.insertDedup(df(Seq(("u2", Array(2f, 1f), text, Nil))))
+    store.insertNearDedup(df(Seq(("u3", Array(2f, 1f), text.replace("seventeen", "nineteen"), Nil))))
+    assert(idsOf() == Set("a", "b", "c", "u"), idsOf().toString)
+    store.clear()
+  }
+
+  test("vacuum folds each live sidecar's small files; both stay live and keep deduping") {
+    val store = new VectorStore(spark,
+      Files.createTempDirectory("graft-store").toString,
+      contentIdxMinBytes = 0L)
+    // 40 random 4-letter words per doc (shingles code a word by its
+    // first 4 chars): no two docs are near-dups
+    def words(b: Int, i: Int) = {
+      val r = new scala.util.Random(b * 1000 + i)
+      Seq.fill(40)(Seq.fill(4)(('a' + r.nextInt(26)).toChar).mkString)
+    }
+    def doc(b: Int, i: Int) = words(b, i).mkString(" ")
+    def batch(b: Int) = df((0 until 64).map(i =>
+      (s"b${b}_$i", Array(b.toFloat, i.toFloat), doc(b, i), Seq.empty[String])))
+    def partFiles(name: String) = {
+      val walk = Files.walk(java.nio.file.Paths.get(store.root, name, "data"))
+      try walk.filter(_.toString.endsWith(".parquet")).count() finally walk.close()
+    }
+    store.insert(batch(0))
+    // every dedup insert appends to both live sidecars: one small file
+    // per (write task, bucket) each time
+    for (b <- 1 to 7) {
+      if (b % 2 == 1) store.insertDedup(batch(b)) else store.insertNearDedup(batch(b))
+    }
+    val n = store.table().count()
+    assert(n == 512)
+    val before = Seq("contentidx", "neardupidx").map(partFiles)
+    assert(before.forall(_ > 256), s"setup too small to reach the fold: $before")
+    store.vacuum(0)
+    val after = Seq("contentidx", "neardupidx").map(partFiles)
+    assert(after.zip(before).forall { case (a, b) => a < b }, s"$before -> $after")
+    assert(store.contentIdx.valid && store.nearIdx.valid)
+    // a stored content and a one-token edit of a stored doc both drop
+    store.insertDedup(df(Seq(("x1", Array(1f, 1f), doc(3, 5), Nil))))
+    store.insertNearDedup(df(Seq(("x2", Array(1f, 1f), words(4, 7).updated(20, "zzzz").mkString(" "), Nil))))
+    assert(store.table().count() == n)
     store.clear()
   }
 
@@ -2681,7 +2747,7 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     base.buildDupGraph()
     base.buildAnnIndex(2)
     assert(base.table().count() == 24)
-    assert(base.hasAnnIndex && base.contentIdxValid && base.nearIdxValid && base.hasDupGraph)
+    assert(base.hasAnnIndex && base.contentIdx.valid && base.nearIdx.valid && base.hasDupGraph)
     val builtMeta = base.dupMeta()
     def pairsOf(s: VectorStore) = s.nearDups().collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
@@ -2704,8 +2770,8 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ids = store.table().select("id").collect().map(_.getString(0)).toSet
       assert(ids == (0 until 24).map(i => s"d$i").toSet -- removed, s"$name: $ids")
       assert(store.hasAnnIndex == ann, s"$name: ANN index")
-      assert(store.contentIdxValid == content, s"$name: content sidecar")
-      assert(store.nearIdxValid == near, s"$name: near-dup sidecar")
+      assert(store.contentIdx.valid == content, s"$name: content sidecar")
+      assert(store.nearIdx.valid == near, s"$name: near-dup sidecar")
       dup match {
         case "kept" =>
           assert(store.dupMeta() == builtMeta, s"$name: ${store.dupMeta()}")
