@@ -251,36 +251,31 @@ class VectorStore(spark: SparkSession, val root: String,
     * [[commitGenDir]]). */
   private def nextGen(): Int = liveGens().values.foldLeft(-1)(math.max) + 1
 
-  /** Join the current per-partition gen onto a prepared batch so
-    * appends land in the LIVE gen dir. A tag set ABSENT from the
-    * manifest must NOT default to gen 0: its partition dir may still
-    * hold superseded or taken-down generations awaiting vacuum
-    * (deleteByTags, an upsert that vanished the partition, a crashed
-    * writer, a crashed FIRST insert under a root with no manifest), and
-    * appending into such a dir would RESURRECT every old row the moment
-    * the manifest re-lists that (key, gen). Absent keys instead revive
-    * at (their max on-disk gen + 1) — an O(new-keys) listing at
-    * driver-metadata scale; keys with no dir at all start at gen 0. The
-    * live gens come from the snapshot (no Spark job; empty without a
-    * manifest); the join broadcasts. */
-  private def withGen(live: Map[String, Int], prepared: DataFrame): DataFrame = {
+  /** The gen each tag key of a batch appends into, so appends land in
+    * the LIVE gen dir; a key the result lacks starts at gen 0. A tag
+    * set ABSENT from the manifest must NOT default to gen 0: its
+    * partition dir may still hold superseded or taken-down generations
+    * awaiting vacuum (deleteByTags, an upsert that vanished the
+    * partition, a crashed writer, a crashed FIRST insert under a root
+    * with no manifest), and appending into such a dir would RESURRECT
+    * every old row the moment the manifest re-lists that (key, gen).
+    * Absent keys instead revive at (their max on-disk gen + 1) — an
+    * O(new-keys) listing at driver-metadata scale; keys with no dir at
+    * all start at gen 0. The live gens come from the snapshot (no Spark
+    * job; empty without a manifest). */
+  private def appendGens(live: Map[String, Int], batchKeys: => Seq[String]): Map[String, Int] = {
     // Revival can only apply to a key whose partition DIR survives
     // outside the manifest. One driver listing of the data root detects
     // whether any such orphan exists; in the common no-orphan case every
-    // manifest-absent key has no dir, gen 0 is correct, and the
-    // per-batch distinct job + per-key listings are skipped entirely
-    // (ADVICE r9 #4) — the broadcast join's coalesce(gen, 0) fallback
-    // already encodes that fast path.
+    // manifest-absent key has no dir, gen 0 is correct, and the batch's
+    // keys and the per-key listings are never asked for (ADVICE r9 #4).
     val orphanDirsExist = fs.exists(new Path(dataPath)) &&
       fs.listStatus(new Path(dataPath)).exists { st =>
         val n = st.getPath.getName
         n.startsWith("tag_key=") && !live.contains(n.stripPrefix("tag_key="))
       }
-    val absent =
-      if (!orphanDirsExist) Array.empty[String]
-      else prepared.select("tag_key").distinct().collect()
-        .map(_.getString(0)).filterNot(live.contains)
-    val revive = absent.map { k =>
+    if (!orphanDirsExist) live
+    else live ++ batchKeys.filterNot(live.contains).map { k =>
       val dir = new Path(s"$dataPath/tag_key=$k")
       val g =
         if (!fs.exists(dir)) 0
@@ -289,7 +284,15 @@ class VectorStore(spark: SparkSession, val root: String,
           .foldLeft(-1)(math.max) + 1
       (k, g)
     }
-    val genRows = (live.toSeq ++ revive).map { case (k, g) => Row(k, g) }
+  }
+
+  /** [[appendGens]] joined onto a batch that is not on the driver (its
+    * distinct tag keys collected only when an orphan dir exists); the
+    * join broadcasts. */
+  private def withGen(live: Map[String, Int], prepared: DataFrame): DataFrame = {
+    val genRows = appendGens(live,
+      prepared.select("tag_key").distinct().collect().map(_.getString(0)).toSeq)
+      .toSeq.map { case (k, g) => Row(k, g) }
     // a fresh store has nothing to join: every key starts at gen 0
     if (genRows.isEmpty) prepared.withColumn("gen", lit(0))
     else {
@@ -362,9 +365,11 @@ class VectorStore(spark: SparkSession, val root: String,
    * is absent (reference assigns uuid-v4 at insert, src/db.rs:151).
    * Enforces a single embedding dimension per store (reference panics
    * on mismatch, src/db.rs:514-525) — checked against both the incoming
-   * batch and the stored dimension, using cheap aggregates.
-   * `quantize=true` stores the packed codec struct alongside (4x smaller
-   * scan for quantized search at scale).
+   * batch and the stored dimension. A batch of at most
+   * [[VectorStore.MaxDriverBatch]] rows resolves on the driver and
+   * writes its data in one job ([[prepareBatch]]). An empty batch
+   * commits nothing. `quantize=true` stores the packed codec struct
+   * alongside (4x smaller scan for quantized search at scale).
    */
   def insert(df: DataFrame, quantize: Boolean = false): Unit =
     withWriterLock() { insertLocked(df, quantize) }
@@ -476,8 +481,8 @@ class VectorStore(spark: SparkSession, val root: String,
         stored
       case None => quantize
     }
-    val (batch, dim) = prepareBatch(df)
-    writeBatch(batch, dim, q, sidecarRows)
+    val batch = prepareBatch(df, q)
+    if (!batch.isEmpty) writeBatch(batch, q, sidecarRows)
   }
 
   private val layoutPath = s"$root/_layout.json"
@@ -524,84 +529,141 @@ class VectorStore(spark: SparkSession, val root: String,
 
   /** Validate + transform an incoming batch WITHOUT writing: id
     * assignment, dimension checks, projected-mode transform, tag
-    * normalization/partition key. Split from [[writeBatch]] so upsert
-    * can validate BEFORE committing anything — an invalid batch must
-    * fail while the old row versions are still live. Returns the frame
-    * and the dimension of the vectors it writes. */
-  private def prepareBatch(df: DataFrame): (DataFrame, Int) = {
+    * normalization/partition key, the packed codec when `quantize`.
+    * Split from [[writeBatch]] so upsert can validate BEFORE committing
+    * anything — an invalid batch must fail while the old row versions
+    * are still live.
+    *
+    * The batch is collected once through limit(MaxDriverBatch + 1), as
+    * [[TopK.collectBatch]] collects a query batch: a local input runs
+    * no job, and uuid() ids are fixed here for every consumer. Within
+    * the ceiling the dimension checks read the collected rows, and the
+    * transform is the same Spark expressions over a local relation of
+    * them, so it runs no job and its `tag_key` bytes are the
+    * distributed path's. Over the ceiling the batch stays a distributed
+    * frame and one aggregate reads its dimensions. A null vector has no
+    * dimension. */
+  private def prepareBatch(df: DataFrame, quantize: Boolean): VectorStore.Batch = {
     val withId =
       if (df.columns.contains("id")) df
       else df.withColumn("id", expr("uuid()"))
-    val dims = withId.select(size(col("vector")).as("d")).agg(
-      min("d").as("mn"), max("d").as("mx")).head()
-    require(dims.getInt(0) == dims.getInt(1),
-      s"graft: mixed embedding dimensions in batch (${dims.getInt(0)} vs ${dims.getInt(1)})")
+    val head = withId.limit(VectorStore.MaxDriverBatch + 1).collect().toSeq
+    val onDriver = head.length <= VectorStore.MaxDriverBatch
+    if (head.isEmpty) return VectorStore.Batch(withId, 0, Some(Nil))
+    val (mn, mx) =
+      if (onDriver) {
+        val vi = withId.schema.fieldIndex("vector")
+        val ds = head.filterNot(_.isNullAt(vi)).map(_.getSeq[Any](vi).size)
+        require(ds.nonEmpty, "graft: no row of the batch has a vector")
+        (ds.min, ds.max)
+      } else {
+        val d = withId.agg(min(size(col("vector"))), max(size(col("vector")))).head()
+        (d.getInt(0), d.getInt(1))
+      }
+    require(mn == mx, s"graft: mixed embedding dimensions in batch ($mn vs $mx)")
+    val src =
+      if (!onDriver) withId
+      else {
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(head.asJava, withId.schema)
+      }
     // projected store: incoming raw vectors are projected through the
     // stored basis before writing (reference write-path transform,
     // src/db.rs:480-499)
     val (transformed, dim) = if (isProjected) {
       val model = loadModel()
-      require(dims.getInt(0) == model.d,
-        s"graft: embedding dimension ${dims.getInt(0)} does not match projection input dim ${model.d}")
-      (withId.withColumn("vector",
+      require(mn == model.d,
+        s"graft: embedding dimension $mn does not match projection input dim ${model.d}")
+      (src.withColumn("vector",
         Pca.projector(spark, model, "graft_store_project")(col("vector"))), model.k)
     } else {
       storedDim().foreach { d =>
-        require(d == dims.getInt(0),
-          s"graft: embedding dimension ${dims.getInt(0)} does not match store dimension $d")
+        require(d == mn, s"graft: embedding dimension $mn does not match store dimension $d")
       }
-      (withId, dims.getInt(0))
+      (src, mn)
     }
-    (transformed
+    val keyed = transformed
       .withColumn("tags", normTags(col("tags")))
-      .withColumn("tag_key", tagKey(col("tags"))), dim)
+      .withColumn("tag_key", tagKey(col("tags")))
+    val out = if (quantize) keyed.withColumn("packed", pack(col("vector"))) else keyed
+    VectorStore.Batch(out, dim, if (onDriver) Some(out.collect().toSeq) else None)
   }
 
-  /** Add the packed codec column when the store is quantized. */
-  private def finalizeBatch(prepared: DataFrame, quantize: Boolean): DataFrame =
-    if (quantize) prepared.withColumn("packed", pack(col("vector"))) else prepared
+  /** `rows` as a frame of at most `defaultParallelism` partitions, each
+    * tag key (column `ki`) inside one, largest keys first into the
+    * lightest partition: a partitioned write of it is one job with no
+    * shuffle and makes one file per (tag_key, gen). One partition for
+    * all keys would serialize the write: on a 4-core VM, 37 keys took
+    * about twice as long in one task as in four. */
+  private def keyBinned(rows: Seq[Row], schema: org.apache.spark.sql.types.StructType,
+                        ki: Int): DataFrame = {
+    val groups = rows.groupBy(_.getString(ki)).values.toSeq.sortBy(-_.size)
+    val bins = Array.fill(math.min(groups.size, spark.sparkContext.defaultParallelism))(
+      Vector.empty[Row])
+    groups.foreach { g => val i = bins.indices.minBy(bins(_).size); bins(i) ++= g }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(bins.toSeq, bins.length).flatMap(identity), schema)
+  }
 
-  /** Append a [[prepareBatch]]-validated frame into the live gen dirs,
+  /** Append a [[prepareBatch]]-validated batch into the live gen dirs,
     * record its tag sets, and write the commit through to the
-    * snapshot, with the batch's vector dimension `dim`. Each live
-    * sidecar folds the batch in, from `sidecarRows` when the caller
-    * already derived its rows. */
-  private def writeBatch(prepared: DataFrame, dim: Int, quantize: Boolean,
+    * snapshot. Each live sidecar folds the batch in, from `sidecarRows`
+    * when the caller already derived its rows. A batch on the driver
+    * takes its gens there and is written in one job ([[keyBinned]]);
+    * the manifest rows, the write-through, the sidecars and the ANN
+    * append all read those rows. */
+  private def writeBatch(batch: VectorStore.Batch, quantize: Boolean,
                          sidecarRows: Map[IngestSidecar, DataFrame] = Map.empty): Unit = {
     val prev = snapshot()
-    // when an ANN index will fold this batch in, pin the batch first:
-    // id assignment is uuid() — NONdeterministic — so re-running the
-    // plan for the index append would index ids that do not exist in
-    // the store. localCheckpoint materializes the batch once (batches
-    // are bounded; the store, not the batch, is the 100 TB side) and
-    // both writes read the same rows.
-    val out0 = withGen(liveGens(prev), finalizeBatch(prepared, quantize))
-    // a live sidecar adds a third consumer of the batch plan (data
-    // write + manifest distinct + sidecar append) — pin for it
-    // exactly as for the ANN maintenance case (review-pass r10 #4)
     val live = sidecars.filter(_.valid)
-    val out = if (hasAnnIndex || live.nonEmpty) out0.localCheckpoint() else out0
+    // (rows for the derived writes, the frame written, the batch's
+    // (tag_key, tags, gen) sets, its row count)
+    val (out, written, sets, n) = batch.rows match {
+      case Some(rows) =>
+        val schema = batch.frame.schema
+        val Seq(ki, ti, vi) = Seq("tag_key", "tags", "vector").map(schema.fieldIndex)
+        val keyed = rows.map(r => (r.getString(ki), r.getSeq[String](ti))).distinct
+        val gen = appendGens(liveGens(prev), keyed.map(_._1)).withDefaultValue(0)
+        // vectors as primitive arrays: the rows reach the tasks by Java
+        // serialization, for which boxed floats are several times larger
+        val out = keyBinned(rows.map(r => Row.fromSeq(r.toSeq.updated(vi,
+          if (r.isNullAt(vi)) null
+          else scala.collection.immutable.ArraySeq.unsafeWrapArray(r.getSeq[Float](vi).toArray))
+          :+ gen(r.getString(ki)))), schema.add("gen", "int"), ki)
+        (out, out, keyed.map { case (k, t) => (k, t, gen(k)) }, rows.size.toLong)
+      case None =>
+        // when an ANN index will fold this batch in, pin the batch
+        // first: id assignment is uuid() — NONdeterministic — so
+        // re-running the plan for the index append would index ids that
+        // do not exist in the store. localCheckpoint materializes the
+        // batch once and every consumer reads the same rows. A live
+        // sidecar adds another consumer of the batch plan — pinned for
+        // it exactly as for the ANN maintenance case (review-pass r10 #4).
+        val out0 = withGen(liveGens(prev), batch.frame)
+        val out = if (hasAnnIndex || live.nonEmpty) out0.localCheckpoint() else out0
+        // collected once: the manifest delta, the snapshot fold and the
+        // ANN append's row count share it
+        val counts = out.groupBy("tag_key", "tags", "gen").count().collect()
+        // cluster the batch by its write-partition key before the
+        // partitionBy write (guide §6: coalesce on write): an
+        // N-partition input otherwise fans out into up to N files under
+        // EVERY tag_key dir, and every later read of the store pays the
+        // per-file open cost (a 32-partition fixture batch made the warm
+        // SQL-view scan 5x slower). One task per (tag_key, gen) is the
+        // right write grain.
+        (out, out.repartition(col("tag_key"), col("gen")),
+          counts.map(r => (r.getString(0), r.getSeq[String](1), r.getInt(2))).toSeq,
+          counts.map(_.getLong(3)).sum)
+    }
     // EVERY appending path adds contents, so a live sidecar folds the
     // batch in, marker off until it has ([[IngestSidecar]])
     live.foreach(_.beginAppend())
-    // cluster the batch by its write-partition key before the
-    // partitionBy write (guide §6: coalesce on write): an N-partition
-    // input otherwise fans out into up to N files under EVERY tag_key
-    // dir, and every subsequent read of the store pays the per-file
-    // open cost (a 32-partition fixture batch made the warm SQL-view
-    // scan 5x slower). Batches are bounded by contract (the store, not
-    // the batch, is the 100 TB side), so one task per (tag_key, gen) is
-    // the right write grain.
-    out.repartition(col("tag_key"), col("gen"))
-      .write.mode(SaveMode.Append).partitionBy("tag_key", "gen").parquet(dataPath)
-    // collected once: the manifest delta and the snapshot fold share it
-    val sets = out.select(col("tag_key"), col("tags"), col("gen")).distinct().collect()
-      .map(r => (r.getString(0), r.getSeq[String](1), r.getInt(2))).toSeq
+    written.write.mode(SaveMode.Append).partitionBy("tag_key", "gen").parquet(dataPath)
     updateManifest(sets)
-    prev.foreach(writeThrough(_, sets, out.schema, dim))
+    prev.foreach(writeThrough(_, sets, out.schema, batch.dim))
     persistHasPacked(quantize)
     live.foreach(s => s.append(sidecarRows.getOrElse(s, s.rowsOf(out))))
-    maintainAnnIndex(out)
+    maintainAnnIndex(out, n)
   }
 
   /**
@@ -648,19 +710,19 @@ class VectorStore(spark: SparkSession, val root: String,
     }
     // validate + transform the incoming batch BEFORE any commit: a
     // dimension-mismatched batch must fail while the old row versions
-    // are still live
-    val (validated, dim) = prepareBatch(df)
-    val prepared = finalizeBatch(validated, q)
-    val ids = df.select(col("id")).distinct()
+    // are still live; an empty batch commits nothing
+    val batch = prepareBatch(df, q)
+    if (batch.isEmpty) return
+    val ids = batch.frame.select(col("id")).distinct()
     val affected = table().join(broadcast(ids), Seq("id"), "left_semi")
       .select("tag_key").distinct().collect().map(_.getString(0)).toSeq
     val rest =
-      if (affected.isEmpty) prepared
+      if (affected.isEmpty) batch
       else {
         val kept = table()
           .where(col("tag_key").isin(affected: _*))
           .join(broadcast(ids), Seq("id"), "left_anti")
-        val incoming = prepared.where(col("tag_key").isin(affected: _*))
+        val incoming = batch.frame.where(col("tag_key").isin(affected: _*))
         // overwritten ids can REMOVE contents from the live view, and a
         // sidecar cannot subtract: both drop and rebuild on the next
         // dedup insert. An upsert of new ids only adds contents, which
@@ -668,7 +730,10 @@ class VectorStore(spark: SparkSession, val root: String,
         sidecars.foreach(_.invalidate())
         rewritePartitions(affected,
           Some(kept.unionByName(incoming, allowMissingColumns = true)))
-        prepared.where(!col("tag_key").isin(affected: _*))
+        val gone = affected.toSet
+        val ki = batch.frame.schema.fieldIndex("tag_key")
+        batch.copy(frame = batch.frame.where(!col("tag_key").isin(affected: _*)),
+          rows = batch.rows.map(_.filterNot(r => gone(r.getString(ki)))))
       }
     // ANN: rewritten partitions may have removed indexed row versions;
     // serving resurrected content would break last-write-wins. Drop the
@@ -683,9 +748,9 @@ class VectorStore(spark: SparkSession, val root: String,
       fs.delete(new Path(annRoot), true)
       fs.delete(new Path(dupRoot), true)
     }
-    if (!rest.isEmpty) writeBatch(rest.drop("packed"), dim, q)
+    if (rest.rows.fold(!rest.frame.isEmpty)(_.nonEmpty)) writeBatch(rest, q)
     persistHasPacked(q) // no-op when writeBatch already recorded it
-  }
+}
 
   /**
    * Delete rows by id — the takedown / right-to-be-forgotten lifecycle
@@ -2753,13 +2818,14 @@ class VectorStore(spark: SparkSession, val root: String,
    * `rebuildFraction` of the built size the codebook is refit (same
    * k/seed) — appended rows follow a drifted distribution the old
    * centroids never saw, and unbounded drift erodes probe recall.
+   * `rows` is the batch's row count, which the caller already has.
    * Callers hold the writer lock (reached only from writeBatch). The
    * append itself is not transactional: a crash mid-append leaves some
    * batch rows indexed and the rest stale-by-missing — both states the
    * approximate-by-contract index already admits; committed STORE data
    * is never at risk.
    */
-  private def maintainAnnIndex(batch: DataFrame): Unit = annIndex().foreach { ix =>
+  private def maintainAnnIndex(batch: DataFrame, rows: Long): Unit = annIndex().foreach { ix =>
     // appended rows must carry the SAME columns as the built index —
     // including PQ codes (encoded with the committed books; ADVICE r4
     // #4's schema-alignment lesson)
@@ -2767,7 +2833,7 @@ class VectorStore(spark: SparkSession, val root: String,
       .withColumn("cid", SimilaritySearch.nearestCentroid(col("vector"), ix.codebook))
       .write.mode(SaveMode.Append).partitionBy("cid").parquet(ix.dir)
     readAnnMeta(ix.dir).foreach { m =>
-      val appended = m.appendedRows + batch.count()
+      val appended = m.appendedRows + rows
       if (appended > m.rebuildFraction * math.max(m.baseRows, 1L))
         buildAnnIndexLocked(m.k, m.seed, m.rebuildFraction)
       else
@@ -2788,6 +2854,28 @@ object VectorStore {
   /** Tag sets a snapshot holds on the driver (past it `tags` is None),
     * and the default dppRouteThreshold. */
   val MaxTagSets = 10000
+
+  /** A `prepareBatch`-validated batch: `frame` holds its rows (id
+    * assigned, vectors projected, tags normalized, `tag_key`, and
+    * `packed` when quantized) and `dim` is the dimension of the vectors
+    * it writes. A batch of at most [[VectorStore.MaxDriverBatch]] rows
+    * also has them on the driver as `rows`; `frame` is then
+    * deterministic and evaluates to them with no job. */
+  private[operators] final case class Batch(frame: DataFrame, dim: Int, rows: Option[Seq[Row]]) {
+    def isEmpty: Boolean = rows.exists(_.isEmpty)
+  }
+
+  /** Rows up to which an insert resolves its batch on the driver and
+    * writes it in one job (`prepareBatch`). Serving inserts are far
+    * below it; bulk loads are above it and take the distributed path,
+    * after a collect that reads at most MaxDriverBatch + 1 of their
+    * rows. Driver memory: collected rows hold their vectors as boxed
+    * floats, about 20 bytes an element, so a full batch of 1024-d
+    * vectors is about 84 MB per collected copy. Up to the ceiling the
+    * driver route is the faster one: on a 4-core VM a warm quantized
+    * insert of 4096 1024-d rows took 2.4-3.0 s, against 4.0-4.9 s for
+    * 4097 rows on the distributed path. */
+  val MaxDriverBatch = 4096
 
   /** One resolved store snapshot — see the snapshot section of
     * [[VectorStore]]. `tags` is None past [[MaxTagSets]]. The table side is built on first use and

@@ -1744,13 +1744,12 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the manifest exists now, so this insert writes through
     store.insert(df(Seq(("b", Array(0f, 1f, 0f), "y", Seq("u")))))
     val bad = df(Seq(("c", Array(1f, 0f), "z", Seq("t"))))
-    // the batch's own min/max dimension aggregate is all a rejection runs
-    val (_, batchJobs) = SparkTestSession.jobsDuring(
-      bad.select(size(col("vector")).as("d")).agg(min("d").as("mn"), max("d").as("mx")).head())
+    // a local batch is collected and checked on the driver: the
+    // rejection runs no job at all
     val (e, jobs) = SparkTestSession.jobsDuring(
       intercept[IllegalArgumentException](store.insert(bad)))
     assert(e.getMessage.contains("does not match store dimension 3"), e.getMessage)
-    assert(jobs == batchJobs, s"rejection ran $jobs jobs, the batch aggregate alone $batchJobs")
+    assert(jobs == 0, s"rejection ran $jobs jobs")
     assert(store.table().count() == 2)
     store.clear()
   }
@@ -2850,6 +2849,120 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ids() == after, s"$name: after vacuum")
       store.clear()
     }
+  }
+
+  /** Every file under `root` but the writer lock, with its length and
+    * modification time. */
+  private def tree(root: String): Set[(String, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    org.apache.commons.io.FileUtils.listFiles(new java.io.File(root), null, true).asScala
+      .filterNot(_.getName.startsWith("_lock"))
+      .map(f => (f.getPath, f.length, f.lastModified)).toSet
+  }
+
+  test("an empty insert or upsert commits nothing: no manifest version, no layout file, no sidecar marker flip") {
+    val none = df(Seq(("x", Array(1f, 0f), "x", Seq("t")))).limit(0)
+    val fresh = freshStore()
+    fresh.insert(none, quantize = true)
+    fresh.upsert(none)
+    assert(fresh.versions.isEmpty && fresh.table().count() == 0)
+    assert(!new java.io.File(fresh.root, "_layout.json").exists())
+    // the layout is still undecided: the first real batch decides it
+    fresh.insert(df(Seq(("a", Array(1f, 0f), "ca", Seq("t")))))
+    assert(!fresh.table().columns.contains("packed"))
+    fresh.clear()
+    // a store with rows and both sidecars live
+    val store = new VectorStore(spark,
+      Files.createTempDirectory("graft-store").toString,
+      contentIdxMinBytes = 0L)
+    store.insert(df(Seq(("a", Array(1f, 0f), "ca", Seq("t")))))
+    store.insertDedup(df(Seq(("b", Array(0f, 1f), "cb", Seq("t")))))
+    store.insertNearDedup(df(Seq(("c", Array(1f, 1f), "cc", Seq("u")))))
+    assert(store.contentIdx.valid && store.nearIdx.valid)
+    val before = tree(store.root)
+    Thread.sleep(20) // local-FS mtime granularity
+    store.insert(none)
+    store.upsert(none)
+    assert(tree(store.root) == before)
+    assert(store.table().count() == 3)
+    store.clear()
+  }
+
+  /** Parquet data files per (tag_key, gen) dir of `store`. */
+  private def dataFiles(store: VectorStore): Map[(String, Int), Int] = {
+    val data = new java.io.File(store.root, "data")
+    (for {
+      k <- Option(data.listFiles()).toSeq.flatten if k.getName.startsWith("tag_key=")
+      g <- k.listFiles().toSeq if g.getName.startsWith("gen=")
+    } yield (k.getName.stripPrefix("tag_key="), g.getName.stripPrefix("gen=").toInt) ->
+      g.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+  }
+
+  test("an insert writes the same store on the driver route and above its ceiling") {
+    val n = VectorStore.MaxDriverBatch + 1
+    // null, duplicate, unsorted and non-ASCII tags
+    val tagSets: Seq[Seq[String]] =
+      Seq(null, Seq("b", "a", "b"), Seq("zeta", "\u00e4lpha"), Seq("a", "b"), Nil, Seq("\u65e5\u672c", "a"))
+    val rows = (0 until n).map { i =>
+      val a = i * 0.01
+      (s"r$i", Array(math.cos(a).toFloat, math.sin(a).toFloat), s"c$i", tagSets(i % tagSets.size))
+    }
+    val seed = df((0 until 40).map(i => (s"s$i", Array(i.toFloat, 1f - i), s"s$i", Seq("a", "b"))))
+    for (mode <- Seq("plain", "quantized", "projected", "id-less")) {
+      val (small, big) = (freshStore(), freshStore())
+      val idless = mode == "id-less"
+      for (store <- Seq(small, big)) {
+        if (mode == "projected") { store.insert(seed); store.projectAll(1) }
+        // the ANN append must index the ids the store holds
+        if (idless) { store.insert(seed); store.buildAnnIndex(k = 2, rebuildFraction = 1e6) }
+      }
+      val before = Seq(small, big).map(s => s -> dataFiles(s)).toMap
+      def batch(rs: Seq[(String, Array[Float], String, Seq[String])]) =
+        if (idless) df(rs).drop("id") else df(rs)
+      val quantize = mode == "quantized"
+      // two inserts within the ceiling against one above it
+      small.insert(batch(rows.take(n / 2)), quantize)
+      small.insert(batch(rows.drop(n / 2)), quantize)
+      big.insert(batch(rows), quantize)
+      def manifest(s: VectorStore) = s.manifest().select("tag_key", "tags", "gen")
+        .collect().map(r => (r.getString(0), r.getSeq[String](1), r.getInt(2))).toSet
+      assert(manifest(small) == manifest(big), mode)
+      assert(manifest(big).map(_._2) ==
+        Set(Nil, Seq("a", "b"), Seq("zeta", "\u00e4lpha"), Seq("a", "\u65e5\u672c")), mode)
+      def rowsOf(s: VectorStore) = if (idless) s.table().drop("id") else s.table()
+      assert(rowsOf(small).exceptAll(rowsOf(big)).isEmpty &&
+        rowsOf(big).exceptAll(rowsOf(small)).isEmpty, mode)
+      assert(big.table().count() == n + (if (idless || mode == "projected") 40 else 0), mode)
+      // one file per (tag_key, gen) per insert
+      for ((store, inserts) <- Seq(small -> 2, big -> 1); (k, _, g) <- manifest(store))
+        assert(dataFiles(store)((k, g)) - before(store).getOrElse((k, g), 0) == inserts, s"$mode $k")
+      if (idless) for (store <- Seq(small, big)) {
+        val indexed = spark.read.parquet(annIndex(store)._1).select("id").collect().map(_.getString(0))
+        val stored = store.table().select("id").collect().map(_.getString(0))
+        assert(indexed.length == stored.length && indexed.toSet == stored.toSet, mode)
+      }
+      small.clear(); big.clear()
+    }
+  }
+
+  test("a warm insert of a local batch runs at most 2 jobs into an unindexed store") {
+    val store = freshStore()
+    val rng = new scala.util.Random(3)
+    def batch(from: Int) = df((from until from + 100).map { i =>
+      (s"w$i", Array.fill(8)(rng.nextGaussian().toFloat), s"c$i", Seq(s"t${i % 7}"))
+    })
+    store.insert(batch(0), quantize = true)
+    store.insert(batch(100)) // the write-through carries the dimension
+    val b2 = batch(200)
+    val (_, jobs) = SparkTestSession.jobsDuring(store.insert(b2))
+    assert(jobs <= 2, s"a warm insert ran $jobs jobs")
+    store.buildAnnIndex(k = 4, rebuildFraction = 1e6)
+    store.insert(batch(300))
+    val b4 = batch(400)
+    val (_, indexed) = SparkTestSession.jobsDuring(store.insert(b4))
+    info(s"a warm 100-row insert ran $jobs jobs into an unindexed store, $indexed into an indexed one")
+    assert(store.table().count() == 500)
+    store.clear()
   }
 }
 
