@@ -1,21 +1,28 @@
 #!/usr/bin/env bash
 # Scale-parity gate (VERDICT r14 next #7): the driver's hash gate runs
-# at sf0.01; this runs the SAME Verify-dump + DuckDB compare for 27
+# at sf0.01; this runs the SAME Verify-dump + DuckDB compare for 29
 # rows at sf0.1 once per round: the scale-shaped dedup / ANN / exact
 # batch / pipeline families, store_delete (the row that runs the
 # store's partition rewrite), ingest_dedup (a fresh store built
-# through the first insert and a default stream checkpoint), and the
+# through the first insert and a default stream checkpoint), the
 # phrase search pair text_phrase_search / text_phrase_indexed (scan
-# and posting-index probe against one oracle). It writes
-# PARITY_sf01.json next to the round's correctness artifact.
+# and posting-index probe against one oracle), and the
+# tokenizer-artifact pair text_bpe_tokens_artifact /
+# text_wordpiece_tokens_artifact (the tokenizer's versioned commit and
+# its _meta.json load path). It writes PARITY_sf01.json next to the
+# round's correctness artifact.
 # ingest_neardedup is left out: its DuckDB oracle (recursive component
-# labelling) exhausts 12.5 GiB at sf0.1.
+# labelling) exhausts 12.5 GiB at sf0.1. hybrid_streamed is left out:
+# at sf0.1 its top-10 differs from the oracle's in rows and RRF scores
+# on the code before the store's shared tag-pruned read as well as
+# after it (same first diffs), so it gates nothing here until that
+# mismatch is mended; it passes at sf0.01.
 # Usage: scripts/parity_sf01.sh [sfDir] (default sf0.1).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.1}"
 OUT=/tmp/graft_parity_sf01
-ROWS="dedup_exact,dedup_minhash,dedup_clusters,dedup_simhash,dedup_substring,dedup_semantic,dedup_embedding_lsh,ann_lsh,ann_ivf,ann_ivf_filtered,ann_ivf_quantized,ann_ivf_join,ann_lsh_join,ann_pq,ann_matryoshka,ann_maxsim,pipeline_curate,pipeline_web,warc_read,knn_multiquery,knn_multiquery_heap,knn_classify,ann_eval,store_delete,ingest_dedup,text_phrase_search,text_phrase_indexed"
+ROWS="dedup_exact,dedup_minhash,dedup_clusters,dedup_simhash,dedup_substring,dedup_semantic,dedup_embedding_lsh,ann_lsh,ann_ivf,ann_ivf_filtered,ann_ivf_quantized,ann_ivf_join,ann_lsh_join,ann_pq,ann_matryoshka,ann_maxsim,pipeline_curate,pipeline_web,warc_read,knn_multiquery,knn_multiquery_heap,knn_classify,ann_eval,store_delete,ingest_dedup,text_phrase_search,text_phrase_indexed,text_bpe_tokens_artifact,text_wordpiece_tokens_artifact"
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT $ROWS" 1>&2
 python3 scripts/parity.py "$SF" "$OUT" | tee /tmp/parity_sf01.txt 1>&2

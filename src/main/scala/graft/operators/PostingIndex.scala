@@ -61,17 +61,11 @@ object PostingIndex {
   private def metaPath(path: String) = new Path(s"$path/_postings.json")
 
   /** The index's bucket count, from the create-time meta. */
-  def buckets(spark: SparkSession, path: String): Int = {
-    val fs = fsOf(spark, path)
-    if (!fs.exists(metaPath(path)))
+  def buckets(spark: SparkSession, path: String): Int =
+    MetaJson.read(fsOf(spark, path), metaPath(path)).getOrElse(
       throw new IllegalStateException(
-        s"graft: no posting index at $path (no _postings.json; build one with PostingIndex.create)")
-    val in = fs.open(metaPath(path))
-    val s = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-    "\"buckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"graft: malformed _postings.json at $path: $s"))
-  }
+        s"graft: no posting index at $path (no _postings.json; build one with PostingIndex.create)"))
+      .int("buckets")
 
   // ---- commit protocol: stage -> rename -> marker LAST; a version or
   // gen dir is committed iff it carries the marker — ONE implementation
@@ -90,14 +84,6 @@ object PostingIndex {
       .getOrElse(throw new IllegalStateException(
         s"graft: posting index at $path has no committed version"))
 
-  /** ALL gen dirs of v<k>, crash-partial ones included. */
-  private def gensOf(spark: SparkSession, path: String, v: Int): Seq[Int] =
-    gensDir(spark, path, v).all()
-
-  /** Gens safe to READ ([[VersionedCommit.Dir.committed]]). */
-  private def committedGens(spark: SparkSession, path: String, v: Int): Seq[Int] =
-    gensDir(spark, path, v).committed()
-
   private def postings(docs: DataFrame, nBuckets: Int,
                        idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"),
@@ -107,15 +93,14 @@ object PostingIndex {
   /** Stage `df` (partitioned by tb) and commit it as `v<v>/gen=<g>`.
     * Clears any stale stage left by a crashed writer first. */
   private def stageAndCommit(df: DataFrame, path: String, v: Int, g: Int,
-                             genMeta: String): Unit = {
+                             genMeta: (String, Any)*): Unit = {
     val spark = df.sparkSession
     val fs = fsOf(spark, path)
     val stage = new Path(s"$path/_stage")
     fs.delete(stage, true)
     df.repartition(col("tb"))
       .write.mode(SaveMode.Overwrite).partitionBy("tb").parquet(stage.toString)
-    val out = fs.create(new Path(s"$stage/_gen.json"), true)
-    out.write(genMeta.getBytes("UTF-8")); out.close()
+    MetaJson.write(fs, new Path(s"$stage/_gen.json"), genMeta: _*)
     // markers strictly LAST: gen dir first, then the version dir —
     // readers require both, so a crash anywhere above leaves the
     // previous committed state fully intact
@@ -138,10 +123,8 @@ object PostingIndex {
       require(!fs.exists(metaPath(path)),
         s"graft: posting index already exists at $path — use append/compact")
       val v = versionsDir(spark, path).allocate()
-      stageAndCommit(postings(docs, nBuckets, idCol, textCol), path, v, 0,
-        s"""{"op":"create"}""")
-      val out = fs.create(metaPath(path), true)
-      out.write(s"""{"buckets":$nBuckets}""".getBytes("UTF-8")); out.close()
+      stageAndCommit(postings(docs, nBuckets, idCol, textCol), path, v, 0, "op" -> "create")
+      MetaJson.write(fs, metaPath(path), "buckets" -> nBuckets)
     }
   }
 
@@ -160,7 +143,7 @@ object PostingIndex {
       // re-targeted (its rename would fail)
       val g = gensDir(spark, path, v).allocate()
       stageAndCommit(postings(docs, b, idCol, textCol), path, v, g,
-        s"""{"op":"append","version":$v,"gen":$g}""")
+        "op" -> "append", "version" -> v, "gen" -> g)
     }
   }
 
@@ -171,8 +154,9 @@ object PostingIndex {
     * partition columns survive. */
   def scan(spark: SparkSession, path: String): DataFrame = {
     val v = liveVersion(spark, path)
-    val all = gensOf(spark, path, v)
-    val committed = committedGens(spark, path, v)
+    // crash-partial gen dirs included in `all`, not in `committed`
+    val all = gensDir(spark, path, v).all()
+    val committed = gensDir(spark, path, v).committed()
     if (committed == all) spark.read.parquet(s"$path/v$v")
     else spark.read.option("basePath", s"$path/v$v")
       .parquet(committed.map(g => s"$path/v$v/gen=$g"): _*)
@@ -203,26 +187,23 @@ object PostingIndex {
   def compact(spark: SparkSession, path: String): Unit =
     withWriterLock(spark, path) {
       val v = liveVersion(spark, path)
-      val gens = committedGens(spark, path, v)
+      val gens = gensDir(spark, path, v).committed()
       val merged = scan(spark, path).select("doc_id", "pos", "tok", "tb")
       // allocate past ALL version dirs incl. a crashed partial compact
       val next = versionsDir(spark, path).allocate()
       stageAndCommit(merged, path, next, 0,
-        s"""{"op":"compact","from_version":$v,"merged_gens":${gens.size}}""")
+        "op" -> "compact", "from_version" -> v, "merged_gens" -> gens.size)
     }
 
-  /** Delete superseded version roots (validate-before-destroy: the
-    * live version must remain). */
+  /** Delete superseded and crash-partial version roots (a crashed
+    * compact or first create), the store's sweep with no grace period
+    * ([[VersionedCommit.Dir.sweep]]; validate-before-destroy: the live
+    * version must remain). */
   def vacuum(spark: SparkSession, path: String): Unit =
     withWriterLock(spark, path) {
       val fs = fsOf(spark, path)
-      val vd = versionsDir(spark, path)
       val live = liveVersion(spark, path)
-      val committed = vd.committed().toSet
-      // superseded versions, plus crash-partial ones (uncommitted dirs
-      // left by a crashed compact or a crashed first create)
-      vd.all().filter(v => v != live && (v < live || !committed(v)))
-        .foreach(v => fs.delete(new Path(s"$path/v$v"), true))
+      versionsDir(spark, path).sweep()
       // crashed lock-steal tombstones ([[LeaseLock]]), same sweep as
       // the store's vacuum
       for (st <- fs.listStatus(new Path(path))

@@ -75,12 +75,18 @@ import graft.OracleSql
  * nprobe, plus the tag stats, PQ books and data schema loaded on first
  * use. One rule ([[probeRule]]) picks the lists every ANN search probes.
  *  - It stays valid while the mtime of `<dir>/_codebook.parquet` is
- *    unchanged. The codebook is written once per version, so an insert
- *    appending into the index (which rewrites `_meta.json` and bumps the
- *    dir's own mtime) keeps it: the next ANN call runs no metadata job.
+ *    unchanged. The codebook and `_meta.json` are written once per
+ *    version, in its stage, so an insert appending into the index
+ *    (which replaces `_appended.json` and bumps the dir's own mtime)
+ *    keeps it: the next ANN call runs no metadata job.
  *  - A rebuild or compaction commits a new version dir, and a clear()
  *    followed by a rebuild at the same path writes a new codebook; both
  *    resolve a new handle (one codebook collect, one `_meta.json` read).
+ *
+ * Versioned artifacts: the ANN index, the dup graph and the tokenizer
+ * share one lifecycle ([[VersionedCommit.Artifact]]: stage, commit
+ * with `_meta.json`, newest committed version, drop, sweep); what each
+ * store write does to each of them stays named in that write.
  *
  * Dedup-on-ingest sidecars: [[insertDedup]] and [[insertNearDedup]]
  * each probe one [[IngestSidecar]] (content fingerprints, near-dup
@@ -153,27 +159,11 @@ class VectorStore(spark: SparkSession, val root: String,
     org.apache.spark.sql.types.StructField("gen",
       org.apache.spark.sql.types.IntegerType)))
 
-  // ---- versioned-dir commit protocol: stage -> rename -> marker
-  // LAST; a version dir is committed iff it carries the marker. ONE
-  // implementation shared with [[PostingIndex]] — see
-  // [[VersionedCommit]] for the full contract (VERDICT r14 #4, r15
-  // #4). ----
+  // manifest bases commit by the versioned-dir protocol: stage ->
+  // rename -> marker LAST ([[VersionedCommit]])
+  private val manifests = VersionedCommit.Dir(fs, manifestDir, suffix = ".parquet")
 
-  private def vdir(dirPath: String, suffix: String = "") =
-    VersionedCommit.Dir(fs, dirPath, suffix = suffix)
-
-  /** Commit the staged `tmp` as the next version under `dirPath`
-    * ([[VersionedCommit.Dir.commit]]); returns that version. Writer
-    * lock held by caller. */
-  private def commitNextVersion(dirPath: String, tmp: Path, what: String,
-                                suffix: String = ""): Int = {
-    val d = vdir(dirPath, suffix)
-    val next = d.allocate()
-    d.commit(tmp, next, what)
-    next
-  }
-
-  private def manifestVersions(): Seq[Int] = vdir(manifestDir, ".parquet").committed()
+  private def manifestVersions(): Seq[Int] = manifests.committed()
 
   private def currentManifestVersion: Option[Int] = manifestVersions().lastOption
   private def basePathFor(v: Int) = s"$manifestDir/v$v.parquet"
@@ -240,7 +230,7 @@ class VectorStore(spark: SparkSession, val root: String,
   private def writeManifest(sets: DataFrame): Unit = {
     val tmp = new Path(s"$root/manifest_tmp.parquet")
     sets.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    commitNextVersion(manifestDir, tmp, "manifest", ".parquet")
+    manifests.commit(tmp, manifests.allocate(), "manifest")
     // a new base drops the snapshot: rewrites leave the next read to
     // rebuild it, and an insert's threshold fold publishes its own
     VectorStore.snapshots.remove(cacheKey); ()
@@ -485,7 +475,7 @@ class VectorStore(spark: SparkSession, val root: String,
     if (!batch.isEmpty) writeBatch(batch, q, sidecarRows)
   }
 
-  private val layoutPath = s"$root/_layout.json"
+  private val layoutPath = new Path(s"$root/_layout.json")
 
   /** Persisted layout bit (ADVICE r7 #4): whether the store's rows
     * carry the packed codec column. Inferring it from the live snapshot
@@ -496,22 +486,11 @@ class VectorStore(spark: SparkSession, val root: String,
     * misleading message. Written once, AFTER the first successful batch
     * establishes the layout (so a fully-failed first insert leaves the
     * layout undecided, exactly as before); never changes thereafter. */
-  private def persistedHasPacked: Option[Boolean] = {
-    val p = new Path(layoutPath)
-    if (!fs.exists(p)) None
-    else try {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      Some(s.contains("\"packed\":true"))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private def persistedHasPacked: Option[Boolean] =
+    MetaJson.read(fs, layoutPath).map(_.bool("packed"))
 
   private def persistHasPacked(packed: Boolean): Unit =
-    if (!fs.exists(new Path(layoutPath))) {
-      val out = fs.create(new Path(layoutPath), true)
-      try out.write(s"""{"packed":$packed}""".getBytes("UTF-8"))
-      finally out.close()
-    }
+    if (!fs.exists(layoutPath)) MetaJson.write(fs, layoutPath, "packed" -> packed)
 
   /** Whether the store carries the packed codec column; None when the
     * store has no committed manifest AND no persisted layout yet. The
@@ -745,8 +724,8 @@ class VectorStore(spark: SparkSession, val root: String,
     // the graph is pruned), no filter can repair an overwrite; rebuild
     // with buildDupGraph.
     if (affected.nonEmpty) {
-      fs.delete(new Path(annRoot), true)
-      fs.delete(new Path(dupRoot), true)
+      ann.drop()
+      dup.drop()
     }
     if (rest.rows.fold(!rest.frame.isEmpty)(_.nonEmpty)) writeBatch(rest, q)
     persistHasPacked(q) // no-op when writeBatch already recorded it
@@ -838,14 +817,14 @@ class VectorStore(spark: SparkSession, val root: String,
                        doomedIds: DataFrame, n: Long): Long = {
     sidecars.foreach(_.invalidate())
     rewritePartitions(affected, kept)
-    fs.delete(new Path(annRoot), true)
-    if (dupVersions().nonEmpty) {
+    ann.drop()
+    for (v <- dup.versions.lastOption) {
       val pruned = nearDups()
         .join(doomedIds.select(col("id").as("id1")), Seq("id1"), "left_anti")
         .join(doomedIds.select(col("id").as("id2")), Seq("id2"), "left_anti")
         .select("id1", "id2", "sim_r") // USING joins front the keys
       commitDupVersion(pruned,
-        s"""{"threshold":${dupThresholdFromMeta()},"pruned_from":${dupVersions().last},"deleted_ids":$n}""")
+        "threshold" -> dupThreshold(v), "pruned_from" -> v, "deleted_ids" -> n)
     }
     n
   }
@@ -1383,20 +1362,14 @@ class VectorStore(spark: SparkSession, val root: String,
         }
         if (fs.listStatus(d.getPath).isEmpty) fs.delete(d.getPath, true)
       }
-    // iterate ALL on-disk versions (not just committed): a crashed
-    // partial v<k> (marker-less, object-store rename) is wreckage to
-    // reap after the same grace period
-    val cur = currentManifestVersion
-    for (v <- vdir(manifestDir, ".parquet").all() if !cur.contains(v)) {
-      val base = new Path(basePathFor(v))
-      if (expired(base)) {
-        fs.delete(base, true)
-        fs.delete(new Path(deltaPathFor(v)), true)
-      }
-    }
-    // every staging name a writer uses
-    for (t <- Seq("rewrite_tmp", "manifest_tmp.parquet", "ann_tmp", "dup_tmp",
-      "eigen_tmp.parquet", "tokenizer_tmp") ++ sidecars.map(_.staging)) {
+    // ALL on-disk versions (not just committed): a crashed partial v<k>
+    // (marker-less, object-store rename) is wreckage to reap after the
+    // same grace period
+    for (v <- manifests.sweep(expired))
+      fs.delete(new Path(deltaPathFor(v)), true)
+    // every other staging name a writer uses
+    for (t <- Seq("rewrite_tmp", "manifest_tmp.parquet", "eigen_tmp.parquet") ++
+           sidecars.map(_.staging)) {
       val p = new Path(s"$root/$t")
       if (fs.exists(p) && expired(p)) fs.delete(p, true)
     }
@@ -1406,29 +1379,47 @@ class VectorStore(spark: SparkSession, val root: String,
            if st.getPath.getName.startsWith("_lock.stale.") && expired(st.getPath))
       fs.delete(st.getPath, false)
     sidecars.foreach(_.compact())
-    // superseded and crash-partial ANN index, dup-graph and tokenizer
-    // versions (rebuilds leave v<k> behind so concurrent readers never
-    // hit a gap — reclaimed here, same contract as manifest versions)
-    for (artifact <- Seq(annRoot, dupRoot, tokenizerRoot)) {
-      val d = vdir(artifact)
-      val cur = d.committed().lastOption
-      for (v <- d.all() if !cur.contains(v) && expired(d.pathOf(v)))
-        fs.delete(d.pathOf(v), true)
-    }
+    // rebuilds leave superseded versions behind so concurrent readers
+    // never hit a gap: reclaimed here, as manifest versions are
+    Seq(ann, dup, tokenizer).foreach(_.sweep(expired))
   }
 
-  /** Driver-side superset pruning: distinct tag-sets are few; resolve
-    * the matching partition keys and let static partition pruning skip
-    * everything else. Returns None when the query has no tags (all
-    * partitions match — reference src/db.rs:697 empty-set is subset of
-    * all). */
-  private def matchingTagKeys(queryTags: Seq[String],
-                              snap: Option[VectorStore.Snapshot]): Option[Seq[String]] =
-    if (queryTags.isEmpty) None
-    else {
-      val q = queryTags.distinct.toSet
-      Some(liveTagSets(snap).collect { case (k, s) if q.forall(s.contains) => k }.toSeq)
+  /** The rows of `snap` whose tag set is a superset of `tags`, read
+    * from the matching partitions only (every row for no tags —
+    * reference src/db.rs:697, the empty set is a subset of all). The
+    * one tag-pruned read of [[search]], [[searchMany]] and
+    * [[searchHybrid]]:
+    *  - within [[dppRouteThreshold]] tag sets, the snapshot's matching
+    *    keys become a static `tag_key IN (...)` (planning-time pruning,
+    *    no Spark job);
+    *  - past it, or past the [[VectorStore.MaxTagSets]] the snapshot
+    *    holds, the [[searchDpp]] semi-join against the broadcast
+    *    manifest (runtime pruning, no driver collect, no IN-list
+    *    ceiling).
+    * The row-level [[tagSuperset]] guard applies on both. */
+  private def taggedRows(tags: Seq[String], snap: Option[VectorStore.Snapshot]): DataFrame = {
+    val rows = tableOf(snap)
+    if (tags.isEmpty) return rows
+    val pruned = snap.flatMap(s => s.tags.filter(_ => s.gens.size <= dppRouteThreshold)) match {
+      case Some(sets) =>
+        val q = tags.distinct.toSet
+        rows.where(col("tag_key").isin(
+          sets.collect { case (k, t) if q.forall(t.contains) => k }.toSeq: _*))
+      case None => manifestPruned(rows, tags)
     }
+    tagSuperset(pruned, tags)
+  }
+
+  /** `rows` left-semi-joined on the `tag_key` PARTITION column against
+    * the manifest's tag sets that are supersets of `tags`. */
+  private def manifestPruned(rows: DataFrame, tags: Seq[String]): DataFrame = {
+    // delimiter-wrapped `contains` (not array_contains) so the DPP
+    // planner sees a selective predicate — see manifest() scaladoc
+    val supersetCond = tags.distinct
+      .map(t => col("tags_csv").contains(s",$t,")).reduce(_ && _)
+    rows.join(broadcast(manifest().where(supersetCond).select("tag_key")),
+      Seq("tag_key"), "left_semi")
+  }
 
   /**
    * Fully-automatic tag-superset pruning via Dynamic Partition Pruning
@@ -1448,13 +1439,7 @@ class VectorStore(spark: SparkSession, val root: String,
       metric: String = "cosine",
       quantized: Boolean = false): DataFrame = {
     require(tags.nonEmpty, "graft: searchDpp needs at least one tag (use search)")
-    // delimiter-wrapped `contains` (not array_contains) so the DPP
-    // planner sees a selective predicate — see manifest() scaladoc
-    val supersetCond = tags.distinct
-      .map(t => col("tags_csv").contains(s",$t,")).reduce(_ && _)
-    val keys = manifest().where(supersetCond).select("tag_key")
-    val pruned = table().join(broadcast(keys), Seq("tag_key"), "left_semi")
-    scoreTopK(pruned, queryVec, k, metric, quantized)
+    scoreTopK(manifestPruned(table(), tags), queryVec, k, metric, quantized)
   }
 
   /**
@@ -1465,31 +1450,17 @@ class VectorStore(spark: SparkSession, val root: String,
    * BinaryHeap loop (src/db.rs:257-272). No shuffle: only k rows per
    * partition travel to the driver.
    *
-   * Tag search routes by manifest size (VERDICT r3 next #4): below
-   * [[dppRouteThreshold]] distinct tag sets the driver resolves
-   * matching keys into a static IN-list (planning-time pruning, zero
-   * query-time overhead); above it, or past the
-   * [[VectorStore.MaxTagSets]] the snapshot holds, the [[searchDpp]]
-   * shape avoids collecting a huge manifest to the driver and pruning
-   * moves to a broadcast-manifest semi-join (runtime DPP).
+   * Tag search routes by manifest size ([[taggedRows]]): a static
+   * IN-list below [[dppRouteThreshold]] distinct tag sets, the
+   * broadcast-manifest semi-join (runtime DPP) above it.
    */
   def search(
       queryVec: Seq[Float],
       tags: Seq[String] = Nil,
       k: Int = 10,
       metric: String = "cosine",
-      quantized: Boolean = false): DataFrame = {
-    val snap = snapshot()
-    if (tags.nonEmpty && snap.exists(s => s.gens.size > dppRouteThreshold || s.tags.isEmpty))
-      return searchDpp(queryVec, tags, k, metric, quantized)
-    val pruned = matchingTagKeys(tags, snap) match {
-      case Some(keys) => tableOf(snap).where(col("tag_key").isin(keys: _*))
-      case None => tableOf(snap)
-    }
-    // Row-level guard as well: correct even if the store was written
-    // without partitioning (or with quantize-only layout).
-    scoreTopK(tagSuperset(pruned, tags), queryVec, k, metric, quantized)
-  }
+      quantized: Boolean = false): DataFrame =
+    scoreTopK(taggedRows(tags, snapshot()), queryVec, k, metric, quantized)
 
   // ---- the store snapshot (VERDICT r15 next #3): one driver-resident
   // Snapshot per (session, root) answers every metadata read, so no
@@ -1718,7 +1689,8 @@ class VectorStore(spark: SparkSession, val root: String,
    * Hybrid retrieval over the store: a lexical BM25 leg over the stored
    * content and a vector leg over the stored embeddings, fused with
    * reciprocal-rank fusion ([[Search.rrfFuse]] — integer points, exact).
-   * Both legs run over the same (optionally tag-pruned) snapshot; each
+   * Both legs run over the same (optionally tag-pruned, [[taggedRows]])
+   * snapshot; each
    * ends in its own TakeOrderedAndProject, so fusion input is 2*fuseK
    * rows at any store size. This is the retrieval shape production
    * stacks actually deploy on a vector DB — pure-vector recall misses
@@ -1733,7 +1705,7 @@ class VectorStore(spark: SparkSession, val root: String,
       tags: Seq[String] = Nil,
       k: Int = 10,
       fuseK: Int = 20): DataFrame = {
-    val snap = tagSuperset(table(), tags)
+    val snap = taggedRows(tags, snapshot())
     // zero-hit docs can reach a small corpus' top-k with score 0; they
     // are not lexical hits and must not earn fusion points
     val lexLeg = Search
@@ -1742,7 +1714,7 @@ class VectorStore(spark: SparkSession, val root: String,
       .select(col("doc_id").as("id"), col("rank"))
     // the window ranks the ALREADY-LIMITED leg (<= fuseK rows), so the
     // single partition is bounded — the legal post-limit shape
-    val vecLeg = search(queryVec, tags, fuseK)
+    val vecLeg = scoreTopK(snap, queryVec, fuseK, "cosine", quantized = false)
       .select(col("id"), row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(desc("similarity"), asc("id")))
         .cast("long").as("rank"))
@@ -1910,7 +1882,7 @@ class VectorStore(spark: SparkSession, val root: String,
       else projected0
     saveModelAt(model, eigenStaged.toString) // replaces a pre-commit crash's stage
     rewritePartitions(liveGens().keys.toSeq, Some(projected))
-    fs.delete(new Path(annRoot), true)
+    ann.drop()
     require(fs.rename(eigenStaged, new Path(eigenPath)),
       s"graft: basis commit rename to $eigenPath failed")
   }
@@ -1930,7 +1902,7 @@ class VectorStore(spark: SparkSession, val root: String,
     val finish = !isProjected && fs.exists(eigenStaged) &&
       storedDim().contains(loadModelAt(eigenStaged.toString).k)
     if (finish) {
-      fs.delete(new Path(annRoot), true)
+      ann.drop()
       require(fs.rename(eigenStaged, new Path(eigenPath)),
         s"graft: basis recovery rename to $eigenPath failed")
     }
@@ -1991,7 +1963,10 @@ class VectorStore(spark: SparkSession, val root: String,
   // rows without a rebuild — approximate BY CONTRACT, exact search
   // stays available via search(). ----
 
-  private val annRoot = s"$root/ann"
+  private val ann = new VersionedCommit.Artifact(fs, root, "ann")
+  private val dup = new VersionedCommit.Artifact(fs, root, "dup")
+  private val tokenizer = new VersionedCommit.Artifact(fs, root, "tokenizer")
+
   // the codebook lives INSIDE the index dir (underscore-prefixed, so
   // parquet data scans ignore it): index + codebook then commit in ONE
   // directory rename and can never be observed out of sync — a separate
@@ -2014,65 +1989,23 @@ class VectorStore(spark: SparkSession, val root: String,
   private val PqSub = 8
   private val PqCodes = 256
 
-  /** Committed index versions under ann/v<k> — same newest-version
-    * resolution as the manifest (ADVICE r4 #3 / VERDICT r5 next #1): a
-    * rebuild stages to a tmp dir and renames it to v<k+1>, whose name
-    * never pre-exists, so a concurrent searchAnn either resolves the
-    * complete old version or the complete new one — never the
-    * delete-then-rename gap the fixed `ann/` path had (which a plain
-    * insert() could open via the staleness-fraction trigger). Superseded
-    * versions are reclaimed by [[vacuum]] after its grace period, which
-    * also protects readers that resolved v<k> just before v<k+1>
-    * committed. The newest one is the index; nothing else under ann/
-    * is read. */
-  private def currentAnnDir: Option[String] =
-    vdir(annRoot).committed().lastOption.map(v => s"$annRoot/v$v")
-
-  def hasAnnIndex: Boolean = currentAnnDir.isDefined
+  /** The index is the newest committed `ann/v<k>` ([[ann]]). */
+  def hasAnnIndex: Boolean = ann.current.isDefined
 
   /** The build-time-calibrated auto nprobe of the live index (None: no
-    * index, or no readable `_meta.json` — see [[resolveNprobe]]). */
-  def annCalibratedNprobe: Option[Int] = annIndex().flatMap(_.calibratedNprobe)
+    * index). */
+  def annCalibratedNprobe: Option[Int] = annIndex().map(_.calibratedNprobe)
 
-  /** (k, seed, rebuildFraction, baseRows, appendedRows,
-    * calibratedNprobe) of the live index. Tiny driver-side JSON, no
-    * Spark job. */
-  private case class AnnMeta(k: Int, seed: Long, rebuildFraction: Double,
-                             baseRows: Long, appendedRows: Long,
-                             calibratedNprobe: Int)
+  /** Rows appended into the index version at `dir` since it was built
+    * (its `_appended.json`, 0 without one): they arm the rebuild trigger
+    * ([[maintainAnnIndex]]). Only the writer-locked append and
+    * compaction read or replace it, so a version's `_meta.json` never
+    * changes. */
+  private def appendedRows(dir: String): Long =
+    MetaJson.read(fs, new Path(s"$dir/_appended.json")).fold(0L)(_.long("appended_rows"))
 
-  private def writeAnnMeta(dir: String, m: AnnMeta): Unit = {
-    val tmp = new Path(s"$dir/_meta.json.tmp")
-    val out = fs.create(tmp, true)
-    out.write(
-      s"""{"k":${m.k},"seed":${m.seed},"rebuild_fraction":${m.rebuildFraction},"base_rows":${m.baseRows},"appended_rows":${m.appendedRows},"calibrated_nprobe":${m.calibratedNprobe}}"""
-        .getBytes("UTF-8"))
-    out.close()
-    val dst = new Path(s"$dir/_meta.json")
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"graft: ANN meta commit rename failed")
-  }
-
-  /** Missing/corrupt meta (the delete-then-rename window of
-    * [[writeAnnMeta]]) degrades to "no staleness tracking": appends
-    * still fold in, the rebuild trigger re-arms at the next explicit
-    * build. */
-  private def readAnnMeta(dir: String): Option[AnnMeta] = {
-    val annMetaPath = s"$dir/_meta.json"
-    if (!fs.exists(new Path(annMetaPath))) None
-    else try {
-      val in = fs.open(new Path(annMetaPath))
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-      def field(n: String) =
-        s""""$n":\\s*([0-9.eE+-]+)""".r.findFirstMatchIn(txt).map(_.group(1))
-      Some(AnnMeta(
-        field("k").get.toInt, field("seed").get.toLong,
-        field("rebuild_fraction").get.toDouble,
-        field("base_rows").get.toLong, field("appended_rows").get.toLong,
-        field("calibrated_nprobe").get.toInt))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private def writeAppendedRows(dir: String, n: Long): Unit =
+    MetaJson.write(fs, new Path(s"$dir/_appended.json"), "appended_rows" -> n)
 
   /** Facade-default recall target: an uninformed `searchAnn()` call
     * must not silently serve sub-0.4 recall (the measured nprobe=2
@@ -2159,14 +2092,14 @@ class VectorStore(spark: SparkSession, val root: String,
     * version ONCE here: codebook, meta and data then all come from the
     * same committed dir, so a rebuild landing mid-plan can't pair a
     * query's probes with another version's lists. */
-  private def annIndex(): Option[VectorStore.AnnIndex] = currentAnnDir.map { dir =>
+  private def annIndex(): Option[VectorStore.AnnIndex] = ann.current.map { dir =>
     val mtime = try fs.getFileStatus(new Path(codebookPathIn(dir))).getModificationTime
                 catch { case _: java.io.IOException => -1L }
     Option(VectorStore.annIndexes.get((spark, dir))).filter(_.codebookMtime == mtime)
       .getOrElse {
         val ix = new VectorStore.AnnIndex(dir, mtime,
           SimilaritySearch.collectCodebook(spark.read.parquet(codebookPathIn(dir))),
-          readAnnMeta(dir).map(_.calibratedNprobe),
+          ann.meta(dir).int("calibrated_nprobe"),
           () => readTagStats(dir), () => readPqBooks(dir),
           () => spark.read.parquet(dir).schema)
         VectorStore.bounded(VectorStore.annIndexes, (spark, dir), ix)
@@ -2246,14 +2179,10 @@ class VectorStore(spark: SparkSession, val root: String,
   }
 
   /** AUTO nprobe (`nprobe <= 0`): the build-time calibrated >=90%-
-    * recall operating point from the index meta; an index whose meta is
-    * missing ([[readAnnMeta]]) falls back to 3/4 list coverage —
-    * recall-first, because a DEFAULT that is silently fast-but-wrong is
-    * a correctness bug at the facade (callers tune DOWN explicitly,
-    * with the measured curve in hand). */
+    * recall operating point from the index meta (callers tune DOWN
+    * explicitly, with the measured curve in hand). */
   private def resolveNprobe(ix: VectorStore.AnnIndex, nprobe: Int): Int =
-    if (nprobe > 0) nprobe
-    else ix.calibratedNprobe.getOrElse(math.max(1, (3 * ix.codebook.size + 3) / 4))
+    if (nprobe > 0) nprobe else ix.calibratedNprobe
 
   /** The probe rule of every ANN search: the lists one query vector
     * probes, in probe order (a null vector probes none). Built once per
@@ -2318,30 +2247,27 @@ class VectorStore(spark: SparkSession, val root: String,
             .select(col("cid"), col("cvec")))
         })
       }
-    val tmp = new Path(s"$root/ann_tmp")
-    withPqCodes(table(), pqBooks)
-      .withColumn("cid", SimilaritySearch.nearestCentroid(col("vector"), codebook))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(tmp.toString)
-    centroids.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$tmp/_codebook.parquet")
-    pqBooks.foreach { books =>
-      import spark.implicits._
-      books.zipWithIndex.flatMap { case (book, s) =>
-        book.map { case (cid, cv) => (s, cid, cv) }
-      }.toDF("sub", "cid", "cvec")
-        .withColumn("cvec", col("cvec").cast("array<float>"))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$tmp/_pq_codebooks.parquet")
+    // the old version stays readable until vacuum, so concurrent
+    // searches never hit a gap
+    ann.commit { tmp =>
+      withPqCodes(table(), pqBooks)
+        .withColumn("cid", SimilaritySearch.nearestCentroid(col("vector"), codebook))
+        .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(tmp)
+      centroids.coalesce(1).write.mode(SaveMode.Overwrite).parquet(codebookPathIn(tmp))
+      pqBooks.foreach { books =>
+        import spark.implicits._
+        books.zipWithIndex.flatMap { case (book, s) =>
+          book.map { case (cid, cv) => (s, cid, cv) }
+        }.toDF("sub", "cid", "cvec")
+          .withColumn("cvec", col("cvec").cast("array<float>"))
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(pqPathIn(tmp))
+      }
+      // count(*) over the staged files is footer metadata, not a data scan
+      val built = spark.read.parquet(tmp).count()
+      writeTagStats(tmp)
+      Seq("k" -> k, "seed" -> seed, "rebuild_fraction" -> rebuildFraction,
+        "base_rows" -> built, "calibrated_nprobe" -> calibrateNprobe(codebook))
     }
-    // count(*) over the staged files is footer metadata, not a data scan
-    val built = spark.read.parquet(tmp.toString).count()
-    writeTagStats(tmp.toString)
-    writeAnnMeta(tmp.toString,
-      AnnMeta(k, seed, rebuildFraction, built, 0L, calibrateNprobe(codebook)))
-    // commit = rename to a versioned name that never pre-exists (the
-    // writer lock serializes version allocation) + marker; the old
-    // version stays readable until vacuum, so concurrent searches
-    // never hit a gap
-    commitNextVersion(annRoot, tmp, "ANN index")
   }
 
   /** Approximate top-k over the ANN index: probe the `nprobe` nearest
@@ -2383,28 +2309,24 @@ class VectorStore(spark: SparkSession, val root: String,
    * (codebooks copied into the staged dir, same one-rename guarantee).
    * Appended-staleness tracking carries over: compaction changes file
    * geometry, not distribution drift, so the rebuild trigger's
-   * appendedRows is preserved. It stages in the build's `ann_tmp`: the
-   * writer lock serializes the two.
+   * `_appended.json` count is preserved. It stages where the build
+   * does: the writer lock serializes the two.
    */
   def compactAnnIndex(): Unit = withWriterLock() {
-    currentAnnDir match {
-      case None => ()
-      case Some(dir) =>
-        val tmp = new Path(s"$root/ann_tmp")
-        fs.delete(tmp, true)
-        spark.read.parquet(dir).hint("rebalance", "cid")
-          .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(tmp.toString)
-        val conf = spark.sparkContext.hadoopConfiguration
-        for (f <- Seq("_codebook.parquet", "_pq_codebooks.parquet")
-             if fs.exists(new Path(s"$dir/$f")))
-          org.apache.hadoop.fs.FileUtil.copy(
-            fs, new Path(s"$dir/$f"), fs, new Path(s"$tmp/$f"), false, conf)
-        // tag stats are RECOMPUTED, not copied: the compacted data folds
-        // incremental appends in, so this is the moment the (build-time,
-        // append-stale) lower bounds tighten back to exact
-        writeTagStats(tmp.toString)
-        readAnnMeta(dir).foreach(writeAnnMeta(tmp.toString, _))
-        commitNextVersion(annRoot, tmp, "ANN compaction")
+    for (dir <- ann.current) ann.commit { tmp =>
+      spark.read.parquet(dir).hint("rebalance", "cid")
+        .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(tmp)
+      val conf = spark.sparkContext.hadoopConfiguration
+      for (f <- Seq("_codebook.parquet", "_pq_codebooks.parquet")
+           if fs.exists(new Path(s"$dir/$f")))
+        org.apache.hadoop.fs.FileUtil.copy(
+          fs, new Path(s"$dir/$f"), fs, new Path(s"$tmp/$f"), false, conf)
+      // tag stats are RECOMPUTED, not copied: the compacted data folds
+      // incremental appends in, so this is the moment the (build-time,
+      // append-stale) lower bounds tighten back to exact
+      writeTagStats(tmp)
+      writeAppendedRows(tmp, appendedRows(dir))
+      ann.meta(dir).fields
     }
   }
 
@@ -2439,15 +2361,7 @@ class VectorStore(spark: SparkSession, val root: String,
         "Route large batches through searchManyAnn (probe-pruned, " +
         "corpus never shuffles) instead")
     val s = snapshot()
-    val snap0 = tableOf(s)
-    // same two-level tag filter as [[search]]: manifest-resolved
-    // tag_key IN-list so non-matching PARTITIONS are never read, plus
-    // the row-level guard for partition-less layouts
-    val pruned = matchingTagKeys(tags, s) match {
-      case Some(keys) => snap0.where(col("tag_key").isin(keys: _*))
-      case None => snap0
-    }
-    TopK.exactBatch(rows, schema, tagSuperset(pruned, tags), col("vector"), col("id"),
+    TopK.exactBatch(rows, schema, taggedRows(tags, s), col("vector"), col("id"),
       Seq(col("content"), col("tags")), k, mode.metric, s.flatMap(_.dimIfKnown))
   }
 
@@ -2503,11 +2417,9 @@ class VectorStore(spark: SparkSession, val root: String,
   // a versioned name that never pre-exists (writer lock serializes the
   // version allocation), superseded versions readable until [[vacuum]].
 
-  private val tokenizerRoot = s"$root/tokenizer"
-
   /** Committed tokenizer versions, oldest -> newest — the loadable
     * history until [[vacuum]] reclaims superseded versions. */
-  def tokenizerVersions: Seq[Int] = vdir(tokenizerRoot).committed()
+  def tokenizerVersions: Seq[Int] = tokenizer.versions
 
   /** Train a tokenizer over `docs` and COMMIT it as `tokenizer/v<k+1>`:
     * BPE merges ([[Bpe.train]], `bpeK` merges, `checkpointEvery`
@@ -2545,25 +2457,21 @@ class VectorStore(spark: SparkSession, val root: String,
           coalesce(sum(pmod(xxhash64(col(textCol)), lit(1000003L))), lit(0L)).as("s"),
           count(lit(1)).as("n")).head()
         val fingerprint = fp.getLong(0) ^ (fp.getLong(1) * 0x9E3779B97F4A7C15L)
-        val tmp = new Path(s"$root/tokenizer_tmp")
-        fs.delete(tmp, true)
-        merges.zipWithIndex
-          .map { case (m, i) => (i + 1, m.a, m.b, m.weight) }
-          .toDF("step", "a", "b", "n")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"$tmp/merges.parquet")
-        // ord preserves the EXACT trained order (greedy segmentation is
-        // order-insensitive today, but the artifact must round-trip the
-        // trainer's output, not a canonicalization of it)
-        pieces.zipWithIndex.map { case (p, i) => (i, p) }.toDF("ord", "piece")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"$tmp/pieces.parquet")
-        val out = fs.create(new Path(s"$tmp/_meta.json"), true)
-        try out.write(
-          s"""{"bpe_k":$bpeK,"wordpiece_v":$wordpieceV,"max_piece_len":$maxPieceLen,"corpus_fp":$fingerprint,"n_docs":${fp.getLong(2)}}"""
-            .getBytes("UTF-8"))
-        finally out.close()
-        commitNextVersion(tokenizerRoot, tmp, "tokenizer")
+        tokenizer.commit { tmp =>
+          merges.zipWithIndex
+            .map { case (m, i) => (i + 1, m.a, m.b, m.weight) }
+            .toDF("step", "a", "b", "n")
+            .coalesce(1).write.mode(SaveMode.Overwrite)
+            .parquet(s"$tmp/merges.parquet")
+          // ord preserves the EXACT trained order (greedy segmentation is
+          // order-insensitive today, but the artifact must round-trip the
+          // trainer's output, not a canonicalization of it)
+          pieces.zipWithIndex.map { case (p, i) => (i, p) }.toDF("ord", "piece")
+            .coalesce(1).write.mode(SaveMode.Overwrite)
+            .parquet(s"$tmp/pieces.parquet")
+          Seq("bpe_k" -> bpeK, "wordpiece_v" -> wordpieceV, "max_piece_len" -> maxPieceLen,
+            "corpus_fp" -> fingerprint, "n_docs" -> fp.getLong(2))
+        }
       } finally words.unpersist(blocking = false)
     }
 
@@ -2574,7 +2482,7 @@ class VectorStore(spark: SparkSession, val root: String,
   def loadTokenizer(version: Int = -1): Bpe.TokenizerArtifact = {
     val vs = tokenizerVersions
     require(vs.nonEmpty,
-      s"graft: no tokenizer artifact at $tokenizerRoot — trainTokenizer first")
+      s"graft: no tokenizer artifact at ${tokenizer.root} — trainTokenizer first")
     val v =
       if (version < 0) vs.last
       else {
@@ -2582,32 +2490,19 @@ class VectorStore(spark: SparkSession, val root: String,
           s"graft: no tokenizer v$version (have ${vs.mkString(",")} — vacuumed?)")
         version
       }
-    val d = s"$tokenizerRoot/v$v"
+    val d = tokenizer.pathOf(v)
     val merges = spark.read.parquet(s"$d/merges.parquet")
       .orderBy("step").collect().toSeq
       .map(r => Bpe.Merge(r.getAs[String]("a"), r.getAs[String]("b"),
         r.getAs[Long]("n")))
     val pieces = spark.read.parquet(s"$d/pieces.parquet")
       .orderBy("ord").collect().toSeq.map(_.getAs[String]("piece"))
-    val metaTxt = {
-      val in = fs.open(new Path(s"$d/_meta.json"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    def field(n: String): Long =
-      s""""$n":\\s*(-?[0-9]+)""".r.findFirstMatchIn(metaTxt)
-        .map(_.group(1).toLong)
-        .getOrElse(throw new IllegalArgumentException(
-          s"graft: tokenizer v$v meta missing $n: $metaTxt"))
+    val m = tokenizer.meta(d)
     Bpe.TokenizerArtifact(v, merges, pieces,
-      bpeK = field("bpe_k").toInt, wordpieceV = field("wordpiece_v").toInt,
-      maxPieceLen = field("max_piece_len").toInt,
-      corpusFp = field("corpus_fp"), nDocs = field("n_docs"))
+      bpeK = m.int("bpe_k"), wordpieceV = m.int("wordpiece_v"),
+      maxPieceLen = m.int("max_piece_len"),
+      corpusFp = m.long("corpus_fp"), nDocs = m.long("n_docs"))
   }
-
-  private val dupRoot = s"$root/dup"
-
-  private def dupVersions(): Seq[Int] = vdir(dupRoot).committed()
 
   /**
    * Materialize the banded sign-LSH near-dup PAIR GRAPH over the stored
@@ -2654,33 +2549,16 @@ class VectorStore(spark: SparkSession, val root: String,
           "was rank-chained inside them (components stay connected; " +
           "beyond-cap pairs omitted)")
       commitDupVersion(pairs,
-        s"""{"threshold":$threshold,"base_rows":${snap.count()},"overflow_buckets":$overflow}""")
+        "threshold" -> threshold, "base_rows" -> snap.count(), "overflow_buckets" -> overflow)
     }
 
-  private def commitDupVersion(pairs: DataFrame, metaJson: String): Unit = {
-    val tmp = new Path(s"$root/dup_tmp")
-    fs.delete(tmp, true)
-    pairs.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val out = fs.create(new Path(s"$tmp/_meta.json"), true)
-    out.write(metaJson.getBytes("UTF-8"))
-    out.close()
-    commitNextVersion(dupRoot, tmp, "dup-graph")
-  }
+  private def commitDupVersion(pairs: DataFrame, meta: (String, Any)*): Int =
+    dup.commit { tmp => pairs.write.mode(SaveMode.Overwrite).parquet(tmp); meta }
 
   /** The committed dup graph's _meta.json (raw string), newest version. */
-  def dupMeta(): Option[String] = dupVersions().lastOption.flatMap { v =>
-    val p = new Path(s"$dupRoot/v$v/_meta.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in).mkString) finally in.close()
-    }
-  }
+  def dupMeta(): Option[String] = dup.current.map(dup.meta(_).text)
 
-  private def dupThresholdFromMeta(): Double =
-    dupMeta().flatMap { s =>
-      "\"threshold\":([0-9.eE+-]+)".r.findFirstMatchIn(s).map(_.group(1).toDouble)
-    }.getOrElse(graft.OracleSql.EmbDupThreshold)
+  private def dupThreshold(v: Int): Double = dup.meta(dup.pathOf(v)).double("threshold")
 
   /**
    * Incremental dup-graph maintenance (VERDICT r7 next #2): after an
@@ -2701,12 +2579,12 @@ class VectorStore(spark: SparkSession, val root: String,
   def updateDupGraph(newRows: DataFrame): Unit = withWriterLock() {
     require(!isProjected,
       "graft: updateDupGraph needs raw-space vectors — maintain the graph before projectAll")
-    val base = dupVersions().lastOption.getOrElse(
+    val base = dup.versions.lastOption.getOrElse(
       throw new IllegalStateException(
         "graft: no dup graph to update — call buildDupGraph() first"))
     require(newRows.columns.contains("id"),
       "graft: updateDupGraph takes the appended rows' ids (an 'id' column)")
-    val threshold = dupThresholdFromMeta()
+    val threshold = dupThreshold(base)
     val dim = storedDim().getOrElse(throw new IllegalStateException(
       "graft: updateDupGraph on an empty store"))
     val snap = table()
@@ -2723,19 +2601,18 @@ class VectorStore(spark: SparkSession, val root: String,
       .groupBy("id1", "id2").agg(max("sim_r").as("sim_r"))
     val nNew = newIds.count()
     commitDupVersion(merged,
-      s"""{"threshold":$threshold,"base_rows":${snap.count()},"updated_from":$base,"delta_ids":$nNew}""")
+      "threshold" -> threshold, "base_rows" -> snap.count(), "updated_from" -> base, "delta_ids" -> nNew)
   }
 
-  def hasDupGraph: Boolean = dupVersions().nonEmpty
+  def hasDupGraph: Boolean = dup.current.isDefined
 
   /** The committed near-dup pairs (id1, id2, sim_r), newest version.
     * Underscore-prefixed meta files are invisible to the parquet scan,
     * so this is a plain partition-parallel read. */
   def nearDups(): DataFrame = {
-    val v = dupVersions().lastOption.getOrElse(
+    spark.read.parquet(dup.current.getOrElse(
       throw new IllegalStateException(
-        "graft: no dup graph — call buildDupGraph() first"))
-    spark.read.parquet(s"$dupRoot/v$v")
+        "graft: no dup graph — call buildDupGraph() first")))
   }
 
   /** Near-dup GROUPS over the committed pair graph: (id, component_id)
@@ -2832,13 +2709,12 @@ class VectorStore(spark: SparkSession, val root: String,
     withPqCodes(batch.drop("gen"), ix.pqBooks)
       .withColumn("cid", SimilaritySearch.nearestCentroid(col("vector"), ix.codebook))
       .write.mode(SaveMode.Append).partitionBy("cid").parquet(ix.dir)
-    readAnnMeta(ix.dir).foreach { m =>
-      val appended = m.appendedRows + rows
-      if (appended > m.rebuildFraction * math.max(m.baseRows, 1L))
-        buildAnnIndexLocked(m.k, m.seed, m.rebuildFraction)
-      else
-        writeAnnMeta(ix.dir, m.copy(appendedRows = appended))
-    }
+    val m = ann.meta(ix.dir)
+    val fraction = m.double("rebuild_fraction")
+    val appended = appendedRows(ix.dir) + rows
+    if (appended > fraction * math.max(m.long("base_rows"), 1L))
+      buildAnnIndexLocked(m.int("k"), m.long("seed"), fraction)
+    else writeAppendedRows(ix.dir, appended)
   }
 }
 
@@ -2951,8 +2827,8 @@ object VectorStore {
 
   /** One committed ANN index version, the ANN twin of [[Snapshot]] —
     * see the snapshot section of [[VectorStore]] for its key and
-    * lifecycle. `calibratedNprobe` is None when `_meta.json` is
-    * unreadable; `tagStats` None when absent or oversized, `pqBooks`
+    * lifecycle. `calibratedNprobe` comes from the version's
+    * `_meta.json`; `tagStats` is None when absent or oversized, `pqBooks`
     * None for an index built without PQ. The schema holds for the
     * whole version: appends add rows but never columns
     * (maintainAnnIndex aligns them). */
@@ -2960,7 +2836,7 @@ object VectorStore {
       val dir: String,
       val codebookMtime: Long,
       val codebook: Seq[(Long, Seq[Float])],
-      val calibratedNprobe: Option[Int],
+      val calibratedNprobe: Int,
       loadTagStats: () => Option[Map[Long, Seq[(Set[String], Long)]]],
       loadPqBooks: () => Option[Seq[Seq[(Long, Seq[Float])]]],
       loadSchema: () => org.apache.spark.sql.types.StructType) {

@@ -23,9 +23,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  *    period like any superseded version.
  * A crashed FIRST commit is therefore no special case: its partial v0
  * is unmarked, nothing reads it, and the retry commits v1.
- * Single-FILE renames (eigen basis, _meta.json) stay plain: an object
- * PUT/copy is atomic per object, so there is no partial-file window —
- * only the documented absent-file windows.
+ * Single-FILE renames (eigen basis, the [[MetaJson]] files) stay plain:
+ * an object PUT/copy is atomic per object, so there is no partial-file
+ * window.
  *
  * Callers hold their writer lock across allocate+stage+commit; this
  * object is pure filesystem mechanics and does no locking itself.
@@ -83,6 +83,69 @@ private[operators] object VersionedCommit {
       require(fs.rename(tmp, dst), s"graft: $what commit rename to $dst failed")
       mark(v)
       dst
+    }
+
+    /** Delete every version but the newest committed one that
+      * `expired` accepts: superseded versions and crash-partial wreckage
+      * alike. Returns the versions deleted. Caller holds the writer
+      * lock. */
+    def sweep(expired: Path => Boolean = _ => true): Seq[Int] = {
+      val vs = list()
+      val live = vs.filter(_._2).lastOption.map(_._1)
+      vs.map(_._1).filter(v => !live.contains(v) && expired(pathOf(v))).map { v =>
+        fs.delete(pathOf(v), true); v
+      }
+    }
+  }
+
+  /** A store's versioned derived artifact (`ann`, `dup`, `tokenizer`):
+    * versions `<store>/<name>/v<k>`, each committed with its
+    * `_meta.json`, staged at `<store>/<name>_tmp`. A rebuild commits
+    * v<k+1>, whose name never pre-exists, so a concurrent reader
+    * resolves the complete old version or the complete new one, and
+    * the old one stays readable until the store's vacuum sweeps it.
+    * What each store write does to an artifact (keep, drop, prune, fold
+    * in) is that write's own rule; this is what every artifact shares.
+    * Writes hold the store's writer lock. */
+  final class Artifact(fs: FileSystem, storeRoot: String, name: String) {
+    val root: String = s"$storeRoot/$name"
+    private val dir = Dir(fs, root)
+    private val stage = new Path(s"$storeRoot/${name}_tmp")
+
+    def pathOf(v: Int): String = s"$root/v$v"
+
+    /** Committed versions, oldest -> newest. */
+    def versions: Seq[Int] = dir.committed()
+
+    /** The newest committed version's dir. */
+    def current: Option[String] = versions.lastOption.map(pathOf)
+
+    /** The `_meta.json` of the version at `versionDir`. */
+    def meta(versionDir: String): MetaJson.Fields = {
+      val f = new Path(s"$versionDir/_meta.json")
+      MetaJson.read(fs, f).getOrElse(
+        throw new IllegalStateException(s"graft: committed $name version has no $f"))
+    }
+
+    /** Clear the stage, let `write` fill it and return the meta fields,
+      * write `_meta.json` into it, and commit it as the next version
+      * (its meta is never written again). Returns that version. */
+    def commit(write: String => Seq[(String, Any)]): Int = {
+      fs.delete(stage, true)
+      val fields = write(stage.toString)
+      MetaJson.write(fs, new Path(stage, "_meta.json"), fields: _*)
+      val v = dir.allocate()
+      dir.commit(stage, v, name)
+      v
+    }
+
+    /** Remove every version: the artifact no longer exists. */
+    def drop(): Unit = { fs.delete(new Path(root), true); () }
+
+    /** [[Dir.sweep]] the versions and drop a stage `expired` accepts. */
+    def sweep(expired: Path => Boolean): Unit = {
+      dir.sweep(expired)
+      if (fs.exists(stage) && expired(stage)) fs.delete(stage, true)
     }
   }
 }

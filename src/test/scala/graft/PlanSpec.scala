@@ -217,6 +217,43 @@ class PlanSpec extends AnyFunSuite {
     store.clear()
   }
 
+  test("tagged searchHybrid: every store scan, BM25 leg and content join-back included, prunes on tag_key") {
+    val root = Files.createTempDirectory("graft-hybridprune").toString
+    val store = new VectorStore(spark, root)
+    import spark.implicits._
+    store.insert(Seq(
+      ("a", Array(1f, 0f), "quantum flux", Seq("t1")),
+      ("b", Array(0f, 1f), "quantum field", Seq("t2")))
+      .toDF("id", "vector", "content", "tags")
+      .withColumn("vector", col("vector").cast("array<float>")))
+    // the BM25 leg materializes its term counts while the query is built:
+    // its scan is in that execution's plan, not in the returned one
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = { built.add(qe.executedPlan.toString); () }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val q = try {
+      val q = store.searchHybrid(Seq(1f, 0f), Seq("quantum"), tags = Seq("t1"), k = 2)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      q
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val scans = (built.asScala.toSeq :+ plan(q)).flatMap(_.linesIterator)
+      .filter(_.contains("/data/tag_key="))
+    // the PartitionFilters list itself: the scan line's Location also
+    // names the tag_key=... dirs
+    val filters = scans.map("PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(_)
+      .map(_.group(1)).getOrElse(""))
+    assert(filters.size >= 3 && filters.forall(_.contains("tag_key")),
+      s"a store scan without tag_key pruning:\n${scans.mkString("\n")}")
+    assert(q.select("id").as[String].collect().toSeq == Seq("a"))
+    store.clear()
+  }
+
   test("searchMany: one scan into one top-k heap aggregate — no join, no window, a plan that does not grow with the batch") {
     val root = Files.createTempDirectory("graft-manyheap").toString
     val store = new VectorStore(spark, root)

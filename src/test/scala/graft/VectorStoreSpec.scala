@@ -719,7 +719,7 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // escalated nprobe of the tagged call
     store.searchAnn(rows(7)._2.toSeq, k = 10, tags = Seq("rare")).collect()
     store.searchManyAnn(local, k = 10).collect()
-    // the append rewrites the index dir's _meta.json; the codebook stays
+    // the append replaces the index dir's _appended.json; the codebook stays
     val added = mkRows(200, 20)
     store.insert(df(added))
     val ((single, many), jobs) = SparkTestSession.jobsDuring((
@@ -2962,6 +2962,111 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (_, indexed) = SparkTestSession.jobsDuring(store.insert(b4))
     info(s"a warm 100-row insert ran $jobs jobs into an unindexed store, $indexed into an indexed one")
     assert(store.table().count() == 500)
+    store.clear()
+  }
+
+  /** Overwrite `file` through the store's filesystem, which keeps its
+    * checksum in step. */
+  private def writeBytes(file: String, text: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readText(file: String): String =
+    new String(Files.readAllBytes(java.nio.file.Paths.get(file)), "UTF-8")
+
+  test("metadata files in the previous hand-written format read back unchanged") {
+    import graft.operators.{MetaJson, PostingIndex}
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 60).map(i =>
+      (s"r$i", Array.fill(8)(rnd.nextGaussian().toFloat), s"doc $i", Seq("t")))
+    // _layout.json: the bit decides an otherwise undecided store's layout
+    val packed = freshStore()
+    writeBytes(s"${packed.root}/_layout.json", """{"packed":true}""")
+    packed.insert(df(rows.take(2)))
+    assert(packed.table().columns.contains("packed"))
+    val plain = freshStore()
+    writeBytes(s"${plain.root}/_layout.json", """{"packed":false}""")
+    intercept[IllegalArgumentException](plain.insert(df(rows.take(2)), quantize = true))
+    plain.insert(df(rows.take(2)))
+    assert(readText(s"${plain.root}/_layout.json") == """{"packed":false}""")
+    packed.clear(); plain.clear()
+    // an ANN _meta.json that still carries the append counter, and no
+    // _appended.json: the calibration reads back, the counter restarts
+    // at 0 (20 appended rows stay below 0.5 x 1000, no rebuild)
+    val store = freshStore()
+    store.insert(df(rows.take(40)))
+    store.buildAnnIndex(k = 4)
+    val annDir = s"${store.root}/ann/v0"
+    val annMeta =
+      """{"k":4,"seed":42,"rebuild_fraction":0.5,"base_rows":1000,"appended_rows":300,"calibrated_nprobe":3}"""
+    writeBytes(s"$annDir/_meta.json", annMeta)
+    assert(new VectorStore(spark, store.root).annCalibratedNprobe.contains(3))
+    store.insert(df(rows.slice(40, 60)))
+    assert(readText(s"$annDir/_meta.json") == annMeta)
+    assert(readText(s"$annDir/_appended.json") == """{"appended_rows":20}""")
+    assert(store.searchAnn(rows(45)._2.toSeq, k = 1, nprobe = 4).head().getString(1) == "r45")
+    // the dup graph's meta: dupMeta() is the raw string, and a takedown
+    // prunes the graph at the threshold it reads from it
+    store.buildDupGraph()
+    val dupMeta = """{"threshold":0.92,"base_rows":60,"overflow_buckets":0}"""
+    writeBytes(s"${store.root}/dup/v0/_meta.json", dupMeta)
+    assert(store.dupMeta().contains(dupMeta))
+    assert(store.deleteIds(Seq("r0")) == 1L)
+    assert(store.dupMeta().contains("""{"threshold":0.92,"pruned_from":0,"deleted_ids":1}"""))
+    // the tokenizer's meta: every field loads as written
+    store.trainTokenizer(Seq((1L, "the quick brown fox"), (2L, "the lazy dog")).toDF("doc_id", "text"),
+      bpeK = 3, wordpieceV = 4)
+    writeBytes(s"${store.root}/tokenizer/v0/_meta.json",
+      """{"bpe_k":3,"wordpiece_v":4,"max_piece_len":4,"corpus_fp":-4611686018427387904,"n_docs":2}""")
+    val tok = store.loadTokenizer()
+    assert((tok.bpeK, tok.wordpieceV, tok.maxPieceLen, tok.corpusFp, tok.nDocs) ==
+      ((3, 4, 4, -4611686018427387904L, 2L)))
+    store.clear()
+    // the posting index's _postings.json and a generation's _gen.json
+    val docs = Seq((1L, "table hash join"), (2L, "hash table probe")).toDF("doc_id", "text")
+    val idx = Files.createTempDirectory("graft-compat-postings").toString + "/i"
+    PostingIndex.create(docs, idx, nBuckets = 16)
+    PostingIndex.append(docs.limit(1), idx)
+    val postings = """{"buckets":16}"""
+    val gen = """{"op":"append","version":0,"gen":1}"""
+    assert(readText(s"$idx/_postings.json") == postings && readText(s"$idx/v0/gen=1/_gen.json") == gen)
+    writeBytes(s"$idx/_postings.json", postings)
+    writeBytes(s"$idx/v0/gen=1/_gen.json", gen)
+    assert(PostingIndex.buckets(spark, idx) == 16)
+    val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(MetaJson.read(fs, new org.apache.hadoop.fs.Path(s"$idx/v0/gen=1/_gen.json")).map(_.fields)
+      .contains(Seq("op" -> "append", "version" -> BigInt(0), "gen" -> BigInt(1))))
+    // a malformed file fails and names itself
+    writeBytes(s"$idx/_postings.json", """{"buckets":""")
+    val e = intercept[IllegalStateException](PostingIndex.buckets(spark, idx))
+    assert(e.getMessage.contains("_postings.json"), e.getMessage)
+  }
+
+  test("an insert into an indexed store leaves the version's _meta.json as committed and counts the batch in _appended.json") {
+    val store = freshStore()
+    val rng = new scala.util.Random(17)
+    val rows = (0 until 240).map(i =>
+      (s"v$i", Array.fill(8)(rng.nextGaussian().toFloat), s"c$i", Seq("t")))
+    store.insert(df(rows.take(200)))
+    store.buildAnnIndex(k = 4, rebuildFraction = 2.0)
+    val dir = s"${store.root}/ann/v0"
+    val meta = readText(s"$dir/_meta.json")
+    assert(!new java.io.File(s"$dir/_appended.json").exists)
+    store.insert(df(rows.slice(200, 230)))
+    assert(readText(s"$dir/_meta.json") == meta)
+    assert(readText(s"$dir/_appended.json") == """{"appended_rows":30}""")
+    val calibrated = "\"calibrated_nprobe\":(\\d+)".r.findFirstMatchIn(meta).map(_.group(1).toInt)
+    assert(calibrated.isDefined, meta)
+    assert(new VectorStore(spark, store.root).annCalibratedNprobe == calibrated)
+    store.insert(df(rows.slice(230, 240)))
+    assert(readText(s"$dir/_meta.json") == meta)
+    assert(readText(s"$dir/_appended.json") == """{"appended_rows":40}""")
+    // compaction carries the count and the meta into the next version
+    store.compactAnnIndex()
+    assert(readText(s"${store.root}/ann/v1/_meta.json") == meta)
+    assert(readText(s"${store.root}/ann/v1/_appended.json") == """{"appended_rows":40}""")
     store.clear()
   }
 }
